@@ -5,8 +5,11 @@ scan at 100 TB:
 
 * value parity — the over-index query returns exactly what the
   on-the-fly operator (and the DuckDB oracle) returns;
-* partition pruning — the re-query reads ONLY the probed cell/bucket
-  directories (asserted on ``inputFiles()`` and ``PartitionFilters``);
+* partition pruning — the re-query plan carries the literal probe
+  filter in ``PartitionFilters``, and a scan under that filter reads
+  ONLY the probed cell/bucket directories (asserted on
+  ``input_file_name``; that a probe also LISTS only those
+  directories is asserted on ``inputFiles()`` in ``test_store.py``);
 * no corpus-side recompute — the re-query plan contains no centroid
   crossJoin and no SRP ``zip_with`` projection over the index.
 """

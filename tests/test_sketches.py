@@ -139,7 +139,9 @@ def test_high_cardinality_shard_multi_file(spark, tmp_path):
     """VERDICT r8: a shard sketched over a high-cardinality group set
     must not funnel through one task — n_files > 1 hash-distributes
     the sketch rows by group, and the shard-pruned rollup still reads
-    only that shard's files."""
+    only that shard's files.  ``n_files`` holds at any
+    ``shuffle.partitions``, including one equal to it (where a
+    repartition on the group alone would be planned away)."""
     import glob
 
     from trial_data_ingestion_spark.operators.sketches import (
@@ -148,9 +150,16 @@ def test_high_cardinality_shard_multi_file(spark, tmp_path):
     big = spark.range(20_000).select(
         (F.col("id") % 997).alias("host"), F.col("id").alias("v"))
     path = str(tmp_path / "hll_wide")
-    write_hll_shard(big, path, ["host"], "v", "s0", n_files=4)
-    files = glob.glob(f"{path}/shard=s0/part-*.parquet")
-    assert len(files) == 4
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        for partitions in (before, "4"):
+            spark.conf.set(key, partitions)
+            write_hll_shard(big, path, ["host"], "v", "s0", n_files=4)
+            files = glob.glob(f"{path}/shard=s0/part-*.parquet")
+            assert len(files) == 4, (partitions, len(files))
+    finally:
+        spark.conf.set(key, before)
     write_hll_shard(big.where(F.col("id") < 10), path, ["host"], "v",
                     "s1", n_files=4)
     est = merged_distinct(spark, path, ["host"], shards=["s1"])

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.session import ensure_parallelism
+from trial_data_ingestion_spark.store import read_partitions
 
 HASH_BITS = 64
 
@@ -333,16 +334,15 @@ def dedup_media_incremental(spark, new_media: DataFrame, path: str,
 
     raw_hashes = attach_phash(new_media, hasher).persist()
 
-    # seen-id resume: dbkt-pruned scan of the doc store
+    # seen-id resume: read of the batch's dbkt partitions of the doc
+    # store only
     batch_dbkts = sorted(r["b"] for r in raw_hashes.select(
         F.pmod(F.xxhash64("media_id"), F.lit(num_buckets))
         .alias("b")).distinct().collect())
-    # explicit schema + basePath: a freshly-initialized EMPTY store
-    # has no data files to infer from (same pattern as the line store)
-    seen = (spark.read.schema("doc string, ph long, dbkt int")
-            .option("basePath", path + "/docs")
-            .parquet(path + "/docs")
-            .where(F.col("dbkt").isin(batch_dbkts))
+    # explicit schema: a freshly-initialized EMPTY store has no data
+    # files to infer from (same pattern as the line store)
+    seen = (read_partitions(spark, path + "/docs", "dbkt", batch_dbkts,
+                            schema="doc string, ph long, dbkt int")
             .select(F.col("doc").alias("media_id")))
     new_media = new_media.join(seen, "media_id", "left_anti")
     hashes = raw_hashes.join(seen, "media_id", "left_anti").persist()
@@ -352,17 +352,16 @@ def dedup_media_incremental(spark, new_media: DataFrame, path: str,
                    .select(F.col("media_id_a").alias("doc_a"),
                            F.col("media_id_b").alias("doc_b")))
 
-    # cross pairs: batch bands -> pbkt-pruned index scan -> verify
+    # cross pairs: batch bands -> read of their pbkt partitions only
+    # -> verify
     bt = (_band_table(hashes, max_hamming)
           .withColumn("pbkt", F.pmod(F.xxhash64("band", "val"),
                                      F.lit(num_buckets))))
     probe_bkts = sorted(r["pbkt"] for r in
                         bt.select("pbkt").distinct().collect())
-    idx = (spark.read
-           .schema("doc string, ph long, band int, val long, pbkt int")
-           .option("basePath", path + "/bands")
-           .parquet(path + "/bands")
-           .where(F.col("pbkt").isin(probe_bkts)))
+    idx = read_partitions(
+        spark, path + "/bands", "pbkt", probe_bkts,
+        schema="doc string, ph long, band int, val long, pbkt int")
     cross = (idx.alias("c")
              .join(F.broadcast(bt.alias("n")),
                    on=[F.col("c.band") == F.col("n.band"),

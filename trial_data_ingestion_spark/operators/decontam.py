@@ -29,7 +29,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from trial_data_ingestion_spark.operators.textstats import token_grams
 from trial_data_ingestion_spark.session import ensure_parallelism
+from trial_data_ingestion_spark.store import read_partitions
 
 
 def _norm_tokens(text: Column) -> Column:
@@ -45,13 +47,7 @@ def token_ngrams(text: Column, n: int = 8) -> Column:
     needing set semantics apply array_distinct).  Docs with fewer
     than ``n`` tokens yield an empty array — they cannot be matched,
     mirroring the published recipes which skip short eval items."""
-    toks = _norm_tokens(text)
-    count = F.size(toks) - (n - 1)
-    return F.when(
-        count >= 1,
-        F.transform(F.sequence(F.lit(1), F.greatest(count, F.lit(1))),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    ).otherwise(F.array().cast("array<string>"))
+    return token_grams(_norm_tokens(text), n)
 
 
 def benchmark_gram_table(bench: DataFrame, text_col: str = "text",
@@ -228,13 +224,7 @@ def _span_gram_array(text_col: str, n: int) -> Column:
     from trial_data_ingestion_spark.operators.substring_dedup import (
         _ws_tokens,
     )
-    toks = _ws_tokens(F.col(text_col))
-    count = F.size(toks) - (n - 1)
-    return F.when(
-        count >= 1,
-        F.transform(F.sequence(F.lit(1), F.greatest(count, F.lit(1))),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    ).otherwise(F.array().cast("array<string>"))
+    return token_grams(_ws_tokens(F.col(text_col)), n)
 
 
 def scrub_contaminated_spans(corpus: DataFrame, bench: DataFrame,
@@ -406,8 +396,8 @@ def fuzzy_contaminated_ids(corpus: DataFrame, bench: DataFrame,
             "pbkt", _pbkt(stored["num_buckets"]))
         pbkts = sorted(r["pbkt"] for r in
                        probe.select("pbkt").distinct().collect())
-        c_banded = (spark.read.parquet(corpus_index + "/bands")
-                    .where(F.col("pbkt").isin(pbkts))
+        c_banded = (read_partitions(spark, corpus_index + "/bands",
+                                    "pbkt", pbkts)
                     .select(F.concat(F.lit("c|"),
                                      F.col("doc").cast("string"))
                             .alias("doc_id"), "band", "bucket",

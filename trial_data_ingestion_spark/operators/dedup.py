@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from trial_data_ingestion_spark.operators.textstats import _let
+
 
 # --------------------------------------------------------------------------
 # Exact dedup
@@ -47,18 +49,6 @@ def dedup_exact(df: DataFrame, keys: list[str],
     w = Window.partitionBy(*keys).orderBy(F.col(order_col).asc())
     return (df.withColumn("__rn", F.row_number().over(w))
               .where(F.col("__rn") == 1).drop("__rn"))
-
-
-def dedup_by_content_hash(df: DataFrame, text_col: str,
-                          id_col: str) -> DataFrame:
-    """Content-hash exact dedup: sha256 over whitespace-normalized
-    text, keep the row with the minimal id per hash group."""
-    norm = F.sha2(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")), 256)
-    w = Window.partitionBy("__h").orderBy(F.col(id_col).asc())
-    return (df.withColumn("__h", norm)
-              .withColumn("__rn", F.row_number().over(w))
-              .where(F.col("__rn") == 1)
-              .drop("__h", "__rn"))
 
 
 # --------------------------------------------------------------------------
@@ -84,10 +74,12 @@ def char_shingles(text: Column, k: int = 8) -> Column:
     """Distinct k-char shingles of the whitespace-normalized text as an
     array column (sequence -> substring).  Convenient for small inputs;
     the scalable path is :func:`shingle_table` (exploded, codegen'd)."""
-    norm = F.trim(F.regexp_replace(text, r"\s+", " "))
-    idx = F.sequence(F.lit(1),
-                     F.greatest(F.lit(1), F.length(norm) - F.lit(k - 1)))
-    return F.array_distinct(F.transform(idx, lambda i: norm.substr(i, F.lit(k))))
+    def shingles(s: Column) -> Column:
+        idx = F.sequence(F.lit(1),
+                         F.greatest(F.lit(1), F.length(s) - F.lit(k - 1)))
+        return F.array_distinct(
+            F.transform(idx, lambda i: s.substr(i, F.lit(k))))
+    return _let(F.trim(F.regexp_replace(text, r"\s+", " ")), shingles)
 
 
 from trial_data_ingestion_spark.session import (

@@ -61,6 +61,9 @@ from trial_data_ingestion_spark.operators.dedup import (
     minhash_signatures,
 )
 from trial_data_ingestion_spark.operators.pins import PinScope
+from trial_data_ingestion_spark.store import (
+    check_partition_value, delete_path, read_partitions,
+)
 
 #: candidate-pair sets at or below this size are Jaccard-verified on
 #: a LOCAL pair frame (one zero-shuffle job) instead of the exploded
@@ -202,9 +205,6 @@ def write_minhash_index(df: DataFrame, path: str,
     the banding of exactly ``df``'s rows under the index's stored
     params — which ``dedup_minhash_incremental`` guarantees by
     construction, having read those params itself."""
-    from trial_data_ingestion_spark.operators.sketches import (
-        check_partition_value, delete_path,
-    )
     spark = df.sparkSession
     n_docs = None
     if num_hashes == "auto":
@@ -312,15 +312,14 @@ def _cached_params(spark, path: str) -> dict:
 def cross_candidates(spark, new_banded: DataFrame, index_path: str,
                      num_buckets: int) -> DataFrame:
     """(doc_a = corpus doc, doc_b = new doc, dbkt_a) candidate pairs:
-    the stored bands are scanned only in the partitions named by the
-    batch's own bucket hashes (literal ``pbkt`` filter — static
-    partition pruning), and the batch side is broadcast, so the
-    corpus never shuffles."""
+    only the band partitions named by the batch's own bucket hashes
+    are listed and scanned (``store.read_partitions``, every
+    delta; the literal ``pbkt`` filter shows as ``PartitionFilters``),
+    and the batch side is broadcast, so the corpus never shuffles."""
     probe = new_banded.withColumn("pbkt", _pbkt(num_buckets))
     pbkts = sorted(r["pbkt"]
                    for r in probe.select("pbkt").distinct().collect())
-    idx = (spark.read.parquet(index_path + "/bands")
-           .where(F.col("pbkt").isin(pbkts)))
+    idx = read_partitions(spark, index_path + "/bands", "pbkt", pbkts)
     return (idx.join(F.broadcast(probe.withColumnRenamed("doc", "doc_b")),
                      ["band", "bucket", "pbkt"])
                .where(F.col("doc") != F.col("doc_b"))
@@ -497,7 +496,9 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
        band-bucket candidate pairs are plain Python — the r12 pbkt
        job and the probe pin/self-join disappear.
     2. ONE collect unioning the seen-id scan (resume semantics) with
-       the cross-candidate join — both partition-pruned index reads,
+       the cross-candidate join — both index reads list and scan
+       only the batch's own bucket partitions
+       (``store.read_partitions``),
        the probe re-entering as a broadcast LOCAL table, so the
        corpus never shuffles and the probe is never recomputed.
        Seen docs are excluded from the pair set driver-side (the
@@ -524,11 +525,9 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
     k, num_hashes, bands = p["k"], p["num_hashes"], p["bands"]
     num_buckets = p["num_buckets"]
 
-    def _idx(sub: str) -> DataFrame:
-        t = spark.read.parquet(index_path + sub)
-        if exclude_delta is not None:
-            t = t.where(F.col("delta") != F.lit(exclude_delta))
-        return t
+    def _idx(sub: str, column: str, values: list) -> DataFrame:
+        return read_partitions(spark, index_path + sub, column, values,
+                               exclude_delta=exclude_delta)
 
     # job 1: batch ids + doc-bucket hashes AND the banded probe in
     # one bounded collect (id rows ride with null band so docs whose
@@ -569,8 +568,7 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
     # local tables.  The cross side is limit-bounded: past the local
     # cap the distributed fallback recomputes it exactly anyway.
     seen_branch = (
-        _idx("/docs")
-        .where(F.col("dbkt").isin(batch_bkts))
+        _idx("/docs", "dbkt", batch_bkts)
         .select("doc")
         .join(F.broadcast(batch_ids_df.withColumnRenamed(
             id_col, "doc")), "doc", "left_semi")
@@ -579,8 +577,7 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
                 F.lit(None).cast("bigint").alias("dbkt_a"),
                 F.lit(0).alias("__k")))
     cross_branch = (
-        _idx("/bands")
-        .where(F.col("pbkt").isin(pbkts))
+        _idx("/bands", "pbkt", pbkts)
         .join(F.broadcast(probe_local.withColumnRenamed(
             "doc", "doc_b")), ["band", "bucket", "pbkt"])
         .where(F.col("doc") != F.col("doc_b"))
@@ -650,8 +647,7 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
             # table
             if in_pair_ids:
                 corpus_texts = (
-                    _idx("/docs")
-                    .where(F.col("dbkt").isin(dbkts))
+                    _idx("/docs", "dbkt", dbkts)
                     .select(F.col("doc").alias(id_col),
                             F.col("text").alias(text_col)))
                 texts = {
@@ -692,8 +688,7 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
                          F.col("b.doc").alias("doc_b"))
                  .distinct())
             cross = (
-                _idx("/bands")
-                .where(F.col("pbkt").isin(pbkts))
+                _idx("/bands", "pbkt", pbkts)
                 .join(F.broadcast(fresh_probe.withColumnRenamed(
                     "doc", "doc_b")), ["band", "bucket", "pbkt"])
                 .where(F.col("doc") != F.col("doc_b"))
@@ -711,8 +706,7 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
                             cand_corpus.select("dbkt_a")
                                        .distinct().collect()})
             corpus_texts = (
-                _idx("/docs")
-                .where(F.col("dbkt").isin(dbkts))
+                _idx("/docs", "dbkt", dbkts)
                 .join(F.broadcast(cand_corpus.select("doc")), "doc",
                       "left_semi")
                 .select(F.col("doc").alias(id_col),
@@ -776,13 +770,15 @@ def embedding_near_dups_incremental(spark, new_embeddings: DataFrame,
     against BOTH a persisted :func:`~.similarity.write_srp_index`
     corpus and the batch itself.
 
-    The corpus side is a literal-bucket-pruned scan of the stored
-    layout (projections and norms were paid at build time — the
+    The corpus side lists and scans only the batch's bucket
+    directories of the stored layout
+    (``store.read_partitions``; projections and norms were
+    paid at build time — the
     corpus never recomputes a plane); the batch side is hashed once
     and broadcast.  Components are resolved with the same
     corpus-wins rule as :func:`dedup_minhash_incremental`.  Identical
     vectors hash to identical buckets, so the seen-id resume filter
-    also rides the pruned scan.
+    also rides that bucket read.
 
     ``num_planes=None`` (default) hashes the batch with the plane
     count the index RECORDED at build time (the only count that can
@@ -811,10 +807,8 @@ def embedding_near_dups_incremental(spark, new_embeddings: DataFrame,
                 srp_bucket(vec_col, dim, num_planes).alias("bucket")))
     buckets = sorted(r["bucket"] for r in
                      nb.select("bucket").distinct().collect())
-    idx = spark.read.parquet(index_path)
-    if exclude_delta is not None:
-        idx = idx.where(F.col("delta") != F.lit(exclude_delta))
-    idx = (idx.where(F.col("bucket").isin(buckets))
+    idx = (read_partitions(spark, index_path, "bucket", buckets,
+                           exclude_delta=exclude_delta)
            .select(F.col(id_col).alias("doc"),
                    F.col(vec_col).alias("v"),
                    F.col("__nrm").alias("nrm"), "bucket"))
@@ -904,9 +898,6 @@ def minhash_dedup_stream_sink(index_path: str, out_path: str,
     """
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from trial_data_ingestion_spark.operators.sketches import (
-            delete_path,
-        )
         spark = batch_df.sparkSession
         shard = f"{shard_prefix}-{batch_id:09d}"
         survivors = dedup_minhash_incremental(
@@ -949,9 +940,6 @@ def embedding_dedup_stream_sink(index_path: str, out_path: str,
     replay-shape argument)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from trial_data_ingestion_spark.operators.sketches import (
-            delete_path,
-        )
         spark = batch_df.sparkSession
         shard = f"{shard_prefix}-{batch_id:09d}"
         survivors = embedding_near_dups_incremental(

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.session import ensure_parallelism
+from trial_data_ingestion_spark.store import read_partitions
 
 
 def duplicated_line_occurrences(df: DataFrame, id_col: str = "doc_id",
@@ -137,11 +138,11 @@ def write_line_index(df: DataFrame, path: str, id_col: str = "doc_id",
 
 def probe_line_store(spark, occ: DataFrame, index_path: str,
                      num_buckets: int) -> DataFrame:
-    """Distinct batch line keys already present in the store: the
-    store is scanned only in the partitions named by the batch's own
-    bucket hashes (literal ``pbkt`` filter — static partition
-    pruning) with the batch's distinct keys broadcast, so the
-    store side never shuffles."""
+    """Distinct batch line keys already present in the store: only
+    the partitions named by the batch's own bucket hashes are listed
+    and scanned (``store.read_partitions``; the literal
+    ``pbkt`` filter shows as ``PartitionFilters``) with the batch's
+    distinct keys broadcast, so the store side never shuffles."""
     probe = (occ.select("line").distinct()
              .withColumn("pbkt", F.pmod(F.col("line"),
                                         F.lit(num_buckets))))
@@ -149,11 +150,8 @@ def probe_line_store(spark, occ: DataFrame, index_path: str,
                    for r in probe.select("pbkt").distinct().collect())
     # explicit schema: a store initialized over an empty corpus has
     # no files to infer from (the streaming sink starts that way)
-    store = (spark.read.schema("line long, pbkt int")
-             .option("basePath", index_path + "/lines")
-             .parquet(index_path + "/lines"))
-    if pbkts:
-        store = store.where(F.col("pbkt").isin(pbkts))
+    store = read_partitions(spark, index_path + "/lines", "pbkt", pbkts,
+                            schema="line long, pbkt int")
     return (store.join(F.broadcast(probe), ["line", "pbkt"],
                        "left_semi")
             .select("line").distinct())
@@ -175,10 +173,10 @@ def line_dedup_incremental(spark, new_docs: DataFrame, index_path: str,
     ids order before batch ids — the append-flow invariant every
     incremental path here shares.
 
-    Scale: the store is scanned only in the partitions named by the
-    batch's own bucket hashes (static pruning) with the batch's
-    distinct keys broadcast; store-side data never shuffles, and the
-    per-batch cost is O(batch lines + matched keys)."""
+    Scale: only the store partitions named by the batch's own bucket
+    hashes are listed and scanned (:func:`probe_line_store`) with the
+    batch's distinct keys broadcast; store-side data never shuffles,
+    and the per-batch cost is O(batch lines + matched keys)."""
     params = spark.read.parquet(index_path + "/params").collect()[0]
     min_chars, num_buckets = params["min_chars"], params["num_buckets"]
     occ = _eligible_occurrences(new_docs, id_col, text_col,

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from trial_data_ingestion_spark.functions.vector import l2_norm_fixed, dot_fixed
+from trial_data_ingestion_spark.store import read_partitions
 
 
 @dataclass(frozen=True)
@@ -461,9 +462,10 @@ def topk_ivfpq(spark, index_path: str, queries: DataFrame,
     """Cosine top-k over a :func:`build_ivfpq` layout.
 
     Per query: the ``nprobe`` nearest cells are found driver-side
-    against the tiny centroid table; the codes scan carries LITERAL
-    ``cell_id`` partition filters (static pruning — only probed
-    directories are read) and the ADC kernel reads just (id, cell,
+    against the tiny centroid table; the codes read lists and scans
+    only the probed ``cell_id`` directories
+    (``store.read_partitions``; the literal filter shows as
+    ``PartitionFilters``) and the ADC kernel reads just (id, cell,
     code).  LUTs are per (query, cell) — ``||(q - centroid)_s -
     codebook[s][j]||^2`` — computed lazily per batch (partitioning by
     cell makes batches cell-homogeneous).  The exact-cosine refine
@@ -499,8 +501,8 @@ def topk_ivfpq(spark, index_path: str, queries: DataFrame,
                 res_q[None, :], cb)[0]
 
     qids = [r[query_id_col] for r in query_rows]
-    stored = (spark.read.parquet(index_path + "/codes")
-              .where(F.col("cell_id").isin(probed_cells)))
+    stored = read_partitions(spark, index_path + "/codes", "cell_id",
+                             probed_cells)
     id_type = stored.schema[id_col].dataType.simpleString()
     r = max(k * refine_factor, k)
     out_schema = (f"{query_id_col} {qid_type}, __nid {id_type},"

@@ -31,6 +31,9 @@ from trial_data_ingestion_spark.functions.vector import (
     l2_distance, l2_distance_fixed, l2_norm_fixed,
 )
 from trial_data_ingestion_spark.session import ensure_parallelism
+from trial_data_ingestion_spark.store import (
+    check_partition_value, delete_path, read_partitions,
+)
 
 _METRICS = {
     "cosine": (cosine_similarity, F.desc),
@@ -764,8 +767,10 @@ def srp_multitable_tagged(embeddings: DataFrame, dim: int,
 # query batches against the stored layout.  At 100 TB, re-assigning
 # cells (a full corpus scan + centroid scoring) per query batch is the
 # difference between an index and a scan — the persisted path's
-# re-query plan is a partition-pruned parquet read plus one broadcast
-# equi-join, with NO per-row centroid/plane work on the corpus side.
+# re-query plan is a read of the probed partitions only
+# (store.read_partitions: only those directories are listed) plus one
+# broadcast equi-join, with NO per-row centroid/plane work on the
+# corpus side.
 # ---------------------------------------------------------------------------
 
 
@@ -812,9 +817,6 @@ def append_to_ivf_index(new_embeddings: DataFrame, centroids: DataFrame,
     whole-call retry is idempotent — the append deletes its own
     ``delta`` partition directory before writing.  Without one the
     delta is random and the append is at-most-once (don't retry)."""
-    from trial_data_ingestion_spark.operators.sketches import (
-        check_partition_value, delete_path,
-    )
     spark = new_embeddings.sparkSession
     if delta_id is None:
         import uuid
@@ -842,9 +844,10 @@ def topk_ivf_over_index(spark, index_path: str, queries: DataFrame,
 
     The query batch is small by definition, so its ``nprobe`` nearest
     cells are computed in a tiny driver-side job and the distinct
-    probed cell ids become LITERAL partition filters on the index
-    scan — static partition pruning, visible as ``PartitionFilters``
-    in the plan and a pruned ``inputFiles()`` list.  The corpus side
+    probed cell ids name the only ``cell_id`` directories the index
+    read lists and reads (``store.read_partitions``); they stay
+    as a LITERAL filter too, visible as ``PartitionFilters`` in the
+    plan, and ``inputFiles()`` holds only probed cells.  The corpus side
     does no centroid work at all (assignment was paid once at build
     time); the only join is a broadcast equi-join on ``cell_id``
     against the probe rows.  Identical results to :func:`topk_ivf`
@@ -860,8 +863,7 @@ def topk_ivf_over_index(spark, index_path: str, queries: DataFrame,
     probe_cells = sorted({r["cell_id"] for r in probe_rows})
     probe_df = F.broadcast(spark.createDataFrame(probe_rows,
                                                  probed.schema))
-    idx = (spark.read.parquet(index_path)
-           .where(F.col("cell_id").isin(probe_cells)))
+    idx = read_partitions(spark, index_path, "cell_id", probe_cells)
     cand = (idx.join(probe_df, "cell_id")
                .where(F.col(id_col) != F.col(query_id_col)))
     if dim is not None:
@@ -913,9 +915,6 @@ def write_srp_index(embeddings: DataFrame, path: str, dim: int,
     one the append gets a random delta and is at-most-once (don't
     retry it).  Bucket pruning is unaffected (``bucket`` remains a
     partition column below ``delta``)."""
-    from trial_data_ingestion_spark.operators.sketches import (
-        check_partition_value, delete_path,
-    )
     spark = embeddings.sparkSession
     if mode == "append":
         if delta_id is None:
@@ -1036,8 +1035,10 @@ def topk_lsh_over_index(spark, index_path: str, queries: DataFrame,
     :func:`topk_lsh` (multi-probe within the Hamming radius + exact
     rescore), but the corpus-side bucket assignment is read, not
     recomputed — the plan contains no projection ``zip_with`` over
-    the index, only the partition-pruned scan, a broadcast equi-join
-    on ``bucket``, and the codegen'd rescore.
+    the index, only a scan of the probed bucket directories (the only
+    ones listed: ``store.read_partitions``; the literal
+    ``bucket`` filter shows as ``PartitionFilters``), a broadcast
+    equi-join on ``bucket``, and the codegen'd rescore.
 
     ``num_planes=None`` (default) probes with the plane count the
     index RECORDED at build time (``_srp_meta`` sidecar) — the only
@@ -1059,8 +1060,7 @@ def topk_lsh_over_index(spark, index_path: str, queries: DataFrame,
     q_rows = q.collect()
     buckets = sorted({r["bucket"] for r in q_rows})
     q_df = F.broadcast(spark.createDataFrame(q_rows, q.schema))
-    idx = (spark.read.parquet(index_path)
-           .where(F.col("bucket").isin(buckets)))
+    idx = read_partitions(spark, index_path, "bucket", buckets)
     scored = (idx.join(q_df, "bucket")
               .withColumn("score",
                           dot_fixed(vec_col, query_vec_col, dim)

@@ -27,46 +27,16 @@ analytics surface, next to q36's approx_count_distinct.
 from __future__ import annotations
 
 import math
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trial_data_ingestion_spark.store import (
+    check_partition_value, delete_path, read_partitions,
+)
+
 #: relative standard error of an lgK-configured HLL sketch
 HLL_RSE = {lgk: 1.04 / math.sqrt(2 ** lgk) for lgk in range(4, 22)}
-
-#: partition values this package writes raw ``dir=value`` paths for
-#: (shard deletes, delta-keyed appends).  Spark URL-escapes partition
-#: values on write, so a value needing escaping (space, ':', '/', …)
-#: would make a hand-built delete path miss the real directory and
-#: silently leave stale data in place — reject such values up front.
-_SAFE_PARTITION_VALUE = re.compile(r"^[A-Za-z0-9._-]+$")
-
-
-def check_partition_value(value: str, what: str = "shard") -> str:
-    """Validate a caller-supplied partition value against the safe
-    charset (letters, digits, ``._-``); raises ``ValueError``
-    otherwise.  See :data:`_SAFE_PARTITION_VALUE` for why."""
-    if not isinstance(value, str) or not _SAFE_PARTITION_VALUE.match(value):
-        raise ValueError(
-            f"{what} {value!r} is not a safe partition value: use only "
-            "letters, digits, '.', '_', '-' (Spark escapes other "
-            "characters in partition paths, which would break the "
-            "idempotent shard delete/overwrite)")
-    return value
-
-
-def delete_path(spark, path: str) -> None:
-    """Recursively delete ``path`` through the Hadoop FS API (so it
-    works against whatever filesystem Spark is configured for, not
-    just local disk) and drop any cached listing of it.  The shared
-    primitive behind the idempotent shard/delta overwrite pattern:
-    delete-your-own-partition, then (re)write it."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(p, True)
-    spark.catalog.refreshByPath(path)
 
 
 def hll_shard_sketches(df: DataFrame, group_cols: list[str],
@@ -93,7 +63,7 @@ def write_hll_shard(df: DataFrame, path: str, group_cols: list[str],
     (per-URL-host, per-user-agent) would funnel every sketch row
     through one task — pass ``n_files > 1`` to hash-distribute the
     rows by group across that many writers (still one file per task:
-    the write repartitions first).
+    the write repartitions first), at any ``shuffle.partitions``.
 
     Empty-shard retries are handled explicitly: dynamic partition
     overwrite writes NO partitions for a zero-row frame, which would
@@ -117,7 +87,11 @@ def write_hll_shard(df: DataFrame, path: str, group_cols: list[str],
     if n_files == 1:
         out = out.coalesce(1)
     else:
-        out = out.repartition(n_files, *group_cols)
+        # keyed on (group, shard), not the group alone: a repartition
+        # equal to the aggregate's own hashpartitioning(group, n) is
+        # dropped as redundant whenever n == shuffle.partitions, and
+        # AQE may then coalesce that exchange down to one writer
+        out = out.repartition(n_files, *group_cols, "shard")
     (out.write.mode("overwrite")
         .partitionBy("shard")
         .option("partitionOverwriteMode", "dynamic")
@@ -163,12 +137,11 @@ def merged_distinct(spark: SparkSession, path: str,
                     shards: list[str] | None = None) -> DataFrame:
     """(group_cols..., n_distinct) from the sketch table alone — the
     union touches a few KB per (group, shard), never the corpus.
-    ``shards`` restricts the rollup (e.g. a trailing window); None
-    merges everything.  The shard filter is a partition prune on the
-    sketch table's own layout."""
-    t = spark.read.parquet(path)
-    if shards is not None:
-        t = t.where(F.col("shard").isin(list(shards)))
+    ``shards`` restricts the rollup (e.g. a trailing window) and
+    then only those shards' directories are listed and read
+    (``store.read_partitions``); None merges everything."""
+    t = (spark.read.parquet(path) if shards is None
+         else read_partitions(spark, path, "shard", shards))
     return (t.groupBy(*group_cols)
             .agg(F.hll_sketch_estimate(
                 F.hll_union_agg(F.col("hll_sketch"), F.lit(True)))

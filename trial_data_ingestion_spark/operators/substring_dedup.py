@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from trial_data_ingestion_spark.operators.textstats import token_grams
 from trial_data_ingestion_spark.session import ensure_parallelism
 
 
@@ -65,13 +66,7 @@ def _gram_occurrences(df: DataFrame, id_col: str, text_col: str,
     """(doc, pos, g): every token position's n-gram.  pos is 0-based;
     docs with fewer than ``n`` tokens emit nothing (they cannot hold
     a duplicated n-run)."""
-    toks = _ws_tokens(F.col(text_col))
-    count = F.size(toks) - (n - 1)
-    grams = F.when(
-        count >= 1,
-        F.transform(F.sequence(F.lit(1), F.greatest(count, F.lit(1))),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    ).otherwise(F.array().cast("array<string>"))
+    grams = token_grams(_ws_tokens(F.col(text_col)), n)
     occ = (ensure_parallelism(df.select(id_col, text_col))
            .select(F.col(id_col).alias("doc"), grams.alias("__grams"))
            .select("doc", F.posexplode("__grams").alias("pos", "g")))

@@ -27,6 +27,16 @@ STOPWORDS = {
 PUNCT_CLASS = r"[.,;:!?'\"()\[\]{}-]"
 
 
+def _let(value: Column, body) -> Column:
+    """Let-binding: evaluate ``value`` once per row and reference it
+    many times as a lambda variable inside ``body``.  Higher-order
+    function bodies run interpreted and re-evaluate every
+    non-variable subexpression per ELEMENT, so an array used inside a
+    ``transform`` lambda (a token array sliced into n-grams) must be
+    bound first, or the tokenizer reruns once per element."""
+    return F.get(F.transform(F.array(value), body), 0)
+
+
 def tokens(text: Column) -> Column:
     """Whitespace tokenization of trimmed text; empty text -> empty
     array (split of '' yields [''], which we filter)."""
@@ -34,6 +44,21 @@ def tokens(text: Column) -> Column:
         F.split(F.trim(text), r"\s+"),
         lambda t: t != "",
     )
+
+
+def token_grams(toks: Column, n: int) -> Column:
+    """Space-joined token n-grams of a token array, in order and
+    non-distinct; empty when there are fewer than ``n`` tokens.  The
+    token array is let-bound (:func:`_let`), so its tokenizer runs
+    once per row and the gram pass is linear in tokens."""
+    def grams(t: Column) -> Column:
+        count = F.size(t) - (n - 1)
+        return F.when(
+            count >= 1,
+            F.transform(F.sequence(F.lit(1), count),
+                        lambda i: F.concat_ws(" ", F.slice(t, i, n)))
+        ).otherwise(F.array().cast("array<string>"))
+    return _let(toks, grams)
 
 
 def token_count(text: Column) -> Column:
@@ -156,11 +181,6 @@ def detect_language_ngram(text: Column, prefix_chars: int = 256) -> Column:
 
     nlangs = len(lp.LANGS)
     miss_arr = F.array(*[F.lit(lp.MISS_LOGP)] * nlangs)
-
-    def _let(value: Column, body) -> Column:
-        """Let-binding: evaluate ``value`` once, reference it many
-        times as a lambda variable inside ``body``."""
-        return F.get(F.transform(F.array(value), body), 0)
 
     def fold_packed(table: dict) -> Column:
         # map<string, array<double>> literal: all children foldable,
@@ -439,33 +459,28 @@ def top_ngram_ratio(text: Column, n: int = 2) -> Column:
     Native-expression shape: sort the gram array once, then the max
     multiplicity is the longest run of equal adjacent elements — ONE
     ``aggregate`` pass, O(g log g) per doc.  Higher-order functions
-    are never whole-stage-codegen'd (they evaluate interpreted), so
-    the per-element work must be LINEAR: the previous
-    distinct-grams x filter(grams) formulation re-evaluated the gram
-    array per distinct gram — interpreted O(g^3) — and took ~53 ms
-    per 300-char doc (266 s for 5k docs) whenever a consumer
-    actually materialized the column; every query had been
-    column-pruning it away, which is why it survived six rounds."""
-    toks = tokens(F.lower(text))
-    n_grams = F.size(toks) - (n - 1)
-    # sequence(1, 0) would yield a DESCENDING [1, 0]: clamp the stop
-    # to 1 and let the n_grams > 0 guard zero out short docs
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n_grams, F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    best = F.aggregate(
-        F.array_sort(grams),
-        F.struct(F.lit("").alias("prev"), F.lit(0).alias("run"),
-                 F.lit(0).alias("best")),
-        lambda acc, g: F.struct(
-            g.alias("prev"),
-            F.when(g == acc["prev"], acc["run"] + 1)
-             .otherwise(F.lit(1)).alias("run"),
-            F.greatest(acc["best"],
-                       F.when(g == acc["prev"], acc["run"] + 1)
-                        .otherwise(F.lit(1))).alias("best")),
-        lambda acc: acc["best"])
-    return F.when(
-        n_grams > 0,
-        best.cast("double") / n_grams
-    ).otherwise(F.lit(0.0))
+    are never whole-stage-codegen'd (they evaluate interpreted and
+    re-evaluate every unbound subexpression per element), so both the
+    token array and the gram array are let-bound
+    (:func:`token_grams`, :func:`_let`): tokenized once, sliced into
+    grams once.  An earlier distinct-grams x filter(grams)
+    formulation re-evaluated the gram array per distinct gram —
+    interpreted O(g^3), ~53 ms per 300-char doc."""
+    def ratio(grams: Column) -> Column:
+        best = F.aggregate(
+            F.array_sort(grams),
+            F.struct(F.lit("").alias("prev"), F.lit(0).alias("run"),
+                     F.lit(0).alias("best")),
+            lambda acc, g: F.struct(
+                g.alias("prev"),
+                F.when(g == acc["prev"], acc["run"] + 1)
+                 .otherwise(F.lit(1)).alias("run"),
+                F.greatest(acc["best"],
+                           F.when(g == acc["prev"], acc["run"] + 1)
+                            .otherwise(F.lit(1))).alias("best")),
+            lambda acc: acc["best"])
+        return F.when(
+            F.size(grams) > 0,
+            best.cast("double") / F.size(grams)
+        ).otherwise(F.lit(0.0))
+    return _let(token_grams(tokens(F.lower(text)), n), ratio)

@@ -104,16 +104,3 @@ def keyed_parallelism(df, *cols: str):
                 or 0))
     return df.repartition(n, *cols)
 
-
-def load_tables(spark: SparkSession, sf_dir: str,
-                tables: tuple[str, ...] = (
-                    "region", "nation", "customer", "supplier", "part",
-                    "orders", "lineitem", "events", "documents",
-                    "embeddings",
-                )) -> dict:
-    """Load the driver parquet tables from ``sf_dir`` as DataFrames.
-
-    Parquet scans keep Catalyst's predicate pushdown / column pruning
-    available to every downstream query.
-    """
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in tables}

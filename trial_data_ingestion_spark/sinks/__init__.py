@@ -17,6 +17,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trial_data_ingestion_spark.store import read_partitions
+
 
 def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """K3 — line-delimited JSON (normalize.py:51-59)."""
@@ -97,8 +99,7 @@ def upsert_parquet(spark: SparkSession, new_df: DataFrame, path: str,
     if _path_exists(spark, path):
         touched = [r["__bucket"] for r in
                    incoming.select("__bucket").distinct().collect()]
-        existing = (spark.read.parquet(path)
-                    .where(F.col("__bucket").isin(touched)))
+        existing = read_partitions(spark, path, "__bucket", touched)
         kept = existing.join(incoming.select(key).distinct(), key,
                              "left_anti")
         merged = kept.unionByName(incoming)

@@ -148,12 +148,6 @@ def _linearize_body(body) -> List[Tuple[str, str]]:
     return [("Full Text", full)] if full else []
 
 
-def collapse_body(body) -> List[Tuple[str, str]]:
-    """xml_cleaning.py:30-33 — whole body as one block."""
-    full = _get_text(body)
-    return [("Full Text", full)] if full else []
-
-
 def extract_abstract(root) -> Optional[str]:
     """X4 — abstract/trans-abstract, structured or flat
     (xml_cleaning.py:72-106)."""
