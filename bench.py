@@ -1253,7 +1253,7 @@ def _compact_line(out: dict) -> str:
     return line
 
 
-def main() -> None:
+def main(only: str | None = None) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from trial_data_ingestion_spark.plans import QUERIES as _GRADED
@@ -1265,13 +1265,12 @@ def main() -> None:
     # without paying the whole suite (dev convenience — the driver's
     # per-round run never passes it, so recorded rounds stay full)
     headline = HEADLINE
-    for i, arg in enumerate(sys.argv[1:], 1):
-        if arg == "--only" and i < len(sys.argv) - 0:
-            wanted = set(sys.argv[i + 1].split(","))
-            unknown = wanted - set(HEADLINE)
-            if unknown:
-                raise SystemExit(f"--only: not in HEADLINE: {sorted(unknown)}")
-            headline = [n for n in HEADLINE if n in wanted]
+    if only is not None:
+        wanted = set(only.split(","))
+        unknown = wanted - set(HEADLINE)
+        if unknown:
+            raise SystemExit(f"--only: not in HEADLINE: {sorted(unknown)}")
+        headline = [n for n in HEADLINE if n in wanted]
 
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -1475,9 +1474,9 @@ SCALE_ENTRIES_X100 = [
 #: 0.52/0.08/0.36/0.41).  Item 5 asked for b13's 300x point: the
 #: first attempts OOM'd the 8 GB local driver during the warm-up
 #: pass — r12 root-caused and removed BOTH memory walls (the
-#: per-cell pair materialization via pair_impl='kernel', then the
-#: n*cells crossJoin+window assignment explode via assign_cells
-#: impl='auto' BLAS argmin — 2.9B exploded rows at 600k vectors x
+#: per-cell pair materialization via the per-cell BLAS kernel, then
+#: the n*cells crossJoin+window assignment explode via assign_cells'
+#: BLAS argmin past 256 cells — 2.9B exploded rows at 600k vectors x
 #: 4800 cells became one chunked matmul), so b13 joined this tier
 #: with a measured point (113.2 s scaled wall at 300x, ratio 57.0 —
 #: BENCH_SCALE.json) under its law-derived 1.2*factor^1.5 gate.
@@ -2177,12 +2176,12 @@ def run_scale() -> None:
         "decade gate with this note (its gate is the LAW-derived "
         "1.2 * factor^1.5 override).  r12 history: the first 300x "
         "attempts OOM'd the 8 GB local driver — first in the "
-        "per-cell pair materialization (fixed by pair_impl='kernel', "
-        "row-block-chunked BLAS), then in the ASSIGNMENT (the "
+        "per-cell pair materialization (fixed by the per-cell "
+        "row-block-chunked BLAS kernel), then in the ASSIGNMENT (the "
         "crossJoin+window shape shuffles/sorts the n*cells exploded "
         "frame: 2.9B rows at 600k vectors x 4800 cells).  "
-        "assign_cells impl='auto' (BLAS argmin kernel past the "
-        "measured 256-cell crossover, zero row multiplication, zero "
+        "assign_cells' BLAS argmin kernel (past the measured "
+        "256-cell crossover, zero row multiplication, zero "
         "exchange) removed the memory wall: the 300x tier now "
         "MEASURES the law instead of exempting it — the quadratic "
         "n*cells flops stay (SemDeDup is inherently superlinear "
@@ -2212,7 +2211,7 @@ def run_scale() -> None:
         "(L*p)_scaled/(L*p)_base) — the measurement checks the "
         "asserted law instead of exempting the entry like b13's "
         "structural bound.  r12: the physical shape switched to "
-        "hash_impl='arrow' + pair_impl='kernel' after "
+        "Arrow-batch matmul hashing + per-bucket BLAS scoring after "
         "B28_SCALE_PROFILE.json named scoring (65%) and hashing "
         "(27%) as the 100x wall and the A/B measured 232 s -> 89 s "
         "for 200k vectors (identical survivors); the law and its "
@@ -2251,322 +2250,21 @@ def run_scale() -> None:
     print(json.dumps(rec))
 
 
-def run_profile_q19() -> None:
-    """``--profile-q19``: per-phase breakdown of q19_minhash_dedup at
-    every materialized scale tier, written to Q19_SCALE_PROFILE.json.
-
-    The r8 verdict flagged q19's SECOND decade (10x -> 100x wall) as
-    at-linear while every sibling's was 2.8-5.1x for 10x rows, and the
-    cumulative gate could not say WHICH phase carries the term.  This
-    names it: at the graded FIXED banding (16 hashes, 4 bands) the
-    candidate-pair set grows superlinearly — the band-collision
-    birthday term over corpus-common shingles (440 pairs at 1x,
-    15,727 at 10x = 35x for 10x rows) — which makes the exact-Jaccard
-    verify, not the signatures, the scaling hazard (the unknobbed
-    100x verify OOMs under the profiler's pinned frames).  The
-    DEPLOYMENT banding grows rows_per_band with log10(n) and adds
-    bands to hold recall (run_scale's q19_banding); this records
-    both settings per tier: fixed signatures/candidates evidence the
-    term, deployment phases show the operator linear once the knob
-    moves.  Phase timings are min of 2 after 1 warm-up, same protocol
-    as the tiers; fixed-setting verify/full are skipped above 10x."""
-    base_dir = os.environ.get("SPARK_GRAFT_SF_DIR",
-                              "/root/testdata/sf0.1")
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from trial_data_ingestion_spark.operators import dedup
-    from trial_data_ingestion_spark.session import get_spark
-
-    spark = get_spark(app_name="profile-q19")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    dirs = _scale_tier_dirs(base_dir)
-
-    def timed(fn) -> float:
-        fn()
-        ts = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn()
-            ts.append(time.perf_counter() - t0)
-        return round(min(ts), 3)
-
-    out: dict = {
-        "metric": "q19 cumulative phase wall, min of 2 after 1 "
-                  "warm-up; counts from the same plans",
-        # both machine-speed yardsticks, sampled on the SAME session
-        # the phases run in: the r10 refresh (commit 4dd2c09)
-        # re-measured phases on a machine whose mem axis was 1.35x
-        # slower than the r8/r9 recordings with no calibration in the
-        # file, which would have replayed the r9 drift confusion on
-        # the next cross-round compare
-        "calibration_sec": _calibration_sec(spark),
-        "calibration_version": CALIBRATION_VERSION,
-        "calibration_mem_sec": _calibration_mem_sec(spark),
-        "calibration_mem_version": CALIBRATION_MEM_VERSION,
-        "fixed_params": {"k": 8, "num_hashes": 16, "bands": 4,
-                         "threshold": 0.8},
-        "finding": "fixed banding: candidate pairs grow "
-                   "superlinearly (band-collision birthday term over "
-                   "corpus-common shingles) and the verify inherits "
-                   "that growth; deployment banding (rows_per_band ~ "
-                   "log10(n), bands held to recall) keeps every "
-                   "phase linear — see BENCH_SCALE.json scale_knobs",
-        "tiers": {}}
-    for factor, d in dirs.items():
-        docs = spark.read.parquet(f"{d}/documents.parquet")
-        n_docs = docs.count()
-        plan = dedup.auto_banding(n_docs)
-        nh, b = plan["num_hashes"], plan["bands"]
-
-        tier: dict = {"rows": n_docs}
-        # fixed setting: signature + candidate evidence at every
-        # tier; verify/full only while the candidate set is sane
-        tier["fixed"] = {
-            "signatures_sec": timed(
-                lambda: dedup.minhash_signatures(
-                    docs, "doc_id", "text", k=8,
-                    num_hashes=16).count()),
-            "candidates_sec": timed(
-                lambda: dedup.minhash_lsh_candidates(
-                    docs, "doc_id", "text", k=8, num_hashes=16,
-                    bands=4).count()),
-            "candidate_pairs": dedup.minhash_lsh_candidates(
-                docs, "doc_id", "text", k=8, num_hashes=16,
-                bands=4).count(),
-        }
-        if factor <= 10:
-            cands = dedup.minhash_lsh_candidates(
-                docs, "doc_id", "text", k=8, num_hashes=16,
-                bands=4).persist()
-            cands.count()
-            tier["fixed"]["verify_only_sec"] = timed(
-                lambda: dedup.jaccard_verify(
-                    docs, cands, "doc_id", "text", k=8,
-                    threshold=0.8).count())
-            tier["fixed"]["confirmed_pairs"] = dedup.jaccard_verify(
-                docs, cands, "doc_id", "text", k=8,
-                threshold=0.8).count()
-            cands.unpersist()
-            tier["fixed"]["full_sec"] = timed(
-                lambda: dedup.dedup_minhash(
-                    docs, "doc_id", "text", k=8, num_hashes=16,
-                    bands=4, threshold=0.8).count())
-        else:
-            tier["fixed"]["note"] = (
-                "verify/full skipped: the superlinear candidate set "
-                "is the named term; measuring it again OOMs the box")
-        # deployment setting: the knobbed operator, end to end
-        tier["deployment"] = {
-            "num_hashes": nh, "bands": b,
-            "candidate_pairs": dedup.minhash_lsh_candidates(
-                docs, "doc_id", "text", k=8, num_hashes=nh,
-                bands=b).count(),
-            "full_sec": timed(
-                lambda: dedup.dedup_minhash(
-                    docs, "doc_id", "text", k=8, num_hashes=nh,
-                    bands=b, threshold=0.8).count()),
-        }
-        out["tiers"][str(factor)] = tier
-        print(f"q19 profile x{factor}: rows={n_docs} "
-              f"fixed_cands={tier['fixed']['candidate_pairs']} "
-              f"deploy_cands={tier['deployment']['candidate_pairs']} "
-              f"deploy_full={tier['deployment']['full_sec']}s",
-              file=sys.stderr)
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "Q19_SCALE_PROFILE.json"), "w") as f:
-        json.dump(out, f, indent=2)
-        f.write("\n")
-    print(json.dumps(out))
-
-
-def _scale_tier_dirs(base_dir: str) -> dict:
-    """{factor: dir} for the base corpus plus every cached scale tier
-    whose `_SCALE_OK.json` marker matches the current factor AND
-    generator version (the profilers' shared freshness contract —
-    a stale corpus must not feed published numbers)."""
-    dirs = {1: base_dir}
-    for factor in sorted(SCALE_TIERS):
-        d = f"/tmp/spark_graft_scale/x{factor}"
-        marker = os.path.join(d, "_SCALE_OK.json")
-        if not os.path.exists(marker):
-            continue
-        try:
-            with open(marker) as f:
-                meta = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if (meta.get("factor") == factor
-                and meta.get("gen") == SCALE_GEN_VERSION):
-            dirs[factor] = d
-        else:
-            print(f"profile: skipping stale tier dir {d} "
-                  f"(gen {meta.get('gen')} != {SCALE_GEN_VERSION} "
-                  f"or factor {meta.get('factor')} != {factor})",
-                  file=sys.stderr)
-    return dirs
-
-
-def run_profile_b28() -> None:
-    """``--profile-b28``: per-phase breakdown of
-    b28_semantic_dedup_blocked at 1x/10x/100x, written to
-    B28_SCALE_PROFILE.json (r11 verdict item 1).
-
-    b28's 300x wall (970 s for 600k vectors) is the largest constant
-    in BENCH_SCALE.json, inside its plan-law gate but unexplained:
-    nothing showed WHERE it goes.  The operator is four cumulative
-    physical stages, each a strict superset of the previous plan —
-    so phase wall = cumulative, and the marginal (difference between
-    adjacent phases) names the dominant term:
-
-      hash_fanout   all L bucket ids per row (L x p codegen'd
-                    sign-dot-products) + posexplode into L
-                    (tbl, bucket) rows — compute only, no exchange
-      collect       + the groupBy((tbl, bucket)) keyed exchange
-                    collecting (doc, v, nrm) members per bucket —
-                    the stage that shuffles the corpus VECTORS L
-                    times (the shuffle-bytes suspect)
-      score         + in-bucket (i < j) explode and exact-cosine
-                    threshold (pre cross-table dedup)
-      pair_dedup    + dropDuplicates on (doc_a, doc_b) — 3 scalars
-                    per scored collision
-      full          the shipped operator (adds localCheckpoint +
-                    driver union-find components + anti-join)
-
-    Counts come from the same plans (candidate pairs = sum of
-    C(bucket_size, 2); scored collisions = pre-dedup survivors).
-    Phase timings are min of 2 after 1 warm-up, the tier protocol.
-    300x is deliberately skipped: the 100x marginals identify the
-    dominant term and the 300x corpus would spend ~2 h of box time
-    re-measuring a curve the tiers already gate."""
-    base_dir = os.environ.get("SPARK_GRAFT_SF_DIR",
-                              "/root/testdata/sf0.1")
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from pyspark.sql import functions as F
-
-    from trial_data_ingestion_spark.operators.semantic_dedup import (
-        semantic_dedup_blocked,
-    )
-    from trial_data_ingestion_spark.operators.similarity import (
-        embedding_near_dups_multitable, srp_auto_planes,
-        srp_multitable_tagged, srp_tables_for_recall,
-    )
-    from trial_data_ingestion_spark.session import get_spark
-
-    spark = get_spark(app_name="profile-b28")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    dirs = {f: d for f, d in _scale_tier_dirs(base_dir).items()
-            if f <= 100}
-
-    def timed(fn) -> float:
-        fn()
-        ts = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn()
-            ts.append(time.perf_counter() - t0)
-        return round(min(ts), 3)
-
-    out: dict = {
-        "metric": "b28 cumulative phase wall, min of 2 after 1 "
-                  "warm-up; counts from the same plans",
-        "calibration_sec": _calibration_sec(spark),
-        "calibration_version": CALIBRATION_VERSION,
-        "calibration_mem_sec": _calibration_mem_sec(spark),
-        "calibration_mem_version": CALIBRATION_MEM_VERSION,
-        "fixed_params": {"eps": B28_EPS,
-                         "target_recall": B28_TARGET_RECALL,
-                         "dim": 64},
-        "finding": (
-            "phases decompose the NATIVE/EXPLODE shape (the shipped "
-            "shape before r12): at 100x the score phase — "
-            "slice-explode materializing two full (doc, v, nrm) "
-            "struct copies per candidate pair before the codegen'd "
-            "dot — carries ~65% of the wall (33.4M candidates) and "
-            "hashing (L*p = 450 codegen'd sign-dot expressions per "
-            "row) ~27%; the groupBy collect, cross-table pair dedup "
-            "and components are noise (zero pairs clear eps=0.9 on "
-            "this corpus).  The r12 A/B at the same plans measured "
-            "arrow-matmul hashing + per-bucket BLAS kernel scoring "
-            "(srp_buckets_batched / _srp_pairs_kernel) at 2.6x "
-            "faster end-to-end for 200k vectors (232.3 s -> 88.7 s, "
-            "identical survivors; 1.8x at 20k), so "
-            "semantic_dedup_blocked defaults to hash_impl='arrow', "
-            "pair_impl='kernel'; embedding_near_dups_multitable "
-            "keeps native/explode for its small fixed default plans "
-            "(L*p = 32, whole-stage codegen end to end)"),
-        "ab_full_operator_sec": {
-            "protocol": "min of 2 after 1 warm-up, same corpus dirs",
-            "x10": {"native/explode": 12.316, "arrow/explode": 7.022,
-                    "native/kernel": 11.575, "arrow/kernel": 6.689},
-            "x100": {"native/explode": 232.283,
-                     "arrow/explode": 162.262,
-                     "native/kernel": 157.523,
-                     "arrow/kernel": 88.684}},
-        "tiers": {}}
-    for factor, d in sorted(dirs.items()):
-        emb = (spark.read.parquet(f"{d}/embeddings.parquet")
-               .select("vec_id", "embedding"))
-        n = emb.count()
-        p = srp_auto_planes(n)
-        ntab = srp_tables_for_recall(B28_EPS, p,
-                                     target=B28_TARGET_RECALL)
-        tagged = srp_multitable_tagged(emb, 64, "vec_id", "embedding",
-                                       p, ntab)
-        grouped = tagged.groupBy("tbl", "bucket").agg(
-            F.collect_list(F.struct("doc", "v", "nrm")).alias("ms"))
-        scored = embedding_near_dups_multitable(
-            emb, 64, threshold=B28_EPS, num_planes=p, num_tables=ntab,
-            deduplicate=False)
-        deduped = embedding_near_dups_multitable(
-            emb, 64, threshold=B28_EPS, num_planes=p, num_tables=ntab)
-
-        tier = {
-            "rows": n,
-            "plan": {"num_planes": p, "num_tables": ntab,
-                     "lp": p * ntab},
-            "hash_fanout_sec": timed(
-                lambda: tagged.agg(F.sum("bucket")).collect()),
-            "collect_sec": timed(
-                lambda: grouped.agg(
-                    F.sum(F.size("ms"))).collect()),
-            "candidate_pairs": grouped.agg(F.sum(F.expr(
-                "size(ms) * (size(ms) - 1) / 2"))).collect()[0][0],
-            "score_sec": timed(scored.count),
-            "scored_collisions": scored.count(),
-            "pair_dedup_sec": timed(deduped.count),
-            "unique_pairs": deduped.count(),
-            "full_sec": timed(
-                lambda: semantic_dedup_blocked(
-                    emb, dim=64, eps=B28_EPS,
-                    target_recall=B28_TARGET_RECALL).count()),
-        }
-        tier["candidate_pairs"] = int(tier["candidate_pairs"] or 0)
-        out["tiers"][str(factor)] = tier
-        print(f"b28 profile x{factor}: rows={n} plan=(p={p}, "
-              f"L={ntab}) hash={tier['hash_fanout_sec']}s "
-              f"collect={tier['collect_sec']}s "
-              f"score={tier['score_sec']}s "
-              f"dedup={tier['pair_dedup_sec']}s "
-              f"full={tier['full_sec']}s "
-              f"cands={tier['candidate_pairs']}", file=sys.stderr)
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "B28_SCALE_PROFILE.json"), "w") as f:
-        json.dump(out, f, indent=2)
-        f.write("\n")
-    print(json.dumps(out))
-
-
 if __name__ == "__main__":
-    if "--rebaseline" in sys.argv[1:]:
+    import argparse
+
+    ap = argparse.ArgumentParser(allow_abbrev=False)
+    ap.add_argument("--rebaseline", action="store_true",
+                    help="write the rolling best to BENCH_BASELINE.json")
+    ap.add_argument("--scale", action="store_true",
+                    help="measure one scale tier into BENCH_SCALE.json")
+    ap.add_argument("--only", metavar="NAME[,NAME...]",
+                    help="run a subset of HEADLINE; skips the "
+                         "BENCH_LOCAL write")
+    args = ap.parse_args()
+    if args.rebaseline:
         rebaseline()
-    elif "--scale" in sys.argv[1:]:
+    elif args.scale:
         run_scale()
-    elif "--profile-q19" in sys.argv[1:]:
-        run_profile_q19()
-    elif "--profile-b28" in sys.argv[1:]:
-        run_profile_b28()
     else:
-        main()
+        main(only=args.only)

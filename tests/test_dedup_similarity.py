@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR_ORACLE
 from trial_data_ingestion_spark.operators import dedup
 from trial_data_ingestion_spark.operators.similarity import (
     embedding_near_dups_exact, topk_bruteforce, topk_ivf,
@@ -159,24 +160,29 @@ def test_kmeans_ivf_recall_sf001(spark):
     assert _recall_at_10(exact, ivf) >= 0.9
 
 
-def test_multitable_srp_recall_on_planted_dups(spark):
-    """VERDICT r2 #5: the union-of-L-plane-sets recall strategy as a
-    real operator.  200 base vectors + 60 perturbed copies at cosine
-    ~0.98; one 8-plane table finds ~65% of the true pairs, L=4
-    independent tables must reach >= 0.9 (measured 0.967) — the
-    1-(1-r)^L recall amplification, with precision exact by
-    construction (candidates are rescored with true cosine)."""
+def _planted_dups(spark):
+    """200 base vectors + 60 perturbed copies at cosine ~0.98."""
     import numpy as np
-    from trial_data_ingestion_spark.operators.similarity import (
-        embedding_near_dups_multitable,
-    )
     rng = np.random.default_rng(5)
     base = rng.normal(0, 1, (200, 64))
     rows = [(int(i), [float(x) for x in v]) for i, v in enumerate(base)]
     for j in range(60):
         dup = base[j] + 0.2 * rng.normal(0, 1, 64)
         rows.append((1000 + j, [float(x) for x in dup]))
-    emb = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
+    return spark.createDataFrame(rows, "vec_id int, embedding array<float>")
+
+
+def test_multitable_srp_recall_on_planted_dups(spark):
+    """VERDICT r2 #5: the union-of-L-plane-sets recall strategy as a
+    real operator.  On the planted set one 8-plane table finds ~65%
+    of the true pairs, L=4 independent tables must reach >= 0.9
+    (measured 0.967) — the 1-(1-r)^L recall amplification, with
+    precision exact by construction (candidates are rescored with
+    true cosine)."""
+    from trial_data_ingestion_spark.operators.similarity import (
+        embedding_near_dups_multitable,
+    )
+    emb = _planted_dups(spark)
     exact = {(r.doc_a, r.doc_b) for r in embedding_near_dups_exact(
         emb, threshold=0.9, dim=64).collect()}
     assert len(exact) == 60  # exactly the planted pairs
@@ -208,36 +214,28 @@ def test_multitable_srp_containment_sf001(spark):
     assert len(multi) > len(single)
 
 
-@pytest.mark.slow
-def test_multitable_srp_impl_variants_agree(spark):
-    """The r12 physical-shape knobs (hash_impl='arrow' — one numpy
-    matmul per Arrow batch instead of L*p codegen'd sign-dots;
-    pair_impl='kernel' — per-bucket BLAS cosine matrix instead of
-    slice-explode) must produce the SAME pair set and cosines as the
-    native/explode shape: the plane family, threshold and pair
-    orientation are shared, only the physical plan differs.  Checked
-    on the sf0.01 embeddings at the graded threshold."""
+def test_multitable_srp_single_table_matches_reference(spark):
+    """One table of the multi-table operator (Arrow-batch matmul
+    hashing, per-bucket BLAS scoring) finds exactly the pairs and
+    cosines of the oracle-graded single-table
+    ``embedding_near_dups`` at the same planes (codegen'd sign-dots,
+    slice-explode scoring): same md5 plane family, threshold and
+    pair orientation; only the physical plan differs.  Checked on
+    the planted-dup set and on the sf0.01 embeddings."""
     from trial_data_ingestion_spark.operators.similarity import (
-        embedding_near_dups_multitable,
+        embedding_near_dups, embedding_near_dups_multitable,
     )
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-
-    def pairs(**kw):
-        return {(r.doc_a, r.doc_b, round(r.cos, 9))
-                for r in embedding_near_dups_multitable(
-                    emb, dim=64, threshold=0.4, num_planes=8,
-                    num_tables=4, **kw).collect()}
-
-    base = pairs()
-    assert pairs(hash_impl="arrow") == base
-    assert pairs(pair_impl="kernel") == base
-    assert pairs(hash_impl="arrow", pair_impl="kernel") == base
-
-    import pytest
-    with pytest.raises(ValueError, match="hash_impl"):
-        embedding_near_dups_multitable(emb, dim=64, hash_impl="x")
-    with pytest.raises(ValueError, match="pair_impl"):
-        embedding_near_dups_multitable(emb, dim=64, pair_impl="x")
+    sf001 = spark.read.parquet(f"{SF_DIR_ORACLE}/embeddings.parquet")
+    for emb, threshold in ((_planted_dups(spark), 0.9), (sf001, 0.4)):
+        ref = {(r.doc_a, r.doc_b, round(r.cos, 9))
+               for r in embedding_near_dups(
+                   emb, dim=64, threshold=threshold,
+                   num_planes=8).collect()}
+        got = {(r.doc_a, r.doc_b, round(r.cos, 9))
+               for r in embedding_near_dups_multitable(
+                   emb, dim=64, threshold=threshold, num_planes=8,
+                   num_tables=1).collect()}
+        assert got == ref and ref
 
 
 def test_embedding_near_dups_exact_finds_duplicate_vector(spark):

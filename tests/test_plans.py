@@ -186,15 +186,15 @@ def _df_plan(spark, df, mode="simple"):
     return df._jdf.queryExecution().explainString(jmode)
 
 
-def test_multitable_srp_single_scan_group_collect_no_python(spark):
-    """The L-table union is ONE scan + ONE keyed shuffle (the r10
-    group-collect rewrite, commit 4f91a33): all L bucket ids compute
-    in one pass, a single groupBy((table, bucket)) collects members,
-    and in-bucket pairs explode from the array — there is NO join on
-    the source at all (no SortMergeJoin/ShuffledHashJoin, never a
-    CartesianProduct or nested loop), everything JVM-side, and the
-    cross-table pair dedup runs AFTER scoring (shuffling 3 scalars per
-    duplicate collision instead of full vectors)."""
+def test_multitable_srp_single_scan_arrow_kernel_no_join(spark):
+    """The L-table union is ONE scan + ONE keyed shuffle: all L bucket
+    ids compute in one Arrow-batched matmul (ArrowEvalPython), a
+    single groupBy((table, bucket)) feeds the per-bucket BLAS cosine
+    kernel (FlatMapGroupsInPandas), and there is NO join on the
+    source at all (no SortMergeJoin/ShuffledHashJoin, never a
+    CartesianProduct or nested loop).  The cross-table pair dedup
+    runs AFTER scoring (shuffling 3 scalars per duplicate collision
+    instead of full vectors)."""
     from trial_data_ingestion_spark.operators.similarity import (
         embedding_near_dups_multitable,
     )
@@ -203,17 +203,16 @@ def test_multitable_srp_single_scan_group_collect_no_python(spark):
                                         num_planes=8, num_tables=4)
     plan = _df_plan(spark, df)
     # no join of any kind over the source — the candidate generation
-    # is a groupBy aggregate, not a self-join
+    # is a keyed group, not a self-join
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
     assert "BroadcastHashJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "EvalPython" not in plan and "PythonUDF" not in plan
-    # the single keyed exchange feeds a collect_list aggregate; the
-    # post-score cross-table dedup is the HashAggregate on pair keys
-    assert "Generate" in plan                       # the explodes
-    assert plan.lower().count("aggregate") >= 1
+    assert "ArrowEvalPython" in plan                # batched hashing
+    assert "FlatMapGroupsInPandas" in plan          # per-bucket scoring
+    # the post-score cross-table dedup is the HashAggregate on pair keys
+    assert "HashAggregate(keys=[doc_a" in plan
 
 
 def test_kmeans_ivf_assignment_broadcasts_centroids(spark):

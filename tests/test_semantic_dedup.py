@@ -1,7 +1,7 @@
 """Semantic dedup: known answers on handcrafted geometry, parity with
 the global exact near-dup graph on separated clusters (real corpus),
 the paper's farthest-from-centroid representative rule, determinism,
-and the equi-join (not nested-loop) plan shape."""
+and the per-cell kernel plan shape."""
 
 from __future__ import annotations
 
@@ -209,38 +209,8 @@ def test_semantic_dedup_deterministic(spark):
     assert a == b and 0 < len(a) < emb.count()
 
 
-def test_semantic_dedup_plan_shape(spark):
-    """``pair_impl='join'``: the cell self-join must be an equi-join
-    on cell_id (shuffle/broadcast hash or sort-merge —
-    AQE-skew-splittable), never a nested loop; no Python anywhere.
-    This shape stays pinned as the oracle-reproducible variant (r11
-    A/B: join 3.16 s vs group-collect 4.3-4.7 s at ~1250
-    members/cell); the r12 default is the BLAS kernel, pinned by
-    test_semantic_dedup_kernel_plan_shape below."""
-    from trial_data_ingestion_spark.operators.semantic_dedup import (
-        semantic_dup_pairs,
-    )
-    from trial_data_ingestion_spark.operators.similarity import (
-        first_id_centroids,
-    )
-    emb = spark.read.parquet(f"{SF_DIR_ORACLE}/embeddings.parquet") \
-        .select("vec_id", "embedding")
-    dim = len(emb.first()["embedding"])
-    cents = first_id_centroids(emb, 4).select(
-        "cell_id", F.col("centroid").cast("array<double>").alias("centroid"))
-    plan = semantic_dup_pairs(emb, cents, dim, pair_impl="join") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
-    # the centroid argmin is the only nested loop (broadcast, k rows);
-    # the candidate join itself must key on cell_id
-    assert "SortMergeJoin [cell_id" in plan \
-        or "ShuffledHashJoin [cell_id" in plan \
-        or "BroadcastHashJoin [cell_id" in plan
-
-
 def test_semantic_dedup_kernel_plan_shape(spark):
-    """``pair_impl='kernel'`` (the r12 default): ONE corpus scan
-    grouped on cell_id into the Arrow pair kernel
+    """ONE corpus scan grouped on cell_id into the Arrow pair kernel
     (FlatMapGroupsInPandas) — no cell self-join anywhere in the plan,
     so the source is scanned once and no O(sum_c m_c^2) candidate
     structs are materialized ahead of the cosine (measured on bench
@@ -267,44 +237,41 @@ def test_semantic_dedup_kernel_plan_shape(spark):
         assert join_on_cell not in plan
 
 
-def test_assign_cells_impls_agree(spark):
+def test_assign_cells_impls_agree(spark, monkeypatch):
     """BLAS-argmin kernel vs crossJoin+window: identical assignments
     on the real corpus AND on the zero-vector edge (null unit
     projection takes the smallest cell_id — the window shape's
-    nulls-first ordering, pinned so the r12 kernel can't drift)."""
-    from trial_data_ingestion_spark.operators.semantic_dedup import (
-        assign_cells, sampled_kmeans_centroids,
-    )
+    nulls-first ordering, pinned so the r12 kernel can't drift).
+    Each shape is forced by moving the cell-count crossover."""
+    from trial_data_ingestion_spark.operators import semantic_dedup as sd
+
     emb = spark.read.parquet(f"{SF_DIR_ORACLE}/embeddings.parquet") \
         .select("vec_id", "embedding")
     dim = len(emb.first()["embedding"])
     cents = spark.createDataFrame(
-        sampled_kmeans_centroids(emb, dim, 8, seed=7).collect(),
+        sd.sampled_kmeans_centroids(emb, dim, 8, seed=7).collect(),
         "cell_id int, centroid array<double>")
-    got = {}
-    for impl in ("window", "kernel"):
-        got[impl] = {r["vec_id"]: r["cell_id"] for r in
-                     assign_cells(emb, cents, dim=dim,
-                                  impl=impl).collect()}
-    assert got["window"] == got["kernel"] and len(got["kernel"]) > 0
-    # zero-vector edge: both shapes give it the smallest cell_id
     z = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.0, 2.0])],
         "vec_id bigint, embedding array<float>")
     zc = spark.createDataFrame([(5, [0.9, 0.1]), (7, [0.1, 0.9])],
                                "cell_id int, centroid array<double>")
-    for impl in ("window", "kernel"):
+    got = {}
+    for shape, crossover in (("window", 10 ** 9), ("kernel", 0)):
+        monkeypatch.setattr(sd, "_ASSIGN_KERNEL_MIN_CELLS", crossover)
+        got[shape] = {r["vec_id"]: r["cell_id"] for r in
+                      sd.assign_cells(emb, cents, dim=dim).collect()}
+        # zero-vector edge: both shapes give it the smallest cell_id
         cells = {r["vec_id"]: r["cell_id"] for r in
-                 assign_cells(z, zc, dim=2, impl=impl).collect()}
-        assert cells == {1: 5, 2: 5, 3: 7}, (impl, cells)
+                 sd.assign_cells(z, zc, dim=2).collect()}
+        assert cells == {1: 5, 2: 5, 3: 7}, (shape, cells)
+    assert got["window"] == got["kernel"] and len(got["kernel"]) > 0
 
 
 def test_assign_cells_auto_picks_shape_by_cell_count(spark):
-    """``impl='auto'`` (the default): window below the measured
-    256-cell crossover, BLAS kernel above it — SemDeDup sizes cells
-    ~ n, so deployments land on the kernel while small sweeps keep
-    the all-codegen shape (and the join pair variant keeps passing
-    'window' explicitly, pinned by test_semantic_dedup_plan_shape)."""
+    """Window below the measured 256-cell crossover, BLAS kernel
+    above it — SemDeDup sizes cells ~ n, so deployments land on the
+    kernel while small sweeps keep the all-codegen shape."""
     from trial_data_ingestion_spark.operators.semantic_dedup import (
         assign_cells,
     )
@@ -325,13 +292,17 @@ def test_assign_cells_auto_picks_shape_by_cell_count(spark):
     assert "ArrowEvalPython" in plan_big
 
 
-def test_semantic_dup_pairs_impl_variants_agree(spark):
-    """join and kernel must produce the identical pair set on the
+def test_semantic_dup_pairs_match_exact_within_cells(spark):
+    """The per-cell kernel's pairs are exactly the global exact
+    cosine graph (:func:`similarity.embedding_near_dups_exact`, the
+    codegen'd reference) restricted to same-cell members, on the
     real corpus (the BLAS ulp caveat documented on the kernel is
-    measure-zero at real thresholds) — the b13 twin of
-    test_multitable_srp_impl_variants_agree."""
+    measure-zero at real thresholds)."""
     from trial_data_ingestion_spark.operators.semantic_dedup import (
-        sampled_kmeans_centroids, semantic_dup_pairs,
+        assign_cells, sampled_kmeans_centroids, semantic_dup_pairs,
+    )
+    from trial_data_ingestion_spark.operators.similarity import (
+        embedding_near_dups_exact,
     )
     emb = spark.read.parquet(f"{SF_DIR_ORACLE}/embeddings.parquet") \
         .select("vec_id", "embedding")
@@ -339,38 +310,17 @@ def test_semantic_dup_pairs_impl_variants_agree(spark):
     cents = spark.createDataFrame(
         sampled_kmeans_centroids(emb, dim, 8, seed=7).collect(),
         "cell_id int, centroid array<double>")
-    got = {}
-    for impl in ("join", "kernel"):
-        got[impl] = sorted(
-            (r["doc_a"], r["doc_b"]) for r in
-            semantic_dup_pairs(emb, cents, dim, eps=0.4,
-                               pair_impl=impl)
-            .select("doc_a", "doc_b").collect())
-    assert got["join"] == got["kernel"] and got["join"]
-
-
-def test_semantic_dedup_pair_scoring_stays_codegen_eligible(spark):
-    """Round-5 regression fix pin (join impl): the assignment
-    materializes via the in-memory COLUMNAR cache, not
-    localCheckpoint — a checkpoint's RDDScanExec replay disables
-    whole-stage codegen for the pair-join stage and leaves the
-    64-term cosine in interpreted eval (measured 5x slower at bench
-    scale)."""
-    from trial_data_ingestion_spark.operators.semantic_dedup import (
-        semantic_dup_pairs,
-    )
-    from trial_data_ingestion_spark.operators.similarity import (
-        first_id_centroids,
-    )
-    emb = spark.read.parquet(f"{SF_DIR_ORACLE}/embeddings.parquet") \
-        .select("vec_id", "embedding")
-    dim = len(emb.first()["embedding"])
-    cents = first_id_centroids(emb, 4).select(
-        "cell_id", F.col("centroid").cast("array<double>").alias("centroid"))
-    plan = semantic_dup_pairs(emb, cents, dim, pair_impl="join") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan, plan[:1500]
-    assert "Scan ExistingRDD" not in plan, plan[:1500]
+    cell = {r["vec_id"]: r["cell_id"] for r in
+            assign_cells(emb, cents, dim=dim).collect()}
+    want = sorted(
+        (r["doc_a"], r["doc_b"]) for r in
+        embedding_near_dups_exact(emb, threshold=0.4, dim=dim).collect()
+        if cell[r["doc_a"]] is not None
+        and cell[r["doc_a"]] == cell[r["doc_b"]])
+    got = sorted((r["doc_a"], r["doc_b"]) for r in
+                 semantic_dup_pairs(emb, cents, dim, eps=0.4)
+                 .select("doc_a", "doc_b").collect())
+    assert got == want and len(got) == 24
 
 
 def test_srp_recall_planning_math():
@@ -500,18 +450,18 @@ def test_farthest_assigns_cells_exactly_once(spark, monkeypatch):
     assert len(calls) == 1, f"assign_cells ran {len(calls)} times"
 
 
-def test_assign_cells_rejects_empty_codebook_on_driver_paths(spark):
-    """Zero centroids is always a caller bug: the auto and kernel
-    paths (which already hold the rows driver-side) must raise
+def test_assign_cells_rejects_empty_codebook_on_driver_paths(spark,
+                                                            monkeypatch):
+    """Zero centroids is always a caller bug: both shapes must raise
     instead of silently diverging (kernel: all-null cell_id; window:
-    all rows dropped — the advisor-flagged parity gap)."""
-    from trial_data_ingestion_spark.operators.semantic_dedup import (
-        assign_cells,
-    )
+    all rows dropped)."""
+    from trial_data_ingestion_spark.operators import semantic_dedup as sd
+
     emb = spark.createDataFrame([(1, _vec(0.0))],
                                 "vec_id long, embedding array<float>")
     empty = spark.createDataFrame(
         [], "cell_id int, centroid array<double>")
-    for impl in ("auto", "kernel"):
+    for crossover in (10 ** 9, -1):
+        monkeypatch.setattr(sd, "_ASSIGN_KERNEL_MIN_CELLS", crossover)
         with pytest.raises(ValueError, match="empty codebook"):
-            assign_cells(emb, empty, dim=DIM, impl=impl)
+            sd.assign_cells(emb, empty, dim=DIM)

@@ -25,12 +25,10 @@ Pipeline: assign each vector to its nearest trained centroid
 closure-held centroid matrix once the codebook crosses the measured
 crossover, the broadcast-crossJoin + window shape below it — either
 way the corpus never shuffles for assignment, see
-:func:`assign_cells`); pair within each cell (default: per-cell BLAS
-cosine kernel; ``pair_impl='join'`` keeps the equi-join on cell_id,
-``id_a < id_b`` — see :func:`semantic_dup_pairs`); exact cosine >=
-eps; connected components over the verified pairs (driver union-find
-for realistic dup-graph sizes); keep one representative per
-component.
+:func:`assign_cells`); pair within each cell (per-cell BLAS cosine
+kernel, see :func:`semantic_dup_pairs`); exact cosine >= eps;
+connected components over the verified pairs (driver union-find for
+realistic dup-graph sizes); keep one representative per component.
 
 Representative rules:
   * ``keep="min_id"`` (default): the lowest id — deterministic and
@@ -44,8 +42,9 @@ Scale notes (100 TB):
     Lloyd iterations; only k centers return to the driver.
   * per-cell candidate volume is O(sum_c n_c^2): pick
     ``num_clusters`` so the expected cell population is 10^3-10^4
-    (the paper used 11k clusters for 100M points).  Hot cells are
-    split by AQE skew handling on the equi-join.
+    (the paper used 11k clusters for 100M points).  A hot cell costs
+    one long kernel task, row-block-chunked so its memory stays
+    bounded.
   * the pair list (verified dups only) is orders below the corpus;
     components resolve on the driver exactly like the MinHash path.
 """
@@ -65,6 +64,7 @@ from trial_data_ingestion_spark.operators.dedup import (
 )
 from trial_data_ingestion_spark.operators.similarity import (
     _nearest_cells,
+    _srp_pairs_kernel,
     kmeans_centroids,
 )
 
@@ -106,20 +106,18 @@ _ASSIGN_KERNEL_MIN_CELLS = 256
 
 def assign_cells(embeddings: DataFrame, centroids: DataFrame,
                  id_col: str = "vec_id", vec_col: str = "embedding",
-                 dim: int = 0, impl: str = "auto") -> DataFrame:
+                 dim: int = 0) -> DataFrame:
     """Each row with its nearest ``cell_id`` attached; no corpus
     shuffle in any shape.
 
-    ``impl`` picks the physical shape (r12, guide §2.4/§4.2):
+    The codebook size picks the physical shape (the measured
+    crossover is :data:`_ASSIGN_KERNEL_MIN_CELLS`).  SemDeDup sizes
+    cells ~ n, so deployments land on the kernel and small sweeps
+    keep the all-codegen shape:
 
-    * ``'auto'`` (default): ``'kernel'`` when the codebook exceeds
-      :data:`_ASSIGN_KERNEL_MIN_CELLS` cells, else ``'window'`` —
-      the measured crossover (see the constant).  SemDeDup sizes
-      cells ~ n, so deployments land on the kernel and small sweeps
-      keep the all-codegen shape.
-    * ``'kernel'``: one Arrow-batched pandas_udf holding the centroid
-      matrix in its closure; per batch the L2 argmin over the unit
-      projection is one ``||c||^2 - 2 x @ c.T`` BLAS product,
+    * above the crossover: one Arrow-batched pandas_udf holding the
+      centroid matrix in its closure; per batch the L2 argmin over the
+      unit projection is one ``||c||^2 - 2 x @ c.T`` BLAS product,
       row-chunked so a task never holds the full B x cells distance
       matrix.  Zero row multiplication, zero exchange — the window
       shape's crossJoin explodes every row x cells BEFORE its
@@ -127,61 +125,40 @@ def assign_cells(embeddings: DataFrame, centroids: DataFrame,
       which is n*cells rows when cells grow with the corpus (2.9B
       rows at the 300x tier, the measured OOM-before-time wall of
       b13's 300x attempts).
-    * ``'window'``: the crossJoin+window shape (r5-r11), kept as the
-      oracle-reproducible variant: its per-cell distance is the SAME
-      codegen'd ``l2_distance_fixed`` a DuckDB oracle re-derives,
-      while BLAS blocked summation can round a distance's last ulp
-      differently — a measure-zero argmin tie-break at cell
-      boundaries, same caveat as ``srp_buckets_batched``.
+    * up to the crossover: the crossJoin+window shape, whose per-cell
+      distance is the SAME codegen'd ``l2_distance_fixed`` a DuckDB
+      oracle re-derives, while BLAS blocked summation can round a
+      distance's last ulp differently — a measure-zero argmin
+      tie-break at cell boundaries, same caveat as
+      ``srp_buckets_batched``.
 
     Parity (pinned by test_assign_cells_impls_agree): identical
     assignments on real corpora, including the zero-vector edge — a
     null unit projection takes the smallest cell_id, matching the
-    window shape's nulls-first ordering."""
-    if impl not in ("auto", "kernel", "window"):
-        raise ValueError(f"impl must be auto|kernel|window, "
-                         f"got {impl!r}")
-    crows = None
-    if impl == "auto":
-        # collect ONCE and derive both the routing decision and (when
-        # the kernel wins) the centroid matrix from the same rows —
-        # the r12 shape ran an eager limit().count() AND a collect(),
-        # evaluating a caller-supplied lazy centroids plan twice
-        # (advisor finding).  The collect is the kernel's own budget:
-        # the codebook ships in the udf closure either way.
-        crows = centroids.select("cell_id", "centroid") \
-                         .orderBy("cell_id").collect()
-        if not crows:
-            raise ValueError(
-                "assign_cells: empty codebook — zero centroids is "
-                "always a caller bug (the window shape would drop "
-                "every row, the kernel would null every cell_id)")
-        impl = ("kernel" if len(crows) > _ASSIGN_KERNEL_MIN_CELLS
-                else "window")
+    window shape's nulls-first ordering.  An empty codebook raises
+    ``ValueError`` (a caller bug: the window shape would drop every
+    row, the kernel would null every cell_id)."""
+    # ONE collect serves both the routing decision and the kernel's
+    # centroid matrix (the codebook ships in the udf closure anyway)
+    crows = centroids.select("cell_id", "centroid") \
+                     .orderBy("cell_id").collect()
+    if not crows:
+        raise ValueError(
+            "assign_cells: empty codebook — zero centroids is "
+            "always a caller bug")
     unit = _with_unit(embeddings, vec_col, dim)
-    if impl == "window":
-        # NOTE: an explicitly-requested window shape stays lazy end
-        # to end (no driver job here), so an empty codebook is only
-        # caught on the auto/kernel paths where the rows are already
-        # driver-side
+    if len(crows) <= _ASSIGN_KERNEL_MIN_CELLS:
         assigned = _nearest_cells(unit, centroids, "__u", id_col,
                                   n_keep=1, dim=dim)
         return assigned.drop("__u")
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    if crows is None:
-        crows = centroids.select("cell_id", "centroid") \
-                         .orderBy("cell_id").collect()
-    if not crows:
-        raise ValueError(
-            "assign_cells: empty codebook — zero centroids is "
-            "always a caller bug")
     cent_t = np.array([r["centroid"] for r in crows],
                       dtype=np.float64).T            # (dim, cells)
     c2 = (cent_t * cent_t).sum(axis=0)               # (cells,)
     cids = np.array([r["cell_id"] for r in crows], dtype=np.int64)
-    null_cell = int(cids[0]) if len(cids) else None
+    null_cell = int(cids[0])
 
     @pandas_udf("int")
     def nearest(col: pd.Series) -> pd.Series:
@@ -245,99 +222,49 @@ def sampled_kmeans_centroids(embeddings: DataFrame, dim: int,
 def semantic_dup_pairs(embeddings: DataFrame, centroids: DataFrame,
                        dim: int, id_col: str = "vec_id",
                        vec_col: str = "embedding",
-                       eps: float = 0.9,
-                       pair_impl: str = "kernel",
-                       assign_impl: str | None = None) -> DataFrame:
+                       eps: float = 0.9) -> DataFrame:
     """Verified semantic-duplicate pairs ``(doc_a, doc_b, cos)``:
     same-cell candidates only, exact cosine >= eps.
 
-    ``assign_impl`` (default: follows ``pair_impl``) picks the
-    :func:`assign_cells` shape — ``'auto'`` (cell-count crossover to
-    the BLAS argmin) with the kernel pair stage, ``'window'``
-    crossJoin+window with the join pair stage so the
-    oracle-reproducible variant stays free of Python nodes end to
-    end.
+    Physical shape: :func:`assign_cells`, then ONE keyed shuffle into
+    per-cell BLAS cosine matrices via ``applyInPandas``
+    (:func:`similarity._srp_pairs_kernel` grouped on ``cell_id``,
+    row-block-chunked so a cell never materializes its full m x m
+    matrix).  Members cross the Python boundary once per cell —
+    O(n) rows — instead of a cell self-join's O(sum_c m_c^2)
+    candidate-pair struct copies ahead of a codegen'd dot.  Measured
+    on bench b13 (sf0.1, 20k vectors, 16 cells = ~1250 members/cell,
+    the SemDeDup paper's occupancy regime): self-join 2.9-3.2 s
+    steady vs kernel ~1 s, and the chunked kernel bounds task memory
+    where the join's 300x attempt OOM'd the 8 GB driver
+    materializing per-cell pairs.
 
-    Physical shape (``pair_impl``):
-
-    * ``'kernel'`` (default, r12-measured): ONE corpus scan; per-cell
-      BLAS cosine matrices via ``applyInPandas``
-      (:func:`similarity._srp_pairs_kernel` grouped on ``cell_id``,
-      row-block-chunked so a cell never materializes its full m x m
-      matrix).  Members cross the Python boundary once per cell —
-      O(n) rows — instead of the join's O(sum_c m_c^2) candidate-pair
-      struct copies ahead of the codegen'd dot.  Measured on bench
-      b13 (sf0.1, 20k vectors, 16 cells = ~1250 members/cell, the
-      SemDeDup paper's occupancy regime): join 2.9-3.2 s steady vs
-      kernel ~1 s — and the chunked kernel bounds task memory where
-      the join's 300x attempt OOM'd the 8 GB driver materializing
-      per-cell pairs.
-    * ``'join'``: alias SELF-JOIN on ``cell_id`` with the codegen'd
-      per-pair cosine — kept as the oracle-reproducible shape (no
-      Python worker, bitwise-stable left-to-right fold; BLAS blocked
-      summation can round a cosine's last ulp differently, a
-      measure-zero tie-break at the eps boundary documented on the
-      kernel).  r11 measured this join FASTER than the group-collect
-      rewrite at cell occupancy (3.16 s vs 4.3-4.7 s — collect_list +
-      slice-explode pays O(members^2) full-vector copies); the kernel
-      beats both because members transfer once and the pair flops run
-      in BLAS.  The join persists the assignment (it feeds both
-      sides; in-memory columnar, NOT localCheckpoint whose RDDScanExec
-      replay disables whole-stage codegen — measured 5x slower in r5).
-
-    Norms are computed once per vector before pairing (O(n), keeps
-    the per-pair expression inside janino's codegen method limit —
-    see embedding_near_dups).  Both shapes guard ``doc_a == doc_b``
-    self-pairs when input ids repeat: the join by its strict ``<``
-    condition, the kernel by its explicit not-equal mask."""
-    if pair_impl not in ("join", "kernel"):
-        raise ValueError(f"pair_impl must be join|kernel, "
-                         f"got {pair_impl!r}")
-    if assign_impl is None:
-        assign_impl = "auto" if pair_impl == "kernel" else "window"
+    Norms are computed once per vector before pairing; the kernel
+    masks ``doc_a == doc_b`` self-pairs when input ids repeat."""
     assigned = assign_cells(embeddings, centroids, id_col, vec_col,
-                            dim, impl=assign_impl)
+                            dim)
     return _pairs_from_assigned(assigned, embeddings.schema, dim,
-                                id_col, vec_col, eps, pair_impl)
+                                id_col, vec_col, eps)
 
 
 def _pairs_from_assigned(assigned: DataFrame, emb_schema, dim: int,
-                         id_col: str, vec_col: str, eps: float,
-                         pair_impl: str,
-                         persist_join_input: bool = True) -> DataFrame:
+                         id_col: str, vec_col: str,
+                         eps: float) -> DataFrame:
     """Pair stage of :func:`semantic_dup_pairs` over an ALREADY
-    cell-assigned frame — split out (r13) so ``semantic_dedup``'s
+    cell-assigned frame — split out so ``semantic_dedup``'s
     ``keep='farthest'`` rule can reuse its one assignment for both
     the pair stage and the centroid-distance election instead of
-    running :func:`assign_cells` twice.  ``persist_join_input=False``
-    skips the join shape's self-join persist when the CALLER already
-    persisted the assignment (persisting a child of a persisted
-    parent would double-cache the same rows)."""
+    running :func:`assign_cells` twice."""
     sel = (assigned
            .select(F.col(id_col).alias("doc"),
                    F.col(vec_col).alias("v"),
                    l2_norm_fixed(vec_col, dim).alias("nrm"),
-                   "cell_id"))
-    if pair_impl == "kernel":
-        from trial_data_ingestion_spark.operators.similarity import (
-            _srp_pairs_kernel,
-        )
-        # null cell_id (zero-norm vector, no direction) joins no cell
-        # in the 'join' shape; filter to match before the groupBy
-        return _srp_pairs_kernel(
-            sel.where(F.col("cell_id").isNotNull()),
-            emb_schema, id_col, eps, group_cols=("cell_id",))
-    emb = sel.persist() if persist_join_input else sel
-    a, b = emb.alias("a"), emb.alias("b")
-    return (
-        a.join(b, on=[F.col("a.cell_id") == F.col("b.cell_id"),
-                      F.col("a.doc") < F.col("b.doc")])
-         .withColumn("cos", dot_fixed("a.v", "b.v", dim)
-                     / (F.col("a.nrm") * F.col("b.nrm")))
-         .where(F.col("cos") >= eps)
-         .select(F.col("a.doc").alias("doc_a"),
-                 F.col("b.doc").alias("doc_b"), F.col("cos"))
-    )
+                   "cell_id")
+           # a null cell_id (zero-norm vector, no direction) joins
+           # no cell
+           .where(F.col("cell_id").isNotNull()))
+    return _srp_pairs_kernel(sel, emb_schema, id_col, eps,
+                             group_cols=("cell_id",))
 
 
 def semantic_dedup(embeddings: DataFrame, dim: int,
@@ -346,8 +273,7 @@ def semantic_dedup(embeddings: DataFrame, dim: int,
                    keep: str = "min_id", seed: int = 42,
                    sample_size: int = 20_000,
                    centroids: DataFrame | None = None,
-                   score_col: str | None = None,
-                   pair_impl: str = "kernel") -> DataFrame:
+                   score_col: str | None = None) -> DataFrame:
     """Corpus with semantic duplicates removed: one representative
     survives per epsilon-connected same-cell duplicate group; rows in
     no duplicate pair pass through untouched.  Pass ``centroids`` to
@@ -376,19 +302,14 @@ def semantic_dedup(embeddings: DataFrame, dim: int,
         # once inside semantic_dup_pairs and once for the election
         # (the second Python-kernel/crossJoin pass was pure rework).
         # Persisted because both consumers action it independently.
-        assigned = assign_cells(
-            embeddings, centroids, id_col, vec_col, dim,
-            impl=("auto" if pair_impl == "kernel" else "window")) \
-            .persist()
+        assigned = assign_cells(embeddings, centroids, id_col,
+                                vec_col, dim).persist()
         pairs = _pairs_from_assigned(assigned, embeddings.schema,
-                                     dim, id_col, vec_col, eps,
-                                     pair_impl,
-                                     persist_join_input=False) \
+                                     dim, id_col, vec_col, eps) \
             .select("doc_a", "doc_b")
     else:
         pairs = semantic_dup_pairs(embeddings, centroids, dim, id_col,
-                                   vec_col, eps,
-                                   pair_impl=pair_impl) \
+                                   vec_col, eps) \
             .select("doc_a", "doc_b")
     if keep == "best":
         # keep_best_per_cluster localCheckpoint()s the pairs itself —
@@ -441,9 +362,7 @@ def semantic_dedup_blocked(embeddings: DataFrame, dim: int,
                            id_col: str = "vec_id",
                            vec_col: str = "embedding",
                            keep: str = "min_id",
-                           score_col: str | None = None,
-                           hash_impl: str = "arrow",
-                           pair_impl: str = "kernel") -> DataFrame:
+                           score_col: str | None = None) -> DataFrame:
     """:func:`semantic_dedup` semantics (drop epsilon-connected
     cosine duplicates, one representative per group) with MULTI-TABLE
     SRP blocking instead of centroid cells — the sub-quadratic path
@@ -477,24 +396,13 @@ def semantic_dedup_blocked(embeddings: DataFrame, dim: int,
     with a ``score_col`` — ``farthest`` needs cell centroids and has
     no meaning here.
 
-    Physical shape (r12, measured): defaults are
-    ``hash_impl='arrow'`` (all L bucket ids per row in ONE numpy
-    matmul per Arrow batch, :func:`similarity.srp_buckets_batched`)
-    and ``pair_impl='kernel'`` (per-bucket BLAS cosine matrix via
-    ``applyInPandas``) — the opposite defaults from
-    :func:`similarity.embedding_near_dups_multitable` because the
-    choice is PLAN-SIZE-dependent, exactly like r11's
-    occupancy-dependent pair-shape finding.  B28_SCALE_PROFILE.json
-    names the terms at the auto-resolved deployment plans: scoring
-    (slice-explode pair materialization) carries 65% of the 100x
-    wall and hashing (L·p = 450 codegen'd sign-dot expressions) 27%;
-    the A/B at those plans measured native/explode 232 s vs
-    arrow/kernel 89 s for 200k vectors (2.6x, identical survivors;
-    1.8x at 20k).  At the small FIXED plans the multitable default
-    serves (p=8, L=4, L·p = 32) the codegen'd path is competitive
-    and stays whole-stage-codegen'd end to end, so that function
-    keeps native/explode unless told otherwise — pass these knobs
-    through for deployment-sized plans."""
+    Physical shape: :func:`similarity.embedding_near_dups_multitable`
+    (Arrow-batch matmul hashing, per-bucket BLAS cosine kernel).
+    B28_SCALE_PROFILE.json records why: at the auto-resolved
+    deployment plans, slice-explode pair materialization carried 65%
+    of the 100x wall and codegen'd hashing (L·p = 450 sign-dot
+    expressions) 27%, and the kernel shape measured 89 s vs 232 s
+    for 200k vectors (identical survivors; 1.8x at 20k)."""
     from trial_data_ingestion_spark.operators.similarity import (
         embedding_near_dups_multitable, resolve_num_planes,
         srp_tables_for_recall,
@@ -514,8 +422,7 @@ def semantic_dedup_blocked(embeddings: DataFrame, dim: int,
                          f"'auto', got {num_tables!r}")
     pairs = embedding_near_dups_multitable(
         embeddings, dim, id_col, vec_col, threshold=eps,
-        num_planes=num_planes, num_tables=num_tables,
-        hash_impl=hash_impl, pair_impl=pair_impl) \
+        num_planes=num_planes, num_tables=num_tables) \
         .select("doc_a", "doc_b")
     if keep == "best":
         # keep_best_per_cluster localCheckpoint()s the pairs itself —

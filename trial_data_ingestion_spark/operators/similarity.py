@@ -108,8 +108,7 @@ def _hyperplane(dim: int, plane_idx: int) -> list[float]:
     return comps
 
 
-def srp_bucket(vec, dim: int, num_planes: int = 8,
-               plane_offset: int = 0) -> Column:
+def srp_bucket(vec, dim: int, num_planes: int = 8) -> Column:
     """Sign-random-projection bucket id (0 .. 2^num_planes - 1),
     computed natively from literal hyperplane arrays.
 
@@ -119,16 +118,11 @@ def srp_bucket(vec, dim: int, num_planes: int = 8,
     Column form costs ~dim x num_planes py4j round-trips of driver
     build time (see functions/vector.py).  Both build the identical
     Catalyst tree, so bucket assignments (and the inlined-plane
-    DuckDB oracles) are unchanged.
-
-    ``plane_offset`` selects an independent plane set from the same
-    deterministic md5 family (table t of a multi-table scheme passes
-    ``t * num_planes``)."""
+    DuckDB oracles) are unchanged."""
     if isinstance(vec, str):
         parts = ["0"]
         for p in range(num_planes):
-            arr = ", ".join(
-                f"{c!r}D" for c in _hyperplane(dim, plane_offset + p))
+            arr = ", ".join(f"{c!r}D" for c in _hyperplane(dim, p))
             proj = (f"aggregate(zip_with({vec}, array({arr}),"
                     f" (x, y) -> CAST(x AS DOUBLE) * y),"
                     f" CAST(0.0 AS DOUBLE), (a, b) -> a + b)")
@@ -137,8 +131,7 @@ def srp_bucket(vec, dim: int, num_planes: int = 8,
         return F.expr(" + ".join(parts))
     bucket = F.lit(0)
     for p in range(num_planes):
-        plane = F.array(*[F.lit(c)
-                          for c in _hyperplane(dim, plane_offset + p)])
+        plane = F.array(*[F.lit(c) for c in _hyperplane(dim, p)])
         proj = F.aggregate(
             F.zip_with(vec, plane, lambda x, y: x.cast("double") * y),
             F.lit(0.0), lambda a, b: a + b)
@@ -419,8 +412,9 @@ def embedding_near_dups(embeddings: DataFrame, dim: int,
     second scan+exchange.  At large block occupancy the same shape
     LOSES — slice-explode materializes O(members^2) full-vector
     copies — which is why :func:`semantic_dedup.semantic_dup_pairs`
-    (SemDeDup cells, ~10^3-10^4 members) keeps the equi-join
-    (measured there: join 3.16 s vs group-collect 4.3-4.7 s)."""
+    (SemDeDup cells, ~10^3-10^4 members) scores each cell with the
+    BLAS kernel :func:`_srp_pairs_kernel` instead (measured on b13:
+    group-collect 4.3-4.7 s, equi-join 3.16 s, kernel ~1 s)."""
     # Norms are computed once per vector BEFORE pair generation: the
     # O(n) vs O(n^2) saving, and the per-pair expression shrinks to
     # the dim-term dot product — the full inline cosine (3 x dim
@@ -519,15 +513,14 @@ def srp_buckets_batched(dim: int, num_planes: int, num_tables: int):
     phase grows with exactly that product.  One (B, dim) @ (dim, L·p)
     BLAS matmul per Arrow batch does the same flops at memory
     bandwidth.  Returns a ``pandas_udf`` producing ``array<long>`` of
-    length L, position = table ordinal (posexplode order matches the
-    native path's ``tbl``).
+    length L, position = table ordinal.
 
-    Caveat, stated honestly: the native path folds the projection
+    Caveat, stated honestly: ``srp_bucket`` folds the projection
     left-to-right while BLAS uses blocked summation, so a projection
     within float-rounding of 0.0 can land on the other side — a
     measure-zero bucket tie-break, harmless to LSH recall (the
     Goemans-Williamson collision probability is unchanged) but NOT
-    bit-identical to ``srp_bucket``; keep the native path wherever a
+    bit-identical to ``srp_bucket``; keep ``srp_bucket`` wherever a
     DuckDB oracle re-derives buckets."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
@@ -556,10 +549,7 @@ def embedding_near_dups_multitable(embeddings: DataFrame, dim: int,
                                    vec_col: str = "embedding",
                                    threshold: float = 0.9,
                                    num_planes: int | str = 8,
-                                   num_tables: int = 4,
-                                   deduplicate: bool = True,
-                                   hash_impl: str = "native",
-                                   pair_impl: str = "explode") -> DataFrame:
+                                   num_tables: int = 4) -> DataFrame:
     """Multi-table SRP near-dup pairs: the recall path promised in
     :func:`embedding_near_dups`'s docstring, as a real operator.
 
@@ -576,82 +566,30 @@ def embedding_near_dups_multitable(embeddings: DataFrame, dim: int,
     ``num_planes="auto"`` sizes the per-table plane count from a
     count() of the corpus (:func:`resolve_num_planes`).
 
-    Scale shape (r10, same as the single-table path): ONE pass
-    computes all L bucket ids per vector (codegen'd literal-plane
-    expressions), ``posexplode`` fans each vector into L
-    (table, bucket) rows, ONE groupBy((table, bucket)) shuffle
-    collects bucket members, and in-bucket (i < j) pairs explode
-    from the collected array — never a self-join (which scans and
-    hashes the source twice; measured 2.4x slower on the
-    single-table path in round 6, and ~2x here).  Scoring runs
-    BEFORE the cross-table pair dedup, on purpose: a pair colliding
-    in several tables is scored once per collision (the dim-term dot
-    is a few hundred codegen'd flops), but deduplicating first would
-    shuffle the full vectors (KBs/row at real dims) where
-    deduplicating scored pairs shuffles 3 scalars/row — at 100 TB
-    the shuffle bytes dominate the duplicate flops by orders of
-    magnitude.
-
-    ``deduplicate=False`` returns the scored pairs BEFORE the
-    cross-table dedup (a pair appears once per table collision) —
-    the profiler's hook for timing that last exchange separately;
-    external callers should keep the default.
-
-    ``hash_impl`` / ``pair_impl`` select the physical shape of the
-    two phases B28_SCALE_PROFILE.json names as the wall
-    (``'native'``/``'explode'`` = the codegen'd expression path and
-    slice-explode pair generation; ``'arrow'``/``'kernel'`` = one
-    numpy matmul per Arrow batch via :func:`srp_buckets_batched` and
-    a per-bucket BLAS cosine matrix via ``applyInPandas``).  The
-    semantics are identical either way (same md5 plane family, same
-    threshold, same (doc_a < doc_b) orientation); see the bench A/B
-    notes at :func:`semantic_dedup.semantic_dedup_blocked` for which
-    shape wins at which plan size."""
+    Physical shape: ONE scan computes all L bucket ids per vector in
+    one numpy matmul per Arrow batch (:func:`srp_buckets_batched`),
+    ``posexplode`` fans each vector into L (table, bucket) rows, and
+    ONE keyed shuffle feeds the per-bucket BLAS cosine kernel
+    (:func:`_srp_pairs_kernel`) — never a self-join.  Scoring runs
+    BEFORE the cross-table pair dedup, on purpose: deduplicating
+    first would shuffle the full vectors where deduplicating scored
+    pairs shuffles 3 scalars/row.  B28_SCALE_PROFILE.json records the
+    A/B that chose this shape over codegen'd sign-dots + slice-explode
+    pair generation: 6.7 s vs 12.3 s at 20k vectors, 89 s vs 232 s at
+    200k, identical survivors."""
     num_planes = resolve_num_planes(num_planes,
                                     lambda: embeddings.count())
-    if hash_impl not in ("native", "arrow"):
-        raise ValueError(f"hash_impl must be native|arrow, "
-                         f"got {hash_impl!r}")
-    if pair_impl not in ("explode", "kernel"):
-        raise ValueError(f"pair_impl must be explode|kernel, "
-                         f"got {pair_impl!r}")
-    if hash_impl == "arrow":
-        bucketize = srp_buckets_batched(dim, num_planes, num_tables)
-        tagged = (embeddings.select(
-            F.col(id_col).alias("doc"),
-            F.col(vec_col).alias("v"),
-            l2_norm_fixed(vec_col, dim).alias("nrm"),
-            bucketize(F.col(vec_col)).alias("__bks"))
-            .select("doc", "v", "nrm",
-                    F.posexplode("__bks").alias("tbl", "bucket")))
-    else:
-        tagged = srp_multitable_tagged(embeddings, dim, id_col,
-                                       vec_col, num_planes, num_tables)
-    if pair_impl == "kernel":
-        scored = _srp_pairs_kernel(tagged, embeddings.schema,
-                                   id_col, threshold)
-    else:
-        grouped = tagged.groupBy("tbl", "bucket").agg(
-            F.collect_list(F.struct("doc", "v", "nrm")).alias("ms"))
-        pairs = (
-            grouped.select(F.posexplode("ms").alias("i", "a"), "ms")
-                   .select("a", F.expr("slice(ms, i + 2, size(ms))")
-                           .alias("rest"))
-                   .select("a", F.explode("rest").alias("b")))
-        scored = (
-            pairs.withColumn("cos", dot_fixed("a.v", "b.v", dim)
-                             / (F.col("a.nrm") * F.col("b.nrm")))
-                 .where(F.col("cos") >= threshold)
-                 # same duplicate-id self-pair guard as the
-                 # single-table path (see embedding_near_dups)
-                 .where(F.col("a.doc") != F.col("b.doc"))
-                 .select(F.least("a.doc", "b.doc").alias("doc_a"),
-                         F.greatest("a.doc", "b.doc").alias("doc_b"),
-                         F.col("cos"))
-        )
-    if not deduplicate:
-        return scored
-    return scored.dropDuplicates(["doc_a", "doc_b"])
+    bucketize = srp_buckets_batched(dim, num_planes, num_tables)
+    tagged = (embeddings.select(
+        F.col(id_col).alias("doc"),
+        F.col(vec_col).alias("v"),
+        l2_norm_fixed(vec_col, dim).alias("nrm"),
+        bucketize(F.col(vec_col)).alias("__bks"))
+        .select("doc", "v", "nrm",
+                F.posexplode("__bks").alias("tbl", "bucket")))
+    return (_srp_pairs_kernel(tagged, embeddings.schema, id_col,
+                              threshold)
+            .dropDuplicates(["doc_a", "doc_b"]))
 
 
 #: row-block budget for the in-group cosine matrix: blocks of
@@ -668,22 +606,22 @@ def _srp_pairs_kernel(tagged: DataFrame, emb_schema, id_col: str,
                       group_cols: tuple = ("tbl", "bucket"),
                       ) -> DataFrame:
     """Per-group scored pairs via BLAS cosine matrices
-    (``applyInPandas``) — the ``'kernel'`` alternative to
-    slice-explode / self-join pair generation.  ``group_cols`` names
-    the blocking key: ``(tbl, bucket)`` for the multi-table SRP path,
-    ``("cell_id",)`` for SemDeDup cells.
+    (``applyInPandas``).  ``group_cols`` names the blocking key:
+    ``(tbl, bucket)`` for the multi-table SRP path, ``("cell_id",)``
+    for SemDeDup cells.
 
-    Why the shapes differ: the explode path materializes TWO full
-    (doc, v, nrm) struct copies per candidate pair —
-    O(sum_b occ_b^2) vector copies — before a codegen'd dot; this
-    path Arrow-transfers each group's members ONCE (O(n·L) rows)
-    and computes all in-group cosines as (block, dim) @ (dim, m)
-    matmuls, emitting only above-threshold survivors.  Same output:
-    (doc_a < doc_b) orientation, self-pair guard on duplicate ids,
-    exact float64 cosine (BLAS blocked summation may round the last
-    ulp differently from the codegen'd fold — at real thresholds no
-    pair sits within 1e-15 of eps, and the profiler A/B verifies
-    pair-set equality on the bench corpus)."""
+    Why this shape: slice-explode or self-join pair generation
+    materializes TWO full (doc, v, nrm) struct copies per candidate
+    pair — O(sum_b occ_b^2) vector copies — before a codegen'd dot;
+    this kernel Arrow-transfers each group's members ONCE (O(n·L)
+    rows) and computes all in-group cosines as (block, dim) @
+    (dim, m) matmuls, emitting only above-threshold survivors.
+    Output: (doc_a < doc_b) orientation, self-pair guard on duplicate
+    ids, exact float64 cosine (BLAS blocked summation may round the
+    last ulp differently from the codegen'd fold of
+    :func:`embedding_near_dups_exact` — at real thresholds no pair
+    sits within 1e-15 of eps; the reference-parity tests pin the
+    pair sets)."""
     import numpy as np
     import pandas as pd
 
@@ -732,34 +670,6 @@ def _srp_pairs_kernel(tagged: DataFrame, emb_schema, id_col: str,
             .applyInPandas(kernel,
                            f"doc_a {id_type}, doc_b {id_type}, "
                            f"cos double"))
-
-
-def srp_multitable_tagged(embeddings: DataFrame, dim: int,
-                          id_col: str = "vec_id",
-                          vec_col: str = "embedding",
-                          num_planes: int = 8,
-                          num_tables: int = 4) -> DataFrame:
-    """The multitable path's hash + fan-out stage, exposed the way
-    ``dedup.minhash_signatures`` exposes q19's: one pass computes
-    all L bucket ids per row (L x p codegen'd sign-dot-products) and
-    ``posexplode`` fans each vector into L ``(tbl, bucket)`` rows
-    carrying ``(doc, v, nrm)``.  `bench.py --profile-b28` times this
-    stage separately from the groupBy shuffle / scoring / pair-dedup
-    it feeds, so the phase that carries b28's n^(1+rho) wall is a
-    recorded number instead of a guess."""
-    buckets = [srp_bucket(vec_col, dim, num_planes,
-                          plane_offset=t * num_planes).alias(f"__b{t}")
-               for t in range(num_tables)]
-    emb = embeddings.select(
-        F.col(id_col).alias("doc"),
-        F.col(vec_col).alias("v"),
-        l2_norm_fixed(vec_col, dim).alias("nrm"),
-        *buckets)
-    return emb.select(
-        "doc", "v", "nrm",
-        F.posexplode(F.array(*[F.col(f"__b{t}")
-                               for t in range(num_tables)]))
-         .alias("tbl", "bucket"))
 
 
 # ---------------------------------------------------------------------------

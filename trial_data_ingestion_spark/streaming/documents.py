@@ -214,18 +214,32 @@ def clustered_document_sink(embeddings: DataFrame, centroid_path: str,
     restart.  For a fixed codebook the zero-overhead path is calling
     ``clustering.cluster_documents`` directly on the stream —
     assignment is a stateless Arrow kernel, and the centroids are
-    then pinned at plan time for the stream's lifetime.  Assigned
-    batches append as parquet at ``out_path``; returns the
+    then pinned at plan time for the stream's lifetime.
+
+    Each micro-batch lands as its own ``shard=batch-{batch_id:09d}``
+    partition under ``out_path``, written delete-then-append like
+    ``incremental_dedup.minhash_dedup_stream_sink``: batch ids are
+    stable across checkpoint restarts, so a replayed batch rewrites
+    its own shard instead of appending a second copy.  Returns the
     ``DataStreamWriter`` — caller picks the trigger."""
+    from pyspark.sql import functions as F
+
     from trial_data_ingestion_spark.operators.clustering import (
         cluster_documents, load_centroids,
     )
+    from trial_data_ingestion_spark.store import delete_path
 
     def sink(batch_df, batch_id):
-        cents = load_centroids(batch_df.sparkSession, centroid_path)
+        spark = batch_df.sparkSession
+        shard = f"batch-{batch_id:09d}"
+        cents = load_centroids(spark, centroid_path)
         out = cluster_documents(batch_df, dim=dim, id_col=id_col,
                                 vec_col=vec_col, centroids=cents)
-        out.write.mode("append").parquet(out_path)
+        delete_path(spark, f"{out_path}/shard={shard}")
+        (out.withColumn("shard", F.lit(shard))
+            .write.mode("append").partitionBy("shard")
+            .parquet(out_path))
+        spark.catalog.refreshByPath(out_path)
 
     return embeddings.writeStream.foreachBatch(sink)
 
