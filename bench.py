@@ -1875,7 +1875,7 @@ def run_scale() -> None:
     # birthday term).  The deployment builds the index with
     # corpus-sized banding (write_minhash_index(num_hashes="auto"),
     # the index-side twin of q19's knob); probes and delta appends
-    # inherit it from params/.
+    # inherit it from the index's _params.json sidecar.
     _b09_cache: dict = {}
 
     def b09_scaled(spark, sf_dir):
@@ -2147,7 +2147,7 @@ def run_scale() -> None:
         "with the fixed (32, 8) default the probe's candidate volume "
         "inherits the band-collision birthday term (r9 measured 19.4x "
         "wall at 100x, exponent 0.64); the corpus-sized banding from "
-        "dedup.auto_banding lands in params/ so probes and delta "
+        "dedup.auto_banding lands in _params.json so probes and delta "
         "appends inherit it (appends VALIDATE against params and "
         "refuse a mismatch)")
     rec["scale_knobs"]["b11_ivfpq_topk"] = (

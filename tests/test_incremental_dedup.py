@@ -8,8 +8,9 @@ from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.operators.dedup import dedup_minhash
 from trial_data_ingestion_spark.operators.incremental_dedup import (
-    dedup_minhash_incremental, read_minhash_params, write_minhash_index,
+    dedup_minhash_incremental, write_minhash_index,
 )
+from trial_data_ingestion_spark.store import read_params
 
 THRESH = 0.6
 
@@ -38,7 +39,7 @@ def index_path(tmp_path_factory, split):
 
 
 def test_params_round_trip(spark, index_path):
-    p = read_minhash_params(spark, index_path)
+    p = read_params(spark, index_path)
     assert p == {"k": 8, "num_hashes": 32, "bands": 8,
                  "num_buckets": 16}
 
@@ -275,12 +276,12 @@ def test_incremental_num_planes_from_metadata(spark, emb, tmp_path):
         embedding_near_dups_incremental,
     )
     from trial_data_ingestion_spark.operators.similarity import (
-        read_srp_index_meta, srp_auto_planes, write_srp_index,
+        srp_auto_planes, write_srp_index,
     )
     corpus = emb.where(F.col("vec_id") < 300)
     path = str(tmp_path / "srp4")
     write_srp_index(corpus, path, dim=DIM, num_planes="auto")
-    meta = read_srp_index_meta(spark, path)
+    meta = read_params(spark, path)
     assert meta == {"num_planes": srp_auto_planes(corpus.count()),
                     "dim": DIM}
     copies = (corpus.orderBy("vec_id").limit(5)
@@ -451,12 +452,13 @@ def test_index_auto_banding_and_append_guard(spark, docs, split,
                                              tmp_path):
     """r9 verdict item 4 (index-side auto-banding): a base build with
     num_hashes='auto' sizes the banding from the corpus via
-    auto_banding at the caller's threshold, records it in params/, and
-    probes inherit it — survivors still match the full-corpus dedup at
-    the matching setting.  Appends must validate against the stored
-    params: an append with mismatched banding would silently corrupt
-    every later probe, so it raises instead; 'auto' on an append is
-    rejected outright (a delta's count is not the corpus's)."""
+    auto_banding at the caller's threshold, records it in the
+    _params.json sidecar, and probes inherit it — survivors still
+    match the full-corpus dedup at the matching setting.  Appends
+    must validate against the stored params: an append with
+    mismatched banding would silently corrupt every later probe, so
+    it raises instead; 'auto' on an append is rejected outright (a
+    delta's count is not the corpus's)."""
     from trial_data_ingestion_spark.operators.dedup import auto_banding
 
     corpus, batch = split
@@ -464,7 +466,7 @@ def test_index_auto_banding_and_append_guard(spark, docs, split,
     write_minhash_index(corpus, path, num_hashes="auto",
                         threshold=THRESH, num_buckets=16)
     plan = auto_banding(corpus.count(), THRESH)
-    p = read_minhash_params(spark, path)
+    p = read_params(spark, path)
     assert (p["num_hashes"], p["bands"]) == (plan["num_hashes"],
                                              plan["bands"])
     # the probe inherits the stored banding and the decision matches
@@ -506,14 +508,14 @@ def test_prebanded_append_writes_identical_band_rows(spark, docs,
     no-rebanding append — must land byte-identical band and doc rows
     to the re-banding append."""
     from trial_data_ingestion_spark.operators.incremental_dedup import (
-        _banded, _pbkt, read_minhash_params,
+        _banded, _pbkt,
     )
     corpus, batch = split
     paths = {}
     for tag in ("rebanded", "prebanded"):
         path = str(tmp_path / f"idx_{tag}")
         write_minhash_index(corpus, path, num_buckets=16)
-        p = read_minhash_params(spark, path)
+        p = read_params(spark, path)
         pre = None
         if tag == "prebanded":
             pre = (_banded(batch, "doc_id", "text", p["k"],

@@ -219,22 +219,21 @@ def test_srp_index_matches_q27_oracle(spark, tmp_path):
 
 def test_srp_index_metadata_round_trip(spark, tmp_path):
     """Round-8: write_srp_index(num_planes='auto') sizes p by the
-    occupancy rule and records it (plus dim) in the _srp_meta sidecar;
+    occupancy rule and records it (plus dim) in the _params.json sidecar;
     the probe defaults to the recorded count (num_planes=None), an
     explicit matching count agrees, a conflicting one raises, and the
     sidecar is invisible to parquet readers of the index root."""
     import pytest
 
     from trial_data_ingestion_spark.operators.similarity import (
-        read_srp_index_meta, srp_auto_planes, topk_lsh_over_index,
-        write_srp_index,
+        srp_auto_planes, topk_lsh_over_index, write_srp_index,
     )
+    from trial_data_ingestion_spark.store import read_params
     emb = _emb(spark)
     path = str(tmp_path / "srpauto")
     write_srp_index(emb, path, dim=64, num_planes="auto")
     p = srp_auto_planes(emb.count())
-    assert read_srp_index_meta(spark, path) == {"num_planes": p,
-                                                "dim": 64}
+    assert read_params(spark, path) == {"num_planes": p, "dim": 64}
     # the sidecar never leaks into the data: index root reads see
     # exactly the vector columns (+ the r9 delta partition level)
     assert set(spark.read.parquet(path).columns) \
@@ -256,40 +255,36 @@ def test_srp_index_metadata_round_trip(spark, tmp_path):
                         num_planes=True)
 
 
-def test_srp_meta_corrupt_sidecar_raises_not_default(spark, tmp_path):
+def test_srp_params_corrupt_sidecar_raises_not_default(spark, tmp_path):
     """ADVICE r9: a sidecar that EXISTS but is unreadable must raise,
     not silently fall back to the default 8 planes (the exact
-    misrouting the sidecar was built to prevent).  A genuinely missing
-    sidecar still reads as None (pre-metadata index)."""
-    import glob
+    misrouting the sidecar was built to prevent) — and so must a
+    MISSING one: there is no pre-sidecar default any more."""
     import os
 
     import pytest
 
     from trial_data_ingestion_spark.operators.similarity import (
-        read_srp_index_meta, write_srp_index,
+        topk_lsh_over_index, write_srp_index,
     )
+    from trial_data_ingestion_spark.store import read_params
     emb = _emb(spark)
     path = str(tmp_path / "srpmeta")
     write_srp_index(emb, path, dim=64, num_planes=6)
-    assert read_srp_index_meta(spark, path) == {"num_planes": 6,
-                                                "dim": 64}
-    # corrupt the sidecar in place (garbage JSON -> _corrupt_record);
-    # drop the local-FS checksum files or the read dies earlier with
-    # a ChecksumException (which would ALSO propagate, but the corrupt
-    # -content branch is the one under test)
-    for f in glob.glob(f"{path}/_srp_meta/part-*.json"):
-        with open(f, "w") as fh:
-            fh.write("{not json at all")
-    for f in glob.glob(f"{path}/_srp_meta/.*.crc"):
-        os.remove(f)
-    spark.catalog.refreshByPath(path + "/_srp_meta")
-    with pytest.raises(ValueError, match="corrupt _srp_meta"):
-        read_srp_index_meta(spark, path)
-    # a MISSING sidecar is the documented pre-metadata case
-    os.system(f"rm -rf {path}/_srp_meta")
-    spark.catalog.refreshByPath(path + "/_srp_meta")
-    assert read_srp_index_meta(spark, path) is None
+    assert read_params(spark, path) == {"num_planes": 6, "dim": 64}
+    # corrupt the sidecar in place; drop the local-FS checksum file or
+    # the read dies earlier with a ChecksumException (which would ALSO
+    # propagate, but the corrupt-content branch is the one under test)
+    with open(f"{path}/_params.json", "w") as fh:
+        fh.write("{not json at all")
+    os.remove(f"{path}/._params.json.crc")
+    with pytest.raises(ValueError, match="corrupt params sidecar"):
+        read_params(spark, path)
+    with pytest.raises(ValueError, match="corrupt params sidecar"):
+        topk_lsh_over_index(spark, path, _queries(spark), dim=64, k=5)
+    os.remove(f"{path}/_params.json")
+    with pytest.raises(ValueError, match="no params sidecar"):
+        topk_lsh_over_index(spark, path, _queries(spark), dim=64, k=5)
 
 
 def test_ivf_append_retry_is_idempotent(spark, tmp_path):

@@ -1,18 +1,26 @@
-"""Probe reads of the persisted stores (``store.read_partitions``): a
-probe lists and reads only the partitions it names, and returns what
-a full-root read filtered to the same keys returns — same rows, same
-columns, same types — including when nothing it names exists."""
+"""The persisted-store contract (``store.py``).  Probe reads
+(``store.read_partitions``): a probe lists and reads only the
+partitions it names, and returns what a full-root read filtered to
+the same keys returns — same rows, same columns, same types —
+including when nothing it names exists.  Params sidecars
+(``store.write_params``/``read_params``): every store records its
+build-time params in one ``_params.json`` at its root, read and
+written without a Spark job, and a missing or corrupt sidecar raises
+instead of defaulting."""
 
 from __future__ import annotations
 
 import os
 import re
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR_ORACLE
-from trial_data_ingestion_spark.store import read_partitions
+from trial_data_ingestion_spark.store import (
+    read_params, read_partitions, write_params,
+)
 
 
 def _emb(spark):
@@ -135,6 +143,230 @@ def test_empty_store_with_schema_reads_empty(spark, tmp_path):
     got = read_partitions(spark, path, "pbkt", [1, 2],
                           schema="line long, pbkt int")
     assert got.count() == 0 and got.columns == ["line", "pbkt"]
+
+
+def _docs(spark, n=40):
+    return (spark.read.parquet(f"{SF_DIR_ORACLE}/documents.parquet")
+            .where(F.col("doc_id") < n).select("doc_id", "text"))
+
+
+def _hashes(spark):
+    return spark.createDataFrame(
+        [(f"m{i}", i * 1_000_003) for i in range(40)],
+        "media_id string, phash long")
+
+
+def _one_query(spark):
+    return (_emb(spark).where(F.col("vec_id") == 0)
+            .select(F.col("vec_id").alias("query_id"),
+                    F.col("embedding").alias("query_vec")))
+
+
+def _probe(spark, kind, path):
+    """Run the store's own probe over ``path`` to completion."""
+    if kind == "minhash":
+        from trial_data_ingestion_spark.operators.incremental_dedup \
+            import dedup_minhash_incremental
+        return dedup_minhash_incremental(spark, _docs(spark, 5),
+                                         path).count()
+    if kind == "srp":
+        from trial_data_ingestion_spark.operators.similarity import (
+            topk_lsh_over_index,
+        )
+        return topk_lsh_over_index(spark, path, _one_query(spark),
+                                   dim=64).count()
+    if kind == "line":
+        from trial_data_ingestion_spark.operators.line_dedup import (
+            line_dedup_incremental,
+        )
+        return line_dedup_incremental(spark, _docs(spark, 5),
+                                      path).count()
+    import numpy as np
+
+    from trial_data_ingestion_spark.multimodal.codecs import encode_bmp
+    from trial_data_ingestion_spark.multimodal.phash import (
+        dedup_media_incremental, image_hasher,
+    )
+    img = bytearray(encode_bmp(np.zeros((8, 8, 3), np.uint8)))
+    media = spark.createDataFrame([("q0", img)],
+                                  "media_id string, media binary")
+    return dedup_media_incremental(spark, media, path,
+                                   image_hasher).count()
+
+
+#: the params each store's fixture build records
+_STORE_PARAMS = {
+    "minhash": {"k": 8, "num_hashes": 32, "bands": 8, "num_buckets": 8},
+    "srp": {"num_planes": 6, "dim": 64},
+    "line": {"min_chars": 10, "num_buckets": 16},
+    "phash": {"max_hamming": 4, "num_buckets": 16},
+}
+
+
+@pytest.fixture(scope="module")
+def stores(spark, tmp_path_factory):
+    """One small store of each kind with a params sidecar, built once;
+    tests that damage a sidecar work on a copy (:func:`_copy`)."""
+    from trial_data_ingestion_spark.multimodal.phash import (
+        write_phash_index,
+    )
+    from trial_data_ingestion_spark.operators.incremental_dedup import (
+        write_minhash_index,
+    )
+    from trial_data_ingestion_spark.operators.line_dedup import (
+        write_line_index,
+    )
+    from trial_data_ingestion_spark.operators.similarity import (
+        write_srp_index,
+    )
+    root = tmp_path_factory.mktemp("sidecars")
+    paths = {kind: str(root / kind) for kind in _STORE_PARAMS}
+    write_minhash_index(_docs(spark), paths["minhash"], num_buckets=8)
+    write_srp_index(_emb(spark), paths["srp"], dim=64, num_planes=6)
+    write_line_index(_docs(spark), paths["line"], num_buckets=16)
+    write_phash_index(_hashes(spark), paths["phash"], max_hamming=4,
+                      num_buckets=16)
+    return paths
+
+
+def _copy(stores, kind, tmp_path):
+    dst = str(tmp_path / kind)
+    shutil.copytree(stores[kind], dst)
+    return dst
+
+
+@pytest.mark.parametrize("kind", sorted(_STORE_PARAMS))
+def test_params_sidecar_round_trip(spark, stores, kind):
+    """Each store's build records its params in ``_params.json`` at
+    the root — the only sidecar — and its probe runs from them."""
+    path = stores[kind]
+    assert read_params(spark, path) == _STORE_PARAMS[kind]
+    assert read_params(spark, path, expect=_STORE_PARAMS[kind]) \
+        == _STORE_PARAMS[kind]
+    assert not [f for f in os.listdir(path) if f.startswith("_")
+                and f not in ("_params.json", "_SUCCESS")]
+    assert "params" not in os.listdir(path)
+    _probe(spark, kind, path)
+
+
+@pytest.mark.parametrize("kind", sorted(_STORE_PARAMS))
+def test_missing_params_sidecar_raises(spark, stores, kind, tmp_path):
+    path = _copy(stores, kind, tmp_path)
+    os.remove(f"{path}/_params.json")
+    os.remove(f"{path}/._params.json.crc")
+    with pytest.raises(ValueError,
+                       match=re.escape(f"{path}/_params.json")):
+        read_params(spark, path)
+    with pytest.raises(ValueError, match="no params sidecar"):
+        _probe(spark, kind, path)
+
+
+@pytest.mark.parametrize("damage", ["garbage", "truncated"])
+@pytest.mark.parametrize("kind", sorted(_STORE_PARAMS))
+def test_corrupt_params_sidecar_raises(spark, stores, kind, damage,
+                                       tmp_path):
+    """Unparseable or truncated JSON raises, naming the file.  The
+    local-FS checksum is dropped so the read reaches the content
+    (a stale checksum would raise too, but earlier)."""
+    path = _copy(stores, kind, tmp_path)
+    sidecar = f"{path}/_params.json"
+    with open(sidecar) as fh:
+        text = fh.read()
+    with open(sidecar, "w") as fh:
+        fh.write("{not json" if damage == "garbage"
+                 else text[:len(text) // 2])
+    os.remove(f"{path}/._params.json.crc")
+    with pytest.raises(ValueError,
+                       match="corrupt params sidecar at "
+                       + re.escape(sidecar)):
+        read_params(spark, path)
+    with pytest.raises(ValueError, match="corrupt params sidecar"):
+        _probe(spark, kind, path)
+
+
+def test_srp_index_with_only_legacy_sidecar_raises(spark, stores,
+                                                   tmp_path):
+    """An SRP index in the older layout — plane count in a JSON
+    sidecar directory, no ``_params.json`` — is refused by the probe
+    and by an append, instead of being hashed with a default 8
+    planes (it recorded 6)."""
+    from trial_data_ingestion_spark.operators.similarity import (
+        topk_lsh_over_index, write_srp_index,
+    )
+    path = _copy(stores, "srp", tmp_path)
+    os.remove(f"{path}/_params.json")
+    os.remove(f"{path}/._params.json.crc")
+    (spark.createDataFrame([(6, 64)], "num_planes int, dim int")
+     .coalesce(1).write.json(f"{path}/_srp_meta"))
+    with pytest.raises(ValueError, match="no params sidecar"):
+        topk_lsh_over_index(spark, path, _one_query(spark), dim=64)
+    with pytest.raises(ValueError, match="no params sidecar"):
+        write_srp_index(_emb(spark).limit(3), path, dim=64,
+                        mode="append")
+
+
+def test_append_with_other_params_raises(spark, tmp_path):
+    """Appends validate against the stored params instead of
+    rewriting them: a 64-bucket line store appended with
+    ``num_buckets=32`` used to record 32, after which a probe of the
+    store's own 40 lines found only 21 of them."""
+    from trial_data_ingestion_spark.multimodal.phash import (
+        write_phash_index,
+    )
+    from trial_data_ingestion_spark.operators.line_dedup import (
+        line_dedup_incremental, write_line_index,
+    )
+    lines = spark.createDataFrame(
+        [(i, f"line number {i:03d} of the store") for i in range(40)],
+        "doc_id long, text string")
+    path = str(tmp_path / "line")
+    write_line_index(lines, path, num_buckets=64)
+    with pytest.raises(ValueError, match="num_buckets=64"):
+        write_line_index(lines.limit(1), path, num_buckets=32,
+                         mode="append")
+    assert read_params(spark, path)["num_buckets"] == 64
+    assert {r.n_removed_lines for r in
+            line_dedup_incremental(spark, lines, path).collect()} == {1}
+
+    path = str(tmp_path / "phash")
+    write_phash_index(_hashes(spark), path, num_buckets=64)
+    with pytest.raises(ValueError, match="num_buckets=64"):
+        write_phash_index(_hashes(spark).limit(1), path,
+                          num_buckets=32, mode="append")
+    assert read_params(spark, path)["num_buckets"] == 64
+
+
+def _jobs(spark, group, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def test_params_io_runs_no_job_and_srp_probe_stays_lean(spark, stores,
+                                                       tmp_path):
+    """The sidecar is read and written on the driver: 0 Spark jobs.
+    So one top-k query over the SRP index runs at most 5 jobs; the
+    Spark-read JSON sidecar cost 2 more."""
+    from trial_data_ingestion_spark.operators.similarity import (
+        topk_lsh_over_index,
+    )
+    path = stores["srp"]
+    assert _jobs(spark, "params-io", lambda: write_params(
+        spark, str(tmp_path / "copy"), read_params(spark, path))) == 0
+    assert read_params(spark, str(tmp_path / "copy")) \
+        == _STORE_PARAMS["srp"]
+
+    qs = _one_query(spark)
+
+    def query():
+        topk_lsh_over_index(spark, path, qs, dim=64, k=10).collect()
+    query()                                       # warm
+    n = _jobs(spark, "srp-probe", query)
+    assert n <= 5, f"one SRP top-k query ran {n} Spark jobs"
 
 
 def _analyzed(spark, col):

@@ -1263,6 +1263,52 @@ def test_clustered_document_sink_replay_writes_once(spark, tmp_path):
             if d.startswith("shard=")] == ["shard=batch-000000000"]
 
 
+def test_line_deduped_document_sink_replay_writes_once(spark, tmp_path):
+    """A micro-batch replayed AFTER its lines reached the line store
+    must probe without its own delta and rewrite its own output
+    shard: sf0.01 docs 200-259 against a 200-doc store give the same
+    60 docs and 18,791 text chars on replay, in one shard — not 60
+    emptied docs (every line "already seen") beside the first copy."""
+    import os
+
+    from tests.conftest import SF_DIR_ORACLE
+    from trial_data_ingestion_spark.operators.line_dedup import (
+        write_line_index,
+    )
+    from trial_data_ingestion_spark.streaming.documents import (
+        line_deduped_document_sink,
+    )
+    docs = (spark.read.parquet(f"{SF_DIR_ORACLE}/documents.parquet")
+            .select("doc_id", "text"))
+    idx, out = str(tmp_path / "lidx"), str(tmp_path / "lout")
+    write_line_index(docs.where("doc_id < 200"), idx)
+    src = str(tmp_path / "src")
+    batch = docs.where("doc_id >= 200 and doc_id < 260")
+    batch.coalesce(1).write.parquet(src)
+    ck = tmp_path / "ck"
+
+    def run():
+        q = (line_deduped_document_sink(
+                spark.readStream.schema(batch.schema).parquet(src),
+                idx, out)
+             .option("checkpointLocation", str(ck))
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        return sorted((r["doc_id"], r["text"])
+                      for r in spark.read.parquet(out).collect())
+
+    first = run()
+    assert len(first) == 60
+    assert sum(len(t) for _, t in first) == 18_791
+    os.remove(ck / "commits" / "0")
+    crc = ck / "commits" / ".0.crc"
+    if crc.exists():
+        os.remove(crc)
+    assert run() == first
+    assert [d for d in os.listdir(out)
+            if d.startswith("shard=")] == ["shard=batch-000000000"]
+
+
 # ---------------------------------------------------------------------------
 # Kill-and-resume parity for the applyInPandasWithState family
 # (VERDICT r9 item 8: the HLL and dedup sinks had restart tests; the

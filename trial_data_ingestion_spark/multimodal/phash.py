@@ -36,7 +36,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.session import ensure_parallelism
-from trial_data_ingestion_spark.store import read_partitions
+from trial_data_ingestion_spark.store import (
+    read_params, read_partitions, write_params,
+)
 
 HASH_BITS = 64
 
@@ -287,12 +289,18 @@ def write_phash_index(hashes: DataFrame, path: str, max_hamming: int = 4,
       scans only the partitions its own band values hash into;
     * ``/docs`` — (doc, ph, dbkt) for the seen-id resume filter,
       partitioned the same way by doc id;
-    * ``/params`` — (max_hamming, num_buckets): probes can't run with
-      mismatched banding.
+    * ``_params.json`` — (max_hamming, num_buckets), the params
+      sidecar: probes can't run with mismatched banding, and
+      ``mode="append"`` validates against it (raising on a mismatch)
+      instead of rewriting it.
 
     Same layout discipline as ``incremental_dedup.write_minhash_index``
     (repartition ON the partition column before ``partitionBy`` —
     one file per bucket, not tasks x buckets)."""
+    spark = hashes.sparkSession
+    params = {"max_hamming": max_hamming, "num_buckets": num_buckets}
+    if mode == "append":
+        read_params(spark, path, expect=params)
     bt = (_band_table(hashes, max_hamming)
           .withColumn("pbkt", F.pmod(F.xxhash64("band", "val"),
                                      F.lit(num_buckets))))
@@ -304,11 +312,9 @@ def write_phash_index(hashes: DataFrame, path: str, max_hamming: int = 4,
                                        F.lit(num_buckets))))
     (docs.repartition("dbkt")
          .write.mode(mode).partitionBy("dbkt").parquet(path + "/docs"))
-    spark = hashes.sparkSession
-    (spark.createDataFrame([(max_hamming, num_buckets)],
-                           "max_hamming int, num_buckets int")
-     .coalesce(1).write.mode("overwrite").parquet(path + "/params"))
-    for sub in ("/bands", "/docs", "/params"):
+    if mode != "append":
+        write_params(spark, path, params)
+    for sub in ("/bands", "/docs"):
         spark.catalog.refreshByPath(path + sub)
 
 
@@ -324,12 +330,13 @@ def dedup_media_incremental(spark, new_media: DataFrame, path: str,
     are a no-op re-run; a new item drops if its near-dup component
     touches any corpus item ("corpus wins") or a lower-id batch item;
     ``append=True`` extends the index with the whole batch after the
-    decision.  Banding parameters come from the index's params table.
+    decision.  Banding parameters come from the index's params
+    sidecar.
     """
     from trial_data_ingestion_spark.operators.incremental_dedup import (
         _corpus_wins_survivors,
     )
-    p = spark.read.parquet(path + "/params").collect()[0]
+    p = read_params(spark, path)
     max_hamming, num_buckets = p["max_hamming"], p["num_buckets"]
 
     raw_hashes = attach_phash(new_media, hasher).persist()

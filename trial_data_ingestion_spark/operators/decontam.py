@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.operators.textstats import token_grams
 from trial_data_ingestion_spark.session import ensure_parallelism
-from trial_data_ingestion_spark.store import read_partitions
+from trial_data_ingestion_spark.store import read_params, read_partitions
 
 
 def _norm_tokens(text: Column) -> Column:
@@ -343,8 +343,8 @@ def fuzzy_contaminated_ids(corpus: DataFrame, bench: DataFrame,
     the first.  A deployment sweeping one corpus against many
     benchmarks — the release-pipeline shape — amortizes the build
     exactly like the b09/b11 index tiers.  Params are validated
-    against the stored ``params/`` table; a mismatch raises rather
-    than probing buckets keyed differently.  Candidate set and
+    against the index's ``_params.json`` sidecar; a mismatch raises
+    rather than probing buckets keyed differently.  Candidate set and
     verdicts are identical to the direct pass by construction; the
     corpus texts for exact verification still come from ``corpus``
     (the caller's frame), never the index."""
@@ -383,9 +383,9 @@ def fuzzy_contaminated_ids(corpus: DataFrame, bench: DataFrame,
                                "b|")
     if corpus_index is not None:
         from trial_data_ingestion_spark.operators.incremental_dedup \
-            import _cached_params, _pbkt
+            import _pbkt
         spark = corpus.sparkSession
-        stored = _cached_params(spark, corpus_index)
+        stored = read_params(spark, corpus_index)
         got = {"k": k, "num_hashes": num_hashes, "bands": bands}
         if {kk: stored[kk] for kk in got} != got:
             raise ValueError(

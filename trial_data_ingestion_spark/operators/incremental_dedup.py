@@ -36,9 +36,9 @@ Index layout under ``path``:
   only the partitions holding candidate corpus docs (their ``dbkt``
   rides along on the band rows, so no corpus-side hashing at query
   time).
-* ``params/`` — one row recording (k, num_hashes, bands,
-  num_buckets); loaded back so callers can't probe with mismatched
-  hashing parameters.
+* ``_params.json`` — (k, num_hashes, bands, num_buckets), the
+  store's params sidecar (``store.read_params``), so callers can't
+  probe or append with mismatched hashing parameters.
 
 The ``delta`` level is what makes appends RETRYABLE (a delta-keyed
 append deletes its own partitions first — whole-call idempotent) and
@@ -62,7 +62,8 @@ from trial_data_ingestion_spark.operators.dedup import (
 )
 from trial_data_ingestion_spark.operators.pins import PinScope
 from trial_data_ingestion_spark.store import (
-    check_partition_value, delete_path, read_partitions,
+    check_partition_value, read_params, read_partitions, reserve_delta,
+    write_params, write_shard,
 )
 
 #: candidate-pair sets at or below this size are Jaccard-verified on
@@ -84,16 +85,6 @@ LOCAL_VERIFY_MAX_PAIRS = 100_000
 #: the distributed path; this bound covers the many-docs/few-pairs
 #: quadrant the pair bound misses.)
 LOCAL_VERIFY_MAX_DOCS = 25_000
-
-#: (normalized index path) -> params dict.  An index's hashing
-#: parameters are FIXED at build time (appends inherit them), so the
-#: params read — one whole job of scheduling latency per probe — is
-#: paid once per session per index.  ``write_minhash_index`` drops the
-#: entry for its path, so an in-session rebuild can't serve stale
-#: params; rebuilds from OTHER sessions against a live cached path are
-#: out of contract (same caveat as Spark's own cached file listings).
-_PARAMS_CACHE: dict[str, dict] = {}
-
 
 def _banded(df: DataFrame, id_col: str, text_col: str, k: int,
             num_hashes: int, bands: int) -> DataFrame:
@@ -183,7 +174,8 @@ def write_minhash_index(df: DataFrame, path: str,
     ``dedup_minhash(num_hashes='auto')``; b09's 100x wall exponent
     was 0.64 with fixed banding because probe candidates inherit the
     band-collision birthday term).  ``bands`` is then ignored and the
-    chosen pair lands in ``params/`` for every later probe/append.
+    chosen pair lands in ``_params.json`` for every later
+    probe/append.
     ``num_buckets="auto"`` (the default, r12) sizes the partition
     layout from a ``count()`` via :func:`index_auto_buckets` — the
     bucket count is the probe's pruning granularity AND the file
@@ -212,7 +204,7 @@ def write_minhash_index(df: DataFrame, path: str,
             raise ValueError(
                 "num_hashes='auto' is for base builds; appends "
                 "inherit the index's stored banding — pass the "
-                "params/ values (or omit to use the defaults and "
+                "stored values (or omit to use the defaults and "
                 "let the validation below catch a mismatch)")
         from trial_data_ingestion_spark.operators.dedup import (
             auto_banding,
@@ -227,7 +219,7 @@ def write_minhash_index(df: DataFrame, path: str,
             # appends INHERIT the stored layout (the validation
             # below still runs, so an explicit-int mismatch is
             # caught while the default simply follows the base)
-            num_buckets = _cached_params(spark, path)["num_buckets"]
+            num_buckets = read_params(spark, path)["num_buckets"]
         else:
             # one count() per base build, shared with auto banding's
             num_buckets = index_auto_buckets(
@@ -236,22 +228,14 @@ def write_minhash_index(df: DataFrame, path: str,
           or isinstance(num_buckets, bool) or num_buckets < 1):
         raise ValueError("num_buckets must be a positive int or "
                          "'auto'")
+    params = {"k": k, "num_hashes": num_hashes, "bands": bands,
+              "num_buckets": num_buckets}
     if mode == "append":
-        if delta_id is None:
-            import uuid
-            delta_id = "d-" + uuid.uuid4().hex[:12]
-        check_partition_value(delta_id, what="delta_id")
-        stored = _cached_params(spark, path)
-        got = {"k": k, "num_hashes": num_hashes, "bands": bands,
-               "num_buckets": num_buckets}
-        if got != stored:
-            raise ValueError(
-                f"append banding {got} does not match the index's "
-                f"stored params {stored}; an append must use the "
-                f"base build's banding or every later probe reads "
-                f"corrupt buckets")
-        delete_path(spark, f"{path}/bands/delta={delta_id}")
-        delete_path(spark, f"{path}/docs/delta={delta_id}")
+        # an append banded differently from the stored corpus would
+        # silently corrupt every later probe
+        read_params(spark, path, expect=params)
+        delta_id = reserve_delta(spark, [path + "/bands", path + "/docs"],
+                                 delta_id)
     else:
         delta_id = "base" if delta_id is None \
             else check_partition_value(delta_id, what="delta_id")
@@ -279,34 +263,13 @@ def write_minhash_index(df: DataFrame, path: str,
          .write.mode(mode).partitionBy("delta", "dbkt")
          .parquet(path + "/docs"))
     if mode != "append":
-        # params are fixed at build time — appends inherit them, so
-        # rewriting the params table per delta would only add a job,
-        # and the session params cache stays valid across appends
-        (spark.createDataFrame(
-            [(k, num_hashes, bands, num_buckets)],
-            "k int, num_hashes int, bands int, num_buckets int")
-         .coalesce(1).write.mode("overwrite").parquet(path + "/params"))
-        _PARAMS_CACHE.pop(path.rstrip("/"), None)
+        # params are fixed at build time: appends validate, never
+        # rewrite
+        write_params(spark, path, params)
     # rebuilding over a previous index: drop the cached file listing,
     # or later readers resolve deleted part files (FILE_NOT_EXIST)
-    for sub in ("/bands", "/docs", "/params"):
+    for sub in ("/bands", "/docs"):
         spark.catalog.refreshByPath(path + sub)
-
-
-def read_minhash_params(spark, path: str) -> dict:
-    row = spark.read.parquet(path + "/params").collect()[0]
-    return {"k": row["k"], "num_hashes": row["num_hashes"],
-            "bands": row["bands"], "num_buckets": row["num_buckets"]}
-
-
-def _cached_params(spark, path: str) -> dict:
-    """Session-cached :func:`read_minhash_params` (see
-    :data:`_PARAMS_CACHE` for the invalidation contract)."""
-    key = path.rstrip("/")
-    p = _PARAMS_CACHE.get(key)
-    if p is None:
-        p = _PARAMS_CACHE[key] = read_minhash_params(spark, path)
-    return p
 
 
 def cross_candidates(spark, new_banded: DataFrame, index_path: str,
@@ -521,7 +484,7 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
     — it reads neither the index nor any cache, so every pin is
     released before return (:class:`~.pins.PinScope`) and an append
     can't be observed by the result."""
-    p = _cached_params(spark, index_path)
+    p = read_params(spark, index_path)
     k, num_hashes, bands = p["k"], p["num_hashes"], p["bands"]
     num_buckets = p["num_buckets"]
 
@@ -904,13 +867,7 @@ def minhash_dedup_stream_sink(index_path: str, out_path: str,
             spark, batch_df, index_path, id_col=id_col,
             text_col=text_col, threshold=threshold, append=True,
             delta_id=shard, exclude_delta=shard)
-        # idempotent survivor shard: delete-then-append (a replay that
-        # now keeps nothing leaves the shard empty, never stale)
-        delete_path(spark, f"{out_path}/shard={shard}")
-        (survivors.withColumn("shard", F.lit(shard))
-                  .write.mode("append").partitionBy("shard")
-                  .parquet(out_path))
-        spark.catalog.refreshByPath(out_path)
+        write_shard(survivors, out_path, shard)
 
     return sink
 
@@ -931,7 +888,7 @@ def embedding_dedup_stream_sink(index_path: str, out_path: str,
     (:func:`embedding_near_dups_incremental` with
     ``delta_id = exclude_delta = {shard_prefix}-{batch_id:09d}``),
     then rewrites its survivor shard under ``out_path``.  Because the
-    plane count comes from the index's ``_srp_meta`` sidecar, every
+    plane count comes from the index's ``_params.json`` sidecar, every
     micro-batch hashes with the planes the corpus was built with —
     a sink cannot misroute probes by passing its own count.  Replay
     of the latest uncommitted batch reproduces the identical decision
@@ -946,11 +903,7 @@ def embedding_dedup_stream_sink(index_path: str, out_path: str,
             spark, batch_df, index_path, dim, id_col=id_col,
             vec_col=vec_col, threshold=threshold, append=True,
             delta_id=shard, exclude_delta=shard)
-        delete_path(spark, f"{out_path}/shard={shard}")
-        (survivors.withColumn("shard", F.lit(shard))
-                  .write.mode("append").partitionBy("shard")
-                  .parquet(out_path))
-        spark.catalog.refreshByPath(out_path)
+        write_shard(survivors, out_path, shard)
 
     return sink
 
@@ -984,7 +937,6 @@ def compact_minhash_index(spark, index_path: str, out_path: str) -> None:
     (docs.repartition("dbkt")
          .write.mode("overwrite").partitionBy("delta", "dbkt")
          .parquet(out_path + "/docs"))
-    (spark.read.parquet(index_path + "/params")
-     .coalesce(1).write.mode("overwrite").parquet(out_path + "/params"))
-    for sub in ("/bands", "/docs", "/params"):
+    write_params(spark, out_path, read_params(spark, index_path))
+    for sub in ("/bands", "/docs"):
         spark.catalog.refreshByPath(out_path + sub)

@@ -51,7 +51,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.session import ensure_parallelism
-from trial_data_ingestion_spark.store import read_partitions
+from trial_data_ingestion_spark.store import (
+    read_params, read_partitions, reserve_delta, write_params,
+)
 
 
 def duplicated_line_occurrences(df: DataFrame, id_col: str = "doc_id",
@@ -113,36 +115,56 @@ def _apply_drops(df: DataFrame, dups: DataFrame, id_col: str,
             .drop("__drop"))
 
 
+def _write_lines(keys: DataFrame, path: str, num_buckets: int,
+                 mode: str, delta: str) -> None:
+    """Write distinct line keys into ``path/lines`` under ``delta``."""
+    (keys.withColumn("pbkt", F.pmod(F.col("line"), F.lit(num_buckets)))
+     .withColumn("delta", F.lit(delta))
+     .repartition("pbkt")
+     .write.mode(mode).partitionBy("delta", "pbkt")
+     .parquet(path + "/lines"))
+    keys.sparkSession.catalog.refreshByPath(path + "/lines")
+
+
 def write_line_index(df: DataFrame, path: str, id_col: str = "doc_id",
                      text_col: str = "text", min_chars: int = 10,
                      num_buckets: int = 64,
                      mode: str = "overwrite") -> None:
     """Persist the corpus's eligible-line key set: DISTINCT xxhash64
-    line keys partitioned by ``pbkt = pmod(key, num_buckets)``.  This
-    is line dedup's entire standing state — 8 bytes per distinct
+    line keys under ``lines/``, partitioned by ``delta`` (``base`` for
+    the build) then ``pbkt = pmod(key, num_buckets)``, with
+    (min_chars, num_buckets) in the root's ``_params.json`` sidecar.
+    This is line dedup's entire standing state — 8 bytes per distinct
     line, append-friendly, probe-prunable — the incremental-tier
-    sibling of the MinHash band store (incremental_dedup.py)."""
-    lines = (_eligible_occurrences(df, id_col, text_col, min_chars)
-             .select("line").distinct()
-             .withColumn("pbkt", F.pmod(F.col("line"),
-                                        F.lit(num_buckets))))
-    (lines.repartition("pbkt")
-     .write.mode(mode).partitionBy("pbkt").parquet(path + "/lines"))
+    sibling of the MinHash band store (incremental_dedup.py).
+
+    ``mode="append"`` adds the keys as a new random delta after
+    validating ``min_chars``/``num_buckets`` against the stored
+    params (a mismatch raises: keys bucketed differently are never
+    probed); the params themselves are fixed at build time."""
     spark = df.sparkSession
-    (spark.createDataFrame([(min_chars, num_buckets)],
-                           "min_chars int, num_buckets int")
-     .coalesce(1).write.mode("overwrite").parquet(path + "/params"))
-    for sub in ("/lines", "/params"):
-        spark.catalog.refreshByPath(path + sub)
+    params = {"min_chars": min_chars, "num_buckets": num_buckets}
+    if mode == "append":
+        read_params(spark, path, expect=params)
+        delta = reserve_delta(spark, [path + "/lines"])
+    else:
+        delta = "base"
+    _write_lines(_eligible_occurrences(df, id_col, text_col, min_chars)
+                 .select("line").distinct(),
+                 path, num_buckets, mode, delta)
+    if mode != "append":
+        write_params(spark, path, params)
 
 
 def probe_line_store(spark, occ: DataFrame, index_path: str,
-                     num_buckets: int) -> DataFrame:
+                     num_buckets: int,
+                     exclude_delta: str | None = None) -> DataFrame:
     """Distinct batch line keys already present in the store: only
     the partitions named by the batch's own bucket hashes are listed
     and scanned (``store.read_partitions``; the literal
     ``pbkt`` filter shows as ``PartitionFilters``) with the batch's
-    distinct keys broadcast, so the store side never shuffles."""
+    distinct keys broadcast, so the store side never shuffles.
+    ``exclude_delta`` leaves one delta out of the read."""
     probe = (occ.select("line").distinct()
              .withColumn("pbkt", F.pmod(F.col("line"),
                                         F.lit(num_buckets))))
@@ -151,7 +173,8 @@ def probe_line_store(spark, occ: DataFrame, index_path: str,
     # explicit schema: a store initialized over an empty corpus has
     # no files to infer from (the streaming sink starts that way)
     store = read_partitions(spark, index_path + "/lines", "pbkt", pbkts,
-                            schema="line long, pbkt int")
+                            schema="line long, delta string, pbkt int",
+                            exclude_delta=exclude_delta)
     return (store.join(F.broadcast(probe), ["line", "pbkt"],
                        "left_semi")
             .select("line").distinct())
@@ -160,7 +183,10 @@ def probe_line_store(spark, occ: DataFrame, index_path: str,
 def line_dedup_incremental(spark, new_docs: DataFrame, index_path: str,
                            id_col: str = "doc_id",
                            text_col: str = "text",
-                           append: bool = False) -> DataFrame:
+                           append: bool = False,
+                           delta_id: str | None = None,
+                           exclude_delta: str | None = None
+                           ) -> DataFrame:
     """Delta-batch line dedup against a persisted line store: a batch
     occurrence is dropped iff its line is already IN the store
     ("store wins" — persisted text is never retracted) or it is not
@@ -173,18 +199,25 @@ def line_dedup_incremental(spark, new_docs: DataFrame, index_path: str,
     ids order before batch ids — the append-flow invariant every
     incremental path here shares.
 
+    Rerun semantics match ``incremental_dedup.dedup_minhash_incremental``:
+    the append lands as delta ``delta_id`` (random when None) and
+    deletes that delta first, so a retry rewrites it; a probe with
+    ``exclude_delta`` ignores one delta, so a replayed micro-batch
+    (``delta_id = exclude_delta``) reproduces its first decision
+    instead of finding its own lines already stored.
+
     Scale: only the store partitions named by the batch's own bucket
     hashes are listed and scanned (:func:`probe_line_store`) with the
     batch's distinct keys broadcast; store-side data never shuffles,
     and the per-batch cost is O(batch lines + matched keys)."""
-    params = spark.read.parquet(index_path + "/params").collect()[0]
+    params = read_params(spark, index_path)
     min_chars, num_buckets = params["min_chars"], params["num_buckets"]
     occ = _eligible_occurrences(new_docs, id_col, text_col,
                                 min_chars).localCheckpoint()
     # materialized once: reused by the drop predicate AND the append
     # branch — without the checkpoint each use re-scans the store
-    seen = probe_line_store(spark, occ, index_path,
-                            num_buckets).localCheckpoint()
+    seen = probe_line_store(spark, occ, index_path, num_buckets,
+                            exclude_delta).localCheckpoint()
     firsts = (occ.groupBy("line")
               .agg(F.min(F.struct("doc", "pos")).alias("__first")))
     dups = (occ.join(seen.withColumn("__seen", F.lit(True)),
@@ -195,14 +228,10 @@ def line_dedup_incremental(spark, new_docs: DataFrame, index_path: str,
                    | (F.col("pos") != F.col("__first.pos")))
             .select("doc", "pos"))
     if append:
-        fresh = (firsts.join(seen, "line", "left_anti")
-                 .select("line").distinct()
-                 .withColumn("pbkt", F.pmod(F.col("line"),
-                                            F.lit(num_buckets))))
-        (fresh.repartition("pbkt")
-         .write.mode("append").partitionBy("pbkt")
-         .parquet(index_path + "/lines"))
-        spark.catalog.refreshByPath(index_path + "/lines")
+        delta = reserve_delta(spark, [index_path + "/lines"], delta_id)
+        _write_lines(firsts.join(seen, "line", "left_anti")
+                     .select("line").distinct(),
+                     index_path, num_buckets, "append", delta)
     return _apply_drops(new_docs, dups, id_col, text_col)
 
 

@@ -32,7 +32,8 @@ from trial_data_ingestion_spark.functions.vector import (
 )
 from trial_data_ingestion_spark.session import ensure_parallelism
 from trial_data_ingestion_spark.store import (
-    check_partition_value, delete_path, read_partitions,
+    check_partition_value, read_params, read_partitions, reserve_delta,
+    write_params,
 )
 
 _METRICS = {
@@ -728,11 +729,7 @@ def append_to_ivf_index(new_embeddings: DataFrame, centroids: DataFrame,
     ``delta`` partition directory before writing.  Without one the
     delta is random and the append is at-most-once (don't retry)."""
     spark = new_embeddings.sparkSession
-    if delta_id is None:
-        import uuid
-        delta_id = "d-" + uuid.uuid4().hex[:12]
-    check_partition_value(delta_id, what="delta_id")
-    delete_path(spark, f"{path}/delta={delta_id}")
+    delta_id = reserve_delta(spark, [path], delta_id)
     cells = _nearest_cells(new_embeddings, centroids, vec_col, id_col,
                            1, dim)
     if dim is not None:
@@ -801,22 +798,23 @@ def write_srp_index(embeddings: DataFrame, path: str, dim: int,
     ``bucket`` (2^num_planes directories).  Queries probe buckets by
     literal filter; the corpus never recomputes a projection.
 
-    The plane count (and ``dim``) is recorded in a ``_srp_meta``
-    sidecar inside the index root (underscore-prefixed, so parquet
-    readers of ``path`` never see it); query/probe operators read it
-    back via :func:`read_srp_index_meta` instead of trusting the
-    caller to remember — probing with mismatched planes silently
-    misses every neighbor.  ``num_planes="auto"`` sizes p from a
-    count() of the input (:func:`srp_auto_planes`), so occupancy —
-    and thus in-bucket candidate cost — stays constant as corpora
-    grow.  An index's plane set is FIXED at build time: ``"auto"``
-    sizes NEW indexes; growing an existing index past its occupancy
-    target means a rebuild (re-hashing is a narrow map over one
-    corpus scan — schedule it like an IVF re-fit).
+    The plane count (and ``dim``) is recorded in the index root's
+    ``_params.json`` sidecar (underscore-prefixed, so parquet readers
+    of ``path`` never see it); query/probe operators read it back via
+    ``store.read_params`` instead of trusting the caller to remember
+    — probing with mismatched planes silently misses every neighbor.
+    ``num_planes="auto"`` sizes p from a count() of the input
+    (:func:`srp_auto_planes`), so occupancy — and thus in-bucket
+    candidate cost — stays constant as corpora grow.  An index's
+    plane set is FIXED at build time: ``"auto"`` sizes NEW indexes;
+    growing an existing index past its occupancy target means a
+    rebuild (re-hashing is a narrow map over one corpus scan —
+    schedule it like an IVF re-fit).
 
     ``mode="append"`` extends an existing index (delta batches land
     in the same bucket directories); the plane set then COMES FROM
-    the sidecar — a conflicting explicit ``num_planes`` raises.
+    the sidecar — a conflicting explicit ``num_planes`` or ``dim``
+    raises.
 
     Rerun semantics (round 9): rows land under a ``delta`` partition
     level above ``bucket`` (``delta=base`` for the build).  An append
@@ -827,28 +825,10 @@ def write_srp_index(embeddings: DataFrame, path: str, dim: int,
     partition column below ``delta``)."""
     spark = embeddings.sparkSession
     if mode == "append":
-        if delta_id is None:
-            import uuid
-            delta_id = "d-" + uuid.uuid4().hex[:12]
-        check_partition_value(delta_id, what="delta_id")
-        delete_path(spark, f"{path}/delta={delta_id}")
-        meta = read_srp_index_meta(spark, path)
-        if meta is None:
-            if not isinstance(num_planes, int) \
-                    or isinstance(num_planes, bool):
-                raise ValueError(
-                    "append to a pre-metadata index needs an explicit "
-                    "int num_planes (the build-time plane count)")
-        else:
-            if (isinstance(num_planes, int)
-                    and not isinstance(num_planes, bool)
-                    and num_planes != meta["num_planes"]):
-                raise ValueError(
-                    f"index at {path} was built with "
-                    f"num_planes={meta['num_planes']}; appending with "
-                    f"{num_planes} would misroute probes "
-                    "(rebuild to resize)")
-            num_planes = meta["num_planes"]
+        num_planes = _index_planes(
+            spark, path, None if num_planes == "auto" else num_planes,
+            dim)
+        delta_id = reserve_delta(spark, [path], delta_id)
     else:
         num_planes = resolve_num_planes(num_planes,
                                         lambda: embeddings.count())
@@ -859,78 +839,28 @@ def write_srp_index(embeddings: DataFrame, path: str, dim: int,
            .withColumn("bucket", srp_bucket(vec_col, dim, num_planes))
            .withColumn("delta", F.lit(delta_id)))
     (out.write.mode(mode).partitionBy("delta", "bucket").parquet(path))
-    # sidecar AFTER the data write: a static-mode overwrite of `path`
-    # deletes the whole root, sidecar included
-    (spark.createDataFrame([(int(num_planes), int(dim))],
-                           "num_planes int, dim int")
-     .coalesce(1).write.mode("overwrite").json(path + "/_srp_meta"))
+    if mode != "append":
+        # AFTER the data write: a static overwrite of `path` deletes
+        # the whole root, sidecar included
+        write_params(spark, path, {"num_planes": num_planes, "dim": dim})
     spark.catalog.refreshByPath(path)
-
-
-def read_srp_index_meta(spark, path: str) -> dict | None:
-    """The ``_srp_meta`` sidecar of a :func:`write_srp_index` layout
-    as ``{"num_planes": p, "dim": d}``; None ONLY for a pre-metadata
-    index (no sidecar on disk — callers fall back to their
-    explicit/default plane count).  A sidecar that EXISTS but cannot
-    be read or parsed propagates: treating a corrupt sidecar as
-    pre-metadata would silently reinstate the default-8-planes
-    misrouting the sidecar was built to prevent."""
-    from pyspark.errors import AnalysisException
-    try:
-        row = spark.read.json(path + "/_srp_meta").collect()
-    except AnalysisException as e:
-        cond = e.getCondition() or ""
-        if "PATH_NOT_FOUND" in cond or "Path does not exist" in str(e):
-            return None
-        if "CORRUPT_RECORD" in cond:
-            # every row failed to parse: the json reader inferred only
-            # _corrupt_record and refuses the query
-            raise ValueError(
-                f"corrupt _srp_meta sidecar at {path}/_srp_meta: not "
-                "parseable as JSON — refusing to fall back to default "
-                "planes (that would silently misroute every probe); "
-                "rebuild the index or restore the sidecar") from e
-        raise
-    if not row:
-        return None
-    fields = row[0].asDict()
-    if "num_planes" not in fields or "dim" not in fields \
-            or fields["num_planes"] is None or fields["dim"] is None:
-        raise ValueError(
-            f"corrupt _srp_meta sidecar at {path}/_srp_meta: expected "
-            f"num_planes and dim, got fields {sorted(fields)} — "
-            "refusing to fall back to default planes (that would "
-            "silently misroute every probe); rebuild the index or "
-            "restore the sidecar")
-    return {"num_planes": int(fields["num_planes"]),
-            "dim": int(fields["dim"])}
 
 
 def _index_planes(spark, index_path: str, num_planes,
                   dim: int | None = None) -> int:
-    """Resolve the plane count for a probe of a persisted SRP layout:
-    None -> the index's recorded planes (default 8 for pre-metadata
-    indexes); an explicit int must MATCH the recording — a mismatch
-    means every probe lands in the wrong bucket, so it raises instead
-    of silently returning empty results.  ``dim`` is cross-checked
-    the same way when the sidecar carries it."""
+    """Resolve the plane count for a probe of (or append to) a
+    persisted SRP layout: None -> the index's recorded planes; an
+    explicit int (and ``dim``, when given) must MATCH the recording
+    — a mismatch means every probe lands in the wrong bucket, so it
+    raises instead of silently returning empty results."""
     if num_planes == "auto":
         raise ValueError("probes take the index's recorded plane "
                          "count: pass num_planes=None ('auto' only "
                          "sizes NEW indexes at build time)")
-    meta = read_srp_index_meta(spark, index_path)
-    if num_planes is None:
-        num_planes = meta["num_planes"] if meta else 8
-    elif meta is not None and num_planes != meta["num_planes"]:
-        raise ValueError(
-            f"index at {index_path} was built with "
-            f"num_planes={meta['num_planes']}, probe asked for "
-            f"{num_planes} (rebuild to resize)")
-    if (meta is not None and dim is not None
-            and dim != meta["dim"]):
-        raise ValueError(f"index at {index_path} stores dim="
-                         f"{meta['dim']}, probe asked for {dim}")
-    return resolve_num_planes(num_planes, lambda: 0)
+    expect = {} if dim is None else {"dim": dim}
+    if num_planes is not None:
+        expect["num_planes"] = resolve_num_planes(num_planes, None)
+    return read_params(spark, index_path, expect)["num_planes"]
 
 
 def topk_lsh_over_index(spark, index_path: str, queries: DataFrame,
@@ -951,7 +881,7 @@ def topk_lsh_over_index(spark, index_path: str, queries: DataFrame,
     equi-join on ``bucket``, and the codegen'd rescore.
 
     ``num_planes=None`` (default) probes with the plane count the
-    index RECORDED at build time (``_srp_meta`` sidecar) — the only
+    index RECORDED at build time (``_params.json`` sidecar) — the only
     count that can be right; an explicit int is cross-checked against
     the recording and raises on mismatch instead of silently probing
     empty buckets."""

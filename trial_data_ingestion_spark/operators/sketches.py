@@ -31,9 +31,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trial_data_ingestion_spark.store import (
-    check_partition_value, delete_path, read_partitions,
-)
+from trial_data_ingestion_spark.store import read_partitions, write_shard
 
 #: relative standard error of an lgK-configured HLL sketch
 HLL_RSE = {lgk: 1.04 / math.sqrt(2 ** lgk) for lgk in range(4, 22)}
@@ -52,10 +50,11 @@ def hll_shard_sketches(df: DataFrame, group_cols: list[str],
 def write_hll_shard(df: DataFrame, path: str, group_cols: list[str],
                     value_col: str, shard: str,
                     lgk: int = 12, n_files: int = 1) -> None:
-    """Sketch one shard and append it to the sketch table at
-    ``path`` (partitioned by ``shard`` — re-running a shard is an
-    overwrite of its own partition, so ingest retries stay
-    idempotent).
+    """Sketch one shard and write it to the sketch table at ``path``
+    (partitioned by ``shard``; ``store.write_shard`` replaces the
+    shard's own partition, so ingest retries stay idempotent, and a
+    retry that now has no rows leaves the shard empty rather than
+    keeping a stale sketch).
 
     ``n_files`` sizes the shard's output: the default single file is
     right for low-cardinality group sets (an event-type sketch row is
@@ -65,23 +64,10 @@ def write_hll_shard(df: DataFrame, path: str, group_cols: list[str],
     rows by group across that many writers (still one file per task:
     the write repartitions first), at any ``shuffle.partitions``.
 
-    Empty-shard retries are handled explicitly: dynamic partition
-    overwrite writes NO partitions for a zero-row frame, which would
-    silently leave a stale prior sketch in place when a retry now
-    produces no data — so an empty input DELETES the shard's
-    partition instead (idempotency means "the table reflects this
-    run", including reflecting emptiness).
-
     ``shard`` must be a safe partition value
-    (:func:`check_partition_value`): the empty-shard delete builds
-    the partition path by hand, and Spark escapes unsafe characters
-    on write, so an unsafe name would delete the wrong path."""
-    check_partition_value(shard)
-    spark = df.sparkSession
-    if df.isEmpty():
-        delete_path(spark, f"{path}/shard={shard}")
-        spark.catalog.refreshByPath(path)
-        return
+    (``store.check_partition_value``): the shard delete builds the
+    partition path by hand, and Spark escapes unsafe characters on
+    write, so an unsafe name would delete the wrong path."""
     out = (hll_shard_sketches(df, group_cols, value_col, lgk)
            .withColumn("shard", F.lit(shard)))
     if n_files == 1:
@@ -92,11 +78,7 @@ def write_hll_shard(df: DataFrame, path: str, group_cols: list[str],
         # dropped as redundant whenever n == shuffle.partitions, and
         # AQE may then coalesce that exchange down to one writer
         out = out.repartition(n_files, *group_cols, "shard")
-    (out.write.mode("overwrite")
-        .partitionBy("shard")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path))
-    spark.catalog.refreshByPath(path)
+    write_shard(out, path, shard)
 
 
 def hll_stream_sink(path: str, group_cols: list[str], value_col: str,
@@ -109,7 +91,7 @@ def hll_stream_sink(path: str, group_cols: list[str], value_col: str,
     micro-batch overwrites its own partition instead of
     double-counting — idempotent by construction, the same
     exactly-once trick as the upsert sink; and a replay that now
-    carries no rows CLEARS its stale shard (see
+    carries no rows leaves its shard empty (see
     :func:`write_hll_shard`).  :func:`merged_distinct` then answers
     all-time / trailing-window distinct counts from the sketch table
     alone, with no rescan of the stream's history — the streaming

@@ -1,13 +1,28 @@
-"""Primitives shared by the persisted, partition-keyed stores (the
-MinHash, SRP, IVF, IVF-PQ, line, perceptual-hash and HLL layouts):
-safe partition values, the delete-own-partition primitive behind
-idempotent shard/delta rewrites, and the probe read that lists only
-the partitions it reads.
+"""The one contract every persisted, partition-keyed store follows
+(the MinHash, SRP, IVF, IVF-PQ, line, perceptual-hash and HLL
+layouts, and the streaming sinks' output shards):
+
+* **params sidecar** — a store's build-time parameters live in one
+  ``_params.json`` file at its root, written and read on the driver
+  through the Hadoop FS API (no Spark job):
+  :func:`write_params` after the data write, :func:`read_params`
+  (with ``expect=`` to validate a caller's values) before any probe
+  or append;
+* **keyed delta append** — :func:`reserve_delta` names the append's
+  ``delta`` (the caller's id or a random one) and deletes it under
+  every sub-root first, so a retried append rewrites itself;
+* **keyed shard write** — :func:`write_shard` rewrites one
+  ``shard=`` partition by delete-then-append, so a replayed
+  micro-batch leaves its output exactly once;
+* **pruned probe** — :func:`read_partitions` lists and reads only
+  the partitions a probe names.
 """
 
 from __future__ import annotations
 
+import json
 import re
+import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -20,7 +35,7 @@ from pyspark.sql import functions as F
 _SAFE_PARTITION_VALUE = re.compile(r"^[A-Za-z0-9._-]+$")
 
 #: glob of one partition-directory level: ``name=value`` directories
-#: only, so sidecars (``_srp_meta``) and ``_SUCCESS`` never match
+#: only, so the ``_params.json`` sidecar and ``_SUCCESS`` never match
 _LEVEL = "/*=*"
 
 
@@ -37,16 +52,94 @@ def check_partition_value(value: str, what: str = "shard") -> str:
     return value
 
 
+def _fs_path(spark, path: str):
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def delete_path(spark, path: str) -> None:
     """Recursively delete ``path`` through the Hadoop FS API (so it
     works against whatever filesystem Spark is configured for, not
     just local disk) and drop any cached listing of it.  The shared
     primitive behind the idempotent shard/delta overwrite pattern:
     delete-your-own-partition, then (re)write it."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = _fs_path(spark, path)
     fs.delete(p, True)
+    spark.catalog.refreshByPath(path)
+
+
+def write_params(spark, root: str, params: dict) -> None:
+    """Record a store's build-time ``params`` as ``root/_params.json``
+    (a driver-side file write, not a Spark job).  Call it AFTER the
+    data write: a static overwrite of ``root`` deletes the root."""
+    fs, p = _fs_path(spark, f"{root.rstrip('/')}/_params.json")
+    out = fs.create(p, True)
+    try:
+        out.write(bytearray(json.dumps(params, sort_keys=True).encode()))
+    finally:
+        out.close()
+
+
+def read_params(spark, root: str, expect: dict | None = None) -> dict:
+    """The params :func:`write_params` recorded for the store at
+    ``root``.  A missing, unparseable or truncated sidecar raises
+    ``ValueError`` naming its path — never a default, which would
+    silently probe buckets keyed differently.  ``expect`` maps keys
+    to the caller's values; any that differ from the stored ones
+    raise, since a store's params are fixed at build time."""
+    path = f"{root.rstrip('/')}/_params.json"
+    fs, p = _fs_path(spark, path)
+    if not fs.exists(p):
+        raise ValueError(f"no params sidecar at {path}: not a store "
+                         "root, or written by an older layout "
+                         "(rebuild the store)")
+    stream = fs.open(p)
+    try:
+        raw = bytes(stream.readAllBytes())
+    finally:
+        stream.close()
+    try:
+        params = json.loads(raw)
+    except ValueError as e:
+        raise ValueError(f"corrupt params sidecar at {path}: {e}") from e
+    if not isinstance(params, dict):
+        raise ValueError(f"corrupt params sidecar at {path}: not a "
+                         "JSON object")
+    bad = sorted(k for k, v in (expect or {}).items()
+                 if params.get(k) != v)
+    if bad:
+        def show(d):
+            return ", ".join(f"{k}={d.get(k)}" for k in bad)
+        raise ValueError(
+            f"{root} stores {show(params)}, caller passed "
+            f"{show(expect)} (stored params are fixed at build time: "
+            "rebuild to resize)")
+    return params
+
+
+def reserve_delta(spark, roots, delta_id: str | None = None) -> str:
+    """The ``delta`` an append writes: ``delta_id`` (checked safe) or,
+    when None, a random ``d-…`` id.  Its directory under each of
+    ``roots`` is deleted first, so retrying an append with the same
+    ``delta_id`` rewrites it instead of appending twice; a random
+    delta is at-most-once (don't retry it)."""
+    if delta_id is None:
+        delta_id = "d-" + uuid.uuid4().hex[:12]
+    check_partition_value(delta_id, what="delta_id")
+    for root in roots:
+        delete_path(spark, f"{root}/delta={delta_id}")
+    return delta_id
+
+
+def write_shard(df: DataFrame, path: str, shard: str) -> None:
+    """Write ``df`` as the ``shard=`` partition of the parquet table
+    at ``path``, replacing whatever that shard held: delete, append,
+    refresh.  An empty ``df`` leaves the shard empty, so a replay
+    that now produces nothing never keeps stale rows."""
+    spark = df.sparkSession
+    delete_path(spark, f"{path}/shard={check_partition_value(shard)}")
+    (df.withColumn("shard", F.lit(shard))
+       .write.mode("append").partitionBy("shard").parquet(path))
     spark.catalog.refreshByPath(path)
 
 
@@ -55,8 +148,8 @@ def _glob(spark, pattern: str):
     filesystem call, not a Spark job.  The raw Java array (empty when
     nothing matches), so callers that need one hit pay one py4j call,
     not one per match."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(pattern)
-    hits = p.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(p)
+    fs, p = _fs_path(spark, pattern)
+    hits = fs.globStatus(p)
     return [] if hits is None else hits
 
 

@@ -187,18 +187,34 @@ def line_deduped_document_sink(docs: DataFrame, index_path: str,
     repeats forever).
 
     Initialize the store once with ``write_line_index`` (over the
-    standing corpus, or over a zero-row frame to start empty); the
-    rewritten batches append as parquet at ``out_path``.  Returns the
+    standing corpus, or over a zero-row frame to start empty).  Each
+    micro-batch appends its new lines as store delta
+    ``batch-{batch_id:09d}-{query id}``, probing with that delta
+    excluded, and writes its rewritten docs as the
+    ``shard=batch-{batch_id:09d}`` partition of ``out_path``
+    (``store.write_shard``): a replayed batch reproduces its first
+    decision and rewrites its own delta and shard — exactly-once,
+    like ``incremental_dedup.minhash_dedup_stream_sink``.  The query
+    id (stable across restarts from one checkpoint) keeps a later
+    query over the same store, whose batch ids start again at 0,
+    from replacing an earlier query's deltas.  Returns the
     ``DataStreamWriter`` — caller picks the trigger."""
     from trial_data_ingestion_spark.operators.line_dedup import (
         line_dedup_incremental,
     )
+    from trial_data_ingestion_spark.store import write_shard
 
     def sink(batch_df, batch_id):
-        out = line_dedup_incremental(batch_df.sparkSession, batch_df,
-                                     index_path, id_col=id_col,
-                                     text_col=text_col, append=True)
-        out.write.mode("append").parquet(out_path)
+        spark = batch_df.sparkSession
+        shard = f"batch-{batch_id:09d}"
+        query_id = spark.sparkContext.getLocalProperty(
+            "sql.streaming.queryId")
+        delta = shard if query_id is None else f"{shard}-{query_id}"
+        out = line_dedup_incremental(spark, batch_df, index_path,
+                                     id_col=id_col, text_col=text_col,
+                                     append=True, delta_id=delta,
+                                     exclude_delta=delta)
+        write_shard(out, out_path, shard)
 
     return docs.writeStream.foreachBatch(sink)
 
@@ -217,29 +233,20 @@ def clustered_document_sink(embeddings: DataFrame, centroid_path: str,
     then pinned at plan time for the stream's lifetime.
 
     Each micro-batch lands as its own ``shard=batch-{batch_id:09d}``
-    partition under ``out_path``, written delete-then-append like
-    ``incremental_dedup.minhash_dedup_stream_sink``: batch ids are
-    stable across checkpoint restarts, so a replayed batch rewrites
-    its own shard instead of appending a second copy.  Returns the
-    ``DataStreamWriter`` — caller picks the trigger."""
-    from pyspark.sql import functions as F
-
+    partition under ``out_path`` (``store.write_shard``): batch ids
+    are stable across checkpoint restarts, so a replayed batch
+    rewrites its own shard instead of appending a second copy.
+    Returns the ``DataStreamWriter`` — caller picks the trigger."""
     from trial_data_ingestion_spark.operators.clustering import (
         cluster_documents, load_centroids,
     )
-    from trial_data_ingestion_spark.store import delete_path
+    from trial_data_ingestion_spark.store import write_shard
 
     def sink(batch_df, batch_id):
-        spark = batch_df.sparkSession
-        shard = f"batch-{batch_id:09d}"
-        cents = load_centroids(spark, centroid_path)
+        cents = load_centroids(batch_df.sparkSession, centroid_path)
         out = cluster_documents(batch_df, dim=dim, id_col=id_col,
                                 vec_col=vec_col, centroids=cents)
-        delete_path(spark, f"{out_path}/shard={shard}")
-        (out.withColumn("shard", F.lit(shard))
-            .write.mode("append").partitionBy("shard")
-            .parquet(out_path))
-        spark.catalog.refreshByPath(out_path)
+        write_shard(out, out_path, f"batch-{batch_id:09d}")
 
     return embeddings.writeStream.foreachBatch(sink)
 
