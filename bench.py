@@ -2,47 +2,40 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Prints ONE JSON line:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {...}, "sf": ...}
+  {"metric": "...", "value": <total sec>, "unit": "sec", "sf": ...,
+   "calibration_sec": ..., "calibration_version": ...,
+   "calibration_mem_sec": ..., "calibration_mem_version": ...,
+   "queries": {<entry>: <steady sec>, ...}, "steady_passes": ...,
+   "cold_total_sec": ...}
 
 Each query is fully materialized via a count over the result (no
 driver-side collect of payload rows).  Queries span the engine's
 main physical shapes: scan+agg, shuffle join, window, Arrow-UDF
 chunking, LSH dedup, vector top-k.
 
-Measurement protocol (round 3): one cold pass (whole-stage-codegen
-compilation + JVM JIT — one-time on a long-lived cluster), then
-STEADY_PASSES steady passes; the reported steady time is the
-per-query MEDIAN, so a single GC pause or scheduler hiccup can't
-masquerade as a plan regression (round 2's 1.2-1.8x single-pass
-drift on sub-second queries was exactly that noise).
+Measurement protocol: one cold pass (whole-stage-codegen compilation
++ JVM JIT — one-time on a long-lived cluster), then STEADY_PASSES
+steady passes; the reported steady time is the per-query MEDIAN, so a
+single GC pause or scheduler hiccup can't masquerade as a plan
+regression.
 
-Regression gates, applied against the ROLLING BEST baseline: the
-per-query minimum of the steady times across every BENCH_r*.json in
-the repo (one source of truth, no transcribed constants; recomputed
-each run so new rounds tighten the gate automatically).  Round 3 beat
-r1 by 15-30% on most queries — gating against r1 alone would let a
-regression back to r1 levels pass silently.
-  * per-query: median > 2x its best-known time (above a jitter floor);
-  * common-query TOTAL: sum of medians over the baseline's queries
-    > 1.3x the best-known total — catches broad slow drift that stays
-    under the per-query gate.
+Two fixed synthetic probes, run before and after the suite, record
+machine speed beside the entries: ``calibration_sec`` (CPU-bound) and
+``calibration_mem_sec`` (allocation/shuffle-bound), each the min of
+its start and end sample, with a ``calibration_*_version`` that
+changes whenever a probe's workload does.  They let a reader
+drift-correct runs taken on different machines; this harness applies
+no gate of its own.  Wall times from different machines drift by
+tens of percent, so regression (and speed-up) evidence comes from the
+same-box interleaved A/B of ``perfbench/run.py`` instead.
 
-Machine-noise calibration (round 9): every record carries
-``calibration_sec`` — a fixed synthetic CPU-bound workload
-(data-independent, same shape every run) measured alongside the
-entries.  The round-8 driver machine ran the SAME code ~8-15%
-uniformly slower than a quiet machine, which forced cold-total
-forensics to separate noise from regression; the calibration entry
-turns that into arithmetic.  The gates normalize each best-known time
-by (current calibration / that record's calibration), clamped to
-CAL_NORM_BOUNDS so a pathological calibration sample can never hide a
-real regression (relax at most 1.5x) or manufacture one (tighten at
-most 0.9x).  Records predating the entry normalize by 1.0.
+Full-suite runs at sf0.1 also write the full record (adds start/end
+probe samples and cold times) to BENCH_LOCAL_r{NN}.json.
 
-`python bench.py --rebaseline` writes the current rolling best to
-BENCH_BASELINE.json (committed artifact, for the judge's eyes — the
-gates themselves always recompute from the BENCH_r*.json files).
+  python bench.py                       full suite, one JSON line
+  python bench.py --only NAME[,NAME]    subset of HEADLINE, no file
+  python bench.py --scale               one scale tier into
+                                        BENCH_SCALE.json
 """
 
 from __future__ import annotations
@@ -828,12 +821,8 @@ def _bench_extra():
                 b29_stream_dedup_sink)}}
 
 STEADY_PASSES = 3
-REGRESSION_FACTOR = 2.0
-# floor below which jitter dominates and a 2x ratio is meaningless
-REGRESSION_MIN_SEC = 0.4
-TOTAL_REGRESSION_FACTOR = 1.3
 
-# --- machine-noise calibration (round 9) --------------------------------
+# --- machine-speed calibration probes ----------------------------------
 #: rows of the fixed synthetic CPU-bound calibration workload; sized so
 #: the entry lands ~0.8 s on the reference machine — long enough to
 #: swamp scheduling jitter, short enough to not tax the suite
@@ -843,30 +832,20 @@ CALIBRATION_ROWS = 1_024_000_000
 #: cross-session spread; 128 tasks ~9%)
 CALIBRATION_TASKS = 128
 #: bump when the calibration WORKLOAD changes: the yardstick's scale
-#: changes with it, so the gates must never normalize a v-N value by
-#: a v-M record (a 512M-row v1 value against a 1024M-row v2 record
-#: would read as a 1.7x machine-speed shift and relax every gate to
-#: the clamp).  Records carry calibration_version; the loader drops
-#: calibrations whose version differs from the running one.
+#: changes with it, so a v-N value must never be compared with a v-M
+#: record (a 512M-row v1 value against a 1024M-row v2 record would
+#: read as a 1.7x machine-speed shift).  Records carry
+#: calibration_version.
 CALIBRATION_VERSION = 2
-#: clamp on the calibration normalization factor applied to best-known
-#: times: a slow-machine run may relax the gate at most 1.5x; a
-#: fast-looking calibration sample may tighten it at most to 0.9x (so a
-#: lucky calibration can't turn ordinary jitter into a REGRESSION flag)
-CAL_NORM_BOUNDS = (0.9, 1.5)
 
 
 def _calibration_sec(spark) -> float:
     """Fixed synthetic CPU-bound entry: hash-and-count over a range,
-    32 partitions, no IO, no shuffle beyond the final partial-agg
-    gather — measures raw machine throughput under the same JVM the
-    bench entries run in.  MIN of 5 after two warm-up passes: the
-    minimum estimates machine capacity, and a genuinely loaded
-    machine — the condition the yardstick exists to detect —
-    inflates every sample, minimum included.  Measured cross-session
-    spread ~9% (vs ~18% with 32 tasks / 3-sample median); the
-    CAL_NORM_BOUNDS clamp plus the 2x gate factor absorb the
-    residue."""
+    no IO, no shuffle beyond the final partial-agg gather — measures
+    raw machine throughput under the same JVM the bench entries run
+    in.  MIN of 5 after two warm-up passes: the minimum estimates
+    machine capacity, and a genuinely loaded machine inflates every
+    sample, minimum included.  Measured cross-session spread ~9%."""
     def one() -> float:
         t0 = time.perf_counter()
         spark.range(0, CALIBRATION_ROWS, 1,
@@ -879,14 +858,13 @@ def _calibration_sec(spark) -> float:
     return round(min(one() for _ in range(5)), 3)
 
 
-#: rows of the ALLOCATION/SHUFFLE-bound calibration workload (round
-#: 10): md5 strings shuffled at full cardinality and hash-aggregated —
-#: the resource profile of the shingle/fuzzy family (explode -> per-
-#: shingle hash -> groupBy), which the CPU probe does not track.  The
-#: r9->r10 forensics: the r8 CODE re-run on the r10 machine was 1.5x
-#: its r8 record on the shingle family while the CPU yardstick read
-#: FASTER (0.689 vs 0.723) — machine classes differ in memory/alloc
-#: throughput at equal ALU throughput, so the gates need BOTH axes.
+#: rows of the ALLOCATION/SHUFFLE-bound calibration workload: md5
+#: strings shuffled at full cardinality and hash-aggregated — the
+#: resource profile of the shingle/fuzzy family (explode -> per-
+#: shingle hash -> groupBy), which the CPU probe does not track.
+#: Machine classes differ in memory/alloc throughput at equal ALU
+#: throughput (one measured the shingle family 1.5x slower while its
+#: CPU probe read faster), so a drift correction needs both axes.
 CALIBRATION_MEM_ROWS = 4_000_000
 #: bump when the mem-calibration WORKLOAD changes (same contract as
 #: CALIBRATION_VERSION)
@@ -898,8 +876,7 @@ def _calibration_mem_sec(spark) -> float:
     allocation), groupBy on the full-cardinality digest (a real
     shuffle of every row — no map-side combine escape), hash-agg of
     4M distinct groups.  MIN of 5 after two warm-ups, like the CPU
-    probe; measured cross-session spread ~10-15%, absorbed by the
-    CAL_NORM_BOUNDS clamp plus the gate factors."""
+    probe; measured cross-session spread ~10-15%."""
     def one() -> float:
         t0 = time.perf_counter()
         (spark.range(0, CALIBRATION_MEM_ROWS, 1, CALIBRATION_TASKS)
@@ -911,113 +888,6 @@ def _calibration_mem_sec(spark) -> float:
     one()
     return round(min(one() for _ in range(5)), 3)
 
-
-def _cal_norm(cal_now: float | None, cal_base: float | None,
-              mem_now: float | None = None,
-              mem_base: float | None = None) -> float:
-    """Normalization factor applied to a best-known time before the
-    regression compare: current machine speed relative to the machine
-    that set the record, clamped to CAL_NORM_BOUNDS.  With both axes
-    available the SLOWER ratio wins (max): a machine can be CPU-equal
-    yet allocation/shuffle-slow (the r10 finding), and a gate that
-    only saw the fast axis would flag that as a code regression.
-    Missing calibration on an axis drops that axis; no axis at all
-    (pre-r9 records, tail-truncated artifacts) -> 1.0, i.e. the
-    historical un-normalized gate."""
-    ratios = []
-    if cal_now and cal_base:
-        ratios.append(cal_now / cal_base)
-    if mem_now and mem_base:
-        ratios.append(mem_now / mem_base)
-    if not ratios:
-        return 1.0
-    return min(max(max(ratios), CAL_NORM_BOUNDS[0]),
-               CAL_NORM_BOUNDS[1])
-
-
-def _gate_regressions(steady: dict[str, float], cal_now: float | None,
-                      baseline: dict[str, float],
-                      baseline_cal: dict[str, float | None],
-                      mem_now: float | None = None,
-                      baseline_mem: dict[str, float | None] | None = None,
-                      ) -> dict[str, dict]:
-    """Per-entry regression gate vs the rolling best, calibration-
-    normalized (both axes when the record carries them).  Pure
-    function so the normalization logic is unit-testable without a
-    SparkSession."""
-    baseline_mem = baseline_mem or {}
-    regressions: dict[str, dict] = {}
-    for name, base in baseline.items():
-        now = steady.get(name)
-        if now is None:
-            continue
-        norm = _cal_norm(cal_now, baseline_cal.get(name),
-                         mem_now, baseline_mem.get(name))
-        if now > max(base * norm * REGRESSION_FACTOR, REGRESSION_MIN_SEC):
-            regressions[name] = {
-                "best_sec": base, "now_sec": now,
-                "cal_norm": round(norm, 3),
-                "factor": round(now / (base * norm), 2)}
-    return regressions
-
-
-def _gate_total_vs_runs(steady: dict[str, float], cal_now: float | None,
-                        mem_now: float | None,
-                        runs: list[dict]) -> dict:
-    """Broad-drift total gate vs CALIBRATED FULL-RUN totals.
-
-    The r9 gate summed per-entry minima across a decade of different
-    machines — a lower envelope no single machine ever achieved — and
-    false-fired 1.45x on the r10 machine even though an A/B of the r8
-    code on that same machine showed zero code drift.  Like-for-like
-    is run total vs run total: for each historical record that
-    carries calibration, sum its steady values over the entries both
-    runs share, normalize by the machine-speed ratio (slower axis
-    wins), and fire only if the current run exceeds EVERY such record
-    by the gate factor — i.e. the minimum factor across calibrated
-    history is what's reported."""
-    best: dict = {}
-    for run in runs:
-        common = [n for n in run["queries"] if n in steady]
-        # a subset record (or a much older, smaller suite) is not a
-        # comparable total
-        if len(common) < max(5, int(0.8 * len(steady))):
-            continue
-        norm = _cal_norm(cal_now, run["cal"], mem_now, run["mem"])
-        base_total = sum(float(run["queries"][n]) for n in common) * norm
-        if base_total <= 0:
-            continue
-        now_total = sum(steady[n] for n in common)
-        factor = now_total / base_total
-        if not best or factor < best["factor"]:
-            best = {
-                "vs_run": run["file"],
-                "common_queries": len(common),
-                "best_total_sec": round(base_total, 3),
-                "now_total_sec": round(now_total, 3),
-                "cal_norm": round(norm, 3),
-                "factor": round(factor, 2),
-            }
-    if best and best["factor"] > TOTAL_REGRESSION_FACTOR:
-        return best
-    return {}
-
-#: entries whose measurement SEMANTICS changed: values recorded
-#: before the named round measured less work and are not comparable
-#: floors.  b02's old .count() materialization let Catalyst's
-#: left-join elimination prune the whole matched-grams computation
-#: (fixed in round 5) — its r4 time is a different, smaller query.
-#: Values are ROUND NUMBERS (files from earlier rounds are skipped).
-INCOMPARABLE_BEFORE = {"b02_decontam_report": 5}
-
-#: q35_top_revenue_orders re-measured in round 8 on a quiet machine
-#: (verdict r7 watch item): steady settles at 0.69-0.77 s and the
-#: plan is unchanged since r4 and already the right one —
-#: BroadcastHashJoin on the filtered orders side, map-side partial
-#: aggregation, TakeOrderedAndProject, 2 exchanges.  Its 0.65-1.19 s
-#: cross-round spread is run-context noise on a sub-second entry
-#: (JIT/cache pressure from neighboring entries), not a regression;
-#: within 1.1x of the 0.65 s r4 record when measured alone.
 
 _ROUND_RE = re.compile(r"BENCH(?:_LOCAL)?_r0*(\d+)\.json$")
 
@@ -1036,200 +906,23 @@ def _is_git_tracked(path: str) -> bool:
         # git missing/broken: be conservative, treat as tracked so an
         # existing file is never clobbered.
         return True
-#: steady-query key/value pairs inside a truncated bench tail — keys
-#: are always qNN_/bNN_ prefixed, so a front-truncated key never
-#: matches and cold values are fenced off by the steady_passes marker
-_TAIL_KV_RE = re.compile(r'"([qb]\d{2}_\w+)":\s*([0-9.]+)')
 
 
-def _recover_from_tail(tail: str) -> dict[str, float]:
-    """Best-effort recovery of the steady ``queries`` dict from the
-    driver's 2000-char tail capture of a bench run whose single JSON
-    line was too long to parse (``"parsed": null`` in BENCH_rNN.json,
-    as happened in round 5).  Only the portion of the steady dict that
-    survived truncation is recoverable; everything after the
-    ``"steady_passes"`` marker is cold-pass data and is excluded."""
-    if not tail:
-        return {}
-    cut = tail.find('"steady_passes"')
-    if cut < 0:
-        # can't tell steady from cold values apart — refuse to guess
-        return {}
-    return {k: float(v) for k, v in _TAIL_KV_RE.findall(tail[:cut])}
-
-
-def _parse_bench_record(doc: dict, fname: str
-                        ) -> tuple[dict, float | None, float | None]:
-    """(queries, calibration, mem_calibration) from one bench record
-    (driver artifact with a 'parsed' wrapper or a BENCH_LOCAL file),
-    salvaging tail-truncated artifacts; calibrations whose protocol
-    version differs from the running one are dropped (their scale is
-    not comparable)."""
-    parsed = doc.get("parsed", doc)
-    calibration: float | None = None
-    mem_calibration: float | None = None
-    if isinstance(parsed, dict) and parsed.get("queries"):
-        queries = parsed["queries"]
-        if (parsed.get("calibration_sec")
-                and parsed.get("calibration_version")
-                == CALIBRATION_VERSION):
-            calibration = float(parsed["calibration_sec"])
-        if (parsed.get("calibration_mem_sec")
-                and parsed.get("calibration_mem_version")
-                == CALIBRATION_MEM_VERSION):
-            mem_calibration = float(parsed["calibration_mem_sec"])
-    else:
-        queries = _recover_from_tail(doc.get("tail") or "")
-        if queries:
-            print(f"bench baseline: {fname} has no parsed queries; "
-                  f"recovered {len(queries)} steady entries from its "
-                  "tail", file=sys.stderr)
-    return queries, calibration, mem_calibration
-
-
-def _iter_bench_records(here: str):
-    """Yield (fname, round_no, doc) for every readable bench record."""
-    paths = sorted(glob.glob(os.path.join(here, "BENCH_r[0-9]*.json")) +
-                   glob.glob(os.path.join(here, "BENCH_LOCAL_r[0-9]*.json")))
-    for path in paths:
-        fname = os.path.basename(path)
-        m = _ROUND_RE.search(fname)
-        if m is None:
-            continue
-        try:
-            with open(path) as f:
-                doc = json.load(f)
-        except (OSError, ValueError):
-            print(f"bench baseline: skipping unreadable {fname}",
-                  file=sys.stderr)
-            continue
-        if isinstance(doc, dict):
-            yield fname, int(m.group(1)), doc
-
-
-def _load_rolling_baseline(here: str | None = None,
-                           ) -> tuple[dict[str, float],
-                                      dict[str, float | None],
-                                      list[str],
-                                      dict[str, float | None]]:
-    """Per-query BEST (minimum) steady seconds across every
-    BENCH_r*.json (driver-recorded; bench JSON wrapped under a
-    'parsed' key) and BENCH_LOCAL_r*.json (written directly by
-    ``python bench.py``) in the repo (sf0.1, local[32]).  Returns the
-    baseline, the calibration_sec of the record that set each entry's
-    best, the list of round files that loaded, and the record-setting
-    calibration_mem_sec per entry.
-
-    Round 11: per-entry bests are taken ONLY from records carrying
-    BOTH current-protocol calibration axes (CPU and memory/shuffle).
-    The r10 forensics proved machine classes differ up to 1.45x on
-    the mem axis at equal CPU — a best set by a single-axis (or
-    pre-calibration) record cannot be normalized, so the 2.0x
-    per-entry gate would compare raw cross-machine times exactly
-    where machines differ most.  With the filter, ``best_cal[k]``
-    and ``best_mem[k]`` are ALWAYS non-None for every ``best[k]``
-    and :func:`_cal_norm` never silently degrades to 1.0 on the
-    per-entry path.  Older single-axis records still load (they
-    appear in ``rounds`` and feed the total gate via
-    :func:`_load_calibrated_runs`) — they just can't set floors.
-    Tolerates driver artifacts whose 'parsed' is null
-    (tail-truncated bench line).  Queries listed in
-    :data:`INCOMPARABLE_BEFORE` ignore rounds before their cutoff."""
-    if here is None:
-        here = os.path.dirname(os.path.abspath(__file__))
-    best: dict[str, float] = {}
-    best_cal: dict[str, float | None] = {}
-    best_mem: dict[str, float | None] = {}
-    rounds: list[str] = []
-    for fname, round_no, doc in _iter_bench_records(here):
-        queries, calibration, mem_calibration = \
-            _parse_bench_record(doc, fname)
-        if not queries:
-            print(f"bench baseline: skipping {fname} (no usable queries)",
-                  file=sys.stderr)
-            continue
-        rounds.append(fname)
-        if calibration is None or mem_calibration is None:
-            continue
-        for k, v in queries.items():
-            cutoff = INCOMPARABLE_BEFORE.get(k)
-            if cutoff is not None and round_no < cutoff:
-                continue
-            v = float(v)
-            if k not in best or v < best[k]:
-                best[k] = v
-                best_cal[k] = calibration
-                best_mem[k] = mem_calibration
-    return best, best_cal, rounds, best_mem
-
-
-def _load_calibrated_runs(here: str | None = None) -> list[dict]:
-    """Full-suite records carrying a current-protocol CPU calibration
-    — the comparable run totals the broad-drift gate measures against
-    (see :func:`_gate_total_vs_runs`).  Each item:
-    {file, queries, cal, mem}."""
-    if here is None:
-        here = os.path.dirname(os.path.abspath(__file__))
-    runs = []
-    for fname, _round_no, doc in _iter_bench_records(here):
-        queries, calibration, mem_calibration = \
-            _parse_bench_record(doc, fname)
-        if queries and calibration:
-            runs.append({"file": fname, "queries": queries,
-                         "cal": calibration, "mem": mem_calibration})
-    return runs
-
-
-def rebaseline() -> None:
-    """Write the rolling best to BENCH_BASELINE.json for inspection."""
-    best, best_cal, rounds, best_mem = _load_rolling_baseline()
-    runs = _load_calibrated_runs()
-    here = os.path.dirname(os.path.abspath(__file__))
-    out = {"note": "per-query best steady seconds across rounds whose "
-                   "records carry BOTH calibration axes (CPU + "
-                   "memory/shuffle, r11) so the per-entry 2x gate "
-                   "always compares machine-normalized times; "
-                   "regenerate with `python bench.py --rebaseline` — "
-                   "bench gates recompute this live from BENCH_r*.json. "
-                   "The TOTAL gate does NOT use the sum of these minima "
-                   "(a cross-machine lower envelope no run achieved); "
-                   "it compares against calibrated_run_totals.",
-           "rounds": rounds,
-           "queries": {k: best[k] for k in sorted(best)},
-           "calibration_sec": {k: best_cal[k] for k in sorted(best_cal)
-                               if best_cal[k] is not None},
-           "calibration_mem_sec": {k: best_mem[k] for k in sorted(best_mem)
-                                   if best_mem[k] is not None},
-           "total_sec": round(sum(best.values()), 3),
-           "calibrated_run_totals": [
-               {"file": r["file"], "cal": r["cal"], "mem": r["mem"],
-                "n_queries": len(r["queries"]),
-                "total_sec": round(sum(map(float, r["queries"].values())),
-                                   3)}
-               for r in runs]}
-    with open(os.path.join(here, "BENCH_BASELINE.json"), "w") as f:
-        json.dump(out, f, indent=2)
-        f.write("\n")
-    print(f"BENCH_BASELINE.json: {len(best)} queries from {rounds}")
-
-
-#: budget for the one stdout JSON line: the driver keeps only a
-#: 2000-char TAIL of stdout, and the full record (~4 KB with cold
-#: passes and gate details) truncated into "parsed": null in rounds 5
-#: and 9; a 100-char margin covers trailing log noise after the line
+#: budget for the one stdout JSON line: a caller that keeps only a
+#: 2000-char TAIL of stdout must still get the line whole (the full
+#: record, ~4 KB with cold passes, once truncated to an unparseable
+#: tail); a 100-char margin covers trailing log noise after the line
 COMPACT_LINE_BUDGET = 1900
 
 
 def _compact_line(out: dict) -> str:
-    """The one stdout JSON line, sized to fit the driver's tail
-    whole: steady queries + both calibrations — the exact fields the
-    rolling-baseline loader consumes; the full record lives in
-    BENCH_LOCAL_r{NN}.json.  Key order matters to the salvage path:
-    "queries" precede the "steady_passes" fence so a front-truncated
-    tail still yields steady entries to _recover_from_tail.  If the
-    suite ever grows past the budget, per-query detail is dropped
-    rather than overflowing (the line stays parseable; the BENCH_LOCAL
-    file keeps the detail)."""
+    """The one stdout JSON line, sized to fit a 2000-char tail whole:
+    the total, the steady per-entry medians and both calibration
+    probes with their versions (what a reader needs to drift-correct
+    a run by machine speed); the full record lives in
+    BENCH_LOCAL_r{NN}.json.  If the suite ever grows past the budget,
+    per-entry detail is dropped rather than overflowing (the line
+    stays parseable; the BENCH_LOCAL file keeps the detail)."""
     compact = {
         "metric": out["metric"],
         "value": out["value"],
@@ -1242,8 +935,6 @@ def _compact_line(out: dict) -> str:
         "queries": out["queries"],
         "steady_passes": out["steady_passes"],
         "cold_total_sec": out["cold_total_sec"],
-        "n_regressions_vs_best": len(out["regressions_vs_best"]),
-        "total_regression_vs_best": out["total_regression_vs_best"],
     }
     line = json.dumps(compact, separators=(",", ":"))
     if len(line) > COMPACT_LINE_BUDGET:
@@ -1261,9 +952,8 @@ def main(only: str | None = None) -> None:
 
     QUERIES = {**_GRADED, **_bench_extra()}
 
-    # `--only q19_minhash_dedup,b17_dsir_select`: profile a subset
-    # without paying the whole suite (dev convenience — the driver's
-    # per-round run never passes it, so recorded rounds stay full)
+    # `--only q19_minhash_dedup,b17_dsir_select`: time a subset
+    # without paying the whole suite (no record is written for it)
     headline = HEADLINE
     if only is not None:
         wanted = set(only.split(","))
@@ -1279,13 +969,10 @@ def main(only: str | None = None) -> None:
     # representative of a long-lived cluster.
     QUERIES["q01_pricing_summary"](spark, sf_dir).count()
 
-    # fixed synthetic probes measured FIRST (quiet JVM, no cache
-    # pressure from the suite) — the machine-speed yardsticks the
-    # gates normalize by: ALU-bound and allocation/shuffle-bound
-    # (machine classes diverge on the second at equal first — the
-    # r10 forensic finding)
-    calibration = _calibration_sec(spark)
-    calibration_mem = _calibration_mem_sec(spark)
+    # the machine-speed probes run FIRST (quiet JVM, no cache pressure
+    # from the suite) and again after the steady passes
+    calibration_start = _calibration_sec(spark)
+    calibration_mem_start = _calibration_mem_sec(spark)
 
     cold: dict[str, float] = {}
     for name in headline:
@@ -1302,59 +989,11 @@ def main(only: str | None = None) -> None:
     steady = {n: round(statistics.median(s), 3)
               for n, s in samples.items()}
 
-    # second calibration sample AFTER the steady passes: load arriving
-    # mid-suite inflates the steady medians but not a start-only
-    # yardstick (false REGRESSION flags), while startup-only load
-    # would relax every gate by up to the clamp.  The gates normalize
-    # by min(start, end) — machine capacity — and the record carries
-    # both so forensics can tell start-of-run load from mid-run load.
-    calibration_start = calibration
+    # second probe sample AFTER the steady passes: the record keeps
+    # min(start, end) — machine capacity — and both samples, so a
+    # reader can tell start-of-run load from mid-run load
     calibration_end = _calibration_sec(spark)
-    calibration = min(calibration_start, calibration_end)
-    calibration_mem_start = calibration_mem
     calibration_mem_end = _calibration_mem_sec(spark)
-    calibration_mem = min(calibration_mem_start, calibration_mem_end)
-
-    baseline, baseline_cal, baseline_rounds, baseline_mem = \
-        _load_rolling_baseline()
-    regressions: dict = {}
-    total_regression: dict = {}
-    if sf_dir.rstrip("/").endswith("sf0.1") and baseline:
-        # an entry with no dual-axis record has NO floor and is not
-        # regression-gated — expected on an entry's very first run,
-        # a standing blind spot if it persists (the suite-coverage
-        # test in test_bench_registry fails until a dual-axis record
-        # exists for every HEADLINE entry)
-        ungated = sorted(n for n in steady if n not in baseline)
-        if ungated:
-            print(f"bench: {len(ungated)} entr{'y' if len(ungated) == 1 else 'ies'} "
-                  f"without a dual-axis floor (not regression-gated): "
-                  f"{ungated}", file=sys.stderr)
-        regressions = _gate_regressions(steady, calibration,
-                                        baseline, baseline_cal,
-                                        calibration_mem, baseline_mem)
-        for name, r in regressions.items():
-            print(f"REGRESSION {name}: best {r['best_sec']}s "
-                  f"(cal_norm {r['cal_norm']}) -> {r['now_sec']}s "
-                  f"({r['factor']}x > "
-                  f"{REGRESSION_FACTOR}x gate)", file=sys.stderr)
-
-        # the broad-drift total gate is only meaningful on full runs —
-        # a --only subset's "total" is whatever the dev asked for —
-        # and compares like-for-like: this run's total vs calibrated
-        # historical RUN totals, not a cross-machine minima envelope
-        if headline == HEADLINE:
-            total_regression = _gate_total_vs_runs(
-                steady, calibration, calibration_mem,
-                _load_calibrated_runs())
-        if total_regression:
-            print(f"TOTAL REGRESSION vs {total_regression['vs_run']} "
-                  f"over {total_regression['common_queries']} common "
-                  f"queries: "
-                  f"best {total_regression['best_total_sec']:.2f}s -> "
-                  f"{total_regression['now_total_sec']:.2f}s "
-                  f"({total_regression['factor']}x > "
-                  f"{TOTAL_REGRESSION_FACTOR}x gate)", file=sys.stderr)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     out = {
@@ -1364,35 +1003,27 @@ def main(only: str | None = None) -> None:
         "value": round(sum(steady.values()), 3),
         "unit": "sec",
         "queries": steady,
-        "calibration_sec": calibration,
+        "calibration_sec": min(calibration_start, calibration_end),
         "calibration_start_sec": calibration_start,
         "calibration_end_sec": calibration_end,
         "calibration_version": CALIBRATION_VERSION,
-        "calibration_mem_sec": calibration_mem,
+        "calibration_mem_sec": min(calibration_mem_start,
+                                   calibration_mem_end),
         "calibration_mem_start_sec": calibration_mem_start,
         "calibration_mem_end_sec": calibration_mem_end,
         "calibration_mem_version": CALIBRATION_MEM_VERSION,
         "steady_passes": STEADY_PASSES,
         "cold_total_sec": round(sum(cold.values()), 3),
         "queries_cold": cold,
-        "baseline_rounds": baseline_rounds,
-        "regressions_vs_best": regressions,
-        "total_regression_vs_best": total_regression,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    # ALSO persist to a committed file: the driver's BENCH_rNN.json
-    # only keeps a 2000-char tail of stdout, which truncated round 5's
-    # JSON line and lost 16 of 22 steady numbers.  Full-suite sf0.1
-    # runs write BENCH_LOCAL_r{NN}.json (NN = next round after the
-    # newest driver artifact) so the per-query record always survives;
-    # --only dev runs skip the write so partial subsets can't shadow a
-    # full record.  NEVER overwrite a git-tracked record: in round 6
-    # the driver ran bench.py before its own BENCH_r06.json existed,
-    # computed NN=6, and clobbered the committed best-clean
-    # BENCH_LOCAL_r06.json (75.37s) with its slower run (79.28s).
-    # A tracked collision now bumps NN to the next free slot instead
-    # (the rolling-baseline loader takes per-entry min over all
-    # BENCH_LOCAL files, so extra files are harmless).
+    # ALSO persist the full record: stdout carries only the compact
+    # line.  Full-suite sf0.1 runs write BENCH_LOCAL_r{NN}.json (NN =
+    # next round after the newest BENCH_r*.json); --only runs skip
+    # the write so a partial subset never sits beside full records.
+    # NEVER overwrite a git-tracked record (a run once clobbered a
+    # committed BENCH_LOCAL_r06.json this way): a tracked collision
+    # bumps NN to the next free slot instead.
     if headline == HEADLINE and sf_dir.rstrip("/").endswith("sf0.1"):
         here = os.path.dirname(os.path.abspath(__file__))
         driver_rounds = [int(m.group(1)) for p in
@@ -2254,17 +1885,13 @@ if __name__ == "__main__":
     import argparse
 
     ap = argparse.ArgumentParser(allow_abbrev=False)
-    ap.add_argument("--rebaseline", action="store_true",
-                    help="write the rolling best to BENCH_BASELINE.json")
     ap.add_argument("--scale", action="store_true",
                     help="measure one scale tier into BENCH_SCALE.json")
     ap.add_argument("--only", metavar="NAME[,NAME...]",
                     help="run a subset of HEADLINE; skips the "
                          "BENCH_LOCAL write")
     args = ap.parse_args()
-    if args.rebaseline:
-        rebaseline()
-    elif args.scale:
+    if args.scale:
         run_scale()
     else:
         main(only=args.only)

@@ -1,10 +1,12 @@
-"""Every bench HEADLINE entry must resolve to a callable — a graded
-query, a bench-only extra, or a retired query kept for its timing
-history.  Retiring a graded query without updating the bench series
-broke `python bench.py` once (q02, round 5); this fails at test time
-instead of at the driver's per-round bench run."""
+"""bench.py's contract, checked without running the suite: every
+HEADLINE and scale entry resolves to a callable (retiring a graded
+query without updating the bench series once broke `python bench.py`
+at run time), the committed scale record meets its gates, the one
+JSON line fits its budget, and the command line rejects bad flags."""
 
 from __future__ import annotations
+
+import pytest
 
 
 def test_headline_names_all_resolve():
@@ -23,71 +25,6 @@ def test_headline_names_all_resolve():
 def test_headline_has_no_duplicates():
     import bench
     assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
-
-
-def test_incomparable_entries_excluded_from_rolling_best():
-    """b02's pre-r5 recorded time measured a Catalyst-pruned subset
-    of the work (see bench.INCOMPARABLE_BEFORE); the rolling-best
-    loader must not use it as a regression floor.
-
-    Tested hermetically against a directory holding ONLY the r4
-    artifact: the loader must parse the file (other entries load)
-    yet produce NO b02 floor.  The previous form asserted the live
-    repo floor stayed above the r4 artifact's 0.253 s, which broke
-    the moment a fast driver machine legitimately recorded 0.291 s
-    in a post-cutoff round (r12) — a machine-speed heuristic, not a
-    mechanism test."""
-    import json
-    import os
-    import tempfile
-
-    import bench
-    assert bench.INCOMPARABLE_BEFORE["b02_decontam_report"] == 5
-    record = {
-        "queries": {"b02_decontam_report": 0.01,
-                    "q01_pricing_summary": 0.5},
-        "calibration_sec": 0.6,
-        "calibration_version": bench.CALIBRATION_VERSION,
-        "calibration_mem_sec": 0.6,
-        "calibration_mem_version": bench.CALIBRATION_MEM_VERSION,
-    }
-    with tempfile.TemporaryDirectory() as tmp:
-        with open(os.path.join(tmp, "BENCH_LOCAL_r04.json"), "w") as f:
-            json.dump(record, f)
-        best, _cal, rounds, _mem = bench._load_rolling_baseline(
-            here=tmp)
-        assert "BENCH_LOCAL_r04.json" in rounds   # the record loads,
-        assert "q01_pricing_summary" in best      # sets normal floors,
-        assert "b02_decontam_report" not in best  # but never a b02 one
-
-
-def test_loader_tolerates_parsed_null_round():
-    """The driver's BENCH_r05.json has `"parsed": null` (its 2000-char
-    tail capture truncated the bench's JSON line).  The loader must
-    not crash on it, and must salvage the steady entries the tail
-    still holds (r5's tail retains 22 of the 41)."""
-    import bench
-    best, _cal, rounds, _mem = bench._load_rolling_baseline()
-    assert "BENCH_r05.json" in rounds
-    # salvaged-tail records carry no calibration so they can't set
-    # floors under the r11 dual-axis rule; b09's floor comes from the
-    # dual-axis records, which cover the full suite
-    assert best.get("b09_incremental_dedup") is not None
-
-
-def test_tail_recovery_fences_cold_values():
-    """Recovery must stop at the steady_passes marker: cold-pass
-    values (often 5-10x steady) after it would poison the floor."""
-    import bench
-    tail = ('ing_dups_blocked": 2.394, "q50_sliding_window": 0.433}, '
-            '"steady_passes": 3, "cold_total_sec": 99.9, '
-            '"queries_cold": {"q50_sliding_window": 9.433}, "sf": 0.1}')
-    got = bench._recover_from_tail(tail)
-    # the front-truncated key is dropped; cold values excluded
-    assert got == {"q50_sliding_window": 0.433}
-    # no marker -> refuse to guess rather than mix steady and cold
-    assert bench._recover_from_tail('"q01_pricing_summary": 1.0}') == {}
-    assert bench._recover_from_tail("") == {}
 
 
 def test_scale_entries_resolve():
@@ -222,177 +159,13 @@ def test_scale_marginal_decade_gate():
     assert "assignment" in rec["scale_knobs"]["b13_semantic_dedup"].lower()
 
 
-# --- round-9 calibration normalization (machine-noise yardstick) --------
-
-def test_cal_norm_clamps_and_defaults():
-    """Missing calibration on either side -> 1.0 (historical gate);
-    in-range ratios pass through; out-of-range ratios clamp to
-    CAL_NORM_BOUNDS so a pathological sample can neither hide a real
-    regression nor manufacture one from jitter."""
-    import bench
-    assert bench._cal_norm(None, 0.7) == 1.0
-    assert bench._cal_norm(0.7, None) == 1.0
-    assert bench._cal_norm(None, None) == 1.0
-    assert abs(bench._cal_norm(0.77, 0.70) - 1.1) < 1e-9
-    lo, hi = bench.CAL_NORM_BOUNDS
-    assert bench._cal_norm(2.1, 0.7) == hi      # 3x slower -> clamp 1.5
-    assert bench._cal_norm(0.35, 0.70) == lo    # 2x faster -> clamp 0.9
-
-
-def test_gate_regressions_calibration_normalized():
-    """A uniformly slower machine (the r8 driver scenario) must not
-    flag entries that merely scaled with the machine; a genuine
-    regression must still flag through the normalization."""
-    import bench
-    baseline = {"q": 1.0, "r": 1.0}
-    baseline_cal = {"q": 0.6, "r": None}
-    # machine 1.4x slower than the record's: q at 2.5s is within the
-    # normalized gate (1.0 * 1.4 * 2.0 = 2.8) ...
-    flags = bench._gate_regressions({"q": 2.5}, 0.84, baseline,
-                                    baseline_cal)
-    assert flags == {}
-    # ... but without a calibration on the record (entry r) the gate
-    # stays un-normalized and 2.5s > 2.0s flags
-    flags = bench._gate_regressions({"r": 2.5}, 0.84, baseline,
-                                    baseline_cal)
-    assert "r" in flags and flags["r"]["cal_norm"] == 1.0
-    # a genuine regression flags through the normalization
-    flags = bench._gate_regressions({"q": 3.5}, 0.84, baseline,
-                                    baseline_cal)
-    assert "q" in flags and flags["q"]["cal_norm"] == 1.4
-    # a fast-looking calibration can tighten at most to the 0.9 clamp:
-    # 1.9s on a "2x faster" machine stays under 1.0 * 0.9 * 2.0
-    flags = bench._gate_regressions({"q": 1.75}, 0.30, baseline,
-                                    baseline_cal)
-    assert flags == {}
-
-
-def test_cal_norm_mem_axis_takes_slower_ratio():
-    """r10: a machine can be CPU-equal (or faster) yet allocation/
-    shuffle-slower — the shingle-family drift scenario.  With both
-    axes present the SLOWER ratio normalizes the gate; a missing axis
-    simply drops out."""
-    import bench
-    # CPU faster (0.95x) but mem 1.4x slower -> norm 1.4
-    assert abs(bench._cal_norm(0.665, 0.70, 2.1, 1.5) - 1.4) < 1e-9
-    # mem axis alone
-    assert abs(bench._cal_norm(None, None, 2.1, 1.5) - 1.4) < 1e-9
-    # mem missing on the record -> CPU-only (clamped at the 0.9 floor)
-    assert abs(bench._cal_norm(0.665, 0.70, 2.1, None) - 0.95) < 1e-9
-    assert bench._cal_norm(0.35, 0.70, None, None) == \
-        bench.CAL_NORM_BOUNDS[0]
-
-
-def test_gate_total_vs_calibrated_runs():
-    """r10 total gate: like-for-like run totals, not the cross-machine
-    minima envelope.  The r9/r10 false fire (code A/B-verified clean,
-    machine 1.45x mem-slower) must stay quiet once one calibrated
-    record exists whose normalized total covers the drift; a real
-    broad regression (slower than EVERY calibrated record) fires with
-    the minimum factor reported."""
-    import bench
-    runs = [
-        {"file": "BENCH_LOCAL_r13.json",
-         "queries": {"a": 1.0, "b": 1.0, "c": 1.0, "d": 1.0, "e": 1.0},
-         "cal": 0.7, "mem": 1.5},
-    ]
-    steady_ok = {k: 1.4 for k in "abcde"}
-    # current machine: CPU equal, mem 1.4x slower -> base total
-    # 5 * 1.4 = 7.0 >= now 7.0 -> quiet
-    assert bench._gate_total_vs_runs(steady_ok, 0.7, 2.1, runs) == {}
-    # genuinely 2x slower than the calibrated record at EQUAL machine
-    # speed -> fires, naming the record it beat least badly
-    steady_bad = {k: 2.0 for k in "abcde"}
-    flagged = bench._gate_total_vs_runs(steady_bad, 0.7, 1.5, runs)
-    assert flagged["vs_run"] == "BENCH_LOCAL_r13.json"
-    assert flagged["factor"] == 2.0
-    # a record sharing too few entries is not a comparable total
-    sub = [{"file": "x.json", "queries": {"a": 0.1}, "cal": 0.7,
-            "mem": None}]
-    assert bench._gate_total_vs_runs(steady_bad, 0.7, None, sub) == {}
-    # no calibrated history at all -> no total gate (never fires blind)
-    assert bench._gate_total_vs_runs(steady_bad, 0.7, None, []) == {}
-
-
-def test_baseline_loader_tracks_calibration(tmp_path):
-    """r11 contract: per-entry bests come ONLY from records carrying
-    BOTH current-protocol calibration axes — a pre-calibration or
-    single-axis record loads (rounds, total gate) but can never set a
-    floor, so best_cal/best_mem are non-None for every best and the
-    per-entry gate never compares raw cross-machine times."""
-    import json
-
-    import bench
-    (tmp_path / "BENCH_r01.json").write_text(json.dumps(
-        {"parsed": {"queries": {"q": 0.1, "r": 0.1}}}))   # no axes
-    (tmp_path / "BENCH_LOCAL_r02.json").write_text(json.dumps(
-        {"queries": {"q": 0.2, "r": 0.2}, "calibration_sec": 0.7,
-         "calibration_version": bench.CALIBRATION_VERSION}))  # cpu only
-    # an old-protocol calibration must be DROPPED, not rescaled: the
-    # workload changed, so its value is on a different scale
-    (tmp_path / "BENCH_LOCAL_r03.json").write_text(json.dumps(
-        {"queries": {"s": 0.4}, "calibration_sec": 0.5,
-         "calibration_version": bench.CALIBRATION_VERSION - 1,
-         "calibration_mem_sec": 1.0,
-         "calibration_mem_version": bench.CALIBRATION_MEM_VERSION}))
-    (tmp_path / "BENCH_LOCAL_r04.json").write_text(json.dumps(
-        {"queries": {"q": 1.1, "r": 0.6, "s": 0.9},
-         "calibration_sec": 0.7,
-         "calibration_version": bench.CALIBRATION_VERSION,
-         "calibration_mem_sec": 1.2,
-         "calibration_mem_version": bench.CALIBRATION_MEM_VERSION}))
-    (tmp_path / "BENCH_LOCAL_r05.json").write_text(json.dumps(
-        {"queries": {"q": 0.95},
-         "calibration_sec": 0.8,
-         "calibration_version": bench.CALIBRATION_VERSION,
-         "calibration_mem_sec": 1.0,
-         "calibration_mem_version": bench.CALIBRATION_MEM_VERSION}))
-    best, best_cal, rounds, best_mem = bench._load_rolling_baseline(
-        here=str(tmp_path))
-    # the faster-looking r01/r02/r03 values never become floors —
-    # they carry no normalizable machine yardstick
-    assert best == {"q": 0.95, "r": 0.6, "s": 0.9}
-    assert best_cal["q"] == 0.8 and best_mem["q"] == 1.0   # r05 set q
-    assert best_cal["r"] == 0.7 and best_mem["r"] == 1.2   # r04 set r
-    assert all(best_cal[k] is not None and best_mem[k] is not None
-               for k in best)
-    assert set(rounds) == {"BENCH_r01.json", "BENCH_LOCAL_r02.json",
-                           "BENCH_LOCAL_r03.json", "BENCH_LOCAL_r04.json",
-                           "BENCH_LOCAL_r05.json"}
-    # the calibrated-runs loader (total gate) still admits cpu-only
-    # records — _cal_norm drops the missing axis there
-    runs = bench._load_calibrated_runs(here=str(tmp_path))
-    assert {r["file"] for r in runs} == {
-        "BENCH_LOCAL_r02.json", "BENCH_LOCAL_r04.json",
-        "BENCH_LOCAL_r05.json"}
-
-
-def test_repo_baseline_is_fully_dual_axis():
-    """Against the REAL repo records: every per-entry best must carry
-    both calibration axes (the r11 contract), and the dual-axis
-    records must cover EVERY current HEADLINE entry — an entry whose
-    only records lack an axis would silently escape the per-entry
-    regression gate forever (review finding r11).  Adding a new bench
-    entry therefore requires running the full bench once (the written
-    BENCH_LOCAL record carries both axes) before committing."""
-    import bench
-    best, best_cal, rounds, best_mem = bench._load_rolling_baseline()
-    missing = sorted(set(bench.HEADLINE) - set(best))
-    assert not missing, (
-        f"HEADLINE entries with no dual-axis floor (never "
-        f"regression-gated): {missing} — run `python bench.py` and "
-        f"commit the BENCH_LOCAL record")
-    assert all(best_cal[k] is not None and best_mem[k] is not None
-               for k in best)
-
-
 def test_compact_line_fits_driver_tail_and_parses():
-    """r9 verdict item 6: the driver records only a 2000-char stdout
-    tail, so the one JSON line bench prints must fit it whole — with
-    the CURRENT suite size and realistic key lengths — and must carry
-    the exact fields the rolling-baseline loader consumes.  A
-    pathologically grown suite degrades to a parseable no-queries
-    line instead of overflowing."""
+    """A caller that keeps only a 2000-char stdout tail must get the
+    one JSON line bench prints whole — with the CURRENT suite size
+    and realistic key lengths — carrying exactly the total, the
+    steady per-entry medians and both calibration probes with their
+    versions.  A pathologically grown suite degrades to a parseable
+    no-queries line instead of overflowing."""
     import json
 
     import bench
@@ -400,34 +173,40 @@ def test_compact_line_fits_driver_tail_and_parses():
         "metric": "headline-query steady-state wall time "
                   "(median of 3), local[32]",
         "value": 85.0, "unit": "sec", "sf": 0.1,
+        "queries": {n: 1.234 for n in bench.HEADLINE},
         "calibration_sec": 0.686,
+        "calibration_start_sec": 0.686,
+        "calibration_end_sec": 0.7,
         "calibration_version": bench.CALIBRATION_VERSION,
         "calibration_mem_sec": 1.078,
+        "calibration_mem_start_sec": 1.1,
+        "calibration_mem_end_sec": 1.078,
         "calibration_mem_version": bench.CALIBRATION_MEM_VERSION,
-        "queries": {n: 1.234 for n in bench.HEADLINE},
         "steady_passes": bench.STEADY_PASSES,
         "cold_total_sec": 130.0,
-        "regressions_vs_best": {},
-        "total_regression_vs_best": {},
+        "queries_cold": {n: 2.5 for n in bench.HEADLINE},
     }
     line = bench._compact_line(out)
     assert len(line) <= bench.COMPACT_LINE_BUDGET
-    # early warning (r11): per-query detail must survive at least ~6
-    # more entries of typical key length (~30-char names serialize to
-    # ~38 chars each) BEFORE the overflow path silently drops it —
-    # when this fires, shorten bench keys or renegotiate the fence,
-    # don't wait for the driver artifact to lose its query detail
+    # early warning: per-query detail must survive at least ~6 more
+    # entries of typical key length (~30-char names serialize to ~38
+    # chars each) BEFORE the overflow path silently drops it — when
+    # this fires, shorten bench keys, don't wait for a tail capture
+    # to lose its query detail
     assert len(line) <= bench.COMPACT_LINE_BUDGET - 6 * 38, (
         f"compact line at {len(line)} chars is within 6 entries of "
         f"the {bench.COMPACT_LINE_BUDGET} budget")
     rec = json.loads(line)
-    # the loader's contract: queries + current-protocol calibrations
+    assert set(rec) == {
+        "metric", "value", "unit", "sf", "calibration_sec",
+        "calibration_version", "calibration_mem_sec",
+        "calibration_mem_version", "queries", "steady_passes",
+        "cold_total_sec"}
     assert rec["queries"] == out["queries"]
     assert rec["calibration_sec"] == 0.686
     assert rec["calibration_version"] == bench.CALIBRATION_VERSION
     assert rec["calibration_mem_sec"] == 1.078
-    # the salvage fence sits AFTER the queries in the serialized line
-    assert line.index('"queries"') < line.index('"steady_passes"')
+    assert rec["calibration_mem_version"] == bench.CALIBRATION_MEM_VERSION
     # overflow: 500 long-named entries cannot fit -> queries dropped,
     # line still parseable and under budget
     big = dict(out, queries={f"q{i:03d}_very_long_entry_name_padding":
@@ -436,3 +215,29 @@ def test_compact_line_fits_driver_tail_and_parses():
     assert len(line2) <= bench.COMPACT_LINE_BUDGET
     rec2 = json.loads(line2)
     assert "queries" not in rec2 and "queries_in" in rec2
+
+
+@pytest.mark.parametrize("argv", [["--rebaseline"], ["--only"]])
+def test_cli_rejects_bad_flags_without_writing(argv):
+    """A removed flag and a bare trailing ``--only`` are usage errors
+    (exit 2, argparse usage on stderr) raised before any Spark
+    session starts, and leave no bench record behind."""
+    import glob
+    import os
+    import subprocess
+    import sys
+
+    import bench
+    here = os.path.dirname(os.path.abspath(bench.__file__))
+
+    def records():
+        return set(glob.glob(os.path.join(here, "BENCH_LOCAL_*"))
+                   + glob.glob(os.path.join(here, "BENCH_BASELINE.json")))
+
+    before = records()
+    res = subprocess.run([sys.executable, os.path.join(here, "bench.py"),
+                          *argv], capture_output=True, text=True,
+                         timeout=60)
+    assert res.returncode == 2, res
+    assert "usage:" in res.stderr
+    assert records() == before

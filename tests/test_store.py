@@ -336,6 +336,45 @@ def test_append_with_other_params_raises(spark, tmp_path):
     assert read_params(spark, path)["num_buckets"] == 64
 
 
+def test_phash_store_without_delta_level_refuses_append(spark, tmp_path):
+    """A phash store written before the ``delta`` level (bands and
+    docs partitioned by bucket alone) is refused on append, before
+    anything is written, instead of gaining a ``delta=`` directory
+    beside its ``pbkt=`` ones; so is a replay probe, which excludes
+    a delta the store cannot name."""
+    import numpy as np
+
+    from trial_data_ingestion_spark.multimodal.codecs import encode_bmp
+    from trial_data_ingestion_spark.multimodal.phash import (
+        _band_table, dedup_media_incremental, image_hasher,
+        write_phash_index,
+    )
+    path = str(tmp_path / "phash")
+    (_band_table(_hashes(spark), 4)
+     .withColumn("pbkt", F.pmod(F.xxhash64("band", "val"), F.lit(16)))
+     .write.partitionBy("pbkt").parquet(path + "/bands"))
+    (_hashes(spark).select(F.col("media_id").alias("doc"),
+                           F.col("phash").alias("ph"),
+                           F.pmod(F.xxhash64("media_id"),
+                                  F.lit(16)).alias("dbkt"))
+     .write.partitionBy("dbkt").parquet(path + "/docs"))
+    write_params(spark, path, {"max_hamming": 4, "num_buckets": 16})
+    before = {sub: sorted(os.listdir(f"{path}/{sub}"))
+              for sub in ("bands", "docs")}
+    with pytest.raises(ValueError, match="no delta= level"):
+        write_phash_index(_hashes(spark).limit(1), path,
+                          num_buckets=16, mode="append")
+    img = bytearray(encode_bmp(np.zeros((8, 8, 3), np.uint8)))
+    media = spark.createDataFrame([("q0", img)],
+                                  "media_id string, media binary")
+    with pytest.raises(ValueError, match="no delta= level"):
+        dedup_media_incremental(spark, media, path, image_hasher,
+                                append=True, delta_id="batch-000000000",
+                                exclude_delta="batch-000000000")
+    assert {sub: sorted(os.listdir(f"{path}/{sub}"))
+            for sub in ("bands", "docs")} == before
+
+
 def _jobs(spark, group, fn) -> int:
     sc = spark.sparkContext
     sc.setJobGroup(group, group)

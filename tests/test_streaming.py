@@ -814,7 +814,7 @@ def test_streaming_media_dedup_across_batches(spark, tmp_path):
           .trigger(availableNow=True).start())
     q2.awaitTermination(120)
     import glob
-    assert not glob.glob(out2 + "/part-*.parquet") or \
+    assert not glob.glob(out2 + "/shard=*/part-*.parquet") or \
         spark.read.parquet(out2).count() == 0
 
 
@@ -1090,10 +1090,11 @@ def test_streaming_minhash_dedup_matches_batch_loop(spark, tmp_path):
         want |= {r["doc_id"] for r in dedup_minhash_incremental(
             spark, b, idx2, threshold=0.6, append=True).collect()}
     assert got == want
-    # survivor shards carry the micro-batch ids
+    # survivor shards carry the micro-batch ids; index deltas add the
+    # query id
     import glob
     shards = {d.rsplit("=", 1)[1] for d in glob.glob(f"{out}/shard=*")}
-    assert shards == set(by_shard)
+    assert set(by_shard) == {f"{s}-{q.id}" for s in shards}
 
 
 def test_streaming_minhash_dedup_replay_is_idempotent(spark, tmp_path):
@@ -1185,7 +1186,7 @@ def test_streaming_embedding_dedup_matches_batch_loop(spark, tmp_path):
             spark, b, idx2, 64, threshold=0.4, append=True).collect()}
     assert got == want
     shards = {d.rsplit("=", 1)[1] for d in glob.glob(f"{out}/shard=*")}
-    assert shards == set(by_shard)
+    assert set(by_shard) == {f"{s}-{q.id}" for s in shards}
 
 
 def test_streaming_embedding_dedup_replay_is_idempotent(spark, tmp_path):
@@ -1442,3 +1443,128 @@ def test_user_retention_state_restart_from_checkpoint(spark, event_dir,
             .withColumn("cohort_days", F.unix_date(F.col("cohort")))
             .collect()}
     assert got == want and len(want) >= 3
+
+
+@pytest.mark.parametrize("kind", ["minhash", "embedding"])
+def test_stream_sink_deltas_keyed_by_query_id(spark, tmp_path, kind):
+    """Two streaming queries over one index (new checkpoints) both
+    start at batch 0.  The second query's batch 0 must neither delete
+    nor probe past the first query's batch-0 delta: near-duplicates
+    of the first query's survivors drop, and both deltas stay in the
+    index beside ``base``."""
+    from tests.conftest import SF_DIR_ORACLE
+    from trial_data_ingestion_spark.operators.incremental_dedup import (
+        embedding_dedup_stream_sink, minhash_dedup_stream_sink,
+        write_minhash_index,
+    )
+    from trial_data_ingestion_spark.operators.similarity import (
+        write_srp_index,
+    )
+    idx = str(tmp_path / "idx")
+    if kind == "minhash":
+        id_col, root = "doc_id", idx + "/docs"
+        rows = (spark.read.parquet(f"{SF_DIR_ORACLE}/documents.parquet")
+                .select("doc_id", "text"))
+        write_minhash_index(rows.where("doc_id < 300"), idx,
+                            num_buckets=16)
+        sink = minhash_dedup_stream_sink
+
+        def near(df):
+            return df.select((F.col("doc_id") + 100_000).alias("doc_id"),
+                             F.concat("text", F.lit(" ok")).alias("text"))
+    else:
+        id_col, root = "vec_id", idx
+        rows = (spark.read.parquet(f"{SF_DIR_ORACLE}/embeddings.parquet")
+                .select("vec_id", "embedding"))
+        write_srp_index(rows.where("vec_id < 300"), idx, dim=64)
+
+        def sink(index_path, out_path):
+            return embedding_dedup_stream_sink(index_path, out_path,
+                                               dim=64)
+
+        def near(df):
+            # a positive rescale: cosine 1, same SRP bucket
+            return df.select(
+                (F.col("vec_id") + 100_000).alias("vec_id"),
+                F.transform("embedding", lambda x: x * F.lit(1.001))
+                 .cast("array<float>").alias("embedding"))
+
+    batch = rows.where(f"{id_col} >= 300 AND {id_col} < 340")
+    out1, out2 = str(tmp_path / "out1"), str(tmp_path / "out2")
+    sc = spark.sparkContext
+    try:
+        sc.setLocalProperty("sql.streaming.queryId", "q1")
+        sink(idx, out1)(batch, 0)
+        kept = spark.read.parquet(out1).drop("shard")
+        assert kept.count() > 0
+        sc.setLocalProperty("sql.streaming.queryId", "q2")
+        sink(idx, out2)(near(kept), 0)
+    finally:
+        sc.setLocalProperty("sql.streaming.queryId", None)
+    assert spark.read.schema(kept.schema).parquet(out2).count() == 0
+    deltas = {r["delta"] for r in
+              spark.read.parquet(root).select("delta").distinct()
+              .collect()}
+    assert deltas == {"base", "batch-000000000-q1",
+                      "batch-000000000-q2"}
+
+
+def test_deduped_media_sink_replay_writes_once(spark, tmp_path):
+    """A media micro-batch replayed AFTER its hashes reached the
+    phash index must probe without its own delta: restarting with
+    ``commits/0`` deleted gives the same survivors in one shard, and
+    so does a restart that also lost the output shard (killed between
+    the index append and the output write) — not zero survivors."""
+    import os
+    import shutil
+
+    import numpy as np
+
+    from trial_data_ingestion_spark.multimodal.codecs import encode_bmp
+    from trial_data_ingestion_spark.multimodal.phash import (
+        image_hasher, write_phash_index,
+    )
+    from trial_data_ingestion_spark.streaming.documents import (
+        deduped_media_sink,
+    )
+
+    def img(seed):
+        px = np.random.RandomState(seed).randint(
+            0, 256, (24, 24)).astype(np.uint8)
+        return bytearray(encode_bmp(np.stack([px] * 3, axis=-1)))
+
+    rows = [(f"m{i}", img(i)) for i in range(8)]
+    rows += [(f"m{i}x", img(i)) for i in (0, 3)]   # 2 planted copies
+    media = spark.createDataFrame(rows, "media_id string, media binary")
+    src = str(tmp_path / "src")
+    media.coalesce(1).write.parquet(src)
+    idx, out = str(tmp_path / "phidx"), str(tmp_path / "mout")
+    write_phash_index(spark.createDataFrame(
+        [], "media_id string, phash long"), idx, max_hamming=4)
+    ck = tmp_path / "ck"
+
+    def run():
+        q = (deduped_media_sink(
+                spark.readStream.schema(media.schema).parquet(src),
+                idx, out, hasher=image_hasher)
+             .option("checkpointLocation", str(ck))
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        return sorted(r["media_id"]
+                      for r in spark.read.parquet(out).collect())
+
+    def forget_commit():
+        os.remove(ck / "commits" / "0")
+        crc = ck / "commits" / ".0.crc"
+        if crc.exists():
+            os.remove(crc)
+
+    first = run()
+    assert len(first) == 8
+    forget_commit()
+    assert run() == first
+    assert [d for d in os.listdir(out)
+            if d.startswith("shard=")] == ["shard=batch-000000000"]
+    forget_commit()
+    shutil.rmtree(os.path.join(out, "shard=batch-000000000"))
+    assert run() == first

@@ -37,7 +37,8 @@ from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.session import ensure_parallelism
 from trial_data_ingestion_spark.store import (
-    read_params, read_partitions, write_params,
+    read_params, read_partitions, require_delta_level, reserve_delta,
+    write_params,
 )
 
 HASH_BITS = 64
@@ -281,46 +282,64 @@ def _band_table(hashes: DataFrame, max_hamming: int,
 
 def write_phash_index(hashes: DataFrame, path: str, max_hamming: int = 4,
                       num_buckets: int = 64,
-                      mode: str = "overwrite") -> None:
+                      mode: str = "overwrite",
+                      delta_id: str | None = None) -> None:
     """Persist the fingerprint store for (media_id, phash) rows:
 
     * ``/bands`` — the exploded pigeonhole band table, partitioned by
-      ``pbkt = pmod(xxhash64(band, val), num_buckets)`` so a probe
-      scans only the partitions its own band values hash into;
-    * ``/docs`` — (doc, ph, dbkt) for the seen-id resume filter,
-      partitioned the same way by doc id;
+      ``delta`` then ``pbkt = pmod(xxhash64(band, val), num_buckets)``
+      so a probe scans only the partitions its own band values hash
+      into;
+    * ``/docs`` — (doc, ph) for the seen-id resume filter,
+      partitioned by ``delta`` then ``dbkt``, the doc id's bucket;
     * ``_params.json`` — (max_hamming, num_buckets), the params
-      sidecar: probes can't run with mismatched banding, and
-      ``mode="append"`` validates against it (raising on a mismatch)
-      instead of rewriting it.
+      sidecar: probes can't run with mismatched banding.
+
+    A build writes delta ``base``.  ``mode="append"`` validates
+    against the sidecar (raising on a mismatch) instead of rewriting
+    it, and writes delta ``delta_id`` (random when None) after
+    deleting it, so a retry rewrites it (``store.reserve_delta``).  A
+    store written before the ``delta`` level raises on append: rebuild
+    it.
 
     Same layout discipline as ``incremental_dedup.write_minhash_index``
     (repartition ON the partition column before ``partitionBy`` —
     one file per bucket, not tasks x buckets)."""
     spark = hashes.sparkSession
     params = {"max_hamming": max_hamming, "num_buckets": num_buckets}
+    subs = [path + "/bands", path + "/docs"]
     if mode == "append":
         read_params(spark, path, expect=params)
+        for sub in subs:
+            require_delta_level(spark, sub)
+        delta = reserve_delta(spark, subs, delta_id)
+    else:
+        delta = "base"
     bt = (_band_table(hashes, max_hamming)
           .withColumn("pbkt", F.pmod(F.xxhash64("band", "val"),
-                                     F.lit(num_buckets))))
+                                     F.lit(num_buckets)))
+          .withColumn("delta", F.lit(delta)))
     (bt.repartition("pbkt")
-       .write.mode(mode).partitionBy("pbkt").parquet(path + "/bands"))
+       .write.mode(mode).partitionBy("delta", "pbkt").parquet(subs[0]))
     docs = (hashes.select(F.col("media_id").alias("doc"),
                           F.col("phash").alias("ph"))
             .withColumn("dbkt", F.pmod(F.xxhash64("doc"),
-                                       F.lit(num_buckets))))
+                                       F.lit(num_buckets)))
+            .withColumn("delta", F.lit(delta)))
     (docs.repartition("dbkt")
-         .write.mode(mode).partitionBy("dbkt").parquet(path + "/docs"))
+         .write.mode(mode).partitionBy("delta", "dbkt").parquet(subs[1]))
     if mode != "append":
         write_params(spark, path, params)
-    for sub in ("/bands", "/docs"):
-        spark.catalog.refreshByPath(path + sub)
+    for sub in subs:
+        spark.catalog.refreshByPath(sub)
 
 
 def dedup_media_incremental(spark, new_media: DataFrame, path: str,
                             hasher: Optional[Callable] = None,
-                            append: bool = False) -> DataFrame:
+                            append: bool = False,
+                            delta_id: str | None = None,
+                            exclude_delta: str | None = None
+                            ) -> DataFrame:
     """New-batch media rows that survive near-dedup against BOTH the
     persisted fingerprint index and the batch itself — the
     delta-ingest shape: the corpus is never rescanned, only the
@@ -330,14 +349,21 @@ def dedup_media_incremental(spark, new_media: DataFrame, path: str,
     are a no-op re-run; a new item drops if its near-dup component
     touches any corpus item ("corpus wins") or a lower-id batch item;
     ``append=True`` extends the index with the whole batch after the
-    decision.  Banding parameters come from the index's params
-    sidecar.
+    decision, as delta ``delta_id`` (random when None; a retry with
+    the same id rewrites it).  ``exclude_delta`` leaves one delta out
+    of every index read, so a replayed micro-batch
+    (``delta_id = exclude_delta``) reproduces its first decision
+    instead of finding its own media already stored.  Banding
+    parameters come from the index's params sidecar.
     """
     from trial_data_ingestion_spark.operators.incremental_dedup import (
         _corpus_wins_survivors,
     )
     p = read_params(spark, path)
     max_hamming, num_buckets = p["max_hamming"], p["num_buckets"]
+    if exclude_delta is not None:
+        # an older store has no delta column to exclude by
+        require_delta_level(spark, path + "/bands")
 
     raw_hashes = attach_phash(new_media, hasher).persist()
 
@@ -349,7 +375,9 @@ def dedup_media_incremental(spark, new_media: DataFrame, path: str,
     # explicit schema: a freshly-initialized EMPTY store has no data
     # files to infer from (same pattern as the line store)
     seen = (read_partitions(spark, path + "/docs", "dbkt", batch_dbkts,
-                            schema="doc string, ph long, dbkt int")
+                            schema="doc string, ph long, delta string, "
+                                   "dbkt int",
+                            exclude_delta=exclude_delta)
             .select(F.col("doc").alias("media_id")))
     new_media = new_media.join(seen, "media_id", "left_anti")
     hashes = raw_hashes.join(seen, "media_id", "left_anti").persist()
@@ -368,7 +396,9 @@ def dedup_media_incremental(spark, new_media: DataFrame, path: str,
                         bt.select("pbkt").distinct().collect())
     idx = read_partitions(
         spark, path + "/bands", "pbkt", probe_bkts,
-        schema="doc string, ph long, band int, val long, pbkt int")
+        schema="doc string, ph long, band int, val long, delta string, "
+               "pbkt int",
+        exclude_delta=exclude_delta)
     cross = (idx.alias("c")
              .join(F.broadcast(bt.alias("n")),
                    on=[F.col("c.band") == F.col("n.band"),
@@ -390,7 +420,8 @@ def dedup_media_incremental(spark, new_media: DataFrame, path: str,
         survivors = survivors.localCheckpoint()
         to_store = hashes.localCheckpoint()
         write_phash_index(to_store, path, max_hamming=max_hamming,
-                          num_buckets=num_buckets, mode="append")
+                          num_buckets=num_buckets, mode="append",
+                          delta_id=delta_id)
     hashes.unpersist()
     raw_hashes.unpersist()
     return survivors

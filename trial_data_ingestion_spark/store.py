@@ -14,6 +14,9 @@ layouts, and the streaming sinks' output shards):
 * **keyed shard write** — :func:`write_shard` rewrites one
   ``shard=`` partition by delete-then-append, so a replayed
   micro-batch leaves its output exactly once;
+* **stream batch keys** — :func:`stream_batch_keys` names a
+  ``foreachBatch`` sink's output shard and store delta, so every
+  store-backed sink replays and restarts the same way;
 * **pruned probe** — :func:`read_partitions` lists and reads only
   the partitions a probe names.
 """
@@ -141,6 +144,32 @@ def write_shard(df: DataFrame, path: str, shard: str) -> None:
     (df.withColumn("shard", F.lit(shard))
        .write.mode("append").partitionBy("shard").parquet(path))
     spark.catalog.refreshByPath(path)
+
+
+def stream_batch_keys(spark, batch_id: int) -> tuple[str, str]:
+    """(shard, delta) for micro-batch ``batch_id`` of the streaming
+    query running this ``foreachBatch`` call: the output shard is
+    ``batch-{batch_id:09d}`` and the store delta appends the query id
+    (``sql.streaming.queryId``, stable across restarts from one
+    checkpoint).  A second query over the same store starts its batch
+    ids at 0 again; the query id keeps it from deleting, or probing
+    past, the first query's deltas.  Outside a streaming query (a
+    direct call) the delta is the shard."""
+    shard = f"batch-{batch_id:09d}"
+    query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+    return shard, shard if query_id is None else f"{shard}-{query_id}"
+
+
+def require_delta_level(spark, root: str) -> None:
+    """Raise ``ValueError`` if the store at ``root`` holds partitions
+    without a ``delta=`` level — a layout written before the store
+    gained one.  Appending a delta beside it would mix two layouts,
+    so such a store must be rebuilt."""
+    root = root.rstrip("/")
+    if (_first(spark, root + _LEVEL) is not None
+            and _first(spark, f"{root}/delta=*") is None):
+        raise ValueError(f"{root} has no delta= level: written by an "
+                         "older layout (rebuild the store)")
 
 
 def _glob(spark, pattern: str):

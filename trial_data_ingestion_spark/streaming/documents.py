@@ -192,24 +192,21 @@ def line_deduped_document_sink(docs: DataFrame, index_path: str,
     ``batch-{batch_id:09d}-{query id}``, probing with that delta
     excluded, and writes its rewritten docs as the
     ``shard=batch-{batch_id:09d}`` partition of ``out_path``
-    (``store.write_shard``): a replayed batch reproduces its first
-    decision and rewrites its own delta and shard — exactly-once,
-    like ``incremental_dedup.minhash_dedup_stream_sink``.  The query
-    id (stable across restarts from one checkpoint) keeps a later
-    query over the same store, whose batch ids start again at 0,
-    from replacing an earlier query's deltas.  Returns the
+    (``store.write_shard``; keys from ``store.stream_batch_keys``): a
+    replayed batch reproduces its first decision and rewrites its own
+    delta and shard — exactly-once, like
+    ``incremental_dedup.minhash_dedup_stream_sink``.  Returns the
     ``DataStreamWriter`` — caller picks the trigger."""
     from trial_data_ingestion_spark.operators.line_dedup import (
         line_dedup_incremental,
     )
-    from trial_data_ingestion_spark.store import write_shard
+    from trial_data_ingestion_spark.store import (
+        stream_batch_keys, write_shard,
+    )
 
     def sink(batch_df, batch_id):
         spark = batch_df.sparkSession
-        shard = f"batch-{batch_id:09d}"
-        query_id = spark.sparkContext.getLocalProperty(
-            "sql.streaming.queryId")
-        delta = shard if query_id is None else f"{shard}-{query_id}"
+        shard, delta = stream_batch_keys(spark, batch_id)
         out = line_dedup_incremental(spark, batch_df, index_path,
                                      id_col=id_col, text_col=text_col,
                                      append=True, delta_id=delta,
@@ -264,17 +261,29 @@ def deduped_media_sink(media: DataFrame, index_path: str,
     an equality key).
 
     Initialize the index once with ``write_phash_index`` (over the
-    standing corpus's hashes, or an empty frame to start fresh); the
-    surviving batch rows append as parquet at ``out_path``.  Returns
-    the ``DataStreamWriter`` — caller picks the trigger."""
+    standing corpus's hashes, or an empty frame to start fresh).
+    Each micro-batch appends its hashes as index delta
+    ``batch-{batch_id:09d}-{query id}``, probing with that delta
+    excluded, and writes its survivors as the
+    ``shard=batch-{batch_id:09d}`` partition of ``out_path``
+    (``store.write_shard``; keys from ``store.stream_batch_keys``):
+    a batch replayed after its index append reproduces its first
+    decision and rewrites its own delta and shard — exactly-once.
+    Returns the ``DataStreamWriter`` — caller picks the trigger."""
     from trial_data_ingestion_spark.multimodal.phash import (
         dedup_media_incremental,
     )
+    from trial_data_ingestion_spark.store import (
+        stream_batch_keys, write_shard,
+    )
 
     def sink(batch_df, batch_id):
-        out = dedup_media_incremental(batch_df.sparkSession, batch_df,
-                                      index_path, hasher=hasher,
-                                      append=True)
-        out.write.mode("append").parquet(out_path)
+        spark = batch_df.sparkSession
+        shard, delta = stream_batch_keys(spark, batch_id)
+        out = dedup_media_incremental(spark, batch_df, index_path,
+                                      hasher=hasher, append=True,
+                                      delta_id=delta,
+                                      exclude_delta=delta)
+        write_shard(out, out_path, shard)
 
     return media.writeStream.foreachBatch(sink)
