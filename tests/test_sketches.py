@@ -277,3 +277,35 @@ def test_hll_stream_sink_restart_from_checkpoint(spark, tmp_path):
             ev.groupBy("event_type")
               .agg(F.countDistinct("user_id").alias("n")).collect()}
     assert got == want
+
+
+def test_hll_stream_sink_shards_keyed_by_query_id(spark, tmp_path):
+    """Two streaming queries over one sketch table (new checkpoints)
+    both start at batch 0.  The second query's batch 0 must not
+    replace the first query's shard: both shards stay, and
+    ``merged_distinct`` counts the users of both."""
+    import glob
+
+    from trial_data_ingestion_spark.operators.sketches import (
+        hll_stream_sink, merged_distinct,
+    )
+    ev = _events(spark).select("user_id", "event_type")
+    first, second = (ev.where(F.col("user_id") % 2 == m) for m in (0, 1))
+    path = str(tmp_path / "hll")
+    sc = spark.sparkContext
+    try:
+        sc.setLocalProperty("sql.streaming.queryId", "q1")
+        hll_stream_sink(path, ["event_type"], "user_id")(first, 0)
+        sc.setLocalProperty("sql.streaming.queryId", "q2")
+        hll_stream_sink(path, ["event_type"], "user_id")(second, 0)
+    finally:
+        sc.setLocalProperty("sql.streaming.queryId", None)
+    shards = sorted(d.rsplit("=", 1)[1]
+                    for d in glob.glob(f"{path}/shard=*"))
+    assert shards == ["batch-000000000-q1", "batch-000000000-q2"]
+    got = {r["event_type"]: r["n_distinct"] for r in
+           merged_distinct(spark, path, ["event_type"]).collect()}
+    want = {r["event_type"]: r["n"] for r in
+            ev.groupBy("event_type")
+              .agg(F.countDistinct("user_id").alias("n")).collect()}
+    assert got == want

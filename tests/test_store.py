@@ -136,13 +136,17 @@ def test_numeric_delta_stays_string(spark, srp_path):
 
 def test_empty_store_with_schema_reads_empty(spark, tmp_path):
     """A store with no partition directory yet (initialized over an
-    empty input) reads as an empty frame of the given schema."""
-    path = str(tmp_path / "lines")
-    (spark.createDataFrame([], "line long, pbkt int")
-     .write.partitionBy("pbkt").parquet(path))
-    got = read_partitions(spark, path, "pbkt", [1, 2],
-                          schema="line long, pbkt int")
-    assert got.count() == 0 and got.columns == ["line", "pbkt"]
+    empty input) reads as an empty frame of its recorded schema."""
+    from trial_data_ingestion_spark.operators.line_dedup import (
+        write_line_index,
+    )
+    path = str(tmp_path / "line")
+    write_line_index(_docs(spark).limit(0), path)
+    assert not [d for d in os.listdir(f"{path}/lines") if "=" in d]
+    got = read_partitions(spark, path, "pbkt", [1, 2], "lines")
+    assert got.count() == 0
+    assert got.dtypes == [("line", "bigint"), ("delta", "string"),
+                          ("pbkt", "int")]
 
 
 def _docs(spark, n=40):
@@ -361,13 +365,13 @@ def test_phash_store_without_delta_level_refuses_append(spark, tmp_path):
     write_params(spark, path, {"max_hamming": 4, "num_buckets": 16})
     before = {sub: sorted(os.listdir(f"{path}/{sub}"))
               for sub in ("bands", "docs")}
-    with pytest.raises(ValueError, match="no delta= level"):
+    with pytest.raises(ValueError, match="rebuild the store"):
         write_phash_index(_hashes(spark).limit(1), path,
                           num_buckets=16, mode="append")
     img = bytearray(encode_bmp(np.zeros((8, 8, 3), np.uint8)))
     media = spark.createDataFrame([("q0", img)],
                                   "media_id string, media binary")
-    with pytest.raises(ValueError, match="no delta= level"):
+    with pytest.raises(ValueError, match="rebuild the store"):
         dedup_media_incremental(spark, media, path, image_hasher,
                                 append=True, delta_id="batch-000000000",
                                 exclude_delta="batch-000000000")
@@ -388,8 +392,9 @@ def _jobs(spark, group, fn) -> int:
 def test_params_io_runs_no_job_and_srp_probe_stays_lean(spark, stores,
                                                        tmp_path):
     """The sidecar is read and written on the driver: 0 Spark jobs.
-    So one top-k query over the SRP index runs at most 5 jobs; the
-    Spark-read JSON sidecar cost 2 more."""
+    So one top-k query over the SRP index runs at most 4 jobs; the
+    Spark-read JSON sidecar cost 2 more, and inferring the probed
+    buckets' schema 1 more."""
     from trial_data_ingestion_spark.operators.similarity import (
         topk_lsh_over_index,
     )
@@ -405,7 +410,179 @@ def test_params_io_runs_no_job_and_srp_probe_stays_lean(spark, stores,
         topk_lsh_over_index(spark, path, qs, dim=64, k=10).collect()
     query()                                       # warm
     n = _jobs(spark, "srp-probe", query)
-    assert n <= 5, f"one SRP top-k query ran {n} Spark jobs"
+    assert n <= 4, f"one SRP top-k query ran {n} Spark jobs"
+
+
+@pytest.fixture(scope="module")
+def layout_stores(spark, tmp_path_factory):
+    """One small store of each of the 8 kinds, each built and then
+    appended to (a second shard or upsert for HLL and upsert), with
+    the session conf read before and after all those writes."""
+    from trial_data_ingestion_spark.multimodal.phash import (
+        write_phash_index,
+    )
+    from trial_data_ingestion_spark.operators.incremental_dedup import (
+        write_minhash_index,
+    )
+    from trial_data_ingestion_spark.operators.line_dedup import (
+        write_line_index,
+    )
+    from trial_data_ingestion_spark.operators.quantization import (
+        build_ivfpq,
+    )
+    from trial_data_ingestion_spark.operators.similarity import (
+        append_to_ivf_index, first_id_centroids, write_ivf_index,
+        write_srp_index,
+    )
+    from trial_data_ingestion_spark.operators.sketches import (
+        write_hll_shard,
+    )
+    from trial_data_ingestion_spark.sinks import upsert_parquet
+    root = tmp_path_factory.mktemp("layouts")
+    p = {k: str(root / k) for k in ("minhash", "srp", "line", "phash",
+                                    "ivf", "ivfpq", "hll", "upsert")}
+    conf = dict(spark.conf.getAll)
+    docs, emb, hashes = _docs(spark), _emb(spark), _hashes(spark)
+    old, new = F.col("doc_id") < 30, F.col("doc_id") >= 30
+    write_minhash_index(docs.where(old), p["minhash"], num_buckets=8)
+    write_minhash_index(docs.where(new), p["minhash"], num_buckets=8,
+                        mode="append", delta_id="7")
+    write_line_index(docs.where(old), p["line"], num_buckets=16)
+    write_line_index(docs.where(new), p["line"], num_buckets=16,
+                     mode="append")
+    small = F.col("phash") < 20 * 1_000_003
+    write_phash_index(hashes.where(small), p["phash"], num_buckets=16)
+    write_phash_index(hashes.where(~small), p["phash"], num_buckets=16,
+                      mode="append")
+    old, new = F.col("vec_id") < 150, F.col("vec_id") >= 150
+    write_srp_index(emb.where(old), p["srp"], dim=64, num_planes=6)
+    write_srp_index(emb.where(new), p["srp"], dim=64, num_planes=6,
+                    mode="append")
+    cents = first_id_centroids(emb, num_cells=4)
+    write_ivf_index(emb.where(old), cents, p["ivf"], dim=64)
+    append_to_ivf_index(emb.where(new), cents, p["ivf"], dim=64)
+    build_ivfpq(emb, dim=64, path=p["ivfpq"], num_cells=4, m=8, k=16,
+                sample_size=500, seed=7)
+    ev = spark.createDataFrame([(i % 3, i) for i in range(60)],
+                               "event_type int, user_id long")
+    write_hll_shard(ev, p["hll"], ["event_type"], "user_id", "a")
+    write_hll_shard(ev, p["hll"], ["event_type"], "user_id", "b")
+    rows = spark.createDataFrame([(i, f"v{i}") for i in range(40)],
+                                 "id long, v string")
+    upsert_parquet(spark, rows.where("id < 30"), p["upsert"], "id", 8)
+    upsert_parquet(spark, rows.where("id >= 20"), p["upsert"], "id", 8)
+    return p, conf, dict(spark.conf.getAll)
+
+
+#: each layout a probe reads: store kind, sub-table, probed column
+_LAYOUTS = {
+    "minhash-bands": ("minhash", "bands", "pbkt"),
+    "minhash-docs": ("minhash", "docs", "dbkt"),
+    "srp": ("srp", "", "bucket"),
+    "line": ("line", "lines", "pbkt"),
+    "phash-bands": ("phash", "bands", "pbkt"),
+    "phash-docs": ("phash", "docs", "dbkt"),
+    "ivf": ("ivf", "", "cell_id"),
+    "ivfpq-codes": ("ivfpq", "codes", "cell_id"),
+    "hll": ("hll", "", "shard"),
+    "upsert": ("upsert", "", "__bucket"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_LAYOUTS))
+def test_store_read_runs_no_job(spark, layout_stores, name):
+    """Building a probe's frame runs 0 Spark jobs, for a probe that
+    hits and for one that misses every partition: the schema comes
+    from the store's recorded layout, not from inference.  Both frames
+    carry the full-root read's columns and types."""
+    import glob
+
+    kind, table, column = _LAYOUTS[name]
+    root = layout_stores[0][kind]
+    base = f"{root}/{table}" if table else root
+    hits = sorted(d.rsplit("=", 1)[1] for d in
+                  glob.glob(f"{base}/**/{column}=*", recursive=True))
+    assert hits
+    hit = hits[:2] if column == "shard" else [int(v) for v in hits[:2]]
+    miss = ["no-such-shard"] if column == "shard" else [10**6]
+    full = spark.read.parquet(base).schema
+    for values, hits_rows in ((hit, True), (miss, False)):
+        frames = []
+        n = _jobs(spark, f"read-{name}", lambda: frames.append(
+            read_partitions(spark, root, column, values, table)))
+        assert n == 0, f"{name} read of {values} ran {n} Spark jobs"
+        assert frames[0].schema == full
+        assert (frames[0].count() > 0) == hits_rows
+
+
+def test_store_writers_leave_session_conf_unchanged(layout_stores):
+    """No store writer or sink changes the session conf: the upsert's
+    dynamic partition overwrite is a per-write option."""
+    _, before, after = layout_stores
+    assert after == before
+
+
+def test_release_after_upsert_overwrites_every_shard(spark, tmp_path):
+    """An 8-shard release, one upsert elsewhere, then a 4-shard
+    re-release over the same path reads back exactly the 50 released
+    rows: the upsert used to leave the session in dynamic partition
+    overwrite mode, which kept the old ``shard=4..7`` beside the new
+    shards (73 rows)."""
+    from trial_data_ingestion_spark.sinks import upsert_parquet
+    from trial_data_ingestion_spark.sinks.training_export import (
+        write_training_shards,
+    )
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(mode)
+    rows = spark.createDataFrame([(i, f"t{i}") for i in range(50)],
+                                 "id long, text string")
+    out = str(tmp_path / "release")
+    try:
+        write_training_shards(rows, out, "id", n_shards=8)
+        upsert_parquet(spark, rows, str(tmp_path / "store"), "id")
+        write_training_shards(rows, out, "id", n_shards=4)
+        assert spark.read.parquet(out).count() == 50
+    finally:
+        spark.conf.set(mode, before)
+
+
+def test_upsert_with_other_n_buckets_raises(spark, tmp_path):
+    """An upsert with another ``n_buckets`` files its keys in other
+    buckets, so the old copies stay beside the new ones (153 rows for
+    100 ids).  The table records ``n_buckets``; a second upsert with
+    another one raises before writing, and the table keeps 100 rows."""
+    from trial_data_ingestion_spark.sinks import (
+        read_upsert_table, upsert_parquet,
+    )
+    rows = spark.createDataFrame([(i, f"v{i}") for i in range(100)],
+                                 "id long, v string")
+    path = str(tmp_path / "upsert")
+    upsert_parquet(spark, rows, path, "id", n_buckets=16)
+    with pytest.raises(ValueError, match="n_buckets=16"):
+        upsert_parquet(spark, rows, path, "id", n_buckets=8)
+    assert read_upsert_table(spark, path).count() == 100
+    upsert_parquet(spark, rows, path, "id", n_buckets=16)
+    assert read_upsert_table(spark, path).count() == 100
+
+
+def test_ivf_append_with_other_dim_raises(spark, tmp_path):
+    """An IVF index built with ``dim=None`` has no ``__nrm`` column;
+    an append with ``dim=64`` would add a delta that has one, leaving
+    two schemas under one root.  It raises, and the index keeps its
+    one delta."""
+    from trial_data_ingestion_spark.operators.similarity import (
+        append_to_ivf_index, first_id_centroids, write_ivf_index,
+    )
+    emb = _emb(spark)
+    cents = first_id_centroids(emb, num_cells=4)
+    path = str(tmp_path / "ivf")
+    write_ivf_index(emb.where("vec_id < 100"), cents, path)
+    with pytest.raises(ValueError, match="dim=None"):
+        append_to_ivf_index(emb.where("vec_id >= 100"), cents, path,
+                            dim=64)
+    assert sorted(d for d in os.listdir(path) if "=" in d) \
+        == ["delta=base"]
+    assert "__nrm" not in spark.read.parquet(path).columns
 
 
 def _analyzed(spark, col):

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.session import ensure_parallelism
 from trial_data_ingestion_spark.store import (
-    read_params, read_partitions, require_delta_level, reserve_delta,
+    layout_of, new_delta, read_params, read_partitions, reserve_delta,
     write_params,
 )
 
@@ -292,46 +292,45 @@ def write_phash_index(hashes: DataFrame, path: str, max_hamming: int = 4,
       into;
     * ``/docs`` — (doc, ph) for the seen-id resume filter,
       partitioned by ``delta`` then ``dbkt``, the doc id's bucket;
-    * ``_params.json`` — (max_hamming, num_buckets), the params
-      sidecar: probes can't run with mismatched banding.
+    * ``_params.json`` — (max_hamming, num_buckets) and the layout,
+      the params sidecar: probes can't run with mismatched banding.
 
     A build writes delta ``base``.  ``mode="append"`` validates
-    against the sidecar (raising on a mismatch) instead of rewriting
-    it, and writes delta ``delta_id`` (random when None) after
-    deleting it, so a retry rewrites it (``store.reserve_delta``).  A
-    store written before the ``delta`` level raises on append: rebuild
-    it.
+    against the sidecar (raising on a mismatch of the params or of
+    the recorded layout) instead of rewriting it, and writes delta
+    ``delta_id`` (random when None) after deleting it, so a retry
+    rewrites it (``store.reserve_delta``).  A store without a recorded
+    layout raises on append: rebuild it.
 
     Same layout discipline as ``incremental_dedup.write_minhash_index``
     (repartition ON the partition column before ``partitionBy`` —
     one file per bucket, not tasks x buckets)."""
     spark = hashes.sparkSession
     params = {"max_hamming": max_hamming, "num_buckets": num_buckets}
-    subs = [path + "/bands", path + "/docs"]
-    if mode == "append":
-        read_params(spark, path, expect=params)
-        for sub in subs:
-            require_delta_level(spark, sub)
-        delta = reserve_delta(spark, subs, delta_id)
-    else:
-        delta = "base"
+    delta = new_delta(delta_id) if mode == "append" else "base"
     bt = (_band_table(hashes, max_hamming)
           .withColumn("pbkt", F.pmod(F.xxhash64("band", "val"),
                                      F.lit(num_buckets)))
           .withColumn("delta", F.lit(delta)))
-    (bt.repartition("pbkt")
-       .write.mode(mode).partitionBy("delta", "pbkt").parquet(subs[0]))
     docs = (hashes.select(F.col("media_id").alias("doc"),
                           F.col("phash").alias("ph"))
             .withColumn("dbkt", F.pmod(F.xxhash64("doc"),
                                        F.lit(num_buckets)))
             .withColumn("delta", F.lit(delta)))
+    tables = {"bands": layout_of(bt, ["delta", "pbkt"]),
+              "docs": layout_of(docs, ["delta", "dbkt"])}
+    if mode == "append":
+        reserve_delta(spark, path, delta, tables, params)
+    (bt.repartition("pbkt")
+       .write.mode(mode).partitionBy("delta", "pbkt")
+       .parquet(path + "/bands"))
     (docs.repartition("dbkt")
-         .write.mode(mode).partitionBy("delta", "dbkt").parquet(subs[1]))
+         .write.mode(mode).partitionBy("delta", "dbkt")
+         .parquet(path + "/docs"))
     if mode != "append":
-        write_params(spark, path, params)
-    for sub in subs:
-        spark.catalog.refreshByPath(sub)
+        write_params(spark, path, {**params, "layout": tables})
+    for table in tables:
+        spark.catalog.refreshByPath(f"{path}/{table}")
 
 
 def dedup_media_incremental(spark, new_media: DataFrame, path: str,
@@ -361,9 +360,6 @@ def dedup_media_incremental(spark, new_media: DataFrame, path: str,
     )
     p = read_params(spark, path)
     max_hamming, num_buckets = p["max_hamming"], p["num_buckets"]
-    if exclude_delta is not None:
-        # an older store has no delta column to exclude by
-        require_delta_level(spark, path + "/bands")
 
     raw_hashes = attach_phash(new_media, hasher).persist()
 
@@ -372,11 +368,7 @@ def dedup_media_incremental(spark, new_media: DataFrame, path: str,
     batch_dbkts = sorted(r["b"] for r in raw_hashes.select(
         F.pmod(F.xxhash64("media_id"), F.lit(num_buckets))
         .alias("b")).distinct().collect())
-    # explicit schema: a freshly-initialized EMPTY store has no data
-    # files to infer from (same pattern as the line store)
-    seen = (read_partitions(spark, path + "/docs", "dbkt", batch_dbkts,
-                            schema="doc string, ph long, delta string, "
-                                   "dbkt int",
+    seen = (read_partitions(spark, path, "dbkt", batch_dbkts, "docs",
                             exclude_delta=exclude_delta)
             .select(F.col("doc").alias("media_id")))
     new_media = new_media.join(seen, "media_id", "left_anti")
@@ -394,11 +386,8 @@ def dedup_media_incremental(spark, new_media: DataFrame, path: str,
                                      F.lit(num_buckets))))
     probe_bkts = sorted(r["pbkt"] for r in
                         bt.select("pbkt").distinct().collect())
-    idx = read_partitions(
-        spark, path + "/bands", "pbkt", probe_bkts,
-        schema="doc string, ph long, band int, val long, delta string, "
-               "pbkt int",
-        exclude_delta=exclude_delta)
+    idx = read_partitions(spark, path, "pbkt", probe_bkts, "bands",
+                          exclude_delta=exclude_delta)
     cross = (idx.alias("c")
              .join(F.broadcast(bt.alias("n")),
                    on=[F.col("c.band") == F.col("n.band"),

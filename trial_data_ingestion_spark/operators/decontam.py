@@ -396,8 +396,8 @@ def fuzzy_contaminated_ids(corpus: DataFrame, bench: DataFrame,
             "pbkt", _pbkt(stored["num_buckets"]))
         pbkts = sorted(r["pbkt"] for r in
                        probe.select("pbkt").distinct().collect())
-        c_banded = (read_partitions(spark, corpus_index + "/bands",
-                                    "pbkt", pbkts)
+        c_banded = (read_partitions(spark, corpus_index, "pbkt", pbkts,
+                                    "bands")
                     .select(F.concat(F.lit("c|"),
                                      F.col("doc").cast("string"))
                             .alias("doc_id"), "band", "bucket",

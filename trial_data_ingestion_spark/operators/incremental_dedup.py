@@ -36,9 +36,10 @@ Index layout under ``path``:
   only the partitions holding candidate corpus docs (their ``dbkt``
   rides along on the band rows, so no corpus-side hashing at query
   time).
-* ``_params.json`` — (k, num_hashes, bands, num_buckets), the
-  store's params sidecar (``store.read_params``), so callers can't
-  probe or append with mismatched hashing parameters.
+* ``_params.json`` — (k, num_hashes, bands, num_buckets) and the
+  layout of both tables, the store's params sidecar
+  (``store.read_params``), so callers can't probe or append with
+  mismatched hashing parameters, and probes read without inferring.
 
 The ``delta`` level is what makes appends RETRYABLE (a delta-keyed
 append deletes its own partitions first — whole-call idempotent) and
@@ -62,7 +63,7 @@ from trial_data_ingestion_spark.operators.dedup import (
 )
 from trial_data_ingestion_spark.operators.pins import PinScope
 from trial_data_ingestion_spark.store import (
-    check_partition_value, read_params, read_partitions, reserve_delta,
+    layout_of, new_delta, read_params, read_partitions, reserve_delta,
     stream_batch_keys, write_params, write_shard,
 )
 
@@ -230,15 +231,10 @@ def write_minhash_index(df: DataFrame, path: str,
                          "'auto'")
     params = {"k": k, "num_hashes": num_hashes, "bands": bands,
               "num_buckets": num_buckets}
-    if mode == "append":
-        # an append banded differently from the stored corpus would
-        # silently corrupt every later probe
-        read_params(spark, path, expect=params)
-        delta_id = reserve_delta(spark, [path + "/bands", path + "/docs"],
-                                 delta_id)
-    else:
-        delta_id = "base" if delta_id is None \
-            else check_partition_value(delta_id, what="delta_id")
+    # a build lands in delta "base" unless named, an append in a
+    # random delta unless named
+    delta_id = new_delta(delta_id if mode == "append"
+                         else delta_id or "base")
     src = (_prebanded.select("doc", "band", "bucket")
            if _prebanded is not None
            else _banded(df, id_col, text_col, k, num_hashes, bands))
@@ -247,6 +243,17 @@ def write_minhash_index(df: DataFrame, path: str,
                                          F.lit(num_buckets)))
               .withColumn("pbkt", _pbkt(num_buckets))
               .withColumn("delta", F.lit(delta_id)))
+    docs = df.select(F.col(id_col).alias("doc"),
+                     F.col(text_col).alias("text"),
+                     F.pmod(F.xxhash64(F.col(id_col)),
+                            F.lit(num_buckets)).alias("dbkt"),
+                     F.lit(delta_id).alias("delta"))
+    tables = {"bands": layout_of(banded, ["delta", "pbkt"]),
+              "docs": layout_of(docs, ["delta", "dbkt"])}
+    if mode == "append":
+        # an append banded (or typed) differently from the stored
+        # corpus would silently corrupt every later probe
+        reserve_delta(spark, path, delta_id, tables, params)
     # repartition ON the partition column first: otherwise every
     # write task emits a file into every partition dir (tasks x
     # buckets tiny files — measured 8x slower to write AND to probe);
@@ -254,18 +261,13 @@ def write_minhash_index(df: DataFrame, path: str,
     (banded.repartition("pbkt")
            .write.mode(mode).partitionBy("delta", "pbkt")
            .parquet(path + "/bands"))
-    docs = df.select(F.col(id_col).alias("doc"),
-                     F.col(text_col).alias("text"),
-                     F.pmod(F.xxhash64(F.col(id_col)),
-                            F.lit(num_buckets)).alias("dbkt"),
-                     F.lit(delta_id).alias("delta"))
     (docs.repartition("dbkt")
          .write.mode(mode).partitionBy("delta", "dbkt")
          .parquet(path + "/docs"))
     if mode != "append":
         # params are fixed at build time: appends validate, never
         # rewrite
-        write_params(spark, path, params)
+        write_params(spark, path, {**params, "layout": tables})
     # rebuilding over a previous index: drop the cached file listing,
     # or later readers resolve deleted part files (FILE_NOT_EXIST)
     for sub in ("/bands", "/docs"):
@@ -282,7 +284,7 @@ def cross_candidates(spark, new_banded: DataFrame, index_path: str,
     probe = new_banded.withColumn("pbkt", _pbkt(num_buckets))
     pbkts = sorted(r["pbkt"]
                    for r in probe.select("pbkt").distinct().collect())
-    idx = read_partitions(spark, index_path + "/bands", "pbkt", pbkts)
+    idx = read_partitions(spark, index_path, "pbkt", pbkts, "bands")
     return (idx.join(F.broadcast(probe.withColumnRenamed("doc", "doc_b")),
                      ["band", "bucket", "pbkt"])
                .where(F.col("doc") != F.col("doc_b"))
@@ -488,8 +490,8 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
     k, num_hashes, bands = p["k"], p["num_hashes"], p["bands"]
     num_buckets = p["num_buckets"]
 
-    def _idx(sub: str, column: str, values: list) -> DataFrame:
-        return read_partitions(spark, index_path + sub, column, values,
+    def _idx(table: str, column: str, values: list) -> DataFrame:
+        return read_partitions(spark, index_path, column, values, table,
                                exclude_delta=exclude_delta)
 
     # job 1: batch ids + doc-bucket hashes AND the banded probe in
@@ -531,7 +533,7 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
     # local tables.  The cross side is limit-bounded: past the local
     # cap the distributed fallback recomputes it exactly anyway.
     seen_branch = (
-        _idx("/docs", "dbkt", batch_bkts)
+        _idx("docs", "dbkt", batch_bkts)
         .select("doc")
         .join(F.broadcast(batch_ids_df.withColumnRenamed(
             id_col, "doc")), "doc", "left_semi")
@@ -540,7 +542,7 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
                 F.lit(None).cast("bigint").alias("dbkt_a"),
                 F.lit(0).alias("__k")))
     cross_branch = (
-        _idx("/bands", "pbkt", pbkts)
+        _idx("bands", "pbkt", pbkts)
         .join(F.broadcast(probe_local.withColumnRenamed(
             "doc", "doc_b")), ["band", "bucket", "pbkt"])
         .where(F.col("doc") != F.col("doc_b"))
@@ -610,7 +612,7 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
             # table
             if in_pair_ids:
                 corpus_texts = (
-                    _idx("/docs", "dbkt", dbkts)
+                    _idx("docs", "dbkt", dbkts)
                     .select(F.col("doc").alias(id_col),
                             F.col("text").alias(text_col)))
                 texts = {
@@ -651,7 +653,7 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
                          F.col("b.doc").alias("doc_b"))
                  .distinct())
             cross = (
-                _idx("/bands", "pbkt", pbkts)
+                _idx("bands", "pbkt", pbkts)
                 .join(F.broadcast(fresh_probe.withColumnRenamed(
                     "doc", "doc_b")), ["band", "bucket", "pbkt"])
                 .where(F.col("doc") != F.col("doc_b"))
@@ -669,7 +671,7 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
                             cand_corpus.select("dbkt_a")
                                        .distinct().collect()})
             corpus_texts = (
-                _idx("/docs", "dbkt", dbkts)
+                _idx("docs", "dbkt", dbkts)
                 .join(F.broadcast(cand_corpus.select("doc")), "doc",
                       "left_semi")
                 .select(F.col("doc").alias(id_col),
@@ -940,6 +942,9 @@ def compact_minhash_index(spark, index_path: str, out_path: str) -> None:
     (docs.repartition("dbkt")
          .write.mode("overwrite").partitionBy("delta", "dbkt")
          .parquet(out_path + "/docs"))
-    write_params(spark, out_path, read_params(spark, index_path))
+    write_params(spark, out_path, {
+        **read_params(spark, index_path),
+        "layout": {"bands": layout_of(bands, ["delta", "pbkt"]),
+                   "docs": layout_of(docs, ["delta", "dbkt"])}})
     for sub in ("/bands", "/docs"):
         spark.catalog.refreshByPath(out_path + sub)

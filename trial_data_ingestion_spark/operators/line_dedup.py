@@ -52,7 +52,8 @@ from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.session import ensure_parallelism
 from trial_data_ingestion_spark.store import (
-    read_params, read_partitions, reserve_delta, write_params,
+    layout_of, new_delta, read_params, read_partitions, reserve_delta,
+    write_params,
 )
 
 
@@ -115,15 +116,26 @@ def _apply_drops(df: DataFrame, dups: DataFrame, id_col: str,
             .drop("__drop"))
 
 
-def _write_lines(keys: DataFrame, path: str, num_buckets: int,
-                 mode: str, delta: str) -> None:
-    """Write distinct line keys into ``path/lines`` under ``delta``."""
-    (keys.withColumn("pbkt", F.pmod(F.col("line"), F.lit(num_buckets)))
-     .withColumn("delta", F.lit(delta))
-     .repartition("pbkt")
-     .write.mode(mode).partitionBy("delta", "pbkt")
-     .parquet(path + "/lines"))
-    keys.sparkSession.catalog.refreshByPath(path + "/lines")
+def _write_lines(keys: DataFrame, path: str, params: dict,
+                 delta_id: str | None = None,
+                 append: bool = False) -> None:
+    """Write distinct line keys into ``path/lines``: a build as delta
+    ``base``, recording ``params`` and the layout; an append as delta
+    ``delta_id`` (random when None), validated against them first."""
+    spark = keys.sparkSession
+    delta = new_delta(delta_id) if append else "base"
+    out = (keys.withColumn("pbkt", F.pmod(F.col("line"),
+                                          F.lit(params["num_buckets"])))
+           .withColumn("delta", F.lit(delta)))
+    tables = {"lines": layout_of(out, ["delta", "pbkt"])}
+    if append:
+        reserve_delta(spark, path, delta, tables, params)
+    (out.repartition("pbkt")
+     .write.mode("append" if append else "overwrite")
+     .partitionBy("delta", "pbkt").parquet(path + "/lines"))
+    if not append:
+        write_params(spark, path, {**params, "layout": tables})
+    spark.catalog.refreshByPath(path + "/lines")
 
 
 def write_line_index(df: DataFrame, path: str, id_col: str = "doc_id",
@@ -142,18 +154,10 @@ def write_line_index(df: DataFrame, path: str, id_col: str = "doc_id",
     validating ``min_chars``/``num_buckets`` against the stored
     params (a mismatch raises: keys bucketed differently are never
     probed); the params themselves are fixed at build time."""
-    spark = df.sparkSession
-    params = {"min_chars": min_chars, "num_buckets": num_buckets}
-    if mode == "append":
-        read_params(spark, path, expect=params)
-        delta = reserve_delta(spark, [path + "/lines"])
-    else:
-        delta = "base"
     _write_lines(_eligible_occurrences(df, id_col, text_col, min_chars)
-                 .select("line").distinct(),
-                 path, num_buckets, mode, delta)
-    if mode != "append":
-        write_params(spark, path, params)
+                 .select("line").distinct(), path,
+                 {"min_chars": min_chars, "num_buckets": num_buckets},
+                 append=mode == "append")
 
 
 def probe_line_store(spark, occ: DataFrame, index_path: str,
@@ -170,10 +174,7 @@ def probe_line_store(spark, occ: DataFrame, index_path: str,
                                         F.lit(num_buckets))))
     pbkts = sorted(r["pbkt"]
                    for r in probe.select("pbkt").distinct().collect())
-    # explicit schema: a store initialized over an empty corpus has
-    # no files to infer from (the streaming sink starts that way)
-    store = read_partitions(spark, index_path + "/lines", "pbkt", pbkts,
-                            schema="line long, delta string, pbkt int",
+    store = read_partitions(spark, index_path, "pbkt", pbkts, "lines",
                             exclude_delta=exclude_delta)
     return (store.join(F.broadcast(probe), ["line", "pbkt"],
                        "left_semi")
@@ -228,10 +229,9 @@ def line_dedup_incremental(spark, new_docs: DataFrame, index_path: str,
                    | (F.col("pos") != F.col("__first.pos")))
             .select("doc", "pos"))
     if append:
-        delta = reserve_delta(spark, [index_path + "/lines"], delta_id)
         _write_lines(firsts.join(seen, "line", "left_anti")
                      .select("line").distinct(),
-                     index_path, num_buckets, "append", delta)
+                     index_path, params, delta_id, append=True)
     return _apply_drops(new_docs, dups, id_col, text_col)
 
 

@@ -49,7 +49,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from trial_data_ingestion_spark.functions.vector import l2_norm_fixed, dot_fixed
-from trial_data_ingestion_spark.store import read_partitions
+from trial_data_ingestion_spark.store import (
+    layout_of, read_partitions, write_params,
+)
 
 
 @dataclass(frozen=True)
@@ -448,6 +450,8 @@ def build_ivfpq(embeddings: DataFrame, dim: int, path: str,
           .withColumn("metric", F.lit(cb.metric))
           .coalesce(1)
           .write.mode("overwrite").parquet(path + "/codebooks"))
+    write_params(spark, path, {"dim": dim, "layout": {
+        "codes": layout_of(enc, ["cell_id"])}})
     for sub in ("/codes", "/centroids", "/codebooks"):
         spark.catalog.refreshByPath(path + sub)
 
@@ -501,8 +505,8 @@ def topk_ivfpq(spark, index_path: str, queries: DataFrame,
                 res_q[None, :], cb)[0]
 
     qids = [r[query_id_col] for r in query_rows]
-    stored = read_partitions(spark, index_path + "/codes", "cell_id",
-                             probed_cells)
+    stored = read_partitions(spark, index_path, "cell_id", probed_cells,
+                             "codes")
     id_type = stored.schema[id_col].dataType.simpleString()
     r = max(k * refine_factor, k)
     out_schema = (f"{query_id_col} {qid_type}, __nid {id_type},"

@@ -32,7 +32,7 @@ from trial_data_ingestion_spark.functions.vector import (
 )
 from trial_data_ingestion_spark.session import ensure_parallelism
 from trial_data_ingestion_spark.store import (
-    check_partition_value, read_params, read_partitions, reserve_delta,
+    layout_of, new_delta, read_params, read_partitions, reserve_delta,
     write_params,
 )
 
@@ -699,13 +699,8 @@ def write_ivf_index(embeddings: DataFrame, centroids: DataFrame,
     :func:`kmeans_centroids` (production) or
     :func:`first_id_centroids` (deterministic tests); reuse the SAME
     centroid table at query time or probes will miss."""
-    cells = _nearest_cells(embeddings, centroids, vec_col, id_col, 1, dim)
-    if dim is not None:
-        cells = cells.withColumn("__nrm", l2_norm_fixed(vec_col, dim))
-    (cells.withColumn("delta", F.lit("base"))
-          .write.mode("overwrite").partitionBy("delta", "cell_id")
-          .parquet(path))
-    embeddings.sparkSession.catalog.refreshByPath(path)
+    _write_ivf(_nearest_cells(embeddings, centroids, vec_col, id_col, 1,
+                              dim), path, vec_col, dim, "base")
 
 
 def append_to_ivf_index(new_embeddings: DataFrame, centroids: DataFrame,
@@ -723,20 +718,35 @@ def append_to_ivf_index(new_embeddings: DataFrame, centroids: DataFrame,
     Recall drifts only as the data distribution drifts away from the
     frozen centers; re-fit + rebuild on a schedule, like any IVF.
     Caller dedups ids (the index is a layout, not a keyed store).
+    ``dim`` must be the one the index was built with (it decides the
+    ``__nrm`` column): another raises before anything is written.
 
     Rerun semantics (round 9): pass a stable ``delta_id`` and a
     whole-call retry is idempotent — the append deletes its own
     ``delta`` partition directory before writing.  Without one the
     delta is random and the append is at-most-once (don't retry)."""
-    spark = new_embeddings.sparkSession
-    delta_id = reserve_delta(spark, [path], delta_id)
-    cells = _nearest_cells(new_embeddings, centroids, vec_col, id_col,
-                           1, dim)
+    _write_ivf(_nearest_cells(new_embeddings, centroids, vec_col, id_col,
+                              1, dim), path, vec_col, dim,
+               new_delta(delta_id), append=True)
+
+
+def _write_ivf(cells: DataFrame, path: str, vec_col: str,
+               dim: int | None, delta: str, append: bool = False) -> None:
+    """Write assigned ``cells`` as delta ``delta`` of the IVF layout at
+    ``path`` (partitioned by ``delta`` then ``cell_id``): a build
+    overwrites the root and records ``dim`` and the layout; an append
+    validates both first."""
+    spark = cells.sparkSession
     if dim is not None:
         cells = cells.withColumn("__nrm", l2_norm_fixed(vec_col, dim))
-    (cells.withColumn("delta", F.lit(delta_id))
-          .write.mode("append").partitionBy("delta", "cell_id")
-          .parquet(path))
+    out = cells.withColumn("delta", F.lit(delta))
+    tables = {"": layout_of(out, ["delta", "cell_id"])}
+    if append:
+        reserve_delta(spark, path, delta, tables, {"dim": dim})
+    (out.write.mode("append" if append else "overwrite")
+        .partitionBy("delta", "cell_id").parquet(path))
+    if not append:
+        write_params(spark, path, {"dim": dim, "layout": tables})
     spark.catalog.refreshByPath(path)
 
 
@@ -828,21 +838,26 @@ def write_srp_index(embeddings: DataFrame, path: str, dim: int,
         num_planes = _index_planes(
             spark, path, None if num_planes == "auto" else num_planes,
             dim)
-        delta_id = reserve_delta(spark, [path], delta_id)
     else:
         num_planes = resolve_num_planes(num_planes,
                                         lambda: embeddings.count())
-        delta_id = "base" if delta_id is None \
-            else check_partition_value(delta_id, what="delta_id")
+    # a build lands in delta "base" unless named, an append in a
+    # random delta unless named
+    delta_id = new_delta(delta_id if mode == "append"
+                         else delta_id or "base")
     out = (embeddings
            .withColumn("__nrm", l2_norm_fixed(vec_col, dim))
            .withColumn("bucket", srp_bucket(vec_col, dim, num_planes))
            .withColumn("delta", F.lit(delta_id)))
+    tables = {"": layout_of(out, ["delta", "bucket"])}
+    if mode == "append":
+        reserve_delta(spark, path, delta_id, tables)
     (out.write.mode(mode).partitionBy("delta", "bucket").parquet(path))
     if mode != "append":
         # AFTER the data write: a static overwrite of `path` deletes
         # the whole root, sidecar included
-        write_params(spark, path, {"num_planes": num_planes, "dim": dim})
+        write_params(spark, path, {"num_planes": num_planes, "dim": dim,
+                                   "layout": tables})
     spark.catalog.refreshByPath(path)
 
 

@@ -31,7 +31,10 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trial_data_ingestion_spark.store import read_partitions, write_shard
+from trial_data_ingestion_spark.store import (
+    check_partition_value, layout_of, open_store, read_partitions,
+    stream_batch_keys, write_shard,
+)
 
 #: relative standard error of an lgK-configured HLL sketch
 HLL_RSE = {lgk: 1.04 / math.sqrt(2 ** lgk) for lgk in range(4, 22)}
@@ -69,7 +72,9 @@ def write_hll_shard(df: DataFrame, path: str, group_cols: list[str],
     partition path by hand, and Spark escapes unsafe characters on
     write, so an unsafe name would delete the wrong path."""
     out = (hll_shard_sketches(df, group_cols, value_col, lgk)
-           .withColumn("shard", F.lit(shard)))
+           .withColumn("shard", F.lit(check_partition_value(shard))))
+    open_store(df.sparkSession, path, {},
+               {"": layout_of(out, ["shard"])})
     if n_files == 1:
         out = out.coalesce(1)
     else:
@@ -82,16 +87,18 @@ def write_hll_shard(df: DataFrame, path: str, group_cols: list[str],
 
 
 def hll_stream_sink(path: str, group_cols: list[str], value_col: str,
-                    lgk: int = 12, shard_prefix: str = "batch",
-                    n_files: int = 1):
+                    lgk: int = 12, n_files: int = 1):
     """``foreachBatch`` sink maintaining a mergeable HLL sketch table
     from a stream: each micro-batch is sketched ONCE at O(batch) cost
-    and lands as its own shard (``{shard_prefix}-{batch_id:09d}``).
-    Batch ids are stable across checkpoint restarts, so a REPLAYED
-    micro-batch overwrites its own partition instead of
+    and lands as its own shard, named by the query-keyed delta of
+    ``store.stream_batch_keys`` (``batch-{batch_id:09d}-{query id}``).
+    Batch ids and the query id are stable across checkpoint restarts,
+    so a REPLAYED micro-batch overwrites its own partition instead of
     double-counting — idempotent by construction, the same
-    exactly-once trick as the upsert sink; and a replay that now
-    carries no rows leaves its shard empty (see
+    exactly-once trick as the upsert sink — while a second query over
+    the same table (new checkpoint, batch ids from 0 again) writes
+    shards of its own instead of replacing the first query's; and a
+    replay that now carries no rows leaves its shard empty (see
     :func:`write_hll_shard`).  :func:`merged_distinct` then answers
     all-time / trailing-window distinct counts from the sketch table
     alone, with no rescan of the stream's history — the streaming
@@ -107,8 +114,8 @@ def hll_stream_sink(path: str, group_cols: list[str], value_col: str,
     """
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        write_hll_shard(batch_df, path, group_cols, value_col,
-                        shard=f"{shard_prefix}-{batch_id:09d}",
+        _, shard = stream_batch_keys(batch_df.sparkSession, batch_id)
+        write_hll_shard(batch_df, path, group_cols, value_col, shard,
                         lgk=lgk, n_files=n_files)
 
     return sink

@@ -11,13 +11,14 @@ untouched.
 from __future__ import annotations
 
 import json
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trial_data_ingestion_spark.store import read_partitions
+from trial_data_ingestion_spark.store import (
+    layout_of, open_store, read_partitions,
+)
 
 
 def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -83,30 +84,35 @@ def upsert_parquet(spark: SparkSession, new_df: DataFrame, path: str,
     (the Spark rebuild of the Chroma upsert,
     vectorstores/chroma_store.py:37-56: same id -> replace).
 
-    Layout: partitioned by ``__bucket = pmod(xxhash64(key), n)``.
+    Layout: partitioned by ``__bucket = pmod(xxhash64(key), n)``,
+    with ``n_buckets`` and the layout recorded in the table's
+    ``_params.json`` sidecar by its first write
+    (``store.open_store``); a later upsert with another ``n_buckets``
+    (which would file its keys in other buckets and keep both copies)
+    or another column set raises before anything is written.
     Merge: read only the buckets touched by ``new_df``, anti-join out
     replaced keys, union the new rows, and dynamically overwrite just
-    those bucket partitions.  Cost scales with touched buckets, not
-    table size — at 100 TB an upsert of k keys rewrites
-    ~k/n of the table instead of all of it.  ``localCheckpoint``
-    materializes the merge before the overwrite so the writer never
-    reads the files it is replacing.
+    those bucket partitions (a per-write option: the session's
+    ``partitionOverwriteMode`` is left as it was).  Cost scales with
+    touched buckets, not table size — at 100 TB an upsert of k keys
+    rewrites ~k/n of the table instead of all of it.
+    ``localCheckpoint`` materializes the merge before the overwrite
+    so the writer never reads the files it is replacing.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     bucket = F.pmod(F.xxhash64(F.col(key).cast("string")),
                     F.lit(n_buckets)).cast("int")
-    incoming = new_df.withColumn("__bucket", bucket)
-    if _path_exists(spark, path):
+    merged = incoming = new_df.withColumn("__bucket", bucket)
+    if open_store(spark, path, {"n_buckets": n_buckets},
+                  {"": layout_of(incoming, ["__bucket"])}):
         touched = [r["__bucket"] for r in
                    incoming.select("__bucket").distinct().collect()]
         existing = read_partitions(spark, path, "__bucket", touched)
         kept = existing.join(incoming.select(key).distinct(), key,
                              "left_anti")
         merged = kept.unionByName(incoming)
-    else:
-        merged = incoming
-    merged = merged.localCheckpoint(eager=True)
-    merged.write.mode("overwrite").partitionBy("__bucket").parquet(path)
+    (merged.localCheckpoint(eager=True)
+     .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy("__bucket").parquet(path))
 
 
 def write_bucketed(df: DataFrame, table: str, key: str,
@@ -132,15 +138,3 @@ def write_bucketed(df: DataFrame, table: str, key: str,
 def read_upsert_table(spark: SparkSession, path: str) -> DataFrame:
     """Read back an upsert table without the bucketing column."""
     return spark.read.parquet(path).drop("__bucket")
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    if os.path.exists(path):
-        return True
-    try:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        return p.getFileSystem(conf).exists(p)
-    except Exception:
-        return False

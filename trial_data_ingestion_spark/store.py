@@ -1,16 +1,24 @@
 """The one contract every persisted, partition-keyed store follows
 (the MinHash, SRP, IVF, IVF-PQ, line, perceptual-hash and HLL
-layouts, and the streaming sinks' output shards):
+layouts, the upsert table, and the streaming sinks' output shards):
 
-* **params sidecar** — a store's build-time parameters live in one
-  ``_params.json`` file at its root, written and read on the driver
-  through the Hadoop FS API (no Spark job):
+* **params sidecar** — a store's build-time parameters AND its
+  ``layout`` live in one ``_params.json`` file at its root, written
+  and read on the driver through the Hadoop FS API (no Spark job):
   :func:`write_params` after the data write, :func:`read_params`
-  (with ``expect=`` to validate a caller's values) before any probe
+  (with ``expect=`` to validate a caller's values, ``layout=`` to
+  validate the frames an append is about to write) before any probe
   or append;
-* **keyed delta append** — :func:`reserve_delta` names the append's
-  ``delta`` (the caller's id or a random one) and deletes it under
-  every sub-root first, so a retried append rewrites itself;
+* **recorded layout** — the writer that decides a layout records it
+  once (a build, or :func:`open_store` for a store its first write
+  builds): for each sub-table (``""`` for the root, or ``bands``,
+  ``docs``, ``lines``, ``codes``) the schema a full-root read returns
+  and the ``partition_by`` column order (:func:`layout_of`).  Readers
+  never infer or spell a schema;
+* **keyed delta append** — :func:`new_delta` names the append's
+  ``delta`` (the caller's id or a random one) and
+  :func:`reserve_delta` validates the append, then deletes that
+  delta under every sub-table, so a retried append rewrites itself;
 * **keyed shard write** — :func:`write_shard` rewrites one
   ``shard=`` partition by delete-then-append, so a replayed
   micro-batch leaves its output exactly once;
@@ -18,7 +26,11 @@ layouts, and the streaming sinks' output shards):
   ``foreachBatch`` sink's output shard and store delta, so every
   store-backed sink replays and restarts the same way;
 * **pruned probe** — :func:`read_partitions` lists and reads only
-  the partitions a probe names.
+  the partitions a probe names, under the recorded layout.
+
+The ``layout`` is an on-disk format break: a store written before it
+is refused by its first probe or append ("rebuild the store"), and no
+reader for the older layouts is kept.
 """
 
 from __future__ import annotations
@@ -29,6 +41,7 @@ import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 #: partition values this package writes raw ``dir=value`` paths for
 #: (shard deletes, delta-keyed appends).  Spark URL-escapes partition
@@ -71,10 +84,29 @@ def delete_path(spark, path: str) -> None:
     spark.catalog.refreshByPath(path)
 
 
+def layout_of(df: DataFrame, partition_by) -> dict:
+    """The layout entry of ``df`` written ``partitionBy(*partition_by)``:
+    the schema a full-root read returns, as DDL (data columns in
+    ``df``'s order, then the partition columns in ``partition_by``
+    order, every field nullable, integer partition keys typed ``int``
+    as partition inference types them — ``pmod(xxhash64)`` yields
+    ``long``) and ``partition_by``.  Computed from ``df``'s analyzed
+    schema: no Spark job."""
+    by = list(partition_by)
+    out = df.select(*(c for c in df.columns if c not in by), *(
+        F.col(c).cast("int")
+        if isinstance(df.schema[c].dataType, T.IntegralType) else c
+        for c in by))
+    # asNullable: the same all-nullable rewrite a parquet read applies
+    return {"schema": out._jdf.schema().asNullable().toDDL(),
+            "partition_by": by}
+
+
 def write_params(spark, root: str, params: dict) -> None:
-    """Record a store's build-time ``params`` as ``root/_params.json``
-    (a driver-side file write, not a Spark job).  Call it AFTER the
-    data write: a static overwrite of ``root`` deletes the root."""
+    """Record a store's build-time ``params`` (with its ``layout``:
+    sub-table -> :func:`layout_of` entry) as ``root/_params.json`` (a
+    driver-side file write, not a Spark job).  Call it AFTER the data
+    write: a static overwrite of ``root`` deletes the root."""
     fs, p = _fs_path(spark, f"{root.rstrip('/')}/_params.json")
     out = fs.create(p, True)
     try:
@@ -83,13 +115,11 @@ def write_params(spark, root: str, params: dict) -> None:
         out.close()
 
 
-def read_params(spark, root: str, expect: dict | None = None) -> dict:
-    """The params :func:`write_params` recorded for the store at
-    ``root``.  A missing, unparseable or truncated sidecar raises
-    ``ValueError`` naming its path — never a default, which would
-    silently probe buckets keyed differently.  ``expect`` maps keys
-    to the caller's values; any that differ from the stored ones
-    raise, since a store's params are fixed at build time."""
+def _sidecar(spark, root: str) -> dict:
+    """Everything ``root/_params.json`` records.  A missing,
+    unparseable or truncated sidecar raises ``ValueError`` naming its
+    path — never a default, which would silently probe buckets keyed
+    differently."""
     path = f"{root.rstrip('/')}/_params.json"
     fs, p = _fs_path(spark, path)
     if not fs.exists(p):
@@ -108,6 +138,29 @@ def read_params(spark, root: str, expect: dict | None = None) -> dict:
     if not isinstance(params, dict):
         raise ValueError(f"corrupt params sidecar at {path}: not a "
                          "JSON object")
+    return params
+
+
+def _recorded_layout(root: str, params: dict) -> dict:
+    if "layout" not in params:
+        raise ValueError(f"{root} records no layout in its params "
+                         "sidecar: written by an older layout "
+                         "(rebuild the store)")
+    return params["layout"]
+
+
+def read_params(spark, root: str, expect: dict | None = None,
+                layout: dict | None = None) -> dict:
+    """The build params :func:`write_params` recorded for the store at
+    ``root``, without its ``layout``.  ``expect`` maps keys to the
+    caller's values; any that differ from the stored ones raise, since
+    a store's params are fixed at build time.  ``layout`` maps
+    sub-tables to the :func:`layout_of` of the frames the caller is about
+    to write; a column name or type that differs from the recorded
+    layout raises (nullability aside: both sides are all-nullable), as
+    does a store that records no layout."""
+    root = root.rstrip("/")
+    params = _sidecar(spark, root)
     bad = sorted(k for k, v in (expect or {}).items()
                  if params.get(k) != v)
     if bad:
@@ -117,21 +170,51 @@ def read_params(spark, root: str, expect: dict | None = None) -> dict:
             f"{root} stores {show(params)}, caller passed "
             f"{show(expect)} (stored params are fixed at build time: "
             "rebuild to resize)")
-    return params
+    if layout is not None:
+        recorded = _recorded_layout(root, params)
+        for table, entry in layout.items():
+            if recorded.get(table) != entry:
+                raise ValueError(
+                    f"{root} stores table {table!r} as "
+                    f"{recorded.get(table)}, caller writes {entry} (a "
+                    "store's layout is fixed at build time)")
+    return {k: v for k, v in params.items() if k != "layout"}
 
 
-def reserve_delta(spark, roots, delta_id: str | None = None) -> str:
-    """The ``delta`` an append writes: ``delta_id`` (checked safe) or,
-    when None, a random ``d-…`` id.  Its directory under each of
-    ``roots`` is deleted first, so retrying an append with the same
-    ``delta_id`` rewrites it instead of appending twice; a random
-    delta is at-most-once (don't retry it)."""
+def open_store(spark, root: str, params: dict, layout: dict) -> bool:
+    """For a store its first write builds (the HLL sketch table, the
+    upsert table): validate ``params`` and ``layout`` against the
+    sidecar of an existing ``root`` (:func:`read_params`; a root
+    without a sidecar raises), or record them for a new one before its
+    first data write.  True when ``root`` already existed."""
+    fs, p = _fs_path(spark, root)
+    if fs.exists(p):
+        read_params(spark, root, params, layout)
+        return True
+    write_params(spark, root, {**params, "layout": layout})
+    return False
+
+
+def new_delta(delta_id: str | None = None) -> str:
+    """The ``delta`` a write lands in: ``delta_id`` (checked safe) or,
+    when None, a random ``d-…`` id.  An append to a random delta is
+    at-most-once (don't retry it)."""
     if delta_id is None:
-        delta_id = "d-" + uuid.uuid4().hex[:12]
-    check_partition_value(delta_id, what="delta_id")
-    for root in roots:
-        delete_path(spark, f"{root}/delta={delta_id}")
-    return delta_id
+        return "d-" + uuid.uuid4().hex[:12]
+    return check_partition_value(delta_id, what="delta_id")
+
+
+def reserve_delta(spark, root: str, delta: str, layout: dict,
+                  expect: dict | None = None) -> None:
+    """Validate an append of ``delta`` against the store at ``root``
+    (:func:`read_params` with ``expect`` and ``layout``), then delete
+    the delta's directory under each sub-table of ``layout``: retrying
+    an append with the same ``delta`` rewrites it instead of appending
+    twice, and a refused append changes nothing."""
+    read_params(spark, root, expect, layout)
+    for table in layout:
+        base = f"{root.rstrip('/')}/{table}".rstrip("/")
+        delete_path(spark, f"{base}/delta={delta}")
 
 
 def write_shard(df: DataFrame, path: str, shard: str) -> None:
@@ -160,129 +243,53 @@ def stream_batch_keys(spark, batch_id: int) -> tuple[str, str]:
     return shard, shard if query_id is None else f"{shard}-{query_id}"
 
 
-def require_delta_level(spark, root: str) -> None:
-    """Raise ``ValueError`` if the store at ``root`` holds partitions
-    without a ``delta=`` level — a layout written before the store
-    gained one.  Appending a delta beside it would mix two layouts,
-    so such a store must be rebuilt."""
-    root = root.rstrip("/")
-    if (_first(spark, root + _LEVEL) is not None
-            and _first(spark, f"{root}/delta=*") is None):
-        raise ValueError(f"{root} has no delta= level: written by an "
-                         "older layout (rebuild the store)")
-
-
-def _glob(spark, pattern: str):
-    """Hadoop ``globStatus`` of ``pattern`` on the driver — a
-    filesystem call, not a Spark job.  The raw Java array (empty when
-    nothing matches), so callers that need one hit pay one py4j call,
-    not one per match."""
-    fs, p = _fs_path(spark, pattern)
-    hits = fs.globStatus(p)
-    return [] if hits is None else hits
-
-
-def _paths(spark, pattern: str) -> list[str]:
-    return sorted(h.getPath().toString() for h in _glob(spark, pattern))
-
-
-def _first(spark, pattern: str) -> str | None:
-    hits = _glob(spark, pattern)
-    return hits[0].getPath().toString() if len(hits) else None
-
-
-def _levels_above(spark, root: str, column: str) -> str | None:
-    """The glob between ``root`` and its ``column=`` directories
-    (``""`` for a store partitioned by ``column`` alone, ``"/*=*"``
-    under a ``delta`` level), found by walking down one directory per
-    level; None when the store holds no partition directory."""
-    stem, path = "", root
-    while (first := _first(spark, path + _LEVEL)) is not None:
-        if first.rsplit("/", 1)[1].startswith(column + "="):
-            return stem
-        stem, path = stem + _LEVEL, first
-    return None
-
-
 def read_partitions(spark, root: str, column: str, values,
-                    schema=None,
+                    table: str = "",
                     exclude_delta: str | None = None) -> DataFrame:
-    """The rows of the parquet store at ``root`` whose partition
-    ``column`` is in ``values``, reading and LISTING only those
-    partitions — the probe side of every persisted index.
+    """The rows of sub-table ``table`` of the store at ``root`` whose
+    partition ``column`` is in ``values``, reading and LISTING only
+    those partitions — the probe side of every persisted index.
+    Building the frame runs no Spark job while the probe names at most
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+    directories; past that, Spark lists them in one parallel job.
 
     ``spark.read.parquet(root).where(col.isin(values))`` prunes the
     files a scan reads, but building its relation lists every
-    partition directory of the store first — past
-    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
-    directories, as a Spark job of one task per directory, on every
-    probe.  Here the driver globs the probed directories
-    (``root/delta=*/column={v1,v2,...}``; levels above ``column`` are
-    found from the directory names) through the Hadoop FS API and
-    reads them with ``basePath=root``: O(probed partitions x deltas)
-    directories are listed.  The literal ``.where(col.isin(values))``
-    stays, so plans still show it in ``PartitionFilters``; with
-    ``exclude_delta`` a literal ``delta != exclude_delta`` filter
-    joins it.  Each call lists afresh, so appends are always seen.
-
-    Columns and types are those of a full-root read: when no probed
-    partition exists (or ``values`` is empty) one directory per
-    upper-level value is read under the always-false filter, so the
-    frame is empty but keeps the store's columns; partition levels
-    above ``column`` (the ``delta`` key) are typed over ALL their
-    values (a numeric-looking delta stays a string beside ``base``);
-    ``column`` itself is typed from the directories read, which is
-    the full-root type for integer bucket keys.  ``schema`` (DDL or
-    StructType) fixes every type instead, and lets an empty store
-    (no partition directory yet) read as an empty frame; without it
-    an empty store raises as a full-root read does.
+    partition directory of the store first (past the threshold, as a
+    Spark job of one task per directory, on every probe) and infers
+    the schema from a footer in one more job.  Here the sidecar's
+    recorded layout gives both: the driver globs the probed
+    directories at the depth ``partition_by`` puts ``column``
+    (``delta=*/column={v1,v2,...}``) through the Hadoop FS API and
+    reads them with ``basePath`` under the recorded schema, so
+    O(probed partitions x deltas) directories are listed and the
+    columns and types are those of a full-root read (a numeric-looking
+    delta stays a string).  When no directory matches (or ``values``
+    is empty) the frame is empty, of the recorded schema.  The literal
+    ``.where(col.isin(values))`` stays, so plans still show it in
+    ``PartitionFilters``; with ``exclude_delta`` a literal
+    ``delta != exclude_delta`` filter joins it.  Each call lists
+    afresh, so appends are always seen.  A store without a recorded
+    layout raises (rebuild it).
 
     ``values`` must render as their directory names (ints, or
     :func:`check_partition_value`-safe strings)."""
     root = root.rstrip("/")
+    entry = _recorded_layout(root, _sidecar(spark, root))[table]
+    base = f"{root}/{table}".rstrip("/")
     values = sorted({v for v in values if v is not None})
-    reader = spark.read.option("basePath", root)
-    if schema is not None:
-        reader = reader.schema(schema)
-    stem = _levels_above(spark, root, column)
-    if stem is None:
-        frame = reader.parquet(root)
-    else:
-        frame = _read_probed(spark, reader, root, stem, column, values,
-                             retype=schema is None)
+    wanted = ",".join(str(v) for v in values)
+    depth = entry["partition_by"].index(column)
+    fs, pattern = _fs_path(
+        spark, f"{base}{_LEVEL * depth}/{column}={{{wanted}}}")
+    # the Hadoop glob runs on the driver: a filesystem call, no job
+    hits = fs.globStatus(pattern) if values else None
+    dirs = sorted(h.getPath().toString() for h in hits or [])
+    frame = (spark.read.schema(entry["schema"]).option("basePath", base)
+             .parquet(*dirs) if dirs
+             else spark.createDataFrame([], entry["schema"]))
     frame = frame.where(F.col(column).isin(values))
     if exclude_delta is not None:
         frame = frame.where(F.col("delta") != F.lit(exclude_delta))
     return frame
 
-
-def _read_probed(spark, reader, root: str, stem: str, column: str,
-                 values: list, retype: bool) -> DataFrame:
-    """:func:`read_partitions` over a store with partition directories:
-    the frame of the probed directories (before the literal filters),
-    or of one directory per upper-level value when none is probed."""
-    def one_dir_per_upper_value(skip=()):
-        uppers = _paths(spark, root + stem) if stem else [root]
-        return [d for u in uppers if u not in skip
-                if (d := _first(spark, f"{u}/{column}=*"))]
-
-    wanted = ",".join(str(v) for v in values)
-    dirs = (_paths(spark, f"{root}{stem}/{column}={{{wanted}}}")
-            if values else [])
-    if not dirs:
-        return reader.parquet(*one_dir_per_upper_value())
-    frame = reader.parquet(*dirs)
-    levels = dirs[0].split("/")[-1 - stem.count(_LEVEL):-1]
-    if retype and any(frame.schema[lv.split("=", 1)[0]].dataType
-                      .typeName() != "string" for lv in levels):
-        # a partial upper level can infer narrower than the full one
-        # (delta "7" alone reads as int): type it over one directory
-        # per value, then read the probed directories under that
-        # schema
-        extra = one_dir_per_upper_value({d.rsplit("/", 1)[0]
-                                         for d in dirs})
-        if extra:
-            full = (spark.read.option("basePath", root)
-                    .parquet(*dirs, *extra).schema)
-            frame = reader.schema(full).parquet(*dirs)
-    return frame
