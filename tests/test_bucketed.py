@@ -108,3 +108,37 @@ def test_mismatched_bucket_counts_still_correct(spark, tmp_path,
     finally:
         spark.sql("DROP TABLE IF EXISTS b_o8")
         spark.sql("DROP TABLE IF EXISTS b_l4")
+
+
+def test_one_file_per_bucket_after_group_by_on_bucket_key(spark,
+                                                           tmp_path):
+    """An input already hash-partitioned on the bucket key into
+    exactly ``n_buckets`` shuffle partitions (a groupBy on the key
+    with ``shuffle.partitions == n_buckets``) still writes one file
+    per bucket: the sink's repartition may be planned away as equal
+    to the aggregate's exchange, and AQE may coalesce that exchange,
+    but either way each bucket's rows reach one writer."""
+    import glob
+    import re
+
+    from trial_data_ingestion_spark.sinks.bucketed import (
+        write_bucketed_table,
+    )
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    path = tmp_path / "b_cust"
+    try:
+        per_cust = (spark.read.parquet(f"{SF_DIR_ORACLE}/orders.parquet")
+                    .groupBy("o_custkey")
+                    .agg(F.count(F.lit(1)).alias("n")))
+        write_bucketed_table(per_cust, "b_cust", "o_custkey", 8,
+                             path=str(path))
+        files = glob.glob(f"{path}/part-*.parquet")
+        buckets = sorted(int(re.search(r"_(\d{5})\.", f).group(1))
+                         for f in files)
+        assert buckets == list(range(8)), buckets
+        assert spark.table("b_cust").count() == per_cust.count()
+    finally:
+        spark.conf.set(key, before)
+        spark.sql("DROP TABLE IF EXISTS b_cust")

@@ -380,11 +380,19 @@ def test_phash_store_without_delta_level_refuses_append(spark, tmp_path):
 
 
 def _jobs(spark, group, fn) -> int:
+    return _jobs_and_tasks(spark, group, fn)[0]
+
+
+def _jobs_and_tasks(spark, group, fn) -> tuple[int, int]:
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
         fn()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        tasks = sum(tracker.getStageInfo(s).numTasks
+                    for j in jobs for s in tracker.getJobInfo(j).stageIds)
+        return len(jobs), tasks
     finally:
         sc.setJobGroup(None, None)
 
@@ -494,7 +502,11 @@ def test_store_read_runs_no_job(spark, layout_stores, name):
     """Building a probe's frame runs 0 Spark jobs, for a probe that
     hits and for one that misses every partition: the schema comes
     from the store's recorded layout, not from inference.  Both frames
-    carry the full-root read's columns and types."""
+    carry the full-root read's columns and types.  The all-miss frame
+    is a LocalRelation: collecting it runs 0 jobs, and counting it
+    runs only the global aggregate's one-task result stage.  A
+    list-built empty frame, a Python RDD, ran 2 jobs of 9 tasks for
+    the count and 1 job of 4 Python-worker tasks for the collect."""
     import glob
 
     kind, table, column = _LAYOUTS[name]
@@ -513,11 +525,23 @@ def test_store_read_runs_no_job(spark, layout_stores, name):
         assert n == 0, f"{name} read of {values} ran {n} Spark jobs"
         assert frames[0].schema == full
         assert (frames[0].count() > 0) == hits_rows
+    rows = []
+    assert _jobs(spark, f"collect-{name}",
+                 lambda: rows.extend(frames[0].collect())) == 0
+    assert rows == []
+    n, tasks = _jobs_and_tasks(spark, f"count-{name}", frames[0].count)
+    assert n <= 1 and tasks <= 1, f"all-miss count ran {n} jobs, " \
+        f"{tasks} tasks"
 
 
 def test_store_writers_leave_session_conf_unchanged(layout_stores):
     """No store writer or sink changes the session conf: the upsert's
     dynamic partition overwrite is a per-write option."""
+    # The one known exception in the package is plans.library, which
+    # sets spark.sql.legacy.parquet.nanosAsLong on the session before
+    # reading events.parquet's TIMESTAMP(NANOS) column: the driver
+    # contract hands the query plans a vanilla session.  No store
+    # writer or sink reads through plans.library.
     _, before, after = layout_stores
     assert after == before
 

@@ -35,6 +35,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from trial_data_ingestion_spark.session import local_frame
+
 END = "</w>"
 
 
@@ -213,7 +215,7 @@ def tokenize_bpe(df: DataFrame, model: BPEModel,
 
 def save_bpe(model: BPEModel, spark, path: str) -> None:
     rows = [(i, a, b) for i, (a, b) in enumerate(model.merges)]
-    (spark.createDataFrame(rows, "rank int, left string, right string")
+    (local_frame(spark, rows, "rank int, left string, right string")
      .coalesce(1).write.mode("overwrite").parquet(path))
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.operators.textstats import fingerprint
+from trial_data_ingestion_spark.session import local_frame
 
 
 def vocabulary_stats(df: DataFrame, text_col: str = "text",
@@ -81,8 +82,8 @@ def approx_heavy_hitters(df: DataFrame, col: str,
              df.stat.freqItems([col], support).collect()[0][0]
              if v is not None]
     if not cands:
-        return (df.sparkSession.createDataFrame(
-            [], "value string, n_rows long, share double"))
+        return local_frame(df.sparkSession, [],
+                           "value string, n_rows long, share double")
     total = df.count()
     exact = (df.where(F.col(col).isin(*cands))
              .groupBy(F.col(col).alias("value"))

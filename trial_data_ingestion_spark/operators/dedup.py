@@ -83,7 +83,7 @@ def char_shingles(text: Column, k: int = 8) -> Column:
 
 
 from trial_data_ingestion_spark.session import (
-    ensure_parallelism as _ensure_parallelism,
+    ensure_parallelism as _ensure_parallelism, local_frame,
 )
 
 
@@ -504,7 +504,7 @@ def _cc_union_find_driver(pairs: DataFrame, edges: list) -> DataFrame:
     doc_type = pairs.schema["doc_a"].dataType
     schema = T.StructType([T.StructField("doc", doc_type, False),
                            T.StructField("label", doc_type, False)])
-    return pairs.sparkSession.createDataFrame(rows, schema)
+    return local_frame(pairs.sparkSession, rows, schema)
 
 
 def drop_non_representatives(df: DataFrame, pairs: DataFrame,

@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.operators.decontam import _norm_tokens
-from trial_data_ingestion_spark.session import ensure_parallelism
+from trial_data_ingestion_spark.session import ensure_parallelism, local_frame
 
 #: hashed feature space; 10k is the published DSIR default — small
 #: enough to broadcast, large enough that collisions barely move the
@@ -133,8 +133,9 @@ def fit_dsir(target: DataFrame, raw: DataFrame, text_col: str = "text",
     a, m = float(smoothing), n_buckets
     # same Spark expressions as the r12 shape (F.log over the same
     # integer counts and totals) so every log_ratio double is
-    # bit-identical; the frame is a LocalTableScan, so downstream
-    # broadcasts ship driver-local rows instead of re-running the fit
+    # bit-identical; the frame is a local_frame (a LocalRelation), so
+    # downstream broadcasts ship the driver-held rows and neither
+    # re-run the fit nor start a Python-worker job
     spark = target.sparkSession
     log_p = F.log((F.coalesce(F.col("__ct"), F.lit(0)) + a)
                   / (t_total + a * m))
@@ -143,7 +144,8 @@ def fit_dsir(target: DataFrame, raw: DataFrame, text_col: str = "text",
     import math
     default = (math.log(a / (t_total + a * m))
                - math.log(a / (r_total + a * m)))
-    ratio = (spark.createDataFrame(
+    ratio = (local_frame(
+                 spark,
                  [(r["bucket"], r["__ct"], r["__cr"]) for r in counts],
                  "bucket long, __ct long, __cr long")
              .select("bucket", (log_p - log_q).alias("log_ratio")))

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from trial_data_ingestion_spark.session import ensure_parallelism
+from trial_data_ingestion_spark.session import ensure_parallelism, local_frame
 
 
 def _cap_events(ev: DataFrame, max_events_per_user: int | None,
@@ -156,8 +156,8 @@ def funnel_counts(events: DataFrame, steps: list[str],
                 .agg(F.count(F.lit(1)).alias("n")))
     k = len(steps)
     spark = events.sparkSession
-    idx = spark.createDataFrame([(i, steps[i]) for i in range(k)],
-                                "step_index int, step string")
+    idx = local_frame(spark, [(i, steps[i]) for i in range(k)],
+                      "step_index int, step string")
     # users at step i = sum of users whose final depth >= i+1; the
     # by-depth table is <= k rows — a broadcast theta-join over a
     # k-row left side, nowhere near data scale

@@ -62,16 +62,18 @@ from trial_data_ingestion_spark.operators.dedup import (
     minhash_signatures,
 )
 from trial_data_ingestion_spark.operators.pins import PinScope
+from trial_data_ingestion_spark.session import local_frame
 from trial_data_ingestion_spark.store import (
     layout_of, new_delta, read_params, read_partitions, reserve_delta,
     stream_batch_keys, write_params, write_shard,
 )
 
 #: candidate-pair sets at or below this size are Jaccard-verified on
-#: a LOCAL pair frame (one zero-shuffle job) instead of the exploded
-#: shingle pipeline (~10 shuffle stages whose scheduling dominates at
-#: delta scale).  Above it — a delta batch colliding with >100k
-#:  corpus pairs — the distributed verify path runs unchanged.
+#: a LOCAL pair frame (evaluated on the driver, no job) instead of
+#: the exploded shingle pipeline (~10 shuffle stages whose scheduling
+#: dominates at delta scale).  Above it — a delta batch colliding
+#: with >100k corpus pairs — the distributed verify path runs
+#: unchanged.
 LOCAL_VERIFY_MAX_PAIRS = 100_000
 
 #: second bound on the local path (round 9): the pair verify collects
@@ -372,30 +374,32 @@ def _corpus_wins_drops(edges: list, corpus_ids: set) -> set:
 
 def _local_id_frame(spark, ids, template: DataFrame, id_col: str):
     """One-column (``id_col``) DataFrame from a driver-side id list,
-    typed like ``template[id_col]`` — a LocalTableScan, so building
-    and broadcasting it costs no Spark job."""
+    typed like ``template[id_col]``: a :func:`local_frame`, so the
+    broadcast that joins it ships rows the driver already holds and
+    runs no Python-worker job."""
     schema = T.StructType(
         [T.StructField(id_col, template.schema[id_col].dataType, True)])
-    return spark.createDataFrame([(i,) for i in sorted(ids)], schema)
+    return local_frame(spark, [(i,) for i in sorted(ids)], schema)
 
 
 def _local_probe_frame(spark, rows, template: DataFrame, id_col: str):
     """(doc, band, bucket, pbkt) DataFrame from driver-side banded
-    probe rows, typed like the Spark-computed probe — a
-    LocalTableScan, so re-using the already-collected banding as the
-    cross join's broadcast side costs no recompute and no job."""
+    probe rows, typed like the Spark-computed probe: a
+    :func:`local_frame`, so re-using the already-collected banding as
+    the cross join's broadcast side recomputes nothing and runs no
+    Python-worker job."""
     schema = T.StructType([
         T.StructField("doc", template.schema[id_col].dataType, True),
         T.StructField("band", T.IntegerType(), True),
         T.StructField("bucket", T.StringType(), True),
         T.StructField("pbkt", T.LongType(), True)])
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _verify_pairs_local(spark, pairs: list, texts: dict, id_type,
                         k: int, threshold: float) -> list:
-    """Exact Jaccard over a COLLECTED candidate set: one zero-shuffle
-    job over a local pair frame, shingled with :func:`char_shingles`
+    """Exact Jaccard over a COLLECTED candidate set, over a
+    :func:`local_frame` of the pairs shingled with :func:`char_shingles`
     — the same Spark kernel family as the exploded path, so the
     string semantics (Java regex ``\\s`` class, UTF-16 substring
     positions) are byte-identical to ``jaccard_verify``.  Texts that
@@ -410,7 +414,7 @@ def _verify_pairs_local(spark, pairs: list, texts: dict, id_type,
         T.StructField("doc_b", id_type, True),
         T.StructField("__ta", T.StringType(), True),
         T.StructField("__tb", T.StringType(), True)])
-    pf = spark.createDataFrame(rows, schema)
+    pf = local_frame(spark, rows, schema)
 
     def sh(col):
         norm = F.trim(F.regexp_replace(col, r"\s+", " "))
@@ -449,9 +453,13 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
     with ``delta_id=X, exclude_delta=X`` and reproduces its original
     decision exactly (the streaming-sink contract).
 
-    Execution shape (round 13): the steady cost of a delta probe is
-    job-SCHEDULING latency, not data — the r8 formulation paid ~9
-    sequential jobs per call and the r9 rework 6.  This one pays 4:
+    Execution shape: the steady cost of a delta probe is
+    job-SCHEDULING latency, not data.  This one makes 4 driver
+    round-trips.  Under AQE each shuffle stage of a collect is a Spark
+    job of its own, so on a 4-core local master a probe runs 10 jobs:
+    3 for step 1, 4 for step 2, 3 for step 3 and none for step 4.
+    ``append=True`` adds 4 more for the bands and docs writes, and the
+    caller's action on the returned plan runs its own:
 
     1. ONE bounded collect of the batch ids + doc-bucket hashes AND
        the banded probe rows (the r12 shape ALREADY round-tripped the
@@ -472,7 +480,8 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
        full scheduling round-trip on every probe).
     3. Texts of in-pair docs only (pruned corpus read + the pinned
        fresh batch, semi-joined against the local in-pair-id table).
-    4. The zero-shuffle local Jaccard verify
+    4. The local Jaccard verify, which Spark evaluates on the driver
+       over the pair frame's LocalRelation
        (:func:`_verify_pairs_local`, Spark's own shingle kernel);
        the corpus-wins decision is driver union-find
        (:func:`_corpus_wins_drops`).
@@ -494,7 +503,7 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
         return read_partitions(spark, index_path, column, values, table,
                                exclude_delta=exclude_delta)
 
-    # job 1: batch ids + doc-bucket hashes AND the banded probe in
+    # step 1: batch ids + doc-bucket hashes AND the banded probe in
     # one bounded collect (id rows ride with null band so docs whose
     # text normalizes to zero shingles still register as batch ids)
     j1 = (new_docs
@@ -527,7 +536,7 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
     probe_local = _local_probe_frame(spark, probe_rows, new_docs,
                                      id_col)
 
-    # job 2: seen ids (resume semantics — ids the index has already
+    # step 2: seen ids (resume semantics — ids the index has already
     # stored are not "new") and cross candidates in ONE collect; both
     # branches are partition-pruned index scans against broadcast
     # local tables.  The cross side is limit-bounded: past the local
@@ -607,7 +616,7 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
                 and len(in_pair_ids) <= LOCAL_VERIFY_MAX_DOCS):
             cand_ids = {a for a, b, _ in cross_pairs}
             dbkts = sorted({d for _, _, d in cross_pairs})
-            # job 3: texts of in-pair docs only — pruned corpus read
+            # step 3: texts of in-pair docs only — pruned corpus read
             # plus the cached batch, semi-joined against the local id
             # table
             if in_pair_ids:
@@ -625,8 +634,9 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
                     .collect()}
             else:
                 texts = {}
-            # job 4 (zero-shuffle): exact Jaccard on the local pair
-            # frame; decision via driver union-find
+            # step 4: exact Jaccard on the local pair frame (no job:
+            # Spark folds it into the LocalRelation on the driver);
+            # decision via driver union-find
             confirmed_pairs = _verify_pairs_local(
                 spark, pairs, texts, id_type, k, threshold)
             drops = _corpus_wins_drops(confirmed_pairs, cand_ids)

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.operators.decontam import _norm_tokens
-from trial_data_ingestion_spark.session import ensure_parallelism
+from trial_data_ingestion_spark.session import ensure_parallelism, local_frame
 
 UNK = "<unk>"
 #: sentence-start pseudo token so the first word is also conditioned
@@ -93,7 +93,7 @@ def fit_ngram_lm(docs: DataFrame, text_col: str = "text",
              .orderBy(F.desc("c"), F.asc("w")).limit(vocab_size)
              .select("w"))
     vocab = vocab.unionByName(
-        docs.sparkSession.createDataFrame([(BOS,), (UNK,)], "w string")
+        local_frame(docs.sparkSession, [(BOS,), (UNK,)], "w string")
     ).distinct().cache()
     n_vocab = vocab.count()
     bg = _doc_bigrams(ids, "__id", text_col, vocab=vocab)

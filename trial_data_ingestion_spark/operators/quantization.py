@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from trial_data_ingestion_spark.functions.vector import l2_norm_fixed, dot_fixed
+from trial_data_ingestion_spark.session import local_frame
 from trial_data_ingestion_spark.store import (
     layout_of, read_partitions, write_params,
 )
@@ -284,7 +285,8 @@ def topk_pq(embeddings: DataFrame, queries: DataFrame,
     # (broadcast the candidates — R * |q| rows), rescore exactly
     raw = embeddings.select(F.col(id_col).alias("__nid"),
                             F.col(vec_col).alias("__v"))
-    qdf = embeddings.sparkSession.createDataFrame(
+    qdf = local_frame(
+        embeddings.sparkSession,
         [(row[query_id_col], [float(x) for x in row[query_vec_col]])
          for row in query_rows],
         f"{query_id_col} {qid_type}, __qv array<double>")
@@ -330,7 +332,7 @@ def write_pq_index(embeddings: DataFrame, codebooks: PQCodebooks,
     spark = embeddings.sparkSession
     rows = [(s, c, [float(x) for x in codebooks.centroids[s][c]])
             for s in range(codebooks.m) for c in range(codebooks.k)]
-    (spark.createDataFrame(rows, "s int, c int, centroid array<double>")
+    (local_frame(spark, rows, "s int, c int, centroid array<double>")
           .withColumn("dim", F.lit(codebooks.dim))
           .withColumn("metric", F.lit(codebooks.metric))
           .coalesce(1)
@@ -445,7 +447,7 @@ def build_ivfpq(embeddings: DataFrame, dim: int, path: str,
               .parquet(path + "/centroids"))
     rows = [(s, c, [float(x) for x in cb.centroids[s][c]])
             for s in range(cb.m) for c in range(cb.k)]
-    (spark.createDataFrame(rows, "s int, c int, centroid array<double>")
+    (local_frame(spark, rows, "s int, c int, centroid array<double>")
           .withColumn("dim", F.lit(cb.dim))
           .withColumn("metric", F.lit(cb.metric))
           .coalesce(1)
@@ -557,7 +559,8 @@ def topk_ivfpq(spark, index_path: str, queries: DataFrame,
                .drop("__rn"))
     raw = stored.select(F.col(id_col).alias("__nid"),
                         F.col(vec_col).alias("__v"), "__nrm")
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(row[query_id_col], [float(x) for x in row[query_vec_col]])
          for row in query_rows],
         f"{query_id_col} {qid_type}, __qv array<double>")

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from trial_data_ingestion_spark.session import local_frame
+
 #: Denominator of the hash bucket: md5's first 15 hex chars give 60
 #: bits; reducing mod 1e6 keeps fractions to 4-6 significant digits
 #: honest while staying far from the 2^60 modulus bias floor.
@@ -421,8 +423,8 @@ def mixture_with_epochs(df: DataFrame, source_col: str,
         frac = e - n_full
         spec.append((s, n_full, int(round(frac * _BUCKETS))))
     spark = df.sparkSession
-    spec_df = F.broadcast(spark.createDataFrame(
-        spec, f"{source_col} string, __full int, __part long"))
+    spec_df = F.broadcast(local_frame(
+        spark, spec, f"{source_col} string, __full int, __part long"))
     # copy i < __full always survives; copy i == __full survives iff
     # the (seed, epoch)-salted bucket clears the partial threshold —
     # per-epoch salting keeps partial membership independent across

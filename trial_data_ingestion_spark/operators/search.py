@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from trial_data_ingestion_spark.operators.decontam import _norm_tokens
+from trial_data_ingestion_spark.session import local_frame
 
 DEFAULT_K1 = 1.2
 DEFAULT_B = 0.75
@@ -200,8 +201,8 @@ def hybrid_topk(docs: DataFrame, embeddings: DataFrame,
     lex_ranked = (lex.withColumn("rank", F.row_number().over(wlex))
                      .select(F.col("doc_id").alias(id_col), "rank"))
     spark = docs.sparkSession
-    qdf = spark.createDataFrame(
-        [("q0", [float(x) for x in query_vec])],
+    qdf = local_frame(
+        spark, [("q0", [float(x) for x in query_vec])],
         "query_id string, query_vec array<float>")
     vec_ranked = (topk_bruteforce(embeddings, qdf, id_col=vec_id_col,
                                   vec_col=vec_col, k=cpl, dim=dim,

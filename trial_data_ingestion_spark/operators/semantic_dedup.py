@@ -67,6 +67,7 @@ from trial_data_ingestion_spark.operators.similarity import (
     _srp_pairs_kernel,
     kmeans_centroids,
 )
+from trial_data_ingestion_spark.session import local_frame
 
 
 def _with_unit(df: DataFrame, vec_col: str, dim: int,
@@ -214,7 +215,8 @@ def sampled_kmeans_centroids(embeddings: DataFrame, dim: int,
     pts = np.array([r["__u"] for r in rows], dtype=np.float64)
     cent = _lloyd(pts, num_clusters, iters,
                   np.random.default_rng(seed))
-    return embeddings.sparkSession.createDataFrame(
+    return local_frame(
+        embeddings.sparkSession,
         [(i, [float(x) for x in c]) for i, c in enumerate(cent)],
         "cell_id int, centroid array<double>")
 

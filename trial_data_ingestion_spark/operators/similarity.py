@@ -30,7 +30,9 @@ from trial_data_ingestion_spark.functions.vector import (
     cosine_similarity, cosine_similarity_fixed, dot, dot_fixed,
     l2_distance, l2_distance_fixed, l2_norm_fixed,
 )
-from trial_data_ingestion_spark.session import ensure_parallelism
+from trial_data_ingestion_spark.session import (
+    ensure_parallelism, local_frame,
+)
 from trial_data_ingestion_spark.store import (
     layout_of, new_delta, read_params, read_partitions, reserve_delta,
     write_params,
@@ -215,8 +217,8 @@ def kmeans_centroids(embeddings: DataFrame, num_cells: int = 16,
     model = KMeans(k=num_cells, seed=seed, maxIter=max_iter).fit(ds)
     rows = [(i, [float(x) for x in center])
             for i, center in enumerate(model.clusterCenters())]
-    return embeddings.sparkSession.createDataFrame(
-        rows, "cell_id int, centroid array<double>")
+    return local_frame(embeddings.sparkSession, rows,
+                       "cell_id int, centroid array<double>")
 
 
 def first_id_centroids(embeddings: DataFrame, num_cells: int = 16,
@@ -778,8 +780,7 @@ def topk_ivf_over_index(spark, index_path: str, queries: DataFrame,
     # partition filter and the broadcast join side.
     probe_rows = probed.collect()
     probe_cells = sorted({r["cell_id"] for r in probe_rows})
-    probe_df = F.broadcast(spark.createDataFrame(probe_rows,
-                                                 probed.schema))
+    probe_df = F.broadcast(local_frame(spark, probe_rows, probed.schema))
     idx = read_partitions(spark, index_path, "cell_id", probe_cells)
     cand = (idx.join(probe_df, "cell_id")
                .where(F.col(id_col) != F.col(query_id_col)))
@@ -914,7 +915,7 @@ def topk_lsh_over_index(spark, index_path: str, queries: DataFrame,
          .drop("q_bucket", "probe"))
     q_rows = q.collect()
     buckets = sorted({r["bucket"] for r in q_rows})
-    q_df = F.broadcast(spark.createDataFrame(q_rows, q.schema))
+    q_df = F.broadcast(local_frame(spark, q_rows, q.schema))
     idx = read_partitions(spark, index_path, "bucket", buckets)
     scored = (idx.join(q_df, "bucket")
               .withColumn("score",

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.operators.bpe import word_frequencies
+from trial_data_ingestion_spark.session import local_frame
 
 __all__ = ["UnigramModel", "train_unigram", "viterbi_segment",
            "tokenize_unigram", "save_unigram", "load_unigram",
@@ -261,8 +262,7 @@ def tokenize_unigram(df: DataFrame, model: UnigramModel,
 
 def save_unigram(model: UnigramModel, spark, path: str) -> None:
     rows = [(p, lp, model.max_piece_len) for p, lp in model.pieces]
-    (spark.createDataFrame(rows,
-                           "piece string, logprob double, maxlen int")
+    (local_frame(spark, rows, "piece string, logprob double, maxlen int")
      .coalesce(1).write.mode("overwrite").parquet(path))
 
 

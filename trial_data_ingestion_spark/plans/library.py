@@ -16,6 +16,13 @@ Portability rules observed throughout (hard-won, keep them):
     Carter-Wegman family mod 2^31-1 with constants inlined into the
     oracle SQL, identical in both engines.
   * All computed columns aliased to the same name on both sides.
+
+Session conf: the package's one known write to the session conf is
+here.  :func:`_events` sets ``spark.sql.legacy.parquet.nanosAsLong``
+on the session and leaves it set: the driver contract
+(``__spark_entry__``) hands the queries a vanilla session, and
+without it Spark cannot read a TIMESTAMP(NANOS) ``ts`` column.  Every store writer and sink leaves the conf unchanged
+(``tests/test_store.py::test_store_writers_leave_session_conf_unchanged``).
 """
 
 from __future__ import annotations
@@ -30,6 +37,7 @@ from trial_data_ingestion_spark.functions.text import (
 from trial_data_ingestion_spark.functions.vector import cosine_similarity
 from trial_data_ingestion_spark.operators import chunking, dedup, textstats
 from trial_data_ingestion_spark.operators.similarity import topk_bruteforce
+from trial_data_ingestion_spark.session import local_frame
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -82,7 +90,11 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
       * tz-adjusted TIMESTAMP (isAdjustedToUTC): convert to NTZ at
         UTC wall time — DuckDB (TimeZone = UTC in this container)
         truncs/compares the same instants, and it keeps every graded
-        expression on the NTZ path regardless of Spark session tz."""
+        expression on the NTZ path regardless of Spark session tz.
+
+    Sets ``spark.sql.legacy.parquet.nanosAsLong`` on the session and
+    does not restore it (the package's one known session-conf write;
+    see the module docstring)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     ts_type = dict(raw.dtypes)["ts"]
@@ -610,7 +622,8 @@ def q39_range_join(spark, sf_dir):
     floor(qty/step) and equi-join instead).  Revenue at 100-unit grain
     for partial-sum stability (same rule as q37)."""
     li = _t(spark, sf_dir, "lineitem")
-    tiers = spark.createDataFrame(
+    tiers = local_frame(
+        spark,
         [("small", 0.0, 10.0), ("medium", 10.0, 25.0),
          ("large", 25.0, 100.0)], "tier string, lo double, hi double")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))

@@ -9,7 +9,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # Tuning constants mirrored from the reference's operating point
 # (BASELINE.md): Arrow batch ~ embed batch, shuffle partitions sized
@@ -50,6 +51,30 @@ def get_spark(app_name: str = "trial-data-ingestion-spark",
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """DataFrame over driver-side ``rows`` (tuples or Rows, in
+    ``schema`` order) under an explicit ``StructType`` or DDL schema.
+
+    The rows are typed into a ``pyarrow.Table`` and handed to Spark as
+    one, so the plan holds a ``LocalRelation``: scanning, broadcasting
+    or collecting it runs no Spark job.  ``createDataFrame`` over a
+    Python list would instead ``parallelize`` it into a Python RDD,
+    and every scan of that starts Python workers in a job of its own.
+    Every driver-built frame in the package enters a plan here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def ensure_parallelism(df):

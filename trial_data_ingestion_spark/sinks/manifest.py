@@ -33,6 +33,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from trial_data_ingestion_spark.session import local_frame
 
 #: canonical NULL sentinel inside the row serialization — a literal
 #: column value never produces it (0x01 bytes), so NULL vs "" vs
@@ -104,10 +107,29 @@ def read_manifest(spark: SparkSession, path: str,
     rows = payload["partitions"]
     if not rows:
         raise ValueError(f"manifest at {path} is empty")
-    df = spark.createDataFrame(rows)
-    return df.select(*partition_cols,
-                     F.col("n_rows").cast("long"),
-                     F.col("content_hash").cast("decimal(38,0)"))
+    schema = T.StructType(
+        [T.StructField(c, _json_type([r[c] for r in rows]))
+         for c in partition_cols]
+        + [T.StructField("n_rows", T.LongType()),
+           T.StructField("content_hash", T.StringType())])
+    df = local_frame(spark, [tuple(r[f.name] for f in schema.fields)
+                             for r in rows], schema)
+    return df.withColumn("content_hash",
+                         F.col("content_hash").cast("decimal(38,0)"))
+
+
+def _json_type(values: list) -> T.DataType:
+    """The Spark type of one partition column read back from the JSON
+    manifest: boolean, bigint or double when every value is one, else
+    string (``write_manifest`` writes other types with ``str``)."""
+    kinds = {type(v) for v in values if v is not None}
+    if kinds == {bool}:
+        return T.BooleanType()
+    if kinds == {int}:
+        return T.LongType()
+    if kinds and kinds <= {int, float}:
+        return T.DoubleType()
+    return T.StringType()
 
 
 def verify_manifest(df: DataFrame, partition_cols: list[str],

@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from trial_data_ingestion_spark.session import local_frame
+
 #: partition values this package writes raw ``dir=value`` paths for
 #: (shard deletes, delta-keyed appends).  Spark URL-escapes partition
 #: values on write, so a value needing escaping (space, ':', '/', …)
@@ -265,7 +267,8 @@ def read_partitions(spark, root: str, column: str, values,
     O(probed partitions x deltas) directories are listed and the
     columns and types are those of a full-root read (a numeric-looking
     delta stays a string).  When no directory matches (or ``values``
-    is empty) the frame is empty, of the recorded schema.  The literal
+    is empty) the frame is an empty :func:`local_frame` of the recorded
+    schema, so collecting it runs no job either.  The literal
     ``.where(col.isin(values))`` stays, so plans still show it in
     ``PartitionFilters``; with ``exclude_delta`` a literal
     ``delta != exclude_delta`` filter joins it.  Each call lists
@@ -287,7 +290,7 @@ def read_partitions(spark, root: str, column: str, values,
     dirs = sorted(h.getPath().toString() for h in hits or [])
     frame = (spark.read.schema(entry["schema"]).option("basePath", base)
              .parquet(*dirs) if dirs
-             else spark.createDataFrame([], entry["schema"]))
+             else local_frame(spark, [], entry["schema"]))
     frame = frame.where(F.col(column).isin(values))
     if exclude_delta is not None:
         frame = frame.where(F.col("delta") != F.lit(exclude_delta))
