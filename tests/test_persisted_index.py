@@ -71,8 +71,8 @@ def test_ivf_index_matches_q31_oracle(spark, tmp_path):
     cents = first_id_centroids(emb, 16)
     path = str(tmp_path / "ivf_index")
     write_ivf_index(emb, cents, path)
-    out = topk_ivf_over_index(spark, path, _queries(spark), cents,
-                              k=5, nprobe=4)
+    out = topk_ivf_over_index(spark, path, _queries(spark), k=5,
+                              nprobe=4)
     out = out.select("query_id", "neighbor_id",
                      F.round("score", 6).alias("score"),
                      F.col("rank").cast("long").alias("rank"))
@@ -97,15 +97,15 @@ def test_ivf_index_append_matches_full_rebuild(spark, tmp_path):
     inc_path = str(tmp_path / "ivf_inc")
     write_ivf_index(emb, cents, full_path)
     write_ivf_index(emb.where("vec_id % 2 = 0"), cents, inc_path)
-    append_to_ivf_index(emb.where("vec_id % 2 = 1"), cents, inc_path)
+    append_to_ivf_index(emb.where("vec_id % 2 = 1"), inc_path)
     q = _queries(spark)
     want = {(r["query_id"], r["neighbor_id"], r["rank"],
              round(r["score"], 9)) for r in
-            topk_ivf_over_index(spark, full_path, q, cents,
+            topk_ivf_over_index(spark, full_path, q,
                                 k=5, nprobe=4).collect()}
     got = {(r["query_id"], r["neighbor_id"], r["rank"],
             round(r["score"], 9)) for r in
-           topk_ivf_over_index(spark, inc_path, q, cents,
+           topk_ivf_over_index(spark, inc_path, q,
                                k=5, nprobe=4).collect()}
     assert got == want and len(got) > 0
     # appended rows landed in their own delta, same cell values (the
@@ -131,8 +131,8 @@ def test_ivf_index_prunes_to_probed_cells(spark, tmp_path):
     cents = kmeans_centroids(emb, num_cells=16, seed=42)
     path = str(tmp_path / "ivf_index")
     write_ivf_index(emb, cents, path, dim=64)
-    out = topk_ivf_over_index(spark, path, _queries(spark), cents,
-                              k=5, nprobe=3, dim=64)
+    out = topk_ivf_over_index(spark, path, _queries(spark), k=5,
+                              nprobe=3)
     plan = _plan(spark, out, "formatted")
     assert "PartitionFilters" in plan and "cell_id" in plan
     assert "CartesianProduct" not in plan
@@ -299,17 +299,17 @@ def test_ivf_append_retry_is_idempotent(spark, tmp_path):
     cents = first_id_centroids(emb, 16)
     path = str(tmp_path / "ivf_retry")
     write_ivf_index(emb.where("vec_id % 2 = 0"), cents, path)
-    append_to_ivf_index(emb.where("vec_id % 2 = 1"), cents, path,
+    append_to_ivf_index(emb.where("vec_id % 2 = 1"), path,
                         delta_id="b0001")
     n = spark.read.parquet(path).count()
     q = _queries(spark)
     want = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in
-            topk_ivf_over_index(spark, path, q, cents,
-                                k=5, nprobe=4).collect()}
-    append_to_ivf_index(emb.where("vec_id % 2 = 1"), cents, path,
+            topk_ivf_over_index(spark, path, q, k=5,
+                                nprobe=4).collect()}
+    append_to_ivf_index(emb.where("vec_id % 2 = 1"), path,
                         delta_id="b0001")
     assert spark.read.parquet(path).count() == n
     got = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in
-           topk_ivf_over_index(spark, path, q, cents,
-                               k=5, nprobe=4).collect()}
+           topk_ivf_over_index(spark, path, q, k=5,
+                               nprobe=4).collect()}
     assert got == want

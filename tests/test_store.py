@@ -6,7 +6,9 @@ including when nothing it names exists.  Params sidecars
 (``store.write_params``/``read_params``): every store records its
 build-time params in one ``_params.json`` at its root, read and
 written without a Spark job, and a missing or corrupt sidecar raises
-instead of defaulting."""
+instead of defaulting.  Models and index state the driver holds
+(merges, pieces, codebooks, centroids) live in the same sidecar, so
+loading them runs no Spark job either."""
 
 from __future__ import annotations
 
@@ -18,8 +20,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR_ORACLE
+from trial_data_ingestion_spark.session import local_frame
 from trial_data_ingestion_spark.store import (
-    read_params, read_partitions, write_params,
+    entry_frame, read_params, read_partitions, read_table, write_params,
 )
 
 
@@ -468,7 +471,7 @@ def layout_stores(spark, tmp_path_factory):
                     mode="append")
     cents = first_id_centroids(emb, num_cells=4)
     write_ivf_index(emb.where(old), cents, p["ivf"], dim=64)
-    append_to_ivf_index(emb.where(new), cents, p["ivf"], dim=64)
+    append_to_ivf_index(emb.where(new), p["ivf"])
     build_ivfpq(emb, dim=64, path=p["ivfpq"], num_cells=4, m=8, k=16,
                 sample_size=500, seed=7)
     ev = spark.createDataFrame([(i % 3, i) for i in range(60)],
@@ -501,12 +504,18 @@ _LAYOUTS = {
 def test_store_read_runs_no_job(spark, layout_stores, name):
     """Building a probe's frame runs 0 Spark jobs, for a probe that
     hits and for one that misses every partition: the schema comes
-    from the store's recorded layout, not from inference.  Both frames
-    carry the full-root read's columns and types.  The all-miss frame
-    is a LocalRelation: collecting it runs 0 jobs, and counting it
-    runs only the global aggregate's one-task result stage.  A
-    list-built empty frame, a Python RDD, ran 2 jobs of 9 tasks for
-    the count and 1 job of 4 Python-worker tasks for the collect."""
+    from the store's recorded layout, not from inference.  The
+    whole-table read (``store.read_table``) runs no inference job
+    either; its only jobs are Spark's parallel listings, one per
+    directory holding more partition directories than
+    ``parallelPartitionDiscovery.threshold`` (the SRP store's 64-bucket
+    deltas).  All three frames carry the full-root read's columns and
+    types, and the whole-table read holds every row of it.  The
+    all-miss frame is a LocalRelation: collecting it runs 0 jobs, and
+    counting it runs only the global aggregate's one-task result
+    stage.  A list-built empty frame, a Python RDD, ran 2 jobs of 9
+    tasks for the count and 1 job of 4 Python-worker tasks for the
+    collect."""
     import glob
 
     kind, table, column = _LAYOUTS[name]
@@ -525,6 +534,17 @@ def test_store_read_runs_no_job(spark, layout_stores, name):
         assert n == 0, f"{name} read of {values} ran {n} Spark jobs"
         assert frames[0].schema == full
         assert (frames[0].count() > 0) == hits_rows
+    wide = int(spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold"))
+    listings = sum(len([d for d in dirs if "=" in d]) > wide
+                   for _, dirs, _ in os.walk(base))
+    whole = []
+    n = _jobs(spark, f"table-{name}", lambda: whole.append(
+        read_table(spark, root, table)))
+    assert n == listings, f"{name} whole-table read ran {n} Spark " \
+        f"jobs, {listings} listings"
+    assert whole[0].schema == full
+    assert whole[0].count() == spark.read.parquet(base).count()
     rows = []
     assert _jobs(spark, f"collect-{name}",
                  lambda: rows.extend(frames[0].collect())) == 0
@@ -589,25 +609,208 @@ def test_upsert_with_other_n_buckets_raises(spark, tmp_path):
     assert read_upsert_table(spark, path).count() == 100
 
 
-def test_ivf_append_with_other_dim_raises(spark, tmp_path):
-    """An IVF index built with ``dim=None`` has no ``__nrm`` column;
-    an append with ``dim=64`` would add a delta that has one, leaving
-    two schemas under one root.  It raises, and the index keeps its
-    one delta."""
+def test_ivf_append_takes_dim_from_index(spark, tmp_path):
+    """An IVF index built with ``dim=None`` has no ``__nrm`` column.
+    An append reads ``dim`` from the index, so its delta has no
+    ``__nrm`` either: one schema under the root, and a query over
+    both deltas runs."""
     from trial_data_ingestion_spark.operators.similarity import (
-        append_to_ivf_index, first_id_centroids, write_ivf_index,
+        append_to_ivf_index, first_id_centroids, topk_ivf_over_index,
+        write_ivf_index,
     )
     emb = _emb(spark)
     cents = first_id_centroids(emb, num_cells=4)
     path = str(tmp_path / "ivf")
     write_ivf_index(emb.where("vec_id < 100"), cents, path)
-    with pytest.raises(ValueError, match="dim=None"):
-        append_to_ivf_index(emb.where("vec_id >= 100"), cents, path,
-                            dim=64)
+    append_to_ivf_index(emb.where("vec_id >= 100"), path, delta_id="d1")
     assert sorted(d for d in os.listdir(path) if "=" in d) \
-        == ["delta=base"]
-    assert "__nrm" not in spark.read.parquet(path).columns
+        == ["delta=base", "delta=d1"]
+    for delta in ("base", "d1"):
+        assert "__nrm" not in spark.read.parquet(
+            f"{path}/delta={delta}").columns
+    assert "__nrm" not in read_table(spark, path).columns
+    assert topk_ivf_over_index(spark, path, _one_query(spark),
+                               k=5).count() == 5
 
+
+def _ivfpq_state(spark, path, codes):
+    """(cell_id, pq_code) of each stored row, recomputed from the
+    unit vector with the centroids and codebooks the index recorded:
+    the nearest centroid, then each subspace's nearest code."""
+    import numpy as np
+
+    from trial_data_ingestion_spark.operators.quantization import (
+        read_pq_codebooks,
+    )
+    cb = read_pq_codebooks(spark, path)
+    cells = dict(read_params(spark, path)["centroids"]["rows"])
+    out = []
+    for r in codes:
+        v = np.asarray(r["embedding"], dtype=np.float64)
+        u = v / np.linalg.norm(v)
+        cid = min(cells, key=lambda c: float(np.sum((u - cells[c]) ** 2)))
+        res = (u - np.asarray(cells[cid])).reshape(cb.m, cb.dsub)
+        out.append((cid, [int(np.argmin(np.sum(
+            (cb.centroids[s] - res[s]) ** 2, axis=1))) for s in range(cb.m)]))
+    return out
+
+
+def _artifact(spark, kind, root, layout_stores):
+    """Save one artifact of ``kind`` under ``root``.  Returns its path,
+    the value saved, and a loader returning the value loaded in the
+    same form (frames are built and collected inside it)."""
+    import numpy as np
+
+    from trial_data_ingestion_spark.operators import (
+        bpe, clustering, quantization, unigram_lm,
+    )
+    path = str(root / kind)
+    if kind == "bpe":
+        model = bpe.BPEModel(merges=(("a", "b"), ("ab", "</w>"),
+                                     ("c", "ab</w>")))
+        bpe.save_bpe(model, spark, path)
+        return path, model, lambda: bpe.load_bpe(spark, path)
+    if kind.startswith("unigram"):
+        pieces = () if kind == "unigram-empty" else (
+            ("a", -1.25), ("ab", -0.5), ("b", -2.0 / 3.0))
+        model = unigram_lm.UnigramModel(pieces=pieces, max_piece_len=4)
+        unigram_lm.save_unigram(model, spark, path)
+        return path, model, lambda: unigram_lm.load_unigram(spark, path)
+    if kind == "centroids":
+        cents = local_frame(spark, [(0, [1.0, 0.1]), (1, [-0.3, 2.5])],
+                            "cell_id int, centroid array<float>")
+        clustering.write_centroids(cents, path)
+
+        def load():
+            frame = clustering.load_centroids(spark, path)
+            return frame.schema, frame.collect()
+        return path, (cents.schema, cents.collect()), load
+    if kind == "pq":
+        cb = quantization.PQCodebooks(
+            centroids=np.arange(16, dtype=np.float64).reshape(2, 4, 2) / 7,
+            dim=4, metric="cosine")
+        quantization.write_pq_index(local_frame(
+            spark, [(i, [float(i), 1.0, -1.0, 0.5]) for i in range(6)],
+            "vec_id long, embedding array<float>"), cb, path)
+
+        def load():
+            got = quantization.read_pq_codebooks(spark, path)
+            return got.centroids.tolist(), got.dim, got.metric
+        return path, (cb.centroids.tolist(), 4, "cosine"), load
+    path = layout_stores[0][kind]
+    if kind == "ivf":
+        from trial_data_ingestion_spark.operators.similarity import (
+            first_id_centroids,
+        )
+        cents = first_id_centroids(_emb(spark), num_cells=4)
+
+        def load():
+            frame = entry_frame(spark, read_params(spark, path)["centroids"])
+            return frame.schema, frame.collect()
+        return path, (cents.schema, cents.collect()), load
+    # ivfpq: the recorded centroids and codebooks re-derive every
+    # stored row's cell and code
+    codes = read_table(spark, path, "codes").collect()
+    return path, [(r["cell_id"], list(r["pq_code"])) for r in codes], \
+        lambda: _ivfpq_state(spark, path, codes)
+
+
+_ARTIFACTS = ["bpe", "centroids", "ivf", "ivfpq", "pq", "unigram",
+              "unigram-empty"]
+
+
+@pytest.mark.parametrize("kind", _ARTIFACTS)
+def test_artifact_round_trip_runs_no_job(spark, layout_stores, kind,
+                                         tmp_path):
+    """Every model and index records its driver-sized state (merges,
+    pieces, codebooks, centroids) in its ``_params.json``: the loaded
+    value equals the saved one, loading it runs 0 Spark jobs, and no
+    ``codebooks/`` or ``centroids/`` table is written.  An empty
+    unigram model keeps its ``max_piece_len`` (it reloaded as 8)."""
+    path, saved, load = _artifact(spark, kind, tmp_path, layout_stores)
+    loaded = []
+    n = _jobs(spark, f"load-{kind}", lambda: loaded.append(load()))
+    assert loaded[0] == saved
+    assert n == 0, f"loading {kind} ran {n} Spark jobs"
+    assert not {"codebooks", "centroids"} & set(os.listdir(path))
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+def test_index_without_recorded_centroids_raises(spark, layout_stores,
+                                                 kind, tmp_path):
+    """An IVF or IVF-PQ root whose sidecar records no centroids or
+    codebooks (the older format) is refused by its query, and an IVF
+    root by its append too."""
+    import json
+
+    from trial_data_ingestion_spark.operators.quantization import (
+        topk_ivfpq,
+    )
+    from trial_data_ingestion_spark.operators.similarity import (
+        append_to_ivf_index, topk_ivf_over_index,
+    )
+    path = str(tmp_path / kind)
+    shutil.copytree(layout_stores[0][kind], path)
+    with open(f"{path}/_params.json") as fh:
+        params = json.load(fh)
+    write_params(spark, path, {k: params[k] for k in ("dim", "layout")})
+    query = topk_ivf_over_index if kind == "ivf" else topk_ivfpq
+    with pytest.raises(ValueError, match="rebuild the store"):
+        query(spark, path, _one_query(spark), k=5)
+    if kind == "ivf":
+        with pytest.raises(ValueError, match="rebuild the store"):
+            append_to_ivf_index(_emb(spark).limit(3), path)
+
+
+def test_topk_ivfpq_builds_its_frame_with_no_job(spark, layout_stores):
+    """Over a local query frame, ``topk_ivfpq`` reads the codebooks
+    and centroids from the sidecar and the probed cells under the
+    recorded layout: building its frame runs 0 Spark jobs."""
+    from trial_data_ingestion_spark.operators.quantization import (
+        topk_ivfpq,
+    )
+    vec = _one_query(spark).collect()[0]["query_vec"]
+    qs = local_frame(spark, [(0, vec)],
+                     "query_id long, query_vec array<float>")
+    frames = []
+    n = _jobs(spark, "ivfpq-frame", lambda: frames.append(topk_ivfpq(
+        spark, layout_stores[0]["ivfpq"], qs, k=5, nprobe=2)))
+    assert n == 0, f"building the topk_ivfpq frame ran {n} Spark jobs"
+    assert frames[0].count() == 5
+
+
+_PACKAGE = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "trial_data_ingestion_spark")
+
+#: the modules that may read parquet by path: the store (under a
+#: recorded layout), the source readers, the compaction tool, the
+#: oracle query plans over the testdata tables, and the CLI
+_PARQUET_READERS = {"store.py", "sources/readers.py", "sinks/compaction.py",
+                    "plans/library.py", "cli.py"}
+
+
+def test_package_reads_parquet_only_where_allowed():
+    """No other package module calls ``.read.parquet(``: a store is
+    read under its recorded layout (``store.read_table``,
+    ``store.read_partitions``), and a model from its sidecar, so a
+    schema-inferring read cannot come back unnoticed."""
+    import ast
+    import pathlib
+
+    stray = []
+    for path in sorted(pathlib.Path(_PACKAGE).rglob("*.py")):
+        rel = path.relative_to(_PACKAGE).as_posix()
+        if rel in _PARQUET_READERS:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "parquet"
+                    and isinstance(node.func.value, ast.Attribute)
+                    and node.func.value.attr == "read"):
+                stray.append(f"{rel}:{node.lineno}")
+    assert not stray, "read stores with store.read_table or " \
+        "store.read_partitions: " + ", ".join(stray)
 
 def _analyzed(spark, col):
     return (spark.range(1).select(F.lit("a b c").alias("text"))

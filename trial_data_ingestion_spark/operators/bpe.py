@@ -35,7 +35,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from trial_data_ingestion_spark.session import local_frame
+from trial_data_ingestion_spark.store import read_params, write_params
 
 END = "</w>"
 
@@ -214,14 +214,16 @@ def tokenize_bpe(df: DataFrame, model: BPEModel,
 
 
 def save_bpe(model: BPEModel, spark, path: str) -> None:
-    rows = [(i, a, b) for i, (a, b) in enumerate(model.merges)]
-    (local_frame(spark, rows, "rank int, left string, right string")
-     .coalesce(1).write.mode("overwrite").parquet(path))
+    """Record the merge table, in rank order, as the ``_params.json``
+    of ``path`` (``store.write_params``: a driver-side file write, no
+    Spark job)."""
+    write_params(spark, path, {"merges": [list(m) for m in model.merges]})
 
 
 def load_bpe(spark, path: str) -> BPEModel:
-    rows = spark.read.parquet(path).orderBy("rank").collect()
-    return BPEModel(merges=tuple((r["left"], r["right"]) for r in rows))
+    """The model :func:`save_bpe` recorded at ``path`` (no Spark job)."""
+    return BPEModel(merges=tuple(
+        map(tuple, read_params(spark, path)["merges"])))
 
 
 def vocab_table(model: BPEModel, word_freqs: DataFrame | None = None

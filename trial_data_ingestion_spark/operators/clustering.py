@@ -39,6 +39,9 @@ from trial_data_ingestion_spark.operators.sampling import temperature_mixture
 from trial_data_ingestion_spark.operators.semantic_dedup import (
     sampled_kmeans_centroids,
 )
+from trial_data_ingestion_spark.store import (
+    entry_frame, frame_entry, read_params, recorded, write_params,
+)
 
 
 def _unit_literal(vec: list) -> list | None:
@@ -146,17 +149,21 @@ def write_centroids(centroids: DataFrame, path: str) -> None:
     """Persist a codebook (k rows) so future batches — and streaming
     micro-batches — assign against the SAME cells: stable cell_ids
     are the contract that makes profiles comparable across snapshots
-    (the incremental-index pattern: fit once, probe forever)."""
-    centroids.select("cell_id", "centroid").coalesce(1) \
-        .write.mode("overwrite").parquet(path)
+    (the incremental-index pattern: fit once, probe forever).  The
+    ``(cell_id, centroid)`` rows and their schema are recorded in the
+    ``_params.json`` of ``path`` (``store.frame_entry``): one collect
+    of ``centroids``, no Spark write; a refresh rewrites the file."""
+    write_params(centroids.sparkSession, path, {"centroids": frame_entry(
+        centroids.select("cell_id", "centroid"))})
 
 
 def load_centroids(spark, path: str) -> DataFrame:
-    df = spark.read.parquet(path)
-    missing = {"cell_id", "centroid"} - set(df.columns)
-    if missing:
-        raise ValueError(f"not a centroid store: missing {missing}")
-    return df
+    """The codebook :func:`write_centroids` recorded at ``path``, as a
+    local frame of the written schema (``array<float>`` centroids stay
+    float): loading and collecting it run no Spark job.  A path with
+    no recorded codebook raises."""
+    return entry_frame(spark, recorded(path, read_params(spark, path),
+                                       "centroids"))
 
 
 def cluster_drift_report(profile_old: DataFrame,

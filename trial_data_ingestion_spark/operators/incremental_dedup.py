@@ -64,8 +64,8 @@ from trial_data_ingestion_spark.operators.dedup import (
 from trial_data_ingestion_spark.operators.pins import PinScope
 from trial_data_ingestion_spark.session import local_frame
 from trial_data_ingestion_spark.store import (
-    layout_of, new_delta, read_params, read_partitions, reserve_delta,
-    stream_batch_keys, write_params, write_shard,
+    layout_of, new_delta, read_params, read_partitions, read_table,
+    reserve_delta, stream_batch_keys, write_params, write_shard,
 )
 
 #: candidate-pair sets at or below this size are Jaccard-verified on
@@ -942,12 +942,12 @@ def compact_minhash_index(spark, index_path: str, out_path: str) -> None:
         raise ValueError(
             "compact_minhash_index: out_path must differ from "
             "index_path (atomic swap by rename is the caller's step)")
-    bands = (spark.read.parquet(index_path + "/bands")
+    bands = (read_table(spark, index_path, "bands")
              .withColumn("delta", F.lit("base")))
     (bands.repartition("pbkt")
           .write.mode("overwrite").partitionBy("delta", "pbkt")
           .parquet(out_path + "/bands"))
-    docs = (spark.read.parquet(index_path + "/docs")
+    docs = (read_table(spark, index_path, "docs")
             .withColumn("delta", F.lit("base")))
     (docs.repartition("dbkt")
          .write.mode("overwrite").partitionBy("delta", "dbkt")

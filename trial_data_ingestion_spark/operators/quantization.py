@@ -29,9 +29,11 @@ Spark shape:
   (asymmetric-distance error is concentrated near the boundary, so
   refine at R = 4k recovers most of the recall gap).
 * **persist** — ``write_pq_index`` stores (id, code, vector) parquet
-  plus the codebooks as their own small parquet under the same root;
-  the re-query scan column-prunes to (id, code) — the vectors are
-  touched only by the refine join on the tiny candidate set.
+  under ``codes/`` and records the codebooks, ``dim`` and ``metric``
+  in the root's ``_params.json`` (``store.write_params``: loading
+  them runs no Spark job); the re-query scan column-prunes to (id,
+  code) — the vectors are touched only by the refine join on the
+  tiny candidate set.
 
 Cosine is served by normalizing both sides to unit length (L2 on the
 unit sphere is monotone with cosine: ``l2^2 = 2 - 2 cos``), then
@@ -51,7 +53,8 @@ from pyspark.sql.window import Window
 from trial_data_ingestion_spark.functions.vector import l2_norm_fixed, dot_fixed
 from trial_data_ingestion_spark.session import local_frame
 from trial_data_ingestion_spark.store import (
-    layout_of, read_partitions, write_params,
+    entry_frame, frame_entry, layout_of, read_params, read_partitions,
+    read_table, recorded, write_params,
 )
 
 
@@ -321,37 +324,38 @@ def topk_pq(embeddings: DataFrame, queries: DataFrame,
 # ---------------------------------------------------------------------------
 
 
+def _codebook_params(cb: PQCodebooks) -> dict:
+    """The sidecar entries of ``cb``: the ``(m, k, dsub)`` centroid
+    array as nested lists (float64 survives JSON exactly), ``dim`` and
+    ``metric``."""
+    return {"codebooks": cb.centroids.tolist(), "dim": cb.dim,
+            "metric": cb.metric}
+
+
 def write_pq_index(embeddings: DataFrame, codebooks: PQCodebooks,
                    path: str, id_col: str = "vec_id",
                    vec_col: str = "embedding") -> None:
-    """Persist the encoded corpus at ``path/codes`` and the codebooks
-    at ``path/codebooks`` (exploded to one row per (subspace, code) —
-    plain parquet, no pickle)."""
+    """Persist the encoded corpus at ``path/codes`` and record the
+    codebooks, ``dim``, ``metric`` and the codes' layout in the
+    ``_params.json`` of ``path`` (no pickle, no second table)."""
     enc = encode_pq(embeddings, codebooks, id_col, vec_col)
     enc.write.mode("overwrite").parquet(path + "/codes")
     spark = embeddings.sparkSession
-    rows = [(s, c, [float(x) for x in codebooks.centroids[s][c]])
-            for s in range(codebooks.m) for c in range(codebooks.k)]
-    (local_frame(spark, rows, "s int, c int, centroid array<double>")
-          .withColumn("dim", F.lit(codebooks.dim))
-          .withColumn("metric", F.lit(codebooks.metric))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(path + "/codebooks"))
+    write_params(spark, path, {**_codebook_params(codebooks),
+                               "layout": {"codes": layout_of(enc, [])}})
     # rebuild-over-existing: invalidate the cached file listing
     spark.catalog.refreshByPath(path + "/codes")
-    spark.catalog.refreshByPath(path + "/codebooks")
 
 
 def read_pq_codebooks(spark, path: str) -> PQCodebooks:
-    rows = spark.read.parquet(path + "/codebooks").collect()
-    m = 1 + max(r["s"] for r in rows)
-    k = 1 + max(r["c"] for r in rows)
-    dsub = len(rows[0]["centroid"])
-    cents = np.zeros((m, k, dsub), dtype=np.float64)
-    for r in rows:
-        cents[r["s"], r["c"]] = r["centroid"]
-    return PQCodebooks(centroids=cents, dim=rows[0]["dim"],
-                       metric=rows[0]["metric"])
+    """The codebooks a PQ or IVF-PQ index at ``path`` recorded (a
+    driver-side sidecar read, no Spark job); an index that records
+    none raises."""
+    params = read_params(spark, path)
+    return PQCodebooks(
+        centroids=np.asarray(recorded(path, params, "codebooks"),
+                             dtype=np.float64),
+        dim=params["dim"], metric=params["metric"])
 
 
 def topk_pq_over_index(spark, index_path: str, queries: DataFrame,
@@ -366,7 +370,7 @@ def topk_pq_over_index(spark, index_path: str, queries: DataFrame,
     construction; the ADC scan reads only (id, pq_code) (column
     pruning), the raw vectors are read only by the refine join."""
     cb = read_pq_codebooks(spark, index_path)
-    stored = spark.read.parquet(index_path + "/codes")
+    stored = read_table(spark, index_path, "codes")
     return topk_pq(stored, queries, cb, id_col=id_col, vec_col=vec_col,
                    query_id_col=query_id_col, query_vec_col=query_vec_col,
                    k=k, refine_factor=refine_factor, encoded=stored,
@@ -414,8 +418,10 @@ def build_ivfpq(embeddings: DataFrame, dim: int, path: str,
     3. PQ codebooks trained on a bounded residual sample (metric
        'l2' — residuals are not unit vectors);
     4. layout: (id, pq_code, raw vector, precomputed norm) parquet
-       partitioned by ``cell_id`` — one file per cell; centroids and
-       codebooks stored beside it.
+       partitioned by ``cell_id`` — one file per cell, under
+       ``codes/``; the coarse centroids, the codebooks, ``dim`` and
+       the layout are recorded in the ``_params.json`` of ``path``
+       (the same codebook entries as :func:`write_pq_index`).
 
     Residual coding (not raw-vector coding) is what makes PQ accurate
     inside a cell: residual magnitudes are ~cell radius, so the same
@@ -443,19 +449,10 @@ def build_ivfpq(embeddings: DataFrame, dim: int, path: str,
     (enc.repartition("cell_id")
         .write.mode("overwrite").partitionBy("cell_id")
         .parquet(path + "/codes"))
-    (centroids.coalesce(1).write.mode("overwrite")
-              .parquet(path + "/centroids"))
-    rows = [(s, c, [float(x) for x in cb.centroids[s][c]])
-            for s in range(cb.m) for c in range(cb.k)]
-    (local_frame(spark, rows, "s int, c int, centroid array<double>")
-          .withColumn("dim", F.lit(cb.dim))
-          .withColumn("metric", F.lit(cb.metric))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(path + "/codebooks"))
-    write_params(spark, path, {"dim": dim, "layout": {
-        "codes": layout_of(enc, ["cell_id"])}})
-    for sub in ("/codes", "/centroids", "/codebooks"):
-        spark.catalog.refreshByPath(path + sub)
+    write_params(spark, path, {
+        **_codebook_params(cb), "centroids": frame_entry(centroids),
+        "layout": {"codes": layout_of(enc, ["cell_id"])}})
+    spark.catalog.refreshByPath(path + "/codes")
 
 
 def topk_ivfpq(spark, index_path: str, queries: DataFrame,
@@ -468,7 +465,9 @@ def topk_ivfpq(spark, index_path: str, queries: DataFrame,
     """Cosine top-k over a :func:`build_ivfpq` layout.
 
     Per query: the ``nprobe`` nearest cells are found driver-side
-    against the tiny centroid table; the codes read lists and scans
+    against the centroids the index recorded (its ``_params.json``,
+    with the codebooks: building the frame over a local ``queries``
+    frame runs no Spark job); the codes read lists and scans
     only the probed ``cell_id`` directories
     (``store.read_partitions``; the literal filter shows as
     ``PartitionFilters``) and the ADC kernel reads just (id, cell,
@@ -479,12 +478,10 @@ def topk_ivfpq(spark, index_path: str, queries: DataFrame,
     import pandas as pd
 
     cb = read_pq_codebooks(spark, index_path)
-    cents = spark.read.parquet(index_path + "/centroids").collect()
-    cent_mat = np.array([r["centroid"] for r in
-                         sorted(cents, key=lambda r: r["cell_id"])],
-                        dtype=np.float64)
-    cell_ids = [r["cell_id"] for r in
-                sorted(cents, key=lambda r: r["cell_id"])]
+    cents = sorted(entry_frame(
+        spark, read_params(spark, index_path)["centroids"]).collect())
+    cent_mat = np.array([c for _, c in cents], dtype=np.float64)
+    cell_ids = [cid for cid, _ in cents]
     qid_type = queries.schema[query_id_col].dataType.simpleString()
     query_rows = queries.select(query_id_col, query_vec_col).collect()
     qmat = np.array([np.asarray(r[query_vec_col], dtype=np.float64)

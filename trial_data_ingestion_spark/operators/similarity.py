@@ -34,8 +34,8 @@ from trial_data_ingestion_spark.session import (
     ensure_parallelism, local_frame,
 )
 from trial_data_ingestion_spark.store import (
-    layout_of, new_delta, read_params, read_partitions, reserve_delta,
-    write_params,
+    entry_frame, frame_entry, layout_of, new_delta, read_params,
+    read_partitions, recorded, reserve_delta, write_params,
 )
 
 _METRICS = {
@@ -699,67 +699,78 @@ def write_ivf_index(embeddings: DataFrame, centroids: DataFrame,
     :func:`topk_ivf_over_index` needs to rescore without touching the
     original table.  ``centroids`` is required — pass
     :func:`kmeans_centroids` (production) or
-    :func:`first_id_centroids` (deterministic tests); reuse the SAME
-    centroid table at query time or probes will miss."""
-    _write_ivf(_nearest_cells(embeddings, centroids, vec_col, id_col, 1,
-                              dim), path, vec_col, dim, "base")
+    :func:`first_id_centroids` (deterministic tests).  It is collected
+    once and recorded, with ``dim``, in the index's ``_params.json``
+    (``store.frame_entry``): appends assign and queries probe with the
+    recorded centroids, so no caller can pass others."""
+    _write_ivf(embeddings, frame_entry(centroids), path, id_col, vec_col,
+               dim, "base")
 
 
-def append_to_ivf_index(new_embeddings: DataFrame, centroids: DataFrame,
-                        path: str, id_col: str = "vec_id",
+def append_to_ivf_index(new_embeddings: DataFrame, path: str,
+                        id_col: str = "vec_id",
                         vec_col: str = "embedding",
-                        dim: int | None = None,
                         delta_id: str | None = None) -> None:
     """Add a delta batch to a persisted :func:`write_ivf_index`
-    layout WITHOUT rebuilding: the batch assigns against the SAME
-    centroid table the index was built with (pass the same frame —
-    different centers would route probes to the wrong cells) and
-    appends into the per-cell partition directories.  Cost is
-    proportional to the batch; the standing index is never read or
-    shuffled — the incremental-dedup operating contract for ANN.
-    Recall drifts only as the data distribution drifts away from the
-    frozen centers; re-fit + rebuild on a schedule, like any IVF.
-    Caller dedups ids (the index is a layout, not a keyed store).
-    ``dim`` must be the one the index was built with (it decides the
-    ``__nrm`` column): another raises before anything is written.
+    layout WITHOUT rebuilding: the batch assigns against the centroids
+    and ``dim`` the index recorded at build time (different centers
+    would route probes to the wrong cells; another ``dim`` would
+    change the ``__nrm`` column) and appends into the per-cell
+    partition directories.  Cost is proportional to the batch; the
+    standing index is never read or shuffled — the incremental-dedup
+    operating contract for ANN.  Recall drifts only as the data
+    distribution drifts away from the frozen centers; re-fit +
+    rebuild on a schedule, like any IVF.  Caller dedups ids (the
+    index is a layout, not a keyed store).
 
     Rerun semantics (round 9): pass a stable ``delta_id`` and a
     whole-call retry is idempotent — the append deletes its own
     ``delta`` partition directory before writing.  Without one the
     delta is random and the append is at-most-once (don't retry)."""
-    _write_ivf(_nearest_cells(new_embeddings, centroids, vec_col, id_col,
-                              1, dim), path, vec_col, dim,
+    centroids, dim = _ivf_state(new_embeddings.sparkSession, path)
+    _write_ivf(new_embeddings, centroids, path, id_col, vec_col, dim,
                new_delta(delta_id), append=True)
 
 
-def _write_ivf(cells: DataFrame, path: str, vec_col: str,
-               dim: int | None, delta: str, append: bool = False) -> None:
-    """Write assigned ``cells`` as delta ``delta`` of the IVF layout at
-    ``path`` (partitioned by ``delta`` then ``cell_id``): a build
-    overwrites the root and records ``dim`` and the layout; an append
-    validates both first."""
-    spark = cells.sparkSession
+def _ivf_state(spark, path: str) -> tuple[dict, int | None]:
+    """The centroids entry and ``dim`` the IVF index at ``path``
+    recorded; an index that records no centroids raises."""
+    params = read_params(spark, path)
+    return recorded(path, params, "centroids"), params["dim"]
+
+
+def _write_ivf(embeddings: DataFrame, centroids: dict, path: str,
+               id_col: str, vec_col: str, dim: int | None, delta: str,
+               append: bool = False) -> None:
+    """Assign ``embeddings`` to the ``centroids`` entry and write them as
+    delta ``delta`` of the IVF layout at ``path`` (partitioned by
+    ``delta`` then ``cell_id``): a build overwrites the root and
+    records the centroids, ``dim`` and the layout; an append validates
+    the layout first."""
+    spark = embeddings.sparkSession
+    cells = _nearest_cells(embeddings, entry_frame(spark, centroids),
+                           vec_col, id_col, 1, dim)
     if dim is not None:
         cells = cells.withColumn("__nrm", l2_norm_fixed(vec_col, dim))
     out = cells.withColumn("delta", F.lit(delta))
     tables = {"": layout_of(out, ["delta", "cell_id"])}
     if append:
-        reserve_delta(spark, path, delta, tables, {"dim": dim})
+        reserve_delta(spark, path, delta, tables)
     (out.write.mode("append" if append else "overwrite")
         .partitionBy("delta", "cell_id").parquet(path))
     if not append:
-        write_params(spark, path, {"dim": dim, "layout": tables})
+        write_params(spark, path, {"dim": dim, "centroids": centroids,
+                                   "layout": tables})
     spark.catalog.refreshByPath(path)
 
 
 def topk_ivf_over_index(spark, index_path: str, queries: DataFrame,
-                        centroids: DataFrame,
                         id_col: str = "vec_id", vec_col: str = "embedding",
                         query_id_col: str = "query_id",
                         query_vec_col: str = "query_vec",
-                        k: int = 10, nprobe: int = 4,
-                        dim: int | None = None) -> DataFrame:
-    """IVF top-k over a persisted :func:`write_ivf_index` layout.
+                        k: int = 10, nprobe: int = 4) -> DataFrame:
+    """IVF top-k over a persisted :func:`write_ivf_index` layout, with
+    the centroids and ``dim`` the index recorded at build time.
 
     The query batch is small by definition, so its ``nprobe`` nearest
     cells are computed in a tiny driver-side job and the distinct
@@ -771,8 +782,9 @@ def topk_ivf_over_index(spark, index_path: str, queries: DataFrame,
     time); the only join is a broadcast equi-join on ``cell_id``
     against the probe rows.  Identical results to :func:`topk_ivf`
     with the same centroids, by construction."""
-    probed = _nearest_cells(queries, centroids, query_vec_col,
-                            query_id_col, nprobe, dim)
+    centroids, dim = _ivf_state(spark, index_path)
+    probed = _nearest_cells(queries, entry_frame(spark, centroids),
+                            query_vec_col, query_id_col, nprobe, dim)
     if dim is not None:
         probed = probed.withColumn("__qnrm",
                                    l2_norm_fixed(query_vec_col, dim))

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.store import (
     check_partition_value, layout_of, open_store, read_partitions,
-    stream_batch_keys, write_shard,
+    read_table, stream_batch_keys, write_shard,
 )
 
 #: relative standard error of an lgK-configured HLL sketch
@@ -128,8 +128,9 @@ def merged_distinct(spark: SparkSession, path: str,
     union touches a few KB per (group, shard), never the corpus.
     ``shards`` restricts the rollup (e.g. a trailing window) and
     then only those shards' directories are listed and read
-    (``store.read_partitions``); None merges everything."""
-    t = (spark.read.parquet(path) if shards is None
+    (``store.read_partitions``); None merges everything
+    (``store.read_table``)."""
+    t = (read_table(spark, path) if shards is None
          else read_partitions(spark, path, "shard", shards))
     return (t.groupBy(*group_cols)
             .agg(F.hll_sketch_estimate(

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.operators.bpe import word_frequencies
-from trial_data_ingestion_spark.session import local_frame
+from trial_data_ingestion_spark.store import read_params, write_params
 
 __all__ = ["UnigramModel", "train_unigram", "viterbi_segment",
            "tokenize_unigram", "save_unigram", "load_unigram",
@@ -261,15 +261,16 @@ def tokenize_unigram(df: DataFrame, model: UnigramModel,
 
 
 def save_unigram(model: UnigramModel, spark, path: str) -> None:
-    rows = [(p, lp, model.max_piece_len) for p, lp in model.pieces]
-    (local_frame(spark, rows, "piece string, logprob double, maxlen int")
-     .coalesce(1).write.mode("overwrite").parquet(path))
+    """Record the pieces and ``max_piece_len`` (once, so a model with
+    no pieces keeps it) as the ``_params.json`` of ``path``
+    (``store.write_params``: no Spark job)."""
+    write_params(spark, path, {"pieces": [list(p) for p in model.pieces],
+                               "max_piece_len": model.max_piece_len})
 
 
 def load_unigram(spark, path: str) -> UnigramModel:
-    rows = spark.read.parquet(path).collect()
-    if not rows:
-        return UnigramModel(pieces=(), max_piece_len=8)
-    return UnigramModel(
-        pieces=tuple(sorted((r["piece"], r["logprob"]) for r in rows)),
-        max_piece_len=rows[0]["maxlen"])
+    """The model :func:`save_unigram` recorded at ``path`` (no Spark
+    job)."""
+    params = read_params(spark, path)
+    return UnigramModel(pieces=tuple(map(tuple, params["pieces"])),
+                        max_piece_len=params["max_piece_len"])

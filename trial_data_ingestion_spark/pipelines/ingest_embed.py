@@ -29,7 +29,7 @@ from trial_data_ingestion_spark.operators.chunking import (
 from trial_data_ingestion_spark.operators.embedding import (
     E5_PREFIX, embed_text, resolve_backend,
 )
-from trial_data_ingestion_spark.sinks import upsert_parquet
+from trial_data_ingestion_spark.sinks import read_upsert_table, upsert_parquet
 
 
 @dataclass
@@ -92,7 +92,8 @@ def run_ingest_and_embed(spark: SparkSession, records: DataFrame,
                          store_path: str,
                          cfg: Optional[RunConfig] = None) -> DataFrame:
     """Full pipeline; writes the vector table and returns the lazy
-    embedded-chunks DataFrame (re-read from the store for stability)."""
+    embedded-chunks DataFrame (re-read from the store for stability,
+    under its recorded schema: ``sinks.read_upsert_table``)."""
     cfg = cfg or RunConfig()
     chunks = build_chunks(records, cfg)
     factory = resolve_backend(cfg.embed_backend, dim=cfg.embed_dim) \
@@ -101,4 +102,4 @@ def run_ingest_and_embed(spark: SparkSession, records: DataFrame,
                           prefix=E5_PREFIX if cfg.e5_prefix else None)
     upsert_parquet(spark, embedded, store_path, key="chunk_id",
                    n_buckets=cfg.upsert_buckets)
-    return spark.read.parquet(store_path).drop("__bucket")
+    return read_upsert_table(spark, store_path)

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.store import (
-    layout_of, open_store, read_partitions,
+    layout_of, open_store, read_partitions, read_table,
 )
 
 
@@ -136,5 +136,6 @@ def write_bucketed(df: DataFrame, table: str, key: str,
 
 
 def read_upsert_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read back an upsert table without the bucketing column."""
-    return spark.read.parquet(path).drop("__bucket")
+    """Read back an upsert table, under its recorded schema, without
+    the bucketing column."""
+    return read_table(spark, path).drop("__bucket")

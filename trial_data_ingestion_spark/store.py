@@ -1,6 +1,7 @@
-"""The one contract every persisted, partition-keyed store follows
-(the MinHash, SRP, IVF, IVF-PQ, line, perceptual-hash and HLL
-layouts, the upsert table, and the streaming sinks' output shards):
+"""The one contract every persisted store follows (the MinHash, SRP,
+IVF, PQ, IVF-PQ, line, perceptual-hash and HLL layouts, the upsert
+table, the streaming sinks' output shards, and the trained models:
+BPE merges, unigram pieces, clustering codebooks):
 
 * **params sidecar** — a store's build-time parameters AND its
   ``layout`` live in one ``_params.json`` file at its root, written
@@ -9,12 +10,21 @@ layouts, the upsert table, and the streaming sinks' output shards):
   (with ``expect=`` to validate a caller's values, ``layout=`` to
   validate the frames an append is about to write) before any probe
   or append;
+* **driver-sized state** — what the driver already holds (a model's
+  merge table or pieces, PQ codebooks, the centroids an IVF or
+  IVF-PQ index assigns with) is recorded in the sidecar too, never
+  as a Spark-written table: a driver frame as :func:`frame_entry`
+  (its DDL and rows), read back as a local frame by
+  :func:`entry_frame`.  A model is a root holding only its sidecar:
+  loading one runs no Spark job, and saving one none beyond the
+  collect of a frame it records;
 * **recorded layout** — the writer that decides a layout records it
   once (a build, or :func:`open_store` for a store its first write
   builds): for each sub-table (``""`` for the root, or ``bands``,
   ``docs``, ``lines``, ``codes``) the schema a full-root read returns
   and the ``partition_by`` column order (:func:`layout_of`).  Readers
-  never infer or spell a schema;
+  never infer or spell a schema: :func:`read_table` reads a whole
+  sub-table, :func:`read_partitions` the partitions a probe names;
 * **keyed delta append** — :func:`new_delta` names the append's
   ``delta`` (the caller's id or a random one) and
   :func:`reserve_delta` validates the append, then deletes that
@@ -24,13 +34,12 @@ layouts, the upsert table, and the streaming sinks' output shards):
   micro-batch leaves its output exactly once;
 * **stream batch keys** — :func:`stream_batch_keys` names a
   ``foreachBatch`` sink's output shard and store delta, so every
-  store-backed sink replays and restarts the same way;
-* **pruned probe** — :func:`read_partitions` lists and reads only
-  the partitions a probe names, under the recorded layout.
+  store-backed sink replays and restarts the same way.
 
-The ``layout`` is an on-disk format break: a store written before it
-is refused by its first probe or append ("rebuild the store"), and no
-reader for the older layouts is kept.
+The ``layout`` and the recorded driver state are on-disk format
+breaks: a store, index or model written before them is refused by
+its first load, probe or append ("rebuild the store"), and no reader
+for the older layouts is kept.
 """
 
 from __future__ import annotations
@@ -143,12 +152,28 @@ def _sidecar(spark, root: str) -> dict:
     return params
 
 
-def _recorded_layout(root: str, params: dict) -> dict:
-    if "layout" not in params:
-        raise ValueError(f"{root} records no layout in its params "
+def recorded(root: str, params: dict, key: str):
+    """``params[key]``, where ``params`` came from the sidecar of
+    ``root``; a sidecar that lacks ``key`` was written by an older
+    layout, so it raises ("rebuild the store")."""
+    if key not in params:
+        raise ValueError(f"{root} records no {key} in its params "
                          "sidecar: written by an older layout "
                          "(rebuild the store)")
-    return params["layout"]
+    return params[key]
+
+
+def frame_entry(df: DataFrame) -> dict:
+    """A driver-sized frame as a sidecar entry: its schema as DDL and
+    its rows (one collect; none when ``df`` is a local frame)."""
+    return {"schema": df.schema.toDDL(),
+            "rows": [list(r) for r in df.collect()]}
+
+
+def entry_frame(spark, entry: dict) -> DataFrame:
+    """The :func:`local_frame` a :func:`frame_entry` recorded: same
+    rows, same column types; building or collecting it runs no job."""
+    return local_frame(spark, entry["rows"], entry["schema"])
 
 
 def read_params(spark, root: str, expect: dict | None = None,
@@ -173,12 +198,12 @@ def read_params(spark, root: str, expect: dict | None = None,
             f"{show(expect)} (stored params are fixed at build time: "
             "rebuild to resize)")
     if layout is not None:
-        recorded = _recorded_layout(root, params)
+        stored = recorded(root, params, "layout")
         for table, entry in layout.items():
-            if recorded.get(table) != entry:
+            if stored.get(table) != entry:
                 raise ValueError(
                     f"{root} stores table {table!r} as "
-                    f"{recorded.get(table)}, caller writes {entry} (a "
+                    f"{stored.get(table)}, caller writes {entry} (a "
                     "store's layout is fixed at build time)")
     return {k: v for k, v in params.items() if k != "layout"}
 
@@ -278,7 +303,7 @@ def read_partitions(spark, root: str, column: str, values,
     ``values`` must render as their directory names (ints, or
     :func:`check_partition_value`-safe strings)."""
     root = root.rstrip("/")
-    entry = _recorded_layout(root, _sidecar(spark, root))[table]
+    entry = recorded(root, _sidecar(spark, root), "layout")[table]
     base = f"{root}/{table}".rstrip("/")
     values = sorted({v for v in values if v is not None})
     wanted = ",".join(str(v) for v in values)
@@ -296,3 +321,17 @@ def read_partitions(spark, root: str, column: str, values,
         frame = frame.where(F.col("delta") != F.lit(exclude_delta))
     return frame
 
+
+def read_table(spark, root: str, table: str = "") -> DataFrame:
+    """Every row of sub-table ``table`` of the store at ``root``: the
+    full-root read, under the recorded layout's schema, so building it
+    runs no schema-inference job (Spark still lists the partition
+    directories, in one parallel job past
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` of them
+    at one level).  The columns and types are those
+    :func:`read_partitions` returns.  A store without a recorded
+    layout raises (rebuild it)."""
+    root = root.rstrip("/")
+    entry = recorded(root, _sidecar(spark, root), "layout")[table]
+    return spark.read.schema(entry["schema"]).parquet(
+        f"{root}/{table}".rstrip("/"))

@@ -224,7 +224,9 @@ def clustered_document_sink(embeddings: DataFrame, centroid_path: str,
     codebook every micro-batch: a codebook refresh (periodic re-fit
     over the grown corpus, written with
     ``clustering.write_centroids``) takes effect without a stream
-    restart.  For a fixed codebook the zero-overhead path is calling
+    restart.  The reload reads the codebook's ``_params.json`` on the
+    driver into a local frame, so it adds no Spark job to the batch.
+    For a fixed codebook the zero-overhead path is calling
     ``clustering.cluster_documents`` directly on the stream —
     assignment is a stateless Arrow kernel, and the centroids are
     then pinned at plan time for the stream's lifetime.
