@@ -272,7 +272,8 @@ def test_clustered_document_sink_reloads_codebook(toy, spark, tmp_path):
         clustered_document_sink,
     )
     stream = spark.readStream.schema(df.schema).parquet(src)
-    writer = clustered_document_sink(stream, cpath, out, dim=4)
+    writer = stream.writeStream.foreachBatch(
+        clustered_document_sink(cpath, out, dim=4))
     q = writer.option("checkpointLocation", str(tmp_path / "ck")) \
         .trigger(availableNow=True).start()
     q.awaitTermination(120)
@@ -285,9 +286,9 @@ def test_clustered_document_sink_reloads_codebook(toy, spark, tmp_path):
                                "centroid")
     clustering.write_centroids(swapped, cpath)
     df.where("vec_id >= 4").write.mode("append").parquet(src)
-    q = clustered_document_sink(
-        spark.readStream.schema(df.schema).parquet(src), cpath, out,
-        dim=4).option("checkpointLocation", str(tmp_path / "ck")) \
+    q = spark.readStream.schema(df.schema).parquet(src).writeStream \
+        .foreachBatch(clustered_document_sink(cpath, out, dim=4)) \
+        .option("checkpointLocation", str(tmp_path / "ck")) \
         .trigger(availableNow=True).start()
     q.awaitTermination(120)
     got2 = {r["vec_id"]: r["cell_id"] for r in

@@ -6,11 +6,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests import sink_cases
 from trial_data_ingestion_spark.operators.dedup import dedup_minhash
 from trial_data_ingestion_spark.operators.incremental_dedup import (
     dedup_minhash_incremental, write_minhash_index,
 )
-from trial_data_ingestion_spark.store import read_params
+from trial_data_ingestion_spark.store import new_delta, read_params
 
 THRESH = 0.6
 
@@ -90,7 +91,7 @@ def test_append_extends_index(spark, tmp_path, docs, split):
     path = str(tmp_path / "idx2")
     write_minhash_index(corpus, path, num_buckets=16)
     survivors = dedup_minhash_incremental(spark, batch, path,
-                                          threshold=THRESH, append=True)
+                                          threshold=THRESH, delta=new_delta())
     assert survivors.count() > 0
     rerun = dedup_minhash_incremental(spark, batch, path,
                                       threshold=THRESH)
@@ -166,7 +167,7 @@ def test_embedding_incremental_append_then_rerun_is_noop(spark, emb,
     write_srp_index(corpus, path, dim=DIM)
     first = embedding_near_dups_incremental(spark, batch, path, DIM,
                                             threshold=EMB_THRESH,
-                                            append=True)
+                                            delta=new_delta())
     assert first.count() > 0
     rerun = embedding_near_dups_incremental(spark, batch, path, DIM,
                                             threshold=EMB_THRESH)
@@ -191,9 +192,9 @@ def test_compact_minhash_index(spark, docs, split, tmp_path):
     half = batch.where(F.col("doc_id") < 400)
     rest = batch.where(F.col("doc_id") >= 400)
     dedup_minhash_incremental(spark, half, path, threshold=THRESH,
-                              append=True)
+                              delta=new_delta())
     dedup_minhash_incremental(spark, rest, path, threshold=THRESH,
-                              append=True)
+                              delta=new_delta())
     # fragmentation now shows as one delta directory per append (the
     # r9 retryable-append layout): count files per pbkt ACROSS deltas
     frag_counts = Counter(
@@ -236,7 +237,7 @@ def test_compact_minhash_index(spark, docs, split, tmp_path):
 @pytest.mark.slow
 def test_embedding_incremental_append_preserves_corpus(spark, emb,
                                                        tmp_path):
-    """Round-8 bug fix: append=True must APPEND the batch into the
+    """Round-8 bug fix: an append must APPEND the batch into the
     bucket layout — the old code called write_srp_index in overwrite
     mode, which dropped the corpus rows (the rerun-noop test couldn't
     see it because the seen-filter masked the loss).  After appending
@@ -254,7 +255,7 @@ def test_embedding_incremental_append_preserves_corpus(spark, emb,
     write_srp_index(corpus, path, dim=DIM)
     n_corpus_rows = spark.read.parquet(path).count()
     embedding_near_dups_incremental(spark, batch, path, DIM,
-                                    threshold=EMB_THRESH, append=True)
+                                    threshold=EMB_THRESH, delta=new_delta())
     # the layout gained the batch and kept every corpus row
     assert spark.read.parquet(path).count() \
         == n_corpus_rows + batch.count()
@@ -324,11 +325,11 @@ def test_incremental_paths_release_caches(spark, docs, emb, split,
 
     spark.catalog.clearCache()
     out = dedup_minhash_incremental(spark, batch, mh_path,
-                                    threshold=THRESH, append=True)
+                                    threshold=THRESH, delta=new_delta())
     assert out.count() > 0
     out2 = embedding_near_dups_incremental(
         spark, emb.where(F.col("vec_id") >= 300), srp_path, DIM,
-        threshold=EMB_THRESH, append=True)
+        threshold=EMB_THRESH, delta=new_delta())
     assert out2.count() > 0
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     # restore the module fixtures' caches for later tests
@@ -356,41 +357,28 @@ def test_pin_scope_structural_release(spark):
         scope.append(df)
 
 
-def test_minhash_append_retry_is_idempotent(spark, docs, split,
-                                            tmp_path):
-    """VERDICT r9 item 4: a whole-call retry of a delta-keyed append
-    must not double-append — the delta overwrites its own partitions.
-    A replay with exclude_delta reproduces the original decision."""
-    from trial_data_ingestion_spark.operators.incremental_dedup import (
-        write_minhash_index,
-    )
-    corpus, batch = split
-    path = str(tmp_path / "retryidx")
-    write_minhash_index(corpus, path, num_buckets=16)
-
-    first = {r["doc_id"] for r in dedup_minhash_incremental(
-        spark, batch, path, threshold=THRESH, append=True,
-        delta_id="b0001").collect()}
+@pytest.mark.parametrize("kind", sink_cases.OPERATORS)
+def test_minhash_append_retry_is_idempotent(spark, tmp_path, kind):
+    """VERDICT r9 item 4, for each incremental operator: a whole-call
+    retry with the same ``delta`` repeats its decision and does not
+    double-append — the probe leaves that delta out, and the append
+    overwrites it.  (With the append's id and the probe's exclusion
+    as separate arguments, a MinHash retry that named only the id
+    kept 0 of its 37 survivors.)  Unsafe delta ids are refused."""
+    path = str(tmp_path / "store")
+    sink_cases.build_store(spark, kind, path)
+    batch = sink_cases.first_batch(spark, kind)
+    first = sink_cases.rows(sink_cases.probe(spark, kind, batch, path,
+                                             "b0001"))
     assert first
-    bands_n = spark.read.parquet(path + "/bands").count()
-    docs_n = spark.read.parquet(path + "/docs").count()
-
-    # whole-call retry: same delta_id, its own delta excluded from
-    # the probe (the post-crash rerun / streaming replay shape)
-    replay = {r["doc_id"] for r in dedup_minhash_incremental(
-        spark, batch, path, threshold=THRESH, append=True,
-        delta_id="b0001", exclude_delta="b0001").collect()}
-    assert replay == first
-    assert spark.read.parquet(path + "/bands").count() == bands_n
-    assert spark.read.parquet(path + "/docs").count() == docs_n
-    # the index holds each batch doc exactly once
-    dup_ids = (spark.read.parquet(path + "/docs")
-               .groupBy("doc").count().where("count > 1").count())
-    assert dup_ids == 0
-    # unsafe delta ids are rejected up front
+    stored = sink_cases.store_rows(spark, kind, path)
+    assert "b0001" in sink_cases.deltas(spark, kind, path)
+    retry = sink_cases.rows(sink_cases.probe(spark, kind, batch, path,
+                                             "b0001"))
+    assert retry == first
+    assert sink_cases.store_rows(spark, kind, path) == stored
     with pytest.raises(ValueError, match="safe partition value"):
-        write_minhash_index(batch, path, mode="append",
-                            delta_id="a b/c")
+        sink_cases.probe(spark, kind, batch, path, "a b/c")
 
 
 def test_srp_append_retry_is_idempotent(spark, emb, tmp_path):

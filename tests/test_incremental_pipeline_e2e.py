@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR_ORACLE
+from trial_data_ingestion_spark.store import new_delta
 
 
 @pytest.mark.slow
@@ -45,7 +46,7 @@ def test_incremental_pipeline_end_to_end(spark, tmp_path):
     # ---- delta: near-dedup vs the store, then incremental curation ---
     fresh = dedup_minhash_incremental(
         spark, delta.select("doc_id", "text"), mh_path,
-        threshold=0.6, append=True)
+        threshold=0.6, delta=new_delta())
     n_fresh = fresh.count()
     assert 0 < n_fresh <= delta.count()
     delta_kept = delta.join(fresh.select("doc_id"), "doc_id", "left_semi")

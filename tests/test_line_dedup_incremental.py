@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
+from trial_data_ingestion_spark.store import new_delta
 
 
 def _lined(spark, lo, hi, words=6):
@@ -60,7 +61,8 @@ def test_incremental_append_then_rerun_is_noop(spark, tmp_path):
     batch = _lined(spark, 100, 160)
     idx = str(tmp_path / "lidx")
     write_line_index(corpus, idx, min_chars=10)
-    line_dedup_incremental(spark, batch, idx, append=True).collect()
+    line_dedup_incremental(spark, batch, idx,
+                           delta=new_delta()).collect()
     rerun = line_dedup_incremental(spark, batch, idx).collect()
     for r in rerun:
         surviving_eligible = [

@@ -14,6 +14,7 @@ from trial_data_ingestion_spark.multimodal.phash import (
     _band_specs, ahash64, attach_phash, dedup_images, dhash64,
     image_hasher, phash_near_dups,
 )
+from trial_data_ingestion_spark.store import new_delta
 
 
 def _gradient(w=32, h=32, slope=8, noise=0, seed=0):
@@ -269,7 +270,7 @@ def test_dedup_media_incremental_parity_and_resume(spark, tmp_path):
 
     # append, then re-run: every id is now seen -> no-op
     survivors = dedup_media_incremental(spark, batch, path,
-                                        image_hasher, append=True)
+                                        image_hasher, delta=new_delta())
     assert sorted(r.media_id for r in survivors.collect()) == want
     rerun = dedup_media_incremental(spark, batch, path, image_hasher)
     assert rerun.count() == 0

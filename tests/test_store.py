@@ -19,6 +19,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from tests import sink_cases
 from tests.conftest import SF_DIR_ORACLE
 from trial_data_ingestion_spark.session import local_frame
 from trial_data_ingestion_spark.store import (
@@ -376,8 +377,7 @@ def test_phash_store_without_delta_level_refuses_append(spark, tmp_path):
                                   "media_id string, media binary")
     with pytest.raises(ValueError, match="rebuild the store"):
         dedup_media_incremental(spark, media, path, image_hasher,
-                                append=True, delta_id="batch-000000000",
-                                exclude_delta="batch-000000000")
+                                delta="batch-000000000")
     assert {sub: sorted(os.listdir(f"{path}/{sub}"))
             for sub in ("bands", "docs")} == before
 
@@ -428,7 +428,9 @@ def test_params_io_runs_no_job_and_srp_probe_stays_lean(spark, stores,
 def layout_stores(spark, tmp_path_factory):
     """One small store of each of the 8 kinds, each built and then
     appended to (a second shard or upsert for HLL and upsert), with
-    the session conf read before and after all those writes."""
+    the session conf read before and after all those writes and one
+    micro-batch of each of the six ``foreachBatch`` sinks (over stores
+    of their own under ``sinks/``)."""
     from trial_data_ingestion_spark.multimodal.phash import (
         write_phash_index,
     )
@@ -482,6 +484,11 @@ def layout_stores(spark, tmp_path_factory):
                                  "id long, v string")
     upsert_parquet(spark, rows.where("id < 30"), p["upsert"], "id", 8)
     upsert_parquet(spark, rows.where("id >= 20"), p["upsert"], "id", 8)
+    for kind in sink_cases.SINKS:
+        store, out = str(root / "sinks" / kind), str(root / "sinks" / "out")
+        sink_cases.build_store(spark, kind, store)
+        sink_cases.sink(kind, store, f"{out}-{kind}")(
+            sink_cases.first_batch(spark, kind), 0)
     return p, conf, dict(spark.conf.getAll)
 
 
@@ -556,7 +563,8 @@ def test_store_read_runs_no_job(spark, layout_stores, name):
 
 def test_store_writers_leave_session_conf_unchanged(layout_stores):
     """No store writer or sink changes the session conf: the upsert's
-    dynamic partition overwrite is a per-write option."""
+    dynamic partition overwrite is a per-write option, and a
+    micro-batch of each ``foreachBatch`` sink sets nothing either."""
     # The one known exception in the package is plans.library, which
     # sets spark.sql.legacy.parquet.nanosAsLong on the session before
     # reading events.parquet's TIMESTAMP(NANOS) column: the driver
@@ -856,3 +864,26 @@ def test_gram_occurrences_tokenize_once(spark):
     assert plan.count("split(") == 1
     assert sorted((r.pos, r.g) for r in occ.collect()) == [
         (0, "a b"), (1, "b c"), (2, "c d")]
+
+
+def test_package_names_batch_keys_only_in_store():
+    """No package module but ``store.py`` reads the streaming query id
+    or spells a ``batch-`` key: every sink keys its output shard and
+    its store delta through ``store.batch_key``, so the two cannot
+    drift apart again."""
+    import ast
+    import pathlib
+
+    stray = []
+    for path in sorted(pathlib.Path(_PACKAGE).rglob("*.py")):
+        rel = path.relative_to(_PACKAGE).as_posix()
+        if rel == "store.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and (node.value.startswith("batch-")
+                         or "sql.streaming.queryId" in node.value)):
+                stray.append(f"{rel}:{node.lineno}")
+    assert not stray, "key micro-batches with store.batch_key: " \
+        + ", ".join(stray)

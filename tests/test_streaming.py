@@ -8,6 +8,9 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from tests import sink_cases
+from trial_data_ingestion_spark.store import new_delta
+
 
 @pytest.fixture(scope="module")
 def event_dir(spark, tmp_path_factory):
@@ -715,7 +718,8 @@ def test_streaming_line_dedup_across_batches(spark, tmp_path):
     stream = read_document_stream(spark, src,
                                   schema="doc_id long, text string",
                                   max_files_per_trigger=1)
-    q = (line_deduped_document_sink(stream, idx, out)
+    q = (stream.writeStream
+         .foreachBatch(line_deduped_document_sink(idx, out))
          .option("checkpointLocation", str(tmp_path / "ckpt_ld"))
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
@@ -743,7 +747,8 @@ def test_streaming_line_dedup_across_batches(spark, tmp_path):
     lined.limit(20).write.mode("overwrite").parquet(src2)
     stream2 = read_document_stream(spark, src2,
                                    schema="doc_id long, text string")
-    q2 = (line_deduped_document_sink(stream2, idx, out2)
+    q2 = (stream2.writeStream
+          .foreachBatch(line_deduped_document_sink(idx, out2))
           .option("checkpointLocation", str(tmp_path / "ckpt_ld2"))
           .trigger(availableNow=True).start())
     q2.awaitTermination(120)
@@ -791,7 +796,8 @@ def test_streaming_media_dedup_across_batches(spark, tmp_path):
     stream = read_document_stream(
         spark, src, schema="media_id string, media binary",
         max_files_per_trigger=1)
-    q = (deduped_media_sink(stream, idx, out, hasher=image_hasher)
+    q = (stream.writeStream
+         .foreachBatch(deduped_media_sink(idx, out, hasher=image_hasher))
          .option("checkpointLocation", str(tmp_path / "ckpt_md"))
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
@@ -809,7 +815,9 @@ def test_streaming_media_dedup_across_batches(spark, tmp_path):
     media.limit(10).write.mode("overwrite").parquet(src2)
     stream2 = read_document_stream(
         spark, src2, schema="media_id string, media binary")
-    q2 = (deduped_media_sink(stream2, idx, out2, hasher=image_hasher)
+    q2 = (stream2.writeStream
+          .foreachBatch(deduped_media_sink(idx, out2,
+                                           hasher=image_hasher))
           .option("checkpointLocation", str(tmp_path / "ckpt_md2"))
           .trigger(availableNow=True).start())
     q2.awaitTermination(120)
@@ -1088,13 +1096,14 @@ def test_streaming_minhash_dedup_matches_batch_loop(spark, tmp_path):
     for shard in sorted(by_shard):
         b = batch.where(F.col("doc_id").isin(sorted(by_shard[shard])))
         want |= {r["doc_id"] for r in dedup_minhash_incremental(
-            spark, b, idx2, threshold=0.6, append=True).collect()}
+            spark, b, idx2, threshold=0.6,
+            delta=new_delta()).collect()}
     assert got == want
-    # survivor shards carry the micro-batch ids; index deltas add the
-    # query id
+    # survivor shards and index deltas share the batch keys
     import glob
     shards = {d.rsplit("=", 1)[1] for d in glob.glob(f"{out}/shard=*")}
-    assert set(by_shard) == {f"{s}-{q.id}" for s in shards}
+    assert set(by_shard) == shards
+    assert all(s.endswith(f"-{q.id}") for s in shards)
 
 
 def test_streaming_minhash_dedup_replay_is_idempotent(spark, tmp_path):
@@ -1183,10 +1192,12 @@ def test_streaming_embedding_dedup_matches_batch_loop(spark, tmp_path):
     for shard in sorted(by_shard):
         b = batch.where(F.col("vec_id").isin(sorted(by_shard[shard])))
         want |= {r["vec_id"] for r in embedding_near_dups_incremental(
-            spark, b, idx2, 64, threshold=0.4, append=True).collect()}
+            spark, b, idx2, 64, threshold=0.4,
+            delta=new_delta()).collect()}
     assert got == want
     shards = {d.rsplit("=", 1)[1] for d in glob.glob(f"{out}/shard=*")}
-    assert set(by_shard) == {f"{s}-{q.id}" for s in shards}
+    assert set(by_shard) == shards
+    assert all(s.endswith(f"-{q.id}") for s in shards)
 
 
 def test_streaming_embedding_dedup_replay_is_idempotent(spark, tmp_path):
@@ -1221,8 +1232,8 @@ def test_streaming_embedding_dedup_replay_is_idempotent(spark, tmp_path):
 
 def test_clustered_document_sink_replay_writes_once(spark, tmp_path):
     """Restarting after the commit log lost batch 0 re-delivers it;
-    the sink must rewrite its own ``shard=batch-000000000`` output,
-    not append a second copy of every row."""
+    the sink must rewrite its own ``shard=batch-000000000-{query id}``
+    output, not append a second copy of every row."""
     import os
 
     from trial_data_ingestion_spark.operators.clustering import (
@@ -1242,14 +1253,15 @@ def test_clustered_document_sink_replay_writes_once(spark, tmp_path):
     df.coalesce(1).write.parquet(src)
     out = str(tmp_path / "assigned")
     ck = tmp_path / "ck"
+    ids = []
 
     def run():
-        q = (clustered_document_sink(
-                spark.readStream.schema(df.schema).parquet(src),
-                cpath, out, dim=4)
+        q = (spark.readStream.schema(df.schema).parquet(src).writeStream
+             .foreachBatch(clustered_document_sink(cpath, out, dim=4))
              .option("checkpointLocation", str(ck))
              .trigger(availableNow=True).start())
         q.awaitTermination(120)
+        ids.append(q.id)
         return sorted((r["vec_id"], r["cell_id"])
                       for r in spark.read.parquet(out).collect())
 
@@ -1260,8 +1272,9 @@ def test_clustered_document_sink_replay_writes_once(spark, tmp_path):
     if crc.exists():
         os.remove(crc)
     assert run() == first
-    assert [d for d in os.listdir(out)
-            if d.startswith("shard=")] == ["shard=batch-000000000"]
+    assert ids[0] == ids[1]
+    assert [d for d in os.listdir(out) if d.startswith("shard=")] \
+        == [f"shard=batch-000000000-{ids[0]}"]
 
 
 def test_line_deduped_document_sink_replay_writes_once(spark, tmp_path):
@@ -1287,14 +1300,16 @@ def test_line_deduped_document_sink_replay_writes_once(spark, tmp_path):
     batch = docs.where("doc_id >= 200 and doc_id < 260")
     batch.coalesce(1).write.parquet(src)
     ck = tmp_path / "ck"
+    ids = []
 
     def run():
-        q = (line_deduped_document_sink(
-                spark.readStream.schema(batch.schema).parquet(src),
-                idx, out)
+        q = (spark.readStream.schema(batch.schema).parquet(src)
+             .writeStream
+             .foreachBatch(line_deduped_document_sink(idx, out))
              .option("checkpointLocation", str(ck))
              .trigger(availableNow=True).start())
         q.awaitTermination(120)
+        ids.append(q.id)
         return sorted((r["doc_id"], r["text"])
                       for r in spark.read.parquet(out).collect())
 
@@ -1306,8 +1321,9 @@ def test_line_deduped_document_sink_replay_writes_once(spark, tmp_path):
     if crc.exists():
         os.remove(crc)
     assert run() == first
-    assert [d for d in os.listdir(out)
-            if d.startswith("shard=")] == ["shard=batch-000000000"]
+    assert ids[0] == ids[1]
+    assert [d for d in os.listdir(out) if d.startswith("shard=")] \
+        == [f"shard=batch-000000000-{ids[0]}"]
 
 
 # ---------------------------------------------------------------------------
@@ -1445,68 +1461,96 @@ def test_user_retention_state_restart_from_checkpoint(spark, event_dir,
     assert got == want and len(want) >= 3
 
 
-@pytest.mark.parametrize("kind", ["minhash", "embedding"])
+@pytest.mark.parametrize("kind", sink_cases.SINKS)
 def test_stream_sink_deltas_keyed_by_query_id(spark, tmp_path, kind):
-    """Two streaming queries over one index (new checkpoints) both
-    start at batch 0.  The second query's batch 0 must neither delete
-    nor probe past the first query's batch-0 delta: near-duplicates
-    of the first query's survivors drop, and both deltas stay in the
-    index beside ``base``."""
-    from tests.conftest import SF_DIR_ORACLE
-    from trial_data_ingestion_spark.operators.incremental_dedup import (
-        embedding_dedup_stream_sink, minhash_dedup_stream_sink,
-        write_minhash_index,
-    )
-    from trial_data_ingestion_spark.operators.similarity import (
-        write_srp_index,
-    )
-    idx = str(tmp_path / "idx")
-    if kind == "minhash":
-        id_col, root = "doc_id", idx + "/docs"
-        rows = (spark.read.parquet(f"{SF_DIR_ORACLE}/documents.parquet")
-                .select("doc_id", "text"))
-        write_minhash_index(rows.where("doc_id < 300"), idx,
-                            num_buckets=16)
-        sink = minhash_dedup_stream_sink
+    """Two streaming queries writing one ``out_path`` (new
+    checkpoints) both start at batch 0.  The second query's batch 0
+    must neither delete the first query's output shard or store delta
+    nor probe past that delta: both shards survive with the first
+    query's rows unchanged, and the second query decides as a probe
+    that sees the first query's delta (near-duplicates of its
+    survivors drop).  Before the output shard carried the query id,
+    the second query wiped the first one's shard (37 MinHash
+    survivors, then none)."""
+    import os
 
-        def near(df):
-            return df.select((F.col("doc_id") + 100_000).alias("doc_id"),
-                             F.concat("text", F.lit(" ok")).alias("text"))
-    else:
-        id_col, root = "vec_id", idx
-        rows = (spark.read.parquet(f"{SF_DIR_ORACLE}/embeddings.parquet")
-                .select("vec_id", "embedding"))
-        write_srp_index(rows.where("vec_id < 300"), idx, dim=64)
-
-        def sink(index_path, out_path):
-            return embedding_dedup_stream_sink(index_path, out_path,
-                                               dim=64)
-
-        def near(df):
-            # a positive rescale: cosine 1, same SRP bucket
-            return df.select(
-                (F.col("vec_id") + 100_000).alias("vec_id"),
-                F.transform("embedding", lambda x: x * F.lit(1.001))
-                 .cast("array<float>").alias("embedding"))
-
-    batch = rows.where(f"{id_col} >= 300 AND {id_col} < 340")
-    out1, out2 = str(tmp_path / "out1"), str(tmp_path / "out2")
+    from trial_data_ingestion_spark.store import batch_key
+    root, out = str(tmp_path / "store"), str(tmp_path / "out")
+    sink_cases.build_store(spark, kind, root)
     sc = spark.sparkContext
     try:
         sc.setLocalProperty("sql.streaming.queryId", "q1")
-        sink(idx, out1)(batch, 0)
-        kept = spark.read.parquet(out1).drop("shard")
-        assert kept.count() > 0
+        sink_cases.sink(kind, root, out)(
+            sink_cases.first_batch(spark, kind), 0)
+        kept = sink_cases.rows(spark.read.parquet(out))
+        assert kept
+        again = sink_cases.second_batch(
+            spark, kind, spark.read.parquet(out).drop("shard"))
+        want = (sink_cases.rows(sink_cases.probe(spark, kind, again,
+                                                 root, None))
+                if kind in sink_cases.OPERATORS else None)
         sc.setLocalProperty("sql.streaming.queryId", "q2")
-        sink(idx, out2)(near(kept), 0)
+        assert batch_key(spark, 0) == "batch-000000000-q2"
+        sink_cases.sink(kind, root, out)(again, 0)
     finally:
         sc.setLocalProperty("sql.streaming.queryId", None)
-    assert spark.read.schema(kept.schema).parquet(out2).count() == 0
-    deltas = {r["delta"] for r in
-              spark.read.parquet(root).select("delta").distinct()
-              .collect()}
-    assert deltas == {"base", "batch-000000000-q1",
-                      "batch-000000000-q2"}
+    # an empty output writes no shard directory
+    shards = {d for d in os.listdir(out) if d.startswith("shard=")}
+    assert "shard=batch-000000000-q1" in shards
+    assert shards <= {"shard=batch-000000000-q1",
+                      "shard=batch-000000000-q2"}
+    got = spark.read.parquet(out)
+    assert sink_cases.rows(
+        got.where(F.col("shard") == "batch-000000000-q1")) == kept
+    second = got.where(F.col("shard") == "batch-000000000-q2").drop(
+        "shard")
+    if want is None:
+        assert second.count() > 0
+        return
+    assert sink_cases.rows(second) == want
+    if kind == "line":
+        assert second.where("n_removed_lines > 0").count() > 0
+    else:
+        assert want == []
+    assert "batch-000000000-q1" in sink_cases.deltas(spark, kind, root)
+
+
+@pytest.mark.parametrize("kind", sink_cases.OPERATORS)
+def test_sink_replay_after_failed_shard_write_matches_clean_run(
+        spark, tmp_path, monkeypatch, kind):
+    """The first cell of the fault matrix: the output shard write, the
+    last write of ``store.batch_sink``, raises once after the decision
+    appended the batch's store delta.  Replaying the batch leaves the
+    output and the store equal to those of an uninterrupted run."""
+    import os
+
+    from trial_data_ingestion_spark import store
+
+    def run(name, fail):
+        root = str(tmp_path / f"{name}_store")
+        out = str(tmp_path / f"{name}_out")
+        sink_cases.build_store(spark, kind, root)
+        sink = sink_cases.sink(kind, root, out)
+        batch = sink_cases.first_batch(spark, kind)
+        if fail:
+            write = store.write_shard
+
+            def broken(*args):
+                monkeypatch.setattr(store, "write_shard", write)
+                raise OSError("shard write failed")
+            monkeypatch.setattr(store, "write_shard", broken)
+            with pytest.raises(OSError, match="shard write failed"):
+                sink(batch, 0)
+            assert "batch-000000000" in sink_cases.deltas(spark, kind,
+                                                          root)
+            assert not os.path.exists(out)
+        sink(batch, 0)
+        return (sink_cases.rows(spark.read.parquet(out)),
+                sink_cases.store_rows(spark, kind, root))
+
+    clean = run("clean", False)
+    assert clean[0]
+    assert run("replayed", True) == clean
 
 
 def test_deduped_media_sink_replay_writes_once(spark, tmp_path):
@@ -1542,14 +1586,17 @@ def test_deduped_media_sink_replay_writes_once(spark, tmp_path):
     write_phash_index(spark.createDataFrame(
         [], "media_id string, phash long"), idx, max_hamming=4)
     ck = tmp_path / "ck"
+    ids = []
 
     def run():
-        q = (deduped_media_sink(
-                spark.readStream.schema(media.schema).parquet(src),
-                idx, out, hasher=image_hasher)
+        q = (spark.readStream.schema(media.schema).parquet(src)
+             .writeStream
+             .foreachBatch(deduped_media_sink(idx, out,
+                                              hasher=image_hasher))
              .option("checkpointLocation", str(ck))
              .trigger(availableNow=True).start())
         q.awaitTermination(120)
+        ids.append(q.id)
         return sorted(r["media_id"]
                       for r in spark.read.parquet(out).collect())
 
@@ -1563,8 +1610,10 @@ def test_deduped_media_sink_replay_writes_once(spark, tmp_path):
     assert len(first) == 8
     forget_commit()
     assert run() == first
-    assert [d for d in os.listdir(out)
-            if d.startswith("shard=")] == ["shard=batch-000000000"]
+    shard = f"shard=batch-000000000-{ids[0]}"
+    assert [d for d in os.listdir(out) if d.startswith("shard=")] \
+        == [shard]
     forget_commit()
-    shutil.rmtree(os.path.join(out, "shard=batch-000000000"))
+    shutil.rmtree(os.path.join(out, shard))
     assert run() == first
+    assert len(set(ids)) == 1

@@ -335,10 +335,7 @@ def write_phash_index(hashes: DataFrame, path: str, max_hamming: int = 4,
 
 def dedup_media_incremental(spark, new_media: DataFrame, path: str,
                             hasher: Optional[Callable] = None,
-                            append: bool = False,
-                            delta_id: str | None = None,
-                            exclude_delta: str | None = None
-                            ) -> DataFrame:
+                            delta: str | None = None) -> DataFrame:
     """New-batch media rows that survive near-dedup against BOTH the
     persisted fingerprint index and the batch itself — the
     delta-ingest shape: the corpus is never rescanned, only the
@@ -346,14 +343,13 @@ def dedup_media_incremental(spark, new_media: DataFrame, path: str,
 
     Semantics mirror ``dedup_minhash_incremental``: already-seen ids
     are a no-op re-run; a new item drops if its near-dup component
-    touches any corpus item ("corpus wins") or a lower-id batch item;
-    ``append=True`` extends the index with the whole batch after the
-    decision, as delta ``delta_id`` (random when None; a retry with
-    the same id rewrites it).  ``exclude_delta`` leaves one delta out
-    of every index read, so a replayed micro-batch
-    (``delta_id = exclude_delta``) reproduces its first decision
-    instead of finding its own media already stored.  Banding
-    parameters come from the index's params sidecar.
+    touches any corpus item ("corpus wins") or a lower-id batch item.
+    ``delta=None`` only probes; with a ``delta`` id every index read
+    leaves that delta out, and the whole batch then extends the index
+    as that delta, rewriting it: a retry, or a replayed micro-batch,
+    with the same id reproduces its first decision instead of finding
+    its own media already stored.  Banding parameters come from the
+    index's params sidecar.
     """
     from trial_data_ingestion_spark.operators.incremental_dedup import (
         _corpus_wins_survivors,
@@ -369,7 +365,7 @@ def dedup_media_incremental(spark, new_media: DataFrame, path: str,
         F.pmod(F.xxhash64("media_id"), F.lit(num_buckets))
         .alias("b")).distinct().collect())
     seen = (read_partitions(spark, path, "dbkt", batch_dbkts, "docs",
-                            exclude_delta=exclude_delta)
+                            exclude_delta=delta)
             .select(F.col("doc").alias("media_id")))
     new_media = new_media.join(seen, "media_id", "left_anti")
     hashes = raw_hashes.join(seen, "media_id", "left_anti").persist()
@@ -387,7 +383,7 @@ def dedup_media_incremental(spark, new_media: DataFrame, path: str,
     probe_bkts = sorted(r["pbkt"] for r in
                         bt.select("pbkt").distinct().collect())
     idx = read_partitions(spark, path, "pbkt", probe_bkts, "bands",
-                          exclude_delta=exclude_delta)
+                          exclude_delta=delta)
     cross = (idx.alias("c")
              .join(F.broadcast(bt.alias("n")),
                    on=[F.col("c.band") == F.col("n.band"),
@@ -405,12 +401,12 @@ def dedup_media_incremental(spark, new_media: DataFrame, path: str,
                  .distinct())
     survivors = _corpus_wins_survivors(new_media, confirmed,
                                        corpus_nodes, "media_id")
-    if append:
+    if delta is not None:
         survivors = survivors.localCheckpoint()
         to_store = hashes.localCheckpoint()
         write_phash_index(to_store, path, max_hamming=max_hamming,
                           num_buckets=num_buckets, mode="append",
-                          delta_id=delta_id)
+                          delta_id=delta)
     hashes.unpersist()
     raw_hashes.unpersist()
     return survivors

@@ -64,8 +64,8 @@ from trial_data_ingestion_spark.operators.dedup import (
 from trial_data_ingestion_spark.operators.pins import PinScope
 from trial_data_ingestion_spark.session import local_frame
 from trial_data_ingestion_spark.store import (
-    layout_of, new_delta, read_params, read_partitions, read_table,
-    reserve_delta, stream_batch_keys, write_params, write_shard,
+    batch_sink, layout_of, new_delta, read_params, read_partitions,
+    read_table, reserve_delta, write_params,
 )
 
 #: candidate-pair sets at or below this size are Jaccard-verified on
@@ -434,31 +434,28 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
                               id_col: str = "doc_id",
                               text_col: str = "text",
                               threshold: float = 0.8,
-                              append: bool = False,
-                              delta_id: str | None = None,
-                              exclude_delta: str | None = None,
-                              ) -> DataFrame:
+                              delta: str | None = None) -> DataFrame:
     """New-batch rows that survive near-dedup against BOTH the
     persisted corpus index and the batch itself.
 
     Hashing parameters come from the index's own ``params`` table —
     probing with mismatched (k, num_hashes, bands) can't happen.
-    With ``append=True`` the *entire batch* (survivors and duplicates
-    alike — see the module docstring for why) is appended to the
-    index after the decision; pass a stable ``delta_id`` to make the
-    whole call RETRYABLE (the append overwrites its own delta instead
-    of double-appending — see :func:`write_minhash_index`).
-    ``exclude_delta`` removes one delta from every index read: a
-    replayed micro-batch that already appended as delta ``X`` probes
-    with ``delta_id=X, exclude_delta=X`` and reproduces its original
-    decision exactly (the streaming-sink contract).
+    ``delta=None`` only probes.  With a ``delta`` id the probe leaves
+    that delta out of every index read, and then the *entire batch*
+    (survivors and duplicates alike — see the module docstring for
+    why) is appended to the index as that delta, overwriting it (see
+    :func:`write_minhash_index`).  So the whole call is RETRYABLE: a
+    retry, or a replayed micro-batch, with the same ``delta``
+    reproduces its first decision and leaves the index as one call
+    would.  ``delta=store.new_delta()`` appends under a random id, at
+    most once.
 
     Execution shape: the steady cost of a delta probe is
     job-SCHEDULING latency, not data.  This one makes 4 driver
     round-trips.  Under AQE each shuffle stage of a collect is a Spark
     job of its own, so on a 4-core local master a probe runs 10 jobs:
     3 for step 1, 4 for step 2, 3 for step 3 and none for step 4.
-    ``append=True`` adds 4 more for the bands and docs writes, and the
+    A ``delta`` adds 4 more for the bands and docs writes, and the
     caller's action on the returned plan runs its own:
 
     1. ONE bounded collect of the batch ids + doc-bucket hashes AND
@@ -501,7 +498,7 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
 
     def _idx(table: str, column: str, values: list) -> DataFrame:
         return read_partitions(spark, index_path, column, values, table,
-                               exclude_delta=exclude_delta)
+                               exclude_delta=delta)
 
     # step 1: batch ids + doc-bucket hashes AND the banded probe in
     # one bounded collect (id rows ride with null band so docs whose
@@ -696,7 +693,7 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
                 cross.select(F.col("doc_a").alias("doc")).distinct(),
                 id_col)
             kept_frame = survivors.select(id_col).localCheckpoint()
-        if append:
+        if delta is not None:
             # fresh's plan reads only the caller's input and a local
             # id table — never the index — so the append can write
             # straight from the pinned frame; the band rows re-enter
@@ -712,7 +709,7 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
             write_minhash_index(fresh, index_path, id_col, text_col,
                                 k=k, num_hashes=num_hashes,
                                 bands=bands, num_buckets=num_buckets,
-                                mode="append", delta_id=delta_id,
+                                mode="append", delta_id=delta,
                                 _prebanded=fresh_banded)
     if kept_frame is not None:
         return orig.join(F.broadcast(kept_frame), id_col, "left_semi")
@@ -737,9 +734,7 @@ def embedding_near_dups_incremental(spark, new_embeddings: DataFrame,
                                     vec_col: str = "embedding",
                                     threshold: float = 0.9,
                                     num_planes: int | None = None,
-                                    append: bool = False,
-                                    delta_id: str | None = None,
-                                    exclude_delta: str | None = None,
+                                    delta: str | None = None
                                     ) -> DataFrame:
     """New-batch vectors surviving embedding-cosine near-dedup
     against BOTH a persisted :func:`~.similarity.write_srp_index`
@@ -761,10 +756,14 @@ def embedding_near_dups_incremental(spark, new_embeddings: DataFrame,
     mismatch raises.  The plane set is therefore pinned for the
     index's lifetime — when a growing corpus outruns its occupancy
     target (:func:`~.similarity.srp_auto_planes`), rebuild the index
-    with ``num_planes="auto"`` rather than appending forever.  With
-    ``append=True`` the batch is APPENDED into the bucket layout
-    (``mode="append"`` — never an overwrite, which would drop the
-    corpus rows sharing the batch's buckets)."""
+    with ``num_planes="auto"`` rather than appending forever.
+
+    ``delta`` works as in :func:`dedup_minhash_incremental`: ``None``
+    only probes; an id probes with that delta left out, then APPENDS
+    the batch into the bucket layout as that delta (``mode="append"``
+    — never an overwrite, which would drop the corpus rows sharing the
+    batch's buckets), so a retry with the same id repeats its
+    decision and rewrites its delta."""
     from trial_data_ingestion_spark.functions.vector import (
         dot_fixed, l2_norm_fixed,
     )
@@ -783,7 +782,7 @@ def embedding_near_dups_incremental(spark, new_embeddings: DataFrame,
     buckets = sorted(r["bucket"] for r in
                      nb.select("bucket").distinct().collect())
     idx = (read_partitions(spark, index_path, "bucket", buckets,
-                           exclude_delta=exclude_delta)
+                           exclude_delta=delta)
            .select(F.col(id_col).alias("doc"),
                    F.col(vec_col).alias("v"),
                    F.col("__nrm").alias("nrm"), "bucket"))
@@ -825,11 +824,11 @@ def embedding_near_dups_incremental(spark, new_embeddings: DataFrame,
     # (PinScope releases even if the append write raises)
     try:
         kept = survivors.select(id_col).localCheckpoint()
-        if append:
+        if delta is not None:
             to_add = new_embeddings.localCheckpoint()
             write_srp_index(to_add, index_path, dim, id_col=id_col,
                             vec_col=vec_col, num_planes=num_planes,
-                            mode="append", delta_id=delta_id)
+                            mode="append", delta_id=delta)
     finally:
         pins.release()
     return orig.join(F.broadcast(kept), id_col, "left_semi")
@@ -839,26 +838,25 @@ def minhash_dedup_stream_sink(index_path: str, out_path: str,
                               id_col: str = "doc_id",
                               text_col: str = "text",
                               threshold: float = 0.8):
-    """``foreachBatch`` sink running corpus-level incremental
+    """``foreachBatch`` function running corpus-level incremental
     near-dedup over a document stream — the streaming closure of the
     persisted-MinHash tier, the way ``hll_stream_sink`` closed the
     sketch tier (round-9 verdict item 5).
 
-    Each micro-batch is one delta: it probes the index with its own
-    delta EXCLUDED from every read and appends itself as that delta
-    (:func:`dedup_minhash_incremental` with
-    ``delta_id = exclude_delta = batch-{batch_id:09d}-{query id}``),
-    then writes its survivors as the ``shard=batch-{batch_id:09d}``
-    partition of ``out_path`` (keys from
-    ``store.stream_batch_keys``).  Batch ids are stable across
-    checkpoint restarts, so a REPLAYED micro-batch reproduces the
-    identical decision (its own delta is invisible to the probe),
-    overwrites its own index delta instead of double-appending, and
-    rewrites its own survivor shard — exactly-once output by
-    construction.  The query id keeps a second query over the same
-    index (new checkpoint, batch ids from 0 again) from replacing the
-    first query's deltas.  An all-duplicate batch correctly leaves an
-    empty survivor shard.
+    Each micro-batch is one delta, named by its batch key
+    (``store.batch_key``: ``batch-{batch_id:09d}-{query id}``): it
+    probes the index with that delta EXCLUDED from every read and
+    appends itself as that delta (:func:`dedup_minhash_incremental`
+    with ``delta=key``), then writes its survivors as the
+    ``shard=key`` partition of ``out_path`` (``store.batch_sink``).
+    Batch ids and the query id are stable across checkpoint restarts,
+    so a REPLAYED micro-batch reproduces the identical decision (its
+    own delta is invisible to the probe), overwrites its own index
+    delta instead of double-appending, and rewrites its own survivor
+    shard — exactly-once output by construction.  A second query over
+    the same index or ``out_path`` (new checkpoint, batch ids from 0
+    again) keeps the first query's deltas and shards.  An
+    all-duplicate batch correctly leaves an empty survivor shard.
 
     The exactness argument leans on Structured Streaming's replay
     shape: only the LATEST (uncommitted) batch is ever re-delivered,
@@ -874,17 +872,9 @@ def minhash_dedup_stream_sink(index_path: str, out_path: str,
              .option("checkpointLocation", ck)
              .trigger(availableNow=True).start())
     """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        shard, delta = stream_batch_keys(spark, batch_id)
-        survivors = dedup_minhash_incremental(
-            spark, batch_df, index_path, id_col=id_col,
-            text_col=text_col, threshold=threshold, append=True,
-            delta_id=delta, exclude_delta=delta)
-        write_shard(survivors, out_path, shard)
-
-    return sink
+    return batch_sink(lambda df, key: dedup_minhash_incremental(
+        df.sparkSession, df, index_path, id_col=id_col,
+        text_col=text_col, threshold=threshold, delta=key), out_path)
 
 
 def embedding_dedup_stream_sink(index_path: str, out_path: str,
@@ -892,35 +882,27 @@ def embedding_dedup_stream_sink(index_path: str, out_path: str,
                                 id_col: str = "vec_id",
                                 vec_col: str = "embedding",
                                 threshold: float = 0.9):
-    """``foreachBatch`` sink running corpus-level incremental
+    """``foreachBatch`` function running corpus-level incremental
     embedding-cosine near-dedup over a vector stream — the streaming
     closure of the persisted-SRP tier, symmetric with
-    :func:`minhash_dedup_stream_sink` (same shard/delta contract).
+    :func:`minhash_dedup_stream_sink` (same ``store.batch_sink``
+    contract).
 
-    Each micro-batch probes the SRP index with its own delta
+    Each micro-batch probes the SRP index with its batch key's delta
     EXCLUDED from every read and appends itself as that delta
-    (:func:`embedding_near_dups_incremental` with
-    ``delta_id = exclude_delta = batch-{batch_id:09d}-{query id}``),
-    then rewrites its ``shard=batch-{batch_id:09d}`` survivor shard
-    under ``out_path``.  Because the
-    plane count comes from the index's ``_params.json`` sidecar, every
-    micro-batch hashes with the planes the corpus was built with —
-    a sink cannot misroute probes by passing its own count.  Replay
-    of the latest uncommitted batch reproduces the identical decision
-    and overwrites its own delta + shard — exactly-once output by
-    construction (see :func:`minhash_dedup_stream_sink` for the
-    replay-shape argument)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        shard, delta = stream_batch_keys(spark, batch_id)
-        survivors = embedding_near_dups_incremental(
-            spark, batch_df, index_path, dim, id_col=id_col,
-            vec_col=vec_col, threshold=threshold, append=True,
-            delta_id=delta, exclude_delta=delta)
-        write_shard(survivors, out_path, shard)
-
-    return sink
+    (:func:`embedding_near_dups_incremental` with ``delta=key``),
+    then rewrites its ``shard=key`` survivor shard under
+    ``out_path``.  Because the plane count comes from the index's
+    ``_params.json`` sidecar, every micro-batch hashes with the planes
+    the corpus was built with — a sink cannot misroute probes by
+    passing its own count.  Replay of the latest uncommitted batch
+    reproduces the identical decision and overwrites its own delta +
+    shard — exactly-once output by construction (see
+    :func:`minhash_dedup_stream_sink` for the replay-shape
+    argument)."""
+    return batch_sink(lambda df, key: embedding_near_dups_incremental(
+        df.sparkSession, df, index_path, dim, id_col=id_col,
+        vec_col=vec_col, threshold=threshold, delta=key), out_path)
 
 
 def compact_minhash_index(spark, index_path: str, out_path: str) -> None:

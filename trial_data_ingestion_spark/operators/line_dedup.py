@@ -117,13 +117,14 @@ def _apply_drops(df: DataFrame, dups: DataFrame, id_col: str,
 
 
 def _write_lines(keys: DataFrame, path: str, params: dict,
-                 delta_id: str | None = None,
-                 append: bool = False) -> None:
-    """Write distinct line keys into ``path/lines``: a build as delta
-    ``base``, recording ``params`` and the layout; an append as delta
-    ``delta_id`` (random when None), validated against them first."""
+                 delta: str | None = None) -> None:
+    """Write distinct line keys into ``path/lines``: a build
+    (``delta=None``) as delta ``base``, recording ``params`` and the
+    layout; an append as ``delta``, validated against them first and
+    overwriting that delta."""
     spark = keys.sparkSession
-    delta = new_delta(delta_id) if append else "base"
+    append = delta is not None
+    delta = new_delta(delta) if append else "base"
     out = (keys.withColumn("pbkt", F.pmod(F.col("line"),
                                           F.lit(params["num_buckets"])))
            .withColumn("delta", F.lit(delta)))
@@ -157,7 +158,7 @@ def write_line_index(df: DataFrame, path: str, id_col: str = "doc_id",
     _write_lines(_eligible_occurrences(df, id_col, text_col, min_chars)
                  .select("line").distinct(), path,
                  {"min_chars": min_chars, "num_buckets": num_buckets},
-                 append=mode == "append")
+                 new_delta() if mode == "append" else None)
 
 
 def probe_line_store(spark, occ: DataFrame, index_path: str,
@@ -184,16 +185,13 @@ def probe_line_store(spark, occ: DataFrame, index_path: str,
 def line_dedup_incremental(spark, new_docs: DataFrame, index_path: str,
                            id_col: str = "doc_id",
                            text_col: str = "text",
-                           append: bool = False,
-                           delta_id: str | None = None,
-                           exclude_delta: str | None = None
-                           ) -> DataFrame:
+                           delta: str | None = None) -> DataFrame:
     """Delta-batch line dedup against a persisted line store: a batch
     occurrence is dropped iff its line is already IN the store
     ("store wins" — persisted text is never retracted) or it is not
-    the batch-first occurrence of a store-new line.  With ``append``
-    the surviving first-occurrence keys extend the store, so the next
-    batch sees them.
+    the batch-first occurrence of a store-new line.  With a ``delta``
+    id the surviving first-occurrence keys extend the store as that
+    delta, so the next batch sees them; ``delta=None`` only probes.
 
     EQUAL to re-running :func:`line_dedup` (hashed path) over
     corpus + batch and keeping the batch docs, whenever corpus doc
@@ -201,11 +199,10 @@ def line_dedup_incremental(spark, new_docs: DataFrame, index_path: str,
     incremental path here shares.
 
     Rerun semantics match ``incremental_dedup.dedup_minhash_incremental``:
-    the append lands as delta ``delta_id`` (random when None) and
-    deletes that delta first, so a retry rewrites it; a probe with
-    ``exclude_delta`` ignores one delta, so a replayed micro-batch
-    (``delta_id = exclude_delta``) reproduces its first decision
-    instead of finding its own lines already stored.
+    the probe ignores ``delta`` and the append deletes that delta
+    first, so a retry, or a replayed micro-batch, with the same id
+    reproduces its first decision (instead of finding its own lines
+    already stored) and rewrites its delta.
 
     Scale: only the store partitions named by the batch's own bucket
     hashes are listed and scanned (:func:`probe_line_store`) with the
@@ -218,7 +215,7 @@ def line_dedup_incremental(spark, new_docs: DataFrame, index_path: str,
     # materialized once: reused by the drop predicate AND the append
     # branch — without the checkpoint each use re-scans the store
     seen = probe_line_store(spark, occ, index_path, num_buckets,
-                            exclude_delta).localCheckpoint()
+                            delta).localCheckpoint()
     firsts = (occ.groupBy("line")
               .agg(F.min(F.struct("doc", "pos")).alias("__first")))
     dups = (occ.join(seen.withColumn("__seen", F.lit(True)),
@@ -228,10 +225,10 @@ def line_dedup_incremental(spark, new_docs: DataFrame, index_path: str,
                    | (F.col("doc") != F.col("__first.doc"))
                    | (F.col("pos") != F.col("__first.pos")))
             .select("doc", "pos"))
-    if append:
+    if delta is not None:
         _write_lines(firsts.join(seen, "line", "left_anti")
-                     .select("line").distinct(),
-                     index_path, params, delta_id, append=True)
+                     .select("line").distinct(), index_path, params,
+                     delta)
     return _apply_drops(new_docs, dups, id_col, text_col)
 
 

@@ -32,8 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.store import (
-    check_partition_value, layout_of, open_store, read_partitions,
-    read_table, stream_batch_keys, write_shard,
+    batch_sink, check_partition_value, layout_of, open_store,
+    read_partitions, read_table, write_shard,
 )
 
 #: relative standard error of an lgK-configured HLL sketch
@@ -71,38 +71,49 @@ def write_hll_shard(df: DataFrame, path: str, group_cols: list[str],
     (``store.check_partition_value``): the shard delete builds the
     partition path by hand, and Spark escapes unsafe characters on
     write, so an unsafe name would delete the wrong path."""
+    write_shard(_shard_sketches(df, path, group_cols, value_col, shard,
+                                lgk, n_files), path, shard)
+
+
+def _shard_sketches(df: DataFrame, path: str, group_cols: list[str],
+                    value_col: str, shard: str, lgk: int,
+                    n_files: int) -> DataFrame:
+    """The ``n_files``-file sketch frame of shard ``shard``, after
+    checking its layout against the table at ``path`` (or recording
+    it there for a new table)."""
     out = (hll_shard_sketches(df, group_cols, value_col, lgk)
            .withColumn("shard", F.lit(check_partition_value(shard))))
     open_store(df.sparkSession, path, {},
                {"": layout_of(out, ["shard"])})
     if n_files == 1:
-        out = out.coalesce(1)
-    else:
-        # keyed on (group, shard), not the group alone: a repartition
-        # equal to the aggregate's own hashpartitioning(group, n) is
-        # dropped as redundant whenever n == shuffle.partitions, and
-        # AQE may then coalesce that exchange down to one writer
-        out = out.repartition(n_files, *group_cols, "shard")
-    write_shard(out, path, shard)
+        return out.coalesce(1)
+    # keyed on (group, shard), not the group alone: a repartition
+    # equal to the aggregate's own hashpartitioning(group, n) is
+    # dropped as redundant whenever n == shuffle.partitions, and AQE
+    # may then coalesce that exchange down to one writer
+    return out.repartition(n_files, *group_cols, "shard")
 
 
 def hll_stream_sink(path: str, group_cols: list[str], value_col: str,
                     lgk: int = 12, n_files: int = 1):
-    """``foreachBatch`` sink maintaining a mergeable HLL sketch table
-    from a stream: each micro-batch is sketched ONCE at O(batch) cost
-    and lands as its own shard, named by the query-keyed delta of
-    ``store.stream_batch_keys`` (``batch-{batch_id:09d}-{query id}``).
-    Batch ids and the query id are stable across checkpoint restarts,
-    so a REPLAYED micro-batch overwrites its own partition instead of
-    double-counting — idempotent by construction, the same
-    exactly-once trick as the upsert sink — while a second query over
-    the same table (new checkpoint, batch ids from 0 again) writes
-    shards of its own instead of replacing the first query's; and a
-    replay that now carries no rows leaves its shard empty (see
-    :func:`write_hll_shard`).  :func:`merged_distinct` then answers
-    all-time / trailing-window distinct counts from the sketch table
-    alone, with no rescan of the stream's history — the streaming
-    closure of the r7 sketch-table tier.
+    """``foreachBatch`` function maintaining a mergeable HLL sketch
+    table from a stream: each micro-batch is sketched ONCE at O(batch)
+    cost and lands as its own shard, named by its batch key
+    (``store.batch_key``: ``batch-{batch_id:09d}-{query id}``) and
+    written by ``store.batch_sink``; the sketch table is both the
+    sink's store and its output, so the batch's sketch frame is its
+    whole decision.  Batch ids and the query id are stable across
+    checkpoint restarts, so a REPLAYED micro-batch overwrites its own
+    partition instead of double-counting — idempotent by
+    construction, the same exactly-once trick as the upsert sink —
+    while a second query over the same table (new checkpoint, batch
+    ids from 0 again) writes shards of its own instead of replacing
+    the first query's; and a replay that now carries no rows leaves
+    its shard empty (see :func:`write_hll_shard`).
+    :func:`merged_distinct` then answers all-time / trailing-window
+    distinct counts from the sketch table alone, with no rescan of the
+    stream's history — the streaming closure of the r7 sketch-table
+    tier.
 
     Usage::
 
@@ -113,12 +124,8 @@ def hll_stream_sink(path: str, group_cols: list[str], value_col: str,
              .trigger(availableNow=True).start())
     """
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _, shard = stream_batch_keys(batch_df.sparkSession, batch_id)
-        write_hll_shard(batch_df, path, group_cols, value_col, shard,
-                        lgk=lgk, n_files=n_files)
-
-    return sink
+    return batch_sink(lambda df, key: _shard_sketches(
+        df, path, group_cols, value_col, key, lgk, n_files), path)
 
 
 def merged_distinct(spark: SparkSession, path: str,

@@ -32,9 +32,11 @@ BPE merges, unigram pieces, clustering codebooks):
 * **keyed shard write** — :func:`write_shard` rewrites one
   ``shard=`` partition by delete-then-append, so a replayed
   micro-batch leaves its output exactly once;
-* **stream batch keys** — :func:`stream_batch_keys` names a
-  ``foreachBatch`` sink's output shard and store delta, so every
-  store-backed sink replays and restarts the same way.
+* **one batch sink** — :func:`batch_sink` builds every
+  ``foreachBatch`` sink: :func:`batch_key` names a micro-batch's
+  output shard AND its store delta with one key, the decision (with
+  its delta append) runs first and :func:`write_shard` last, so every
+  sink replays, restarts and shares an ``out_path`` the same way.
 
 The ``layout`` and the recorded driver state are on-disk format
 breaks: a store, index or model written before them is refused by
@@ -256,18 +258,34 @@ def write_shard(df: DataFrame, path: str, shard: str) -> None:
     spark.catalog.refreshByPath(path)
 
 
-def stream_batch_keys(spark, batch_id: int) -> tuple[str, str]:
-    """(shard, delta) for micro-batch ``batch_id`` of the streaming
-    query running this ``foreachBatch`` call: the output shard is
-    ``batch-{batch_id:09d}`` and the store delta appends the query id
-    (``sql.streaming.queryId``, stable across restarts from one
-    checkpoint).  A second query over the same store starts its batch
-    ids at 0 again; the query id keeps it from deleting, or probing
-    past, the first query's deltas.  Outside a streaming query (a
-    direct call) the delta is the shard."""
-    shard = f"batch-{batch_id:09d}"
+def batch_key(spark, batch_id: int) -> str:
+    """The key of micro-batch ``batch_id``: ``batch-{batch_id:09d}``
+    followed by the id of the streaming query running this
+    ``foreachBatch`` call (``sql.streaming.queryId``, stable across
+    restarts from one checkpoint), or alone outside a streaming query
+    (a direct call).  A second query over the same store or
+    ``out_path`` starts its batch ids at 0 again; the query id keeps
+    it from deleting, or probing past, the first query's batches."""
+    key = f"batch-{batch_id:09d}"
     query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
-    return shard, shard if query_id is None else f"{shard}-{query_id}"
+    return key if query_id is None else f"{key}-{query_id}"
+
+
+def batch_sink(decide, out_path: str):
+    """The ``foreachBatch`` function of a sink writing one shard per
+    micro-batch under ``out_path``.  ``decide(batch_df, key)`` returns
+    the batch's output frame, after appending any store delta as
+    ``key`` (a probe that excludes ``key``, so a replay repeats its
+    first decision); then :func:`write_shard` rewrites shard ``key``
+    of ``out_path``.  Both writes are keyed by :func:`batch_key`, so a
+    replayed batch rewrites its own delta and shard: exactly-once
+    output over a replayable source.  The shard write comes last and
+    is the one place a fault test needs to break."""
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        key = batch_key(batch_df.sparkSession, batch_id)
+        write_shard(decide(batch_df, key), out_path, key)
+
+    return sink
 
 
 def read_partitions(spark, root: str, column: str, values,

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from trial_data_ingestion_spark.pipelines.curation import (
     CurationConfig, hygiene_gate,
 )
+from trial_data_ingestion_spark.store import batch_sink
 
 DOC_SCHEMA = ("doc_id long, text string, lang string, source string, "
               "n_chars long")
@@ -173,56 +174,44 @@ def tokenized_document_stream(docs: DataFrame, model,
     return tokenize_bpe(docs, model, text_col=text_col, out_col=out_col)
 
 
-def line_deduped_document_sink(docs: DataFrame, index_path: str,
-                               out_path: str,
+def line_deduped_document_sink(index_path: str, out_path: str,
                                id_col: str = "doc_id",
                                text_col: str = "text"):
-    """Streaming corpus-wide line dedup: every micro-batch runs
+    """``foreachBatch`` function for streaming corpus-wide line dedup:
+    every micro-batch runs
     ``operators.line_dedup.line_dedup_incremental`` against the
     persisted line store (probe pruned to the batch's buckets) with
-    ``append=True``, so lines first seen in one batch suppress their
-    recurrences in every later batch — and across stream restarts,
-    because the store IS the state (no Spark state store involved;
-    watermarks cannot bound corpus-wide line dedup anyway, a footer
-    repeats forever).
+    its batch key as ``delta``, so lines first seen in one batch
+    suppress their recurrences in every later batch — and across
+    stream restarts, because the store IS the state (no Spark state
+    store involved; watermarks cannot bound corpus-wide line dedup
+    anyway, a footer repeats forever).
 
     Initialize the store once with ``write_line_index`` (over the
     standing corpus, or over a zero-row frame to start empty).  Each
-    micro-batch appends its new lines as store delta
-    ``batch-{batch_id:09d}-{query id}``, probing with that delta
-    excluded, and writes its rewritten docs as the
-    ``shard=batch-{batch_id:09d}`` partition of ``out_path``
-    (``store.write_shard``; keys from ``store.stream_batch_keys``): a
-    replayed batch reproduces its first decision and rewrites its own
-    delta and shard — exactly-once, like
-    ``incremental_dedup.minhash_dedup_stream_sink``.  Returns the
-    ``DataStreamWriter`` — caller picks the trigger."""
+    micro-batch appends its new lines as the store delta named by its
+    batch key (``store.batch_key``), probing with that delta
+    excluded, and writes its rewritten docs as the ``shard=`` of the
+    same key under ``out_path`` (``store.batch_sink``): a replayed
+    batch reproduces its first decision and rewrites its own delta
+    and shard — exactly-once, like
+    ``incremental_dedup.minhash_dedup_stream_sink``.  Pass it to
+    ``writeStream.foreachBatch``; the caller picks the trigger."""
     from trial_data_ingestion_spark.operators.line_dedup import (
         line_dedup_incremental,
     )
-    from trial_data_ingestion_spark.store import (
-        stream_batch_keys, write_shard,
-    )
 
-    def sink(batch_df, batch_id):
-        spark = batch_df.sparkSession
-        shard, delta = stream_batch_keys(spark, batch_id)
-        out = line_dedup_incremental(spark, batch_df, index_path,
-                                     id_col=id_col, text_col=text_col,
-                                     append=True, delta_id=delta,
-                                     exclude_delta=delta)
-        write_shard(out, out_path, shard)
-
-    return docs.writeStream.foreachBatch(sink)
+    return batch_sink(lambda df, key: line_dedup_incremental(
+        df.sparkSession, df, index_path, id_col=id_col,
+        text_col=text_col, delta=key), out_path)
 
 
-def clustered_document_sink(embeddings: DataFrame, centroid_path: str,
-                            out_path: str, dim: int,
+def clustered_document_sink(centroid_path: str, out_path: str, dim: int,
                             id_col: str = "vec_id",
                             vec_col: str = "embedding"):
-    """Streaming topic-cell assignment that RE-LOADS the persisted
-    codebook every micro-batch: a codebook refresh (periodic re-fit
-    over the grown corpus, written with
+    """``foreachBatch`` function for streaming topic-cell assignment
+    that RE-LOADS the persisted codebook every micro-batch: a codebook
+    refresh (periodic re-fit over the grown corpus, written with
     ``clustering.write_centroids``) takes effect without a stream
     restart.  The reload reads the codebook's ``_params.json`` on the
     driver into a local frame, so it adds no Spark job to the batch.
@@ -231,61 +220,47 @@ def clustered_document_sink(embeddings: DataFrame, centroid_path: str,
     assignment is a stateless Arrow kernel, and the centroids are
     then pinned at plan time for the stream's lifetime.
 
-    Each micro-batch lands as its own ``shard=batch-{batch_id:09d}``
-    partition under ``out_path`` (``store.write_shard``): batch ids
+    Each micro-batch lands as the ``shard=`` of its batch key under
+    ``out_path`` (``store.batch_sink``): batch ids and the query id
     are stable across checkpoint restarts, so a replayed batch
-    rewrites its own shard instead of appending a second copy.
-    Returns the ``DataStreamWriter`` — caller picks the trigger."""
+    rewrites its own shard instead of appending a second copy, and a
+    second query over the same ``out_path`` keeps the first one's
+    shards.  Pass it to ``writeStream.foreachBatch``; the caller
+    picks the trigger."""
     from trial_data_ingestion_spark.operators.clustering import (
         cluster_documents, load_centroids,
     )
-    from trial_data_ingestion_spark.store import write_shard
 
-    def sink(batch_df, batch_id):
-        cents = load_centroids(batch_df.sparkSession, centroid_path)
-        out = cluster_documents(batch_df, dim=dim, id_col=id_col,
-                                vec_col=vec_col, centroids=cents)
-        write_shard(out, out_path, f"batch-{batch_id:09d}")
-
-    return embeddings.writeStream.foreachBatch(sink)
+    return batch_sink(lambda df, key: cluster_documents(
+        df, dim=dim, id_col=id_col, vec_col=vec_col,
+        centroids=load_centroids(df.sparkSession, centroid_path)),
+        out_path)
 
 
-def deduped_media_sink(media: DataFrame, index_path: str,
-                       out_path: str, hasher=None):
-    """Streaming perceptual media dedup: every micro-batch runs
-    ``multimodal.phash.dedup_media_incremental`` against the
-    persisted fingerprint index (probe pruned to the batch's own
-    band buckets) with ``append=True``, so media first seen in one
-    batch suppress their near-duplicates in every later batch — and
-    across stream restarts, because the store IS the state (same
-    contract as :func:`line_deduped_document_sink`; near-dup state
-    cannot ride Spark's state store anyway — Hamming matching is not
-    an equality key).
+def deduped_media_sink(index_path: str, out_path: str, hasher=None):
+    """``foreachBatch`` function for streaming perceptual media dedup:
+    every micro-batch runs ``multimodal.phash.dedup_media_incremental``
+    against the persisted fingerprint index (probe pruned to the
+    batch's own band buckets) with its batch key as ``delta``, so
+    media first seen in one batch suppress their near-duplicates in
+    every later batch — and across stream restarts, because the store
+    IS the state (same contract as :func:`line_deduped_document_sink`;
+    near-dup state cannot ride Spark's state store anyway — Hamming
+    matching is not an equality key).
 
     Initialize the index once with ``write_phash_index`` (over the
     standing corpus's hashes, or an empty frame to start fresh).
-    Each micro-batch appends its hashes as index delta
-    ``batch-{batch_id:09d}-{query id}``, probing with that delta
-    excluded, and writes its survivors as the
-    ``shard=batch-{batch_id:09d}`` partition of ``out_path``
-    (``store.write_shard``; keys from ``store.stream_batch_keys``):
-    a batch replayed after its index append reproduces its first
-    decision and rewrites its own delta and shard — exactly-once.
-    Returns the ``DataStreamWriter`` — caller picks the trigger."""
+    Each micro-batch appends its hashes as the index delta named by
+    its batch key (``store.batch_key``), probing with that delta
+    excluded, and writes its survivors as the ``shard=`` of the same
+    key under ``out_path`` (``store.batch_sink``): a batch replayed
+    after its index append reproduces its first decision and rewrites
+    its own delta and shard — exactly-once.  Pass it to
+    ``writeStream.foreachBatch``; the caller picks the trigger."""
     from trial_data_ingestion_spark.multimodal.phash import (
         dedup_media_incremental,
     )
-    from trial_data_ingestion_spark.store import (
-        stream_batch_keys, write_shard,
-    )
 
-    def sink(batch_df, batch_id):
-        spark = batch_df.sparkSession
-        shard, delta = stream_batch_keys(spark, batch_id)
-        out = dedup_media_incremental(spark, batch_df, index_path,
-                                      hasher=hasher, append=True,
-                                      delta_id=delta,
-                                      exclude_delta=delta)
-        write_shard(out, out_path, shard)
-
-    return media.writeStream.foreachBatch(sink)
+    return batch_sink(lambda df, key: dedup_media_incremental(
+        df.sparkSession, df, index_path, hasher=hasher, delta=key),
+        out_path)
