@@ -364,7 +364,9 @@ def test_minhash_append_retry_is_idempotent(spark, tmp_path, kind):
     double-append — the probe leaves that delta out, and the append
     overwrites it.  (With the append's id and the probe's exclusion
     as separate arguments, a MinHash retry that named only the id
-    kept 0 of its 37 survivors.)  Unsafe delta ids are refused."""
+    kept 0 of its 37 survivors.)  Unsafe delta ids are refused on
+    entry, with 0 Spark jobs: the check used to sit in the append,
+    after the whole probe (about 10 jobs for MinHash on 4 cores)."""
     path = str(tmp_path / "store")
     sink_cases.build_store(spark, kind, path)
     batch = sink_cases.first_batch(spark, kind)
@@ -377,8 +379,15 @@ def test_minhash_append_retry_is_idempotent(spark, tmp_path, kind):
                                              "b0001"))
     assert retry == first
     assert sink_cases.store_rows(spark, kind, path) == stored
-    with pytest.raises(ValueError, match="safe partition value"):
-        sink_cases.probe(spark, kind, batch, path, "a b/c")
+    sc, group = spark.sparkContext, f"unsafe-delta-{kind}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="safe partition value"):
+            sink_cases.probe(spark, kind, batch, path, "a b/c")
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(jobs) == 0, f"{kind}: {len(jobs)} jobs before the raise"
 
 
 def test_srp_append_retry_is_idempotent(spark, emb, tmp_path):

@@ -4,8 +4,9 @@ Arrow-built ``LocalRelation``.
 ``spark.createDataFrame(<python list>, schema)`` parallelizes the list
 into a Python RDD, so each scan, broadcast or collect of it runs a job
 that starts Python workers.  The helper builds the same rows, typed the
-same way, with no job at all; the package builds no frame any other
-way."""
+same way; building or collecting them runs no job, and a plan that
+broadcasts them runs one JVM-only job for the broadcast.  The package builds no frame any
+other way."""
 
 from __future__ import annotations
 
@@ -140,3 +141,22 @@ def test_local_jaccard_verify_runs_no_job(spark):
                             T.LongType(), 5, 0.8)))
     assert n == 0
     assert got == [(1, 2)]
+
+
+def test_broadcasting_a_local_frame_runs_one_job(spark):
+    """Broadcasting a local frame is not free: the broadcast exchange
+    collects its child through an RDD, so joining a scan to a
+    broadcast local frame runs one job more than the scan alone,
+    while collecting the local frame itself runs none."""
+    from pyspark.sql import functions as F
+
+    small = local_frame(spark, [(i, f"v{i}") for i in range(9)],
+                        "k long, v string")
+    scan = spark.range(1000).withColumnRenamed("id", "k")
+    assert _jobs(spark, "local-only", small.collect) == 0
+    assert _jobs(spark, "scan-only", scan.collect) == 1
+    joined = []
+    n = _jobs(spark, "scan-broadcast", lambda: joined.extend(
+        scan.join(F.broadcast(small), "k").collect()))
+    assert n == 2, f"scan joined to a broadcast local frame ran {n} jobs"
+    assert len(joined) == 9

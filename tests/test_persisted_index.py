@@ -313,3 +313,104 @@ def test_ivf_append_retry_is_idempotent(spark, tmp_path):
            topk_ivf_over_index(spark, path, q, k=5,
                                nprobe=4).collect()}
     assert got == want
+
+
+@pytest.mark.parametrize("num_planes", [1, 6, 8, 12])
+def test_driver_query_side_equals_spark_bucket_and_norm(spark,
+                                                        num_planes):
+    """The driver-side query hashing of ``topk_lsh_over_index`` gives
+    each vector the bucket ``srp_bucket`` and the norm
+    ``l2_norm_fixed`` give it, bit for bit: the fixture embeddings and
+    500 seeded random vectors (mixed signs and magnitudes, float32)."""
+    import numpy as np
+
+    from trial_data_ingestion_spark.functions.vector import l2_norm_fixed
+    from trial_data_ingestion_spark.operators.similarity import (
+        _query_probes, srp_bucket,
+    )
+    from trial_data_ingestion_spark.session import local_frame
+
+    rng = np.random.RandomState(7)
+    rand = (rng.standard_normal((500, 64))
+            * rng.choice([1e-3, 1.0, 1e3], (500, 1))).astype(np.float32)
+    frames = [
+        _emb(spark).select(F.col("vec_id").alias("query_id"),
+                           F.col("embedding").alias("query_vec")),
+        local_frame(spark, [(10_000 + i, [float(x) for x in v])
+                            for i, v in enumerate(rand)],
+                    "query_id long, query_vec array<float>"),
+    ]
+    for qs in frames:
+        rows, _ = _query_probes(qs, "query_id", "query_vec", 64,
+                                num_planes, multiprobe_hamming=0)
+        got = {r[0]: (r[3], r[2]) for r in rows}
+        want = {r[0]: (r[1], r[2]) for r in qs.select(
+            "query_id", srp_bucket("query_vec", 64, num_planes),
+            l2_norm_fixed("query_vec", 64)).collect()}
+        assert len(got) == 500 and got == want
+        assert len({b for b, _ in got.values()}) > 1
+
+
+@pytest.fixture(scope="module")
+def tied_index(spark, tmp_path_factory):
+    """An SRP index in which every vector with id < 100 is stored
+    under three ids (id, id + 1000, id + 2000): each candidate score
+    is tied at least three ways."""
+    emb = _emb(spark).where("vec_id < 100")
+    tied = emb.unionByName(
+        emb.withColumn("vec_id", F.col("vec_id") + 1000)).unionByName(
+        emb.withColumn("vec_id", F.col("vec_id") + 2000))
+    path = str(tmp_path_factory.mktemp("tied") / "srp")
+    from trial_data_ingestion_spark.operators.similarity import (
+        write_srp_index,
+    )
+    write_srp_index(tied, path, dim=64, num_planes=4)
+    return path
+
+
+def test_one_query_path_equals_batch_path_with_ties(spark, tied_index):
+    """Each query alone (ranked by the driver-merged per-task top-k)
+    returns exactly its rows of the batch call (ranked by the
+    window): score descending, then id ascending, ties included."""
+    from trial_data_ingestion_spark.operators.similarity import (
+        topk_lsh_over_index,
+    )
+    qs = (_emb(spark).where(F.col("vec_id").isin(0, 1, 2, 3))
+          .select(F.col("vec_id").alias("query_id"),
+                  F.col("embedding").alias("query_vec")))
+    batch = topk_lsh_over_index(spark, tied_index, qs, dim=64,
+                                k=7).collect()
+    ties = 0
+    for qid in (0, 1, 2, 3):
+        alone = topk_lsh_over_index(
+            spark, tied_index, qs.where(F.col("query_id") == qid),
+            dim=64, k=7).collect()
+        want = sorted((r for r in batch if r.query_id == qid),
+                      key=lambda r: r.rank)
+        assert [tuple(r) for r in alone] == [tuple(r) for r in want]
+        assert [r.rank for r in alone] == list(range(1, 8))
+        keys = [(-r.score, r.neighbor_id) for r in alone]
+        assert keys == sorted(keys)
+        ties += sum(a.score == b.score for a, b in zip(alone, alone[1:]))
+    assert ties >= 8
+
+
+@pytest.mark.parametrize("vec", [[0.5] * 63, [0.5] * 65,
+                                 [0.5] * 10 + [None] + [0.5] * 53])
+def test_malformed_query_vector_raises_before_index_read(
+        spark, tied_index, monkeypatch, vec):
+    """A query vector that is not 64 non-null values raises
+    ``ValueError`` naming its query, before the index is read (a long
+    vector used to probe bucket 0, and a null element to score
+    ``None``)."""
+    from trial_data_ingestion_spark.operators import similarity
+    from trial_data_ingestion_spark.session import local_frame
+
+    def no_read(*args, **kwargs):
+        raise AssertionError("the index was read")
+
+    monkeypatch.setattr(similarity, "read_partitions", no_read)
+    qs = local_frame(spark, [("ok", [0.5] * 64), ("bad-q", vec)],
+                     "query_id string, query_vec array<float>")
+    with pytest.raises(ValueError, match="'bad-q'.*64 non-null"):
+        similarity.topk_lsh_over_index(spark, tied_index, qs, dim=64)

@@ -304,3 +304,32 @@ def test_phash_index_probe_is_partition_pruned(spark, tmp_path):
     assert "PartitionFilters" in plan and "pbkt" in plan
     # 1 probe hash -> at most 5 band buckets of 16
     assert len(bkts) <= 5
+
+
+def test_dedup_media_incremental_releases_caches_when_append_raises(
+        spark, tmp_path, monkeypatch):
+    """The probe persists the batch's hashes twice; an append that
+    raises must not leave them cached for the rest of the session.
+    Local checkpoints are not counted: Spark's context cleaner drops
+    them with their frames, where a ``persist()`` stays registered
+    until it is unpersisted."""
+    from tests import sink_cases
+    from trial_data_ingestion_spark.multimodal import phash
+
+    path = str(tmp_path / "phidx")
+    sink_cases.build_store(spark, "media", path)
+    batch = sink_cases.first_batch(spark, "media")
+
+    def refuse(*args, **kwargs):
+        raise RuntimeError("append refused")
+
+    monkeypatch.setattr(phash, "write_phash_index", refuse)
+    def cached():
+        rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+        return sum(not r.rdd().isLocallyCheckpointed() for r in rdds)
+
+    before = cached()
+    with pytest.raises(RuntimeError, match="append refused"):
+        phash.dedup_media_incremental(spark, batch, path, image_hasher,
+                                      delta="b0001")
+    assert cached() == before

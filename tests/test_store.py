@@ -81,6 +81,30 @@ def test_srp_probe_reads_only_probed_buckets(spark, srp_path):
     assert out.count() == 10
 
 
+def test_one_query_srp_probe_reads_only_probed_buckets(spark, srp_path,
+                                                       monkeypatch):
+    """A single query is ranked on the driver and comes back as a
+    local frame, so the pruning check moves to the index read itself:
+    the frame ``read_partitions`` hands the query holds only files of
+    the query's probed buckets."""
+    from trial_data_ingestion_spark.operators import similarity
+
+    reads = []
+
+    def recording(*args, **kwargs):
+        reads.append(read_partitions(*args, **kwargs))
+        return reads[-1]
+
+    monkeypatch.setattr(similarity, "read_partitions", recording)
+    qs = _one_query(spark)
+    out = similarity.topk_lsh_over_index(spark, srp_path, qs, dim=64, k=5)
+    assert out.count() == 5 and len(reads) == 1
+    base = qs.select(similarity.srp_bucket("query_vec", 64, 8)).first()[0]
+    probes = {base ^ x for x in [0] + [1 << p for p in range(8)]}
+    files = reads[0].inputFiles()
+    assert files and _keys(files, "bucket") <= probes
+
+
 def test_delta_layered_minhash_probe_reads_only_probed_pbkts(
         spark, sf_dir, tmp_path):
     """The MinHash cross-candidate probe over a base + appended-delta
@@ -403,9 +427,11 @@ def _jobs_and_tasks(spark, group, fn) -> tuple[int, int]:
 def test_params_io_runs_no_job_and_srp_probe_stays_lean(spark, stores,
                                                        tmp_path):
     """The sidecar is read and written on the driver: 0 Spark jobs.
-    So one top-k query over the SRP index runs at most 4 jobs; the
-    Spark-read JSON sidecar cost 2 more, and inferring the probed
-    buckets' schema 1 more."""
+    So one top-k query over the SRP index, read from parquet, runs at
+    most 3 jobs: collecting the query, broadcasting its probe rows,
+    and the driver-merged top-k.  The Spark-read JSON sidecar cost 2
+    more, inferring the probed buckets' schema 1 more, and ranking
+    with a window instead of a per-task top-k 1 more."""
     from trial_data_ingestion_spark.operators.similarity import (
         topk_lsh_over_index,
     )
@@ -421,7 +447,27 @@ def test_params_io_runs_no_job_and_srp_probe_stays_lean(spark, stores,
         topk_lsh_over_index(spark, path, qs, dim=64, k=10).collect()
     query()                                       # warm
     n = _jobs(spark, "srp-probe", query)
-    assert n <= 4, f"one SRP top-k query ran {n} Spark jobs"
+    assert n <= 3, f"one SRP top-k query ran {n} Spark jobs"
+
+
+def test_one_local_srp_query_runs_at_most_two_jobs(spark, stores):
+    """A one-row ``local_frame`` query pays only for its index read:
+    the broadcast of its probe rows and the per-task top-k."""
+    from trial_data_ingestion_spark.operators.similarity import (
+        topk_lsh_over_index,
+    )
+    vec = _one_query(spark).first()["query_vec"]
+    qs = local_frame(spark, [(0, vec)],
+                     "query_id long, query_vec array<float>")
+    rows = []
+
+    def query():
+        rows[:] = topk_lsh_over_index(spark, stores["srp"], qs, dim=64,
+                                      k=10).collect()
+    query()                                       # warm
+    n = _jobs(spark, "srp-local-query", query)
+    assert n <= 2, f"one local SRP top-k query ran {n} Spark jobs"
+    assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
 
 
 @pytest.fixture(scope="module")

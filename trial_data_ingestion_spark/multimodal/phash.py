@@ -37,8 +37,8 @@ from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.session import ensure_parallelism
 from trial_data_ingestion_spark.store import (
-    layout_of, new_delta, read_params, read_partitions, reserve_delta,
-    write_params,
+    check_partition_value, layout_of, new_delta, read_params,
+    read_partitions, reserve_delta, write_params,
 )
 
 HASH_BITS = 64
@@ -354,59 +354,68 @@ def dedup_media_incremental(spark, new_media: DataFrame, path: str,
     from trial_data_ingestion_spark.operators.incremental_dedup import (
         _corpus_wins_survivors,
     )
+    if delta is not None:
+        check_partition_value(delta, "delta")
     p = read_params(spark, path)
     max_hamming, num_buckets = p["max_hamming"], p["num_buckets"]
 
+    # both caches are released however the call ends: an append that
+    # raises must not leave them pinned for the rest of the session
     raw_hashes = attach_phash(new_media, hasher).persist()
+    hashes = None
+    try:
+        # seen-id resume: read of the batch's dbkt partitions of the doc
+        # store only
+        batch_dbkts = sorted(r["b"] for r in raw_hashes.select(
+            F.pmod(F.xxhash64("media_id"), F.lit(num_buckets))
+            .alias("b")).distinct().collect())
+        seen = (read_partitions(spark, path, "dbkt", batch_dbkts,
+                                "docs", exclude_delta=delta)
+                .select(F.col("doc").alias("media_id")))
+        new_media = new_media.join(seen, "media_id", "left_anti")
+        hashes = raw_hashes.join(seen, "media_id", "left_anti").persist()
 
-    # seen-id resume: read of the batch's dbkt partitions of the doc
-    # store only
-    batch_dbkts = sorted(r["b"] for r in raw_hashes.select(
-        F.pmod(F.xxhash64("media_id"), F.lit(num_buckets))
-        .alias("b")).distinct().collect())
-    seen = (read_partitions(spark, path, "dbkt", batch_dbkts, "docs",
-                            exclude_delta=delta)
-            .select(F.col("doc").alias("media_id")))
-    new_media = new_media.join(seen, "media_id", "left_anti")
-    hashes = raw_hashes.join(seen, "media_id", "left_anti").persist()
+        # in-batch pairs: the ordinary lossless pairing
+        batch_pairs = (phash_near_dups(hashes, max_hamming)
+                       .select(F.col("media_id_a").alias("doc_a"),
+                               F.col("media_id_b").alias("doc_b")))
 
-    # in-batch pairs: the ordinary lossless pairing
-    batch_pairs = (phash_near_dups(hashes, max_hamming)
-                   .select(F.col("media_id_a").alias("doc_a"),
-                           F.col("media_id_b").alias("doc_b")))
-
-    # cross pairs: batch bands -> read of their pbkt partitions only
-    # -> verify
-    bt = (_band_table(hashes, max_hamming)
-          .withColumn("pbkt", F.pmod(F.xxhash64("band", "val"),
-                                     F.lit(num_buckets))))
-    probe_bkts = sorted(r["pbkt"] for r in
-                        bt.select("pbkt").distinct().collect())
-    idx = read_partitions(spark, path, "pbkt", probe_bkts, "bands",
-                          exclude_delta=delta)
-    cross = (idx.alias("c")
-             .join(F.broadcast(bt.alias("n")),
-                   on=[F.col("c.band") == F.col("n.band"),
-                       F.col("c.val") == F.col("n.val")])
-             .select(F.col("c.doc").alias("doc_a"),
-                     F.col("n.doc").alias("doc_b"),
-                     F.col("c.ph").alias("ph_a"),
-                     F.col("n.ph").alias("ph_b"))
-             .distinct()
-             .where(F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b")))
-                    <= max_hamming))
-    corpus_nodes = cross.select(F.col("doc_a").alias("doc")).distinct()
-    confirmed = (batch_pairs
-                 .unionByName(cross.select("doc_a", "doc_b"))
-                 .distinct())
-    survivors = _corpus_wins_survivors(new_media, confirmed,
-                                       corpus_nodes, "media_id")
-    if delta is not None:
-        survivors = survivors.localCheckpoint()
-        to_store = hashes.localCheckpoint()
-        write_phash_index(to_store, path, max_hamming=max_hamming,
-                          num_buckets=num_buckets, mode="append",
-                          delta_id=delta)
-    hashes.unpersist()
-    raw_hashes.unpersist()
+        # cross pairs: batch bands -> read of their pbkt partitions only
+        # -> verify
+        bt = (_band_table(hashes, max_hamming)
+              .withColumn("pbkt", F.pmod(F.xxhash64("band", "val"),
+                                         F.lit(num_buckets))))
+        probe_bkts = sorted(r["pbkt"] for r in
+                            bt.select("pbkt").distinct().collect())
+        idx = read_partitions(spark, path, "pbkt", probe_bkts, "bands",
+                              exclude_delta=delta)
+        cross = (idx.alias("c")
+                 .join(F.broadcast(bt.alias("n")),
+                       on=[F.col("c.band") == F.col("n.band"),
+                           F.col("c.val") == F.col("n.val")])
+                 .select(F.col("c.doc").alias("doc_a"),
+                         F.col("n.doc").alias("doc_b"),
+                         F.col("c.ph").alias("ph_a"),
+                         F.col("n.ph").alias("ph_b"))
+                 .distinct()
+                 .where(F.bit_count(F.col("ph_a")
+                                    .bitwiseXOR(F.col("ph_b")))
+                        <= max_hamming))
+        corpus_nodes = (cross.select(F.col("doc_a").alias("doc"))
+                        .distinct())
+        confirmed = (batch_pairs
+                     .unionByName(cross.select("doc_a", "doc_b"))
+                     .distinct())
+        survivors = _corpus_wins_survivors(new_media, confirmed,
+                                           corpus_nodes, "media_id")
+        if delta is not None:
+            survivors = survivors.localCheckpoint()
+            to_store = hashes.localCheckpoint()
+            write_phash_index(to_store, path, max_hamming=max_hamming,
+                              num_buckets=num_buckets, mode="append",
+                              delta_id=delta)
+    finally:
+        if hashes is not None:
+            hashes.unpersist()
+        raw_hashes.unpersist()
     return survivors

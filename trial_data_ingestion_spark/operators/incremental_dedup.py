@@ -64,8 +64,8 @@ from trial_data_ingestion_spark.operators.dedup import (
 from trial_data_ingestion_spark.operators.pins import PinScope
 from trial_data_ingestion_spark.session import local_frame
 from trial_data_ingestion_spark.store import (
-    batch_sink, layout_of, new_delta, read_params, read_partitions,
-    read_table, reserve_delta, write_params,
+    batch_sink, check_partition_value, layout_of, new_delta, read_params,
+    read_partitions, read_table, reserve_delta, write_params,
 )
 
 #: candidate-pair sets at or below this size are Jaccard-verified on
@@ -492,6 +492,8 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
     — it reads neither the index nor any cache, so every pin is
     released before return (:class:`~.pins.PinScope`) and an append
     can't be observed by the result."""
+    if delta is not None:
+        check_partition_value(delta, "delta")
     p = read_params(spark, index_path)
     k, num_hashes, bands = p["k"], p["num_hashes"], p["bands"]
     num_buckets = p["num_buckets"]
@@ -771,6 +773,8 @@ def embedding_near_dups_incremental(spark, new_embeddings: DataFrame,
         _index_planes, srp_bucket, write_srp_index,
     )
 
+    if delta is not None:
+        check_partition_value(delta, "delta")
     num_planes = _index_planes(spark, index_path, num_planes, dim)
     pins = PinScope()
     nb = pins.pin(

@@ -52,8 +52,8 @@ from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.session import ensure_parallelism
 from trial_data_ingestion_spark.store import (
-    layout_of, new_delta, read_params, read_partitions, reserve_delta,
-    write_params,
+    check_partition_value, layout_of, new_delta, read_params,
+    read_partitions, reserve_delta, write_params,
 )
 
 
@@ -208,6 +208,8 @@ def line_dedup_incremental(spark, new_docs: DataFrame, index_path: str,
     hashes are listed and scanned (:func:`probe_line_store`) with the
     batch's distinct keys broadcast; store-side data never shuffles,
     and the per-batch cost is O(batch lines + matched keys)."""
+    if delta is not None:
+        check_partition_value(delta, "delta")
     params = read_params(spark, index_path)
     min_chars, num_buckets = params["min_chars"], params["num_buckets"]
     occ = _eligible_occurrences(new_docs, id_col, text_col,

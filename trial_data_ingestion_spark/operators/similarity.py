@@ -13,9 +13,19 @@ the query capability is the store's purpose, so this module provides:
   (deterministic hyperplanes derived from md5, so tests are
   reproducible) with multi-probe; candidates re-scored exactly.
   At 100 TB this turns a full scan per query into a bucket-join.
+* ``topk_lsh_over_index`` / ``topk_ivf_over_index`` — the same
+  answers over a persisted bucket or cell layout: a query reads and
+  scores only its probed partitions.  The SRP query side (norm,
+  bucket, probe set) is computed on the driver, the rescore is one
+  ``aggregate`` fold, and a single query is ranked by a per-task
+  top-k that the driver merges; a batch of queries ranks with the
+  ``row_number`` window.
 """
 
 from __future__ import annotations
+
+import functools
+import math
 
 # module-level so pandas_udf type-hint resolution (get_type_hints
 # against these globals) can see `pd` — the stringified annotations
@@ -24,6 +34,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from trial_data_ingestion_spark.functions.vector import (
@@ -99,16 +110,18 @@ def topk_bruteforce(embeddings: DataFrame, queries: DataFrame,
     )
 
 
-def _hyperplane(dim: int, plane_idx: int) -> list[float]:
+@functools.lru_cache(maxsize=None)
+def _hyperplane(dim: int, plane_idx: int) -> tuple[float, ...]:
     """Deterministic pseudo-random unit-free hyperplane: component j is
     derived from md5(f"{plane_idx}:{j}") mapped to [-1, 1).  Pure
-    Python at plan time (tiny), shipped as a literal array."""
+    Python at plan time (tiny), shipped as a literal array; cached, so
+    repeated queries of one index hash no plane twice."""
     import hashlib
     comps = []
     for j in range(dim):
         h = hashlib.md5(f"{plane_idx}:{j}".encode()).hexdigest()
         comps.append((int(h[:15], 16) / float(1 << 60)) * 2.0 - 1.0)
-    return comps
+    return tuple(comps)
 
 
 def srp_bucket(vec, dim: int, num_planes: int = 8) -> Column:
@@ -358,7 +371,6 @@ def srp_auto_planes(n: int, occupancy: int = SRP_AUTO_OCCUPANCY) -> int:
     quadratically in corpus size by construction (n/2^p rows per
     bucket) — the 10x/100x scale tier (BENCH_SCALE.json) measures
     exactly this knob; "auto" is that deployment guidance as API."""
-    import math
     return max(4, math.ceil(math.log2(max(n, 1) / occupancy)))
 
 
@@ -465,7 +477,6 @@ def srp_pair_recall(cos: float, num_planes: int,
     ``(1 - θ/π)^p`` and L tables miss it with the L-th power of the
     single-table miss.  Driver-side arithmetic for planning and
     tests."""
-    import math
     theta = math.acos(max(-1.0, min(1.0, cos)))
     p1 = (1.0 - theta / math.pi) ** num_planes
     return 1.0 - (1.0 - p1) ** num_tables
@@ -481,7 +492,6 @@ def srp_tables_for_recall(cos: float, num_planes: int,
     ``UserWarning`` reporting the achieved recall (a steep plane
     count at a shallow cosine can make the target unreachable —
     lower ``num_planes`` or the target)."""
-    import math
     import warnings
     if not 0.0 < target < 1.0:
         raise ValueError("target must be in (0, 1)")
@@ -777,11 +787,15 @@ def topk_ivf_over_index(spark, index_path: str, queries: DataFrame,
     probed cell ids name the only ``cell_id`` directories the index
     read lists and reads (``store.read_partitions``); they stay
     as a LITERAL filter too, visible as ``PartitionFilters`` in the
-    plan, and ``inputFiles()`` holds only probed cells.  The corpus side
-    does no centroid work at all (assignment was paid once at build
-    time); the only join is a broadcast equi-join on ``cell_id``
-    against the probe rows.  Identical results to :func:`topk_ivf`
-    with the same centroids, by construction."""
+    plan, and the scan's ``inputFiles()`` holds only probed cells.
+    The corpus side does no centroid work at all (assignment was paid
+    once at build time); the only join is a broadcast equi-join on
+    ``cell_id`` against the probe rows.  With ``dim`` recorded the
+    rescore is one ``aggregate`` fold, and the rank is
+    :func:`_top_k`'s, as in :func:`topk_lsh_over_index`: a single
+    query comes back as a driver-merged local frame.  Identical
+    results to :func:`topk_ivf` with the same centroids, by
+    construction.  The nearest-cell search still runs in Spark."""
     centroids, dim = _ivf_state(spark, index_path)
     probed = _nearest_cells(queries, entry_frame(spark, centroids),
                             query_vec_col, query_id_col, nprobe, dim)
@@ -797,17 +811,12 @@ def topk_ivf_over_index(spark, index_path: str, queries: DataFrame,
     cand = (idx.join(probe_df, "cell_id")
                .where(F.col(id_col) != F.col(query_id_col)))
     if dim is not None:
-        rescore = (dot_fixed(vec_col, query_vec_col, dim)
+        rescore = (_dot_fold(vec_col, query_vec_col, dim)
                    / (F.col("__nrm") * F.col("__qnrm")))
     else:
         rescore = cosine_similarity(F.col(vec_col), F.col(query_vec_col))
-    scored = cand.withColumn("score", rescore)
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"),
-                                                F.col(id_col).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .where(F.col("rank") <= k)
-                  .select(query_id_col, F.col(id_col).alias("neighbor_id"),
-                          "score", "rank"))
+    return _top_k(spark, cand.withColumn("score", rescore), query_id_col,
+                  id_col, k, {r[query_id_col] for r in probe_rows})
 
 
 def write_srp_index(embeddings: DataFrame, path: str, dim: int,
@@ -899,14 +908,29 @@ def topk_lsh_over_index(spark, index_path: str, queries: DataFrame,
                         k: int = 10, num_planes: int | None = None,
                         multiprobe_hamming: int = 1) -> DataFrame:
     """Approximate cosine top-k over a persisted
-    :func:`write_srp_index` layout; same semantics as
+    :func:`write_srp_index` layout; same semantics and the same rows as
     :func:`topk_lsh` (multi-probe within the Hamming radius + exact
-    rescore), but the corpus-side bucket assignment is read, not
-    recomputed — the plan contains no projection ``zip_with`` over
-    the index, only a scan of the probed bucket directories (the only
-    ones listed: ``store.read_partitions``; the literal
-    ``bucket`` filter shows as ``PartitionFilters``), a broadcast
-    equi-join on ``bucket``, and the codegen'd rescore.
+    rescore), but a query pays only for reading and scoring its probed
+    buckets:
+
+    * the query side runs on the driver: the query set is collected
+      once, and each query's norm and SRP bucket are computed in Python
+      in Spark's order of operations (:func:`_query_probes`), so they
+      are bit-identical to ``l2_norm_fixed`` and :func:`srp_bucket`;
+      a query vector that is not ``dim`` non-null values raises
+      ``ValueError`` before any index read;
+    * the corpus-side bucket assignment is read, not recomputed: the
+      plan holds no projection ``zip_with``, only a scan of the probed
+      bucket directories (the only ones listed:
+      ``store.read_partitions``; the literal ``bucket`` filter shows
+      as ``PartitionFilters``) and a broadcast equi-join on ``bucket``;
+    * the rescore is one ``aggregate`` fold (:func:`_dot_fold`), which
+      sums in ``dot_fixed``'s order, so scores are identical;
+    * the rank (:func:`_top_k`): one query is ranked by Spark's
+      ``TakeOrderedAndProject`` (each task keeps its own top ``k``,
+      the driver merges) and returned as a local frame; a batch of
+      queries keeps the ``row_number`` window over ``query_id``.
+      Ties order by score descending, then id ascending, either way.
 
     ``num_planes=None`` (default) probes with the plane count the
     index RECORDED at build time (``_params.json`` sidecar) — the only
@@ -914,29 +938,91 @@ def topk_lsh_over_index(spark, index_path: str, queries: DataFrame,
     the recording and raises on mismatch instead of silently probing
     empty buckets."""
     num_planes = _index_planes(spark, index_path, num_planes, dim)
-    probe_sets = [F.lit(0)]
-    if multiprobe_hamming >= 1:
-        probe_sets += [F.lit(1 << p) for p in range(num_planes)]
-    q = (queries
-         .withColumn("__qnrm", l2_norm_fixed(query_vec_col, dim))
-         .withColumn("q_bucket", srp_bucket(query_vec_col, dim,
-                                            num_planes))
-         .withColumn("probe", F.explode(F.array(*probe_sets)))
-         .withColumn("bucket",
-                     F.col("q_bucket").bitwiseXOR(F.col("probe")))
-         .drop("q_bucket", "probe"))
-    q_rows = q.collect()
-    buckets = sorted({r["bucket"] for r in q_rows})
-    q_df = F.broadcast(local_frame(spark, q_rows, q.schema))
-    idx = read_partitions(spark, index_path, "bucket", buckets)
+    rows, schema = _query_probes(queries, query_id_col, query_vec_col,
+                                 dim, num_planes, multiprobe_hamming)
+    q_df = F.broadcast(local_frame(spark, rows, schema))
+    idx = read_partitions(spark, index_path, "bucket",
+                          sorted({r[-1] for r in rows}))
     scored = (idx.join(q_df, "bucket")
               .withColumn("score",
-                          dot_fixed(vec_col, query_vec_col, dim)
+                          _dot_fold(vec_col, query_vec_col, dim)
                           / (F.col("__nrm") * F.col("__qnrm")))
               .where(F.col(id_col) != F.col(query_id_col)))
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"),
-                                                F.col(id_col).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .where(F.col("rank") <= k)
-                  .select(query_id_col, F.col(id_col).alias("neighbor_id"),
-                          "score", "rank"))
+    return _top_k(spark, scored, query_id_col, id_col, k,
+                  {r[0] for r in rows})
+
+
+def _query_probes(queries: DataFrame, query_id_col: str,
+                  query_vec_col: str, dim: int, num_planes: int,
+                  multiprobe_hamming: int) -> tuple[list, T.StructType]:
+    """Rows ``(query id, query vector, __qnrm, bucket)``, one per
+    probed bucket of each query, and their schema.  The query set is
+    collected once; the norm and the SRP bucket follow Spark's exact
+    order of operations (each element cast to double, sums left to
+    right from the first square for the norm and from 0.0 for each
+    projection, bit ``p`` set when projection ``p`` is ``>= 0``), so
+    they equal ``l2_norm_fixed`` and :func:`srp_bucket` bit for bit.
+    A vector that is not ``dim`` non-null values raises
+    ``ValueError`` naming its query."""
+    q = queries.select(query_id_col, query_vec_col)
+    planes = [_hyperplane(dim, p) for p in range(num_planes)]
+    probes = [0]
+    if multiprobe_hamming >= 1:
+        probes += [1 << p for p in range(num_planes)]
+    rows = []
+    for qid, vec in q.collect():
+        if vec is None or len(vec) != dim or None in vec:
+            raise ValueError(f"query {qid!r}: the query vector must "
+                             f"hold {dim} non-null values")
+        x = [float(v) for v in vec]
+        s = x[0] * x[0]
+        for v in x[1:]:
+            s = s + v * v
+        bucket = 0
+        for p, plane in enumerate(planes):
+            a = 0.0
+            for v, c in zip(x, plane):
+                a = a + v * c
+            if a >= 0:
+                bucket |= 1 << p
+        rows += [(qid, vec, math.sqrt(s), bucket ^ b) for b in probes]
+    schema = T.StructType([*q.schema.fields,
+                           T.StructField("__qnrm", T.DoubleType()),
+                           T.StructField("bucket", T.IntegerType())])
+    return rows, schema
+
+
+def _dot_fold(a: str, b: str, dim: int) -> Column:
+    """The dot product of two ``dim``-element array columns as one
+    ``aggregate`` fold over ``sequence(1, dim)``: it sums in
+    ``dot_fixed``'s order, so values are identical, while the
+    expression stays one node where the unrolled form is ``dim``
+    terms of driver-side analysis per query."""
+    return F.expr(f"aggregate(sequence(1, {dim}), 0D, (acc, i) -> acc"
+                  f" + CAST(element_at({a}, i) AS DOUBLE)"
+                  f" * CAST(element_at({b}, i) AS DOUBLE))")
+
+
+def _top_k(spark, scored: DataFrame, query_id_col: str, id_col: str,
+           k: int, query_ids: set) -> DataFrame:
+    """``(query_id, neighbor_id, score, rank)``: the ``k`` best rows of
+    ``scored`` per query, score descending, then id ascending.  One
+    query id: ``orderBy(...).limit(k)`` plans as
+    ``TakeOrderedAndProject`` — each task keeps its own top ``k`` and
+    the driver merges at most ``k`` x tasks rows (the local-then-global
+    top-k of REPOSE, ICDE 2021) — collected and returned as a local
+    frame, with no shuffle.  Several: a ``row_number`` window over the
+    query id."""
+    out = scored.select(query_id_col, F.col(id_col).alias("neighbor_id"),
+                        "score")
+    order = [F.desc("score"), F.asc("neighbor_id")]
+    if len(query_ids) == 1:
+        top = out.orderBy(*order).limit(k).collect()
+        schema = T.StructType([*out.schema.fields,
+                               T.StructField("rank", T.IntegerType(),
+                                             False)])
+        return local_frame(spark, [(*r, i) for i, r in enumerate(top, 1)],
+                           schema)
+    w = Window.partitionBy(query_id_col).orderBy(*order)
+    return (out.withColumn("rank", F.row_number().over(w))
+               .where(F.col("rank") <= k))

@@ -58,11 +58,14 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     ``schema`` order) under an explicit ``StructType`` or DDL schema.
 
     The rows are typed into a ``pyarrow.Table`` and handed to Spark as
-    one, so the plan holds a ``LocalRelation``: scanning, broadcasting
-    or collecting it runs no Spark job.  ``createDataFrame`` over a
-    Python list would instead ``parallelize`` it into a Python RDD,
-    and every scan of that starts Python workers in a job of its own.
-    Every driver-built frame in the package enters a plan here."""
+    one, so the plan holds a ``LocalRelation``: building or collecting
+    it runs no Spark job.  Broadcasting it does run one, with no Python
+    worker: the broadcast exchange collects its child through an RDD
+    (a scan joined to a broadcast local frame runs 2 jobs where the
+    scan alone runs 1).  ``createDataFrame`` over a Python list would
+    instead ``parallelize`` it into a Python RDD, and every scan of
+    that starts Python workers in a job of its own.  Every
+    driver-built frame in the package enters a plan here."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
