@@ -284,7 +284,7 @@ def test_incremental_num_planes_from_metadata(spark, emb, tmp_path):
     write_srp_index(corpus, path, dim=DIM, num_planes="auto")
     meta = read_params(spark, path)
     assert meta == {"num_planes": srp_auto_planes(corpus.count()),
-                    "dim": DIM}
+                    "dim": DIM, "num_buckets": 8}
     copies = (corpus.orderBy("vec_id").limit(5)
               .select((F.col("vec_id") + 100_000).alias("vec_id"),
                       "embedding"))

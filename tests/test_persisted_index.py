@@ -7,7 +7,8 @@ scan at 100 TB:
   on-the-fly operator (and the DuckDB oracle) returns;
 * partition pruning — the re-query plan carries the literal probe
   filter in ``PartitionFilters``, and a scan under that filter reads
-  ONLY the probed cell/bucket directories (asserted on
+  ONLY the probed cell directories, or the ``pbkt`` directories of
+  the probed SRP buckets (asserted on
   ``input_file_name``; that a probe also LISTS only those
   directories is asserted on ``inputFiles()`` in ``test_store.py``);
 * no corpus-side recompute — the re-query plan contains no centroid
@@ -157,43 +158,51 @@ def test_ivf_index_prunes_to_probed_cells(spark, tmp_path):
 def test_srp_index_no_bucket_recompute(spark, tmp_path):
     """The persisted-SRP re-query must not recompute bucket
     projections over the corpus (no zip_with in the plan — the only
-    vector math left is the element_at rescore) and must read only
-    the probed bucket partitions."""
+    vector math left is the element_at rescore), must read only the
+    ``pbkt`` partitions of its probed buckets, keep those buckets by a
+    literal ``bucket IN (...)`` filter, and return ``topk_lsh``'s
+    rows."""
     from trial_data_ingestion_spark.operators.similarity import (
-        topk_lsh, topk_lsh_over_index, write_srp_index,
+        _read_buckets, srp_bucket, topk_lsh, topk_lsh_over_index,
+        write_srp_index,
     )
+    from trial_data_ingestion_spark.store import read_params
     emb = _emb(spark)
     path = str(tmp_path / "srp_index")
     write_srp_index(emb, path, dim=64, num_planes=8)
+    assert read_params(spark, path)["num_buckets"] == 8
     qs = _queries(spark)
     out = topk_lsh_over_index(spark, path, qs, dim=64, k=5,
                               num_planes=8, multiprobe_hamming=1)
     plan = _plan(spark, out, "formatted")
     assert "zip_with" not in plan
-    assert "PartitionFilters" in plan and "bucket" in plan
-    # execution-real pruning: recompute the probe-bucket set and scan
-    # with the same literal filter — only those directories are read
-    from trial_data_ingestion_spark.operators.similarity import (
-        srp_bucket,
-    )
     base = [r.b for r in
             qs.select(srp_bucket("query_vec", 64, 8).alias("b"))
               .collect()]
     probes = {b ^ x for b in base
               for x in [0] + [1 << p for p in range(8)]}
-    # 3 queries x (1 + 8 probes) reach at most 27 buckets of 256
+    # 3 queries x (1 + 8 probes) reach at most 27 buckets of 256, in
+    # 6 of the 8 pbkt partitions (the low 3 bits)
     assert len(probes) <= 27 < 256
-    idx = (spark.read.parquet(path)
-           .where(F.col("bucket").isin(sorted(probes))))
-    touched = _touched_partitions(idx, "bucket")
-    assert touched <= probes
-    assert 0 < len(touched) < 256
-    # identical results to the on-the-fly operator
+    pbkts = {b & 7 for b in probes}
+    assert len(pbkts) == 6
+    found = re.search(r"PartitionFilters: \[pbkt#\d+ IN \(([\d,]+)\)\]",
+                      plan)
+    assert found and {int(v) for v in found.group(1).split(",")} == pbkts
+    found = re.search(r"PushedFilters: \[In\(bucket, \[([\d,]+)\]\)",
+                      plan)
+    assert found and {int(v) for v in found.group(1).split(",")} \
+        == probes
+    # execution-real pruning: the probe's own read touches only the
+    # probed pbkt directories, and only rows of the probed buckets
+    idx = _read_buckets(spark, path, 8, probes)
+    assert _touched_partitions(idx, "pbkt") == pbkts
+    assert {r.bucket for r in idx.select("bucket").distinct().collect()} \
+        <= probes
+    # identical rows to the on-the-fly operator, ties included
     live = topk_lsh(emb, qs, dim=64, k=5, num_planes=8,
                     multiprobe_hamming=1)
-    key = lambda df: {(r.query_id, r.rank): (r.neighbor_id,
-                                             round(r.score, 9))
-                      for r in df.collect()}
+    key = lambda df: sorted(tuple(r) for r in df.collect())
     assert key(out) == key(live)
 
 
@@ -233,11 +242,13 @@ def test_srp_index_metadata_round_trip(spark, tmp_path):
     path = str(tmp_path / "srpauto")
     write_srp_index(emb, path, dim=64, num_planes="auto")
     p = srp_auto_planes(emb.count())
-    assert read_params(spark, path) == {"num_planes": p, "dim": 64}
+    assert read_params(spark, path) == {"num_planes": p, "dim": 64,
+                                        "num_buckets": 8}
     # the sidecar never leaks into the data: index root reads see
-    # exactly the vector columns (+ the r9 delta partition level)
+    # exactly the vector columns (+ the delta and pbkt partition
+    # levels)
     assert set(spark.read.parquet(path).columns) \
-        == set(emb.columns) | {"__nrm", "bucket", "delta"}
+        == set(emb.columns) | {"__nrm", "bucket", "delta", "pbkt"}
     qs = _queries(spark)
     by_meta = topk_lsh_over_index(spark, path, qs, dim=64, k=5).collect()
     assert len(by_meta) > 0
@@ -271,7 +282,8 @@ def test_srp_params_corrupt_sidecar_raises_not_default(spark, tmp_path):
     emb = _emb(spark)
     path = str(tmp_path / "srpmeta")
     write_srp_index(emb, path, dim=64, num_planes=6)
-    assert read_params(spark, path) == {"num_planes": 6, "dim": 64}
+    assert read_params(spark, path) == {"num_planes": 6, "dim": 64,
+                                        "num_buckets": 8}
     # corrupt the sidecar in place; drop the local-FS checksum file or
     # the read dies earlier with a ChecksumException (which would ALSO
     # propagate, but the corrupt-content branch is the one under test)

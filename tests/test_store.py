@@ -39,70 +39,120 @@ def _keys(files, column):
 
 @pytest.fixture(scope="module")
 def srp_path(spark, tmp_path_factory):
-    """An SRP index of 256 buckets with a base delta and a
-    numeric-looking appended delta ``7``; the append comes from rows
-    the base never saw, so some buckets exist under ``delta=7`` only."""
+    """An SRP index of 256 buckets in 8 ``pbkt`` partitions (the low 3
+    bits of the bucket id) with a base delta and a numeric-looking
+    appended delta ``7``.  The append holds the rows the base never
+    saw, among them every row of ``pbkt`` 7, so that partition exists
+    under ``delta=7`` only."""
     from trial_data_ingestion_spark.operators.similarity import (
-        write_srp_index,
+        srp_bucket, write_srp_index,
     )
     emb = _emb(spark)
+    base = ((F.col("vec_id") < 150)
+            & (srp_bucket("embedding", 64, 8).bitwiseAND(7) != 7))
     path = str(tmp_path_factory.mktemp("store") / "srp")
-    write_srp_index(emb.where(F.col("vec_id") < 150), path, dim=64,
-                    num_planes=8)
-    write_srp_index(emb.where(F.col("vec_id") >= 150), path, dim=64,
-                    mode="append", delta_id="7")
+    write_srp_index(emb.where(base), path, dim=64, num_planes=8)
+    write_srp_index(emb.where(~base), path, dim=64, mode="append",
+                    delta_id="7")
+    assert read_params(spark, path)["num_buckets"] == 8
     return path
 
 
-def _buckets(path, delta):
+def _pbkts(path, delta):
     return {int(d.split("=")[1])
             for d in os.listdir(f"{path}/delta={delta}")
-            if d.startswith("bucket=")}
+            if d.startswith("pbkt=")}
+
+
+def _probes(spark, qs):
+    """The Hamming-1 probe buckets of the 8-plane queries ``qs``."""
+    from trial_data_ingestion_spark.operators.similarity import srp_bucket
+    base = [r.b for r in
+            qs.select(srp_bucket("query_vec", 64, 8).alias("b")).collect()]
+    return {b ^ x for b in base for x in [0] + [1 << p for p in range(8)]}
+
+
+def _bucket_filter(spark, df) -> set:
+    """The literal ``bucket IN (...)`` list that ``df``'s plan pushes
+    to its parquet scan (empty when there is none)."""
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
+        .fromString("formatted")
+    plan = df._jdf.queryExecution().explainString(mode)
+    found = re.search(r"PushedFilters: \[In\(bucket, \[([\d,]+)\]\)",
+                      plan)
+    return {int(v) for v in found.group(1).split(",")} if found else set()
+
+
+def _same_rows_as_topk_lsh(spark, got, qs, k):
+    """``got`` holds exactly ``topk_lsh``'s rows over the whole
+    fixture corpus (the index's base and append together), ranks and
+    tied scores included."""
+    from trial_data_ingestion_spark.operators.similarity import topk_lsh
+    key = lambda df: sorted(tuple(r) for r in df.collect())
+    return key(got) == key(topk_lsh(_emb(spark), qs, dim=64, k=k,
+                                    num_planes=8))
 
 
 def test_srp_probe_reads_only_probed_buckets(spark, srp_path):
-    """``topk_lsh_over_index``'s relation holds only files of the
-    probed bucket directories (of both deltas), where a full-root
-    read's relation lists every bucket of the index."""
+    """``topk_lsh_over_index`` over two queries that share a ``pbkt``
+    reads only files of their probed buckets' ``pbkt`` directories
+    (of both deltas: 4 of the 8), where a full-root read's relation
+    lists all 8; its plan keeps the probed buckets by a literal
+    ``bucket IN (...)`` filter; and it returns ``topk_lsh``'s rows."""
     from trial_data_ingestion_spark.operators.similarity import (
         srp_bucket, topk_lsh_over_index,
     )
-    qs = (_emb(spark).where(F.col("vec_id").isin(0, 1))
+    by_pbkt = {}
+    for r in (_emb(spark).where(F.col("vec_id") < 40)
+              .select("vec_id", srp_bucket("embedding", 64, 8)
+                      .bitwiseAND(7).alias("p")).collect()):
+        by_pbkt.setdefault(r.p, []).append(r.vec_id)
+    pair = next(ids[:2] for ids in by_pbkt.values() if len(ids) > 1)
+    qs = (_emb(spark).where(F.col("vec_id").isin(*pair))
           .select(F.col("vec_id").alias("query_id"),
                   F.col("embedding").alias("query_vec")))
     out = topk_lsh_over_index(spark, srp_path, qs, dim=64, k=5)
-    base = [r.b for r in
-            qs.select(srp_bucket("query_vec", 64, 8).alias("b")).collect()]
-    probes = {b ^ x for b in base for x in [0] + [1 << p for p in range(8)]}
+    probes = _probes(spark, qs)
+    probed = {b & 7 for b in probes}
+    assert len(probed) == 4
     files = out.inputFiles()
-    assert files and _keys(files, "bucket") <= probes
-    assert len(_keys(spark.read.parquet(srp_path).inputFiles(),
-                     "bucket")) > len(probes)
+    assert files and _keys(files, "pbkt") <= probed
+    assert {"delta=base", "delta=7"} <= {
+        re.search(r"/(delta=[^/]+)/", f).group(1) for f in files}
+    assert _keys(spark.read.parquet(srp_path).inputFiles(),
+                 "pbkt") == set(range(8))
+    assert _bucket_filter(spark, out) == probes
     assert out.count() == 10
+    assert _same_rows_as_topk_lsh(spark, out, qs, 5)
 
 
 def test_one_query_srp_probe_reads_only_probed_buckets(spark, srp_path,
                                                        monkeypatch):
     """A single query is ranked on the driver and comes back as a
     local frame, so the pruning check moves to the index read itself:
-    the frame ``read_partitions`` hands the query holds only files of
-    the query's probed buckets."""
+    the frame ``_read_buckets`` hands the query holds only files of
+    the query's probed ``pbkt`` partitions and filters ``bucket`` by
+    literal, and the query returns ``topk_lsh``'s rows."""
     from trial_data_ingestion_spark.operators import similarity
 
     reads = []
+    read_buckets = similarity._read_buckets
 
     def recording(*args, **kwargs):
-        reads.append(read_partitions(*args, **kwargs))
+        reads.append(read_buckets(*args, **kwargs))
         return reads[-1]
 
-    monkeypatch.setattr(similarity, "read_partitions", recording)
+    monkeypatch.setattr(similarity, "_read_buckets", recording)
     qs = _one_query(spark)
     out = similarity.topk_lsh_over_index(spark, srp_path, qs, dim=64, k=5)
     assert out.count() == 5 and len(reads) == 1
-    base = qs.select(similarity.srp_bucket("query_vec", 64, 8)).first()[0]
-    probes = {base ^ x for x in [0] + [1 << p for p in range(8)]}
+    probes = _probes(spark, qs)
+    probed = {b & 7 for b in probes}
+    assert len(probed) == 4
     files = reads[0].inputFiles()
-    assert files and _keys(files, "bucket") <= probes
+    assert files and _keys(files, "pbkt") <= probed
+    assert _bucket_filter(spark, reads[0]) == probes
+    assert _same_rows_as_topk_lsh(spark, out, qs, 5)
 
 
 def test_delta_layered_minhash_probe_reads_only_probed_pbkts(
@@ -129,12 +179,12 @@ def test_delta_layered_minhash_probe_reads_only_probed_pbkts(
     assert files and _keys(files, "pbkt") <= pbkts < set(range(64))
 
 
-@pytest.mark.parametrize("values", [[], [256, 300]])
+@pytest.mark.parametrize("values", [[], [8, 300]])
 def test_all_miss_probe_is_empty_with_store_columns(spark, srp_path,
                                                     values):
     """No probed partition on disk (or no key at all): 0 rows, and
     the columns and types of a full-root read."""
-    got = read_partitions(spark, srp_path, "bucket", values)
+    got = read_partitions(spark, srp_path, "pbkt", values)
     assert got.count() == 0
     assert got.schema == spark.read.parquet(srp_path).schema
 
@@ -144,20 +194,20 @@ def test_numeric_delta_stays_string(spark, srp_path):
     ``delta`` as a string, as the full-root read does beside
     ``base``; rows match the filtered full-root read, and
     ``exclude_delta`` drops them."""
-    only7 = sorted(_buckets(srp_path, "7") - _buckets(srp_path, "base"))
-    assert only7
+    only7 = sorted(_pbkts(srp_path, "7") - _pbkts(srp_path, "base"))
+    assert only7 == [7]
     full = spark.read.parquet(srp_path)
-    got = read_partitions(spark, srp_path, "bucket", only7[:2])
+    got = read_partitions(spark, srp_path, "pbkt", only7)
     assert got.schema == full.schema
     assert dict(got.dtypes)["delta"] == "string"
-    want = full.where(F.col("bucket").isin(only7[:2]))
-    key = lambda df: sorted((r.vec_id, r.delta, r.bucket)
+    want = full.where(F.col("pbkt").isin(only7))
+    key = lambda df: sorted((r.vec_id, r.delta, r.pbkt)
                             for r in df.collect())
     assert key(got) == key(want) and len(key(got)) > 0
-    assert read_partitions(spark, srp_path, "bucket", only7[:2],
+    assert read_partitions(spark, srp_path, "pbkt", only7,
                            exclude_delta="7").count() == 0
-    mixed = sorted(_buckets(srp_path, "7") & _buckets(srp_path, "base"))
-    kept = read_partitions(spark, srp_path, "bucket", mixed[:3],
+    mixed = sorted(_pbkts(srp_path, "7") & _pbkts(srp_path, "base"))
+    kept = read_partitions(spark, srp_path, "pbkt", mixed[:3],
                            exclude_delta="7")
     assert {r.delta for r in kept.collect()} == {"base"}
 
@@ -229,7 +279,7 @@ def _probe(spark, kind, path):
 #: the params each store's fixture build records
 _STORE_PARAMS = {
     "minhash": {"k": 8, "num_hashes": 32, "bands": 8, "num_buckets": 8},
-    "srp": {"num_planes": 6, "dim": 64},
+    "srp": {"num_planes": 6, "dim": 64, "num_buckets": 8},
     "line": {"min_chars": 10, "num_buckets": 16},
     "phash": {"max_hamming": 4, "num_buckets": 16},
 }
@@ -335,6 +385,86 @@ def test_srp_index_with_only_legacy_sidecar_raises(spark, stores,
     with pytest.raises(ValueError, match="no params sidecar"):
         write_srp_index(_emb(spark).limit(3), path, dim=64,
                         mode="append")
+
+
+def test_srp_index_in_bucket_directory_layout_is_refused(spark,
+                                                         tmp_path):
+    """An SRP index in the older layout, one directory per bucket
+    (recorded ``partition_by [delta, bucket]``, no ``num_buckets``),
+    is refused with "rebuild the store" by a query, an append and an
+    incremental probe, each before any Spark job runs; the refused
+    append leaves the index as it was."""
+    from trial_data_ingestion_spark.functions.vector import l2_norm_fixed
+    from trial_data_ingestion_spark.operators.incremental_dedup import (
+        embedding_near_dups_incremental,
+    )
+    from trial_data_ingestion_spark.operators.similarity import (
+        srp_bucket, topk_lsh_over_index, write_srp_index,
+    )
+    from trial_data_ingestion_spark.store import layout_of
+    path = str(tmp_path / "srp")
+    old = (_emb(spark).where("vec_id < 100")
+           .withColumn("__nrm", l2_norm_fixed("embedding", 64))
+           .withColumn("bucket", srp_bucket("embedding", 64, 6))
+           .withColumn("delta", F.lit("base")))
+    old.write.partitionBy("delta", "bucket").parquet(path)
+    write_params(spark, path, {
+        "num_planes": 6, "dim": 64,
+        "layout": {"": layout_of(old, ["delta", "bucket"])}})
+    before = sorted(os.listdir(f"{path}/delta=base"))
+    batch = _emb(spark).where("vec_id >= 100 AND vec_id < 110")
+    query = _one_query(spark)
+    calls = {
+        "query": lambda: topk_lsh_over_index(spark, path, query, dim=64),
+        "append": lambda: write_srp_index(batch, path, dim=64,
+                                          mode="append"),
+        "incremental": lambda: embedding_near_dups_incremental(
+            spark, batch, path, 64, delta="b1"),
+    }
+    for name, call in calls.items():
+        def refused():
+            with pytest.raises(ValueError, match="rebuild the store"):
+                call()
+        n = _jobs(spark, f"old-srp-{name}", refused)
+        assert n == 0, f"{name} ran {n} Spark jobs before refusing"
+    assert [d for d in os.listdir(path) if "=" in d] == ["delta=base"]
+    assert sorted(os.listdir(f"{path}/delta=base")) == before
+
+
+def _leaf_dirs(root):
+    """``{directory: part-file count}`` for every directory under
+    ``root`` that holds part files."""
+    return {d: n for d, n in (
+        (d, sum(f.startswith("part-") for f in files))
+        for d, _, files in os.walk(root)) if n}
+
+
+def test_srp_layout_stays_within_num_buckets(spark, tmp_path):
+    """A 12-plane index (4,096 buckets) over 300 fixture vectors, read
+    in 4 partitions, writes at most its recorded ``num_buckets``
+    directories per delta, one file each; so does the delta one
+    ``embedding_dedup_stream_sink`` micro-batch appends."""
+    from trial_data_ingestion_spark.operators.incremental_dedup import (
+        embedding_dedup_stream_sink,
+    )
+    from trial_data_ingestion_spark.operators.similarity import (
+        write_srp_index,
+    )
+    emb = _emb(spark).repartition(4)
+    path = str(tmp_path / "srp")
+    write_srp_index(emb.where("vec_id < 300"), path, dim=64,
+                    num_planes=12)
+    params = read_params(spark, path)
+    assert params["num_planes"] == 12 and params["num_buckets"] == 8
+    embedding_dedup_stream_sink(path, str(tmp_path / "out"), dim=64)(
+        emb.where("vec_id >= 300"), 0)
+    deltas = sorted(d for d in os.listdir(path) if d.startswith("delta="))
+    assert deltas == ["delta=base", "delta=batch-000000000"]
+    for delta in deltas:
+        dirs = os.listdir(f"{path}/{delta}")
+        assert 0 < len(dirs) <= params["num_buckets"]
+        assert all(d.startswith("pbkt=") for d in dirs)
+        assert set(_leaf_dirs(f"{path}/{delta}").values()) == {1}
 
 
 def test_append_with_other_params_raises(spark, tmp_path):
@@ -472,8 +602,9 @@ def test_one_local_srp_query_runs_at_most_two_jobs(spark, stores):
 
 @pytest.fixture(scope="module")
 def layout_stores(spark, tmp_path_factory):
-    """One small store of each of the 8 kinds, each built and then
-    appended to (a second shard or upsert for HLL and upsert), with
+    """One small store of each of the 8 kinds, each built from inputs
+    in 4 partitions and then appended to (a second shard or upsert
+    for HLL and upsert), with
     the session conf read before and after all those writes and one
     micro-batch of each of the six ``foreachBatch`` sinks (over stores
     of their own under ``sinks/``)."""
@@ -501,7 +632,9 @@ def layout_stores(spark, tmp_path_factory):
     p = {k: str(root / k) for k in ("minhash", "srp", "line", "phash",
                                     "ivf", "ivfpq", "hll", "upsert")}
     conf = dict(spark.conf.getAll)
-    docs, emb, hashes = _docs(spark), _emb(spark), _hashes(spark)
+    docs, emb, hashes = (_docs(spark).repartition(4),
+                         _emb(spark).repartition(4),
+                         _hashes(spark).repartition(4))
     old, new = F.col("doc_id") < 30, F.col("doc_id") >= 30
     write_minhash_index(docs.where(old), p["minhash"], num_buckets=8)
     write_minhash_index(docs.where(new), p["minhash"], num_buckets=8,
@@ -542,7 +675,7 @@ def layout_stores(spark, tmp_path_factory):
 _LAYOUTS = {
     "minhash-bands": ("minhash", "bands", "pbkt"),
     "minhash-docs": ("minhash", "docs", "dbkt"),
-    "srp": ("srp", "", "bucket"),
+    "srp": ("srp", "", "pbkt"),
     "line": ("line", "lines", "pbkt"),
     "phash-bands": ("phash", "bands", "pbkt"),
     "phash-docs": ("phash", "docs", "dbkt"),
@@ -558,12 +691,12 @@ def test_store_read_runs_no_job(spark, layout_stores, name):
     """Building a probe's frame runs 0 Spark jobs, for a probe that
     hits and for one that misses every partition: the schema comes
     from the store's recorded layout, not from inference.  The
-    whole-table read (``store.read_table``) runs no inference job
-    either; its only jobs are Spark's parallel listings, one per
-    directory holding more partition directories than
-    ``parallelPartitionDiscovery.threshold`` (the SRP store's 64-bucket
-    deltas).  All three frames carry the full-root read's columns and
-    types, and the whole-table read holds every row of it.  The
+    whole-table read (``store.read_table``) runs no job either: no
+    store holds more partition directories at one level than
+    ``parallelPartitionDiscovery.threshold``, past which Spark lists
+    them in a parallel job.  All three frames carry the full-root
+    read's columns and types, and the whole-table read holds every
+    row of it.  The
     all-miss frame is a LocalRelation: collecting it runs 0 jobs, and
     counting it runs only the global aggregate's one-task result
     stage.  A list-built empty frame, a Python RDD, ran 2 jobs of 9
@@ -587,15 +720,10 @@ def test_store_read_runs_no_job(spark, layout_stores, name):
         assert n == 0, f"{name} read of {values} ran {n} Spark jobs"
         assert frames[0].schema == full
         assert (frames[0].count() > 0) == hits_rows
-    wide = int(spark.conf.get(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold"))
-    listings = sum(len([d for d in dirs if "=" in d]) > wide
-                   for _, dirs, _ in os.walk(base))
     whole = []
     n = _jobs(spark, f"table-{name}", lambda: whole.append(
         read_table(spark, root, table)))
-    assert n == listings, f"{name} whole-table read ran {n} Spark " \
-        f"jobs, {listings} listings"
+    assert n == 0, f"{name} whole-table read ran {n} Spark jobs"
     assert whole[0].schema == full
     assert whole[0].count() == spark.read.parquet(base).count()
     rows = []
@@ -605,6 +733,18 @@ def test_store_read_runs_no_job(spark, layout_stores, name):
     n, tasks = _jobs_and_tasks(spark, f"count-{name}", frames[0].count)
     assert n <= 1 and tasks <= 1, f"all-miss count ran {n} jobs, " \
         f"{tasks} tasks"
+
+
+@pytest.mark.parametrize("kind", ["hll", "ivf", "ivfpq", "line",
+                                  "minhash", "phash", "srp", "upsert"])
+def test_store_writers_write_one_file_per_partition(layout_stores, kind):
+    """Every partition directory of each store, built and appended to
+    from inputs in 4 partitions, holds exactly one part file
+    (``store.write_partitioned``; the HLL shard is coalesced)."""
+    leaves = _leaf_dirs(layout_stores[0][kind])
+    assert leaves and all("=" in os.path.basename(d) for d in leaves)
+    assert set(leaves.values()) == {1}, {
+        d: n for d, n in leaves.items() if n != 1}
 
 
 def test_store_writers_leave_session_conf_unchanged(layout_stores):

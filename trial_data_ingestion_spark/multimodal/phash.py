@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from trial_data_ingestion_spark.session import ensure_parallelism
 from trial_data_ingestion_spark.store import (
     check_partition_value, layout_of, new_delta, read_params,
-    read_partitions, reserve_delta, write_params,
+    read_partitions, reserve_delta, write_params, write_partitioned,
 )
 
 HASH_BITS = 64
@@ -302,9 +302,8 @@ def write_phash_index(hashes: DataFrame, path: str, max_hamming: int = 4,
     rewrites it (``store.reserve_delta``).  A store without a recorded
     layout raises on append: rebuild it.
 
-    Same layout discipline as ``incremental_dedup.write_minhash_index``
-    (repartition ON the partition column before ``partitionBy`` —
-    one file per bucket, not tasks x buckets)."""
+    Both tables are written one file per partition directory
+    (``store.write_partitioned``)."""
     spark = hashes.sparkSession
     params = {"max_hamming": max_hamming, "num_buckets": num_buckets}
     delta = new_delta(delta_id) if mode == "append" else "base"
@@ -321,16 +320,10 @@ def write_phash_index(hashes: DataFrame, path: str, max_hamming: int = 4,
               "docs": layout_of(docs, ["delta", "dbkt"])}
     if mode == "append":
         reserve_delta(spark, path, delta, tables, params)
-    (bt.repartition("pbkt")
-       .write.mode(mode).partitionBy("delta", "pbkt")
-       .parquet(path + "/bands"))
-    (docs.repartition("dbkt")
-         .write.mode(mode).partitionBy("delta", "dbkt")
-         .parquet(path + "/docs"))
+    write_partitioned(bt, path + "/bands", ["delta", "pbkt"], mode)
+    write_partitioned(docs, path + "/docs", ["delta", "dbkt"], mode)
     if mode != "append":
         write_params(spark, path, {**params, "layout": tables})
-    for table in tables:
-        spark.catalog.refreshByPath(f"{path}/{table}")
 
 
 def dedup_media_incremental(spark, new_media: DataFrame, path: str,

@@ -64,8 +64,9 @@ from trial_data_ingestion_spark.operators.dedup import (
 from trial_data_ingestion_spark.operators.pins import PinScope
 from trial_data_ingestion_spark.session import local_frame
 from trial_data_ingestion_spark.store import (
-    batch_sink, check_partition_value, layout_of, new_delta, read_params,
-    read_partitions, read_table, reserve_delta, write_params,
+    batch_sink, check_partition_value, index_auto_buckets, layout_of,
+    new_delta, read_params, read_partitions, read_table, reserve_delta,
+    write_params, write_partitioned,
 )
 
 #: candidate-pair sets at or below this size are Jaccard-verified on
@@ -110,36 +111,6 @@ def _banded(df: DataFrame, id_col: str, text_col: str, k: int,
 
 def _pbkt(num_buckets: int):
     return F.pmod(F.xxhash64("bucket", "band"), F.lit(num_buckets))
-
-
-#: docs per index bucket targeted by ``num_buckets="auto"``: ~2 KB
-#: documents land the bucket files near the guide's 100 MB floor.
-INDEX_DOCS_PER_BUCKET = 50_000
-
-
-def index_auto_buckets(n_docs: int,
-                       per_bucket: int = INDEX_DOCS_PER_BUCKET) -> int:
-    """Scale-adaptive bucket count for the persisted index layouts:
-    a power of two targeting ``per_bucket`` docs per bucket, clamped
-    to [8, 65536].
-
-    Why not a constant: ``num_buckets`` is simultaneously the probe's
-    pruning granularity, the file count per delta, and the listing
-    cost of EVERY index read — a constant tuned for one scale is
-    wrong at every other.  The r11 default (64) was sized for the
-    scale tiers; at bench scale (4k docs) it made every probe job
-    list/read 64 near-empty files and every delta append write up to
-    128 of them — measured at sf0.1: probe 5.72 s -> 3.95 s and 2x
-    delta append 6.71 s -> 3.47 s with 8 buckets, identical
-    survivors.  At 100 TB the same rule yields tens of thousands of
-    buckets, keeping pruned probe reads bounded instead of scanning
-    a 64th of the corpus per bucket."""
-    import math
-    if n_docs <= 0:
-        return 8
-    return max(8, min(65536,
-                      1 << math.ceil(math.log2(
-                          max(1, n_docs / per_bucket)))))
 
 
 def write_minhash_index(df: DataFrame, path: str,
@@ -256,24 +227,12 @@ def write_minhash_index(df: DataFrame, path: str,
         # an append banded (or typed) differently from the stored
         # corpus would silently corrupt every later probe
         reserve_delta(spark, path, delta_id, tables, params)
-    # repartition ON the partition column first: otherwise every
-    # write task emits a file into every partition dir (tasks x
-    # buckets tiny files — measured 8x slower to write AND to probe);
-    # hashed on pbkt, each bucket is exactly one task's one file
-    (banded.repartition("pbkt")
-           .write.mode(mode).partitionBy("delta", "pbkt")
-           .parquet(path + "/bands"))
-    (docs.repartition("dbkt")
-         .write.mode(mode).partitionBy("delta", "dbkt")
-         .parquet(path + "/docs"))
+    write_partitioned(banded, path + "/bands", ["delta", "pbkt"], mode)
+    write_partitioned(docs, path + "/docs", ["delta", "dbkt"], mode)
     if mode != "append":
         # params are fixed at build time: appends validate, never
         # rewrite
         write_params(spark, path, {**params, "layout": tables})
-    # rebuilding over a previous index: drop the cached file listing,
-    # or later readers resolve deleted part files (FILE_NOT_EXIST)
-    for sub in ("/bands", "/docs"):
-        spark.catalog.refreshByPath(path + sub)
 
 
 def cross_candidates(spark, new_banded: DataFrame, index_path: str,
@@ -725,8 +684,8 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
 
 # ---------------------------------------------------------------------------
 # Embedding near-dup, incremental: the same delta-batch contract over
-# the persisted SRP layout (similarity.write_srp_index) — bucket-
-# partitioned unit hyperplane signs instead of MinHash bands.
+# the persisted SRP layout (similarity.write_srp_index) — hyperplane
+# sign buckets in coarse pbkt partitions instead of MinHash bands.
 # ---------------------------------------------------------------------------
 
 
@@ -742,27 +701,29 @@ def embedding_near_dups_incremental(spark, new_embeddings: DataFrame,
     against BOTH a persisted :func:`~.similarity.write_srp_index`
     corpus and the batch itself.
 
-    The corpus side lists and scans only the batch's bucket
-    directories of the stored layout
-    (``store.read_partitions``; projections and norms were
-    paid at build time — the
-    corpus never recomputes a plane); the batch side is hashed once
-    and broadcast.  Components are resolved with the same
-    corpus-wins rule as :func:`dedup_minhash_incremental`.  Identical
-    vectors hash to identical buckets, so the seen-id resume filter
-    also rides that bucket read.
+    The corpus side lists and scans only the ``pbkt`` partitions the
+    batch's buckets map to, and keeps those buckets by a literal
+    ``bucket IN (...)`` filter (``similarity._read_buckets``;
+    projections and norms were paid at build time — the corpus never
+    recomputes a plane); the batch side is hashed once and broadcast.
+    Components are resolved with the same corpus-wins rule as
+    :func:`dedup_minhash_incremental`.  Identical vectors hash to
+    identical buckets, so the seen-id resume filter also rides that
+    bucket read.
 
     ``num_planes=None`` (default) hashes the batch with the plane
     count the index RECORDED at build time (the only count that can
     route probes correctly); an explicit int is cross-checked and a
-    mismatch raises.  The plane set is therefore pinned for the
-    index's lifetime — when a growing corpus outruns its occupancy
+    mismatch raises, and so does an index in the older
+    one-directory-per-bucket layout ("rebuild the store"), before any
+    Spark job.  The plane set is therefore pinned for the index's
+    lifetime — when a growing corpus outruns its occupancy
     target (:func:`~.similarity.srp_auto_planes`), rebuild the index
     with ``num_planes="auto"`` rather than appending forever.
 
     ``delta`` works as in :func:`dedup_minhash_incremental`: ``None``
     only probes; an id probes with that delta left out, then APPENDS
-    the batch into the bucket layout as that delta (``mode="append"``
+    the batch into the ``pbkt`` layout as that delta (``mode="append"``
     — never an overwrite, which would drop the corpus rows sharing the
     batch's buckets), so a retry with the same id repeats its
     decision and rewrites its delta."""
@@ -770,12 +731,13 @@ def embedding_near_dups_incremental(spark, new_embeddings: DataFrame,
         dot_fixed, l2_norm_fixed,
     )
     from trial_data_ingestion_spark.operators.similarity import (
-        _index_planes, srp_bucket, write_srp_index,
+        _read_buckets, _srp_layout, srp_bucket, write_srp_index,
     )
 
     if delta is not None:
         check_partition_value(delta, "delta")
-    num_planes = _index_planes(spark, index_path, num_planes, dim)
+    num_planes, num_buckets = _srp_layout(spark, index_path, num_planes,
+                                          dim)
     pins = PinScope()
     nb = pins.pin(
         new_embeddings
@@ -783,10 +745,10 @@ def embedding_near_dups_incremental(spark, new_embeddings: DataFrame,
                 F.col(vec_col).alias("v"),
                 l2_norm_fixed(vec_col, dim).alias("nrm"),
                 srp_bucket(vec_col, dim, num_planes).alias("bucket")))
-    buckets = sorted(r["bucket"] for r in
-                     nb.select("bucket").distinct().collect())
-    idx = (read_partitions(spark, index_path, "bucket", buckets,
-                           exclude_delta=delta)
+    buckets = [r["bucket"] for r in
+               nb.select("bucket").distinct().collect()]
+    idx = (_read_buckets(spark, index_path, num_buckets, buckets,
+                         exclude_delta=delta)
            .select(F.col(id_col).alias("doc"),
                    F.col(vec_col).alias("v"),
                    F.col("__nrm").alias("nrm"), "bucket"))
@@ -930,17 +892,13 @@ def compact_minhash_index(spark, index_path: str, out_path: str) -> None:
             "index_path (atomic swap by rename is the caller's step)")
     bands = (read_table(spark, index_path, "bands")
              .withColumn("delta", F.lit("base")))
-    (bands.repartition("pbkt")
-          .write.mode("overwrite").partitionBy("delta", "pbkt")
-          .parquet(out_path + "/bands"))
+    write_partitioned(bands, out_path + "/bands", ["delta", "pbkt"],
+                      "overwrite")
     docs = (read_table(spark, index_path, "docs")
             .withColumn("delta", F.lit("base")))
-    (docs.repartition("dbkt")
-         .write.mode("overwrite").partitionBy("delta", "dbkt")
-         .parquet(out_path + "/docs"))
+    write_partitioned(docs, out_path + "/docs", ["delta", "dbkt"],
+                      "overwrite")
     write_params(spark, out_path, {
         **read_params(spark, index_path),
         "layout": {"bands": layout_of(bands, ["delta", "pbkt"]),
                    "docs": layout_of(docs, ["delta", "dbkt"])}})
-    for sub in ("/bands", "/docs"):
-        spark.catalog.refreshByPath(out_path + sub)

@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 from trial_data_ingestion_spark.session import ensure_parallelism
 from trial_data_ingestion_spark.store import (
     check_partition_value, layout_of, new_delta, read_params,
-    read_partitions, reserve_delta, write_params,
+    read_partitions, reserve_delta, write_params, write_partitioned,
 )
 
 
@@ -131,12 +131,10 @@ def _write_lines(keys: DataFrame, path: str, params: dict,
     tables = {"lines": layout_of(out, ["delta", "pbkt"])}
     if append:
         reserve_delta(spark, path, delta, tables, params)
-    (out.repartition("pbkt")
-     .write.mode("append" if append else "overwrite")
-     .partitionBy("delta", "pbkt").parquet(path + "/lines"))
+    write_partitioned(out, path + "/lines", ["delta", "pbkt"],
+                      "append" if append else "overwrite")
     if not append:
         write_params(spark, path, {**params, "layout": tables})
-    spark.catalog.refreshByPath(path + "/lines")
 
 
 def write_line_index(df: DataFrame, path: str, id_col: str = "doc_id",

@@ -54,7 +54,7 @@ from trial_data_ingestion_spark.functions.vector import l2_norm_fixed, dot_fixed
 from trial_data_ingestion_spark.session import local_frame
 from trial_data_ingestion_spark.store import (
     entry_frame, frame_entry, layout_of, read_params, read_partitions,
-    read_table, recorded, write_params,
+    read_table, recorded, write_params, write_partitioned,
 )
 
 
@@ -446,13 +446,10 @@ def build_ivfpq(embeddings: DataFrame, dim: int, path: str,
            .select(id_col, "cell_id", "pq_code",
                    F.col("__raw").alias(vec_col),
                    l2_norm_fixed("__raw", dim).alias("__nrm")))
-    (enc.repartition("cell_id")
-        .write.mode("overwrite").partitionBy("cell_id")
-        .parquet(path + "/codes"))
+    write_partitioned(enc, path + "/codes", ["cell_id"], "overwrite")
     write_params(spark, path, {
         **_codebook_params(cb), "centroids": frame_entry(centroids),
         "layout": {"codes": layout_of(enc, ["cell_id"])}})
-    spark.catalog.refreshByPath(path + "/codes")
 
 
 def topk_ivfpq(spark, index_path: str, queries: DataFrame,

@@ -15,7 +15,12 @@ the query capability is the store's purpose, so this module provides:
   At 100 TB this turns a full scan per query into a bucket-join.
 * ``topk_lsh_over_index`` / ``topk_ivf_over_index`` — the same
   answers over a persisted bucket or cell layout: a query reads and
-  scores only its probed partitions.  The SRP query side (norm,
+  scores only its probed partitions.  The SRP index
+  (``write_srp_index``) keeps ``bucket`` as a data column under a
+  coarse ``pbkt`` partition (its low bits, ``num_buckets`` of them,
+  sized like the MinHash store's and recorded), so a query reads the
+  ``pbkt`` partitions of its probed buckets and filters ``bucket`` by
+  literal.  The SRP query side (norm,
   bucket, probe set) is computed on the driver, the rescore is one
   ``aggregate`` fold, and a single query is ranked by a per-task
   top-k that the driver merges; a batch of queries ranks with the
@@ -45,8 +50,9 @@ from trial_data_ingestion_spark.session import (
     ensure_parallelism, local_frame,
 )
 from trial_data_ingestion_spark.store import (
-    entry_frame, frame_entry, layout_of, new_delta, read_params,
-    read_partitions, recorded, reserve_delta, write_params,
+    entry_frame, frame_entry, index_auto_buckets, layout_of, new_delta,
+    read_params, read_partitions, recorded, reserve_delta, write_params,
+    write_partitioned,
 )
 
 _METRICS = {
@@ -754,7 +760,8 @@ def _write_ivf(embeddings: DataFrame, centroids: dict, path: str,
                append: bool = False) -> None:
     """Assign ``embeddings`` to the ``centroids`` entry and write them as
     delta ``delta`` of the IVF layout at ``path`` (partitioned by
-    ``delta`` then ``cell_id``): a build overwrites the root and
+    ``delta`` then ``cell_id``, one file per cell directory:
+    ``store.write_partitioned``): a build overwrites the root and
     records the centroids, ``dim`` and the layout; an append validates
     the layout first."""
     spark = embeddings.sparkSession
@@ -766,12 +773,11 @@ def _write_ivf(embeddings: DataFrame, centroids: dict, path: str,
     tables = {"": layout_of(out, ["delta", "cell_id"])}
     if append:
         reserve_delta(spark, path, delta, tables)
-    (out.write.mode("append" if append else "overwrite")
-        .partitionBy("delta", "cell_id").parquet(path))
+    write_partitioned(out, path, ["delta", "cell_id"],
+                      "append" if append else "overwrite")
     if not append:
         write_params(spark, path, {"dim": dim, "centroids": centroids,
                                    "layout": tables})
-    spark.catalog.refreshByPath(path)
 
 
 def topk_ivf_over_index(spark, index_path: str, queries: DataFrame,
@@ -819,24 +825,41 @@ def topk_ivf_over_index(spark, index_path: str, queries: DataFrame,
                   id_col, k, {r[query_id_col] for r in probe_rows})
 
 
+#: the SRP index's partition columns: the write's ``delta``, then
+#: ``pbkt``, the low ``log2(num_buckets)`` bits of the SRP bucket id
+_SRP_PARTITION_BY = ["delta", "pbkt"]
+
+
 def write_srp_index(embeddings: DataFrame, path: str, dim: int,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     num_planes: int | str = 8,
                     mode: str = "overwrite",
                     delta_id: str | None = None) -> None:
     """Persist the SRP-LSH layout for :func:`topk_lsh_over_index`:
-    one narrow map computes each vector's bucket (literal-plane
-    codegen, no shuffle) and the norm, written partitioned by
-    ``bucket`` (2^num_planes directories).  Queries probe buckets by
-    literal filter; the corpus never recomputes a projection.
+    one narrow map computes each vector's ``bucket`` (literal-plane
+    codegen) and norm, stored as data columns.  Rows are partitioned
+    by ``delta``, then by ``pbkt = bucket & (num_buckets - 1)``, a
+    coarse partition holding every bucket that shares its low bits,
+    one file per directory (``store.write_partitioned``).  Queries
+    read only the ``pbkt`` partitions their probed buckets map to and
+    filter ``bucket`` by literal; the corpus never recomputes a
+    projection.
 
-    The plane count (and ``dim``) is recorded in the index root's
-    ``_params.json`` sidecar (underscore-prefixed, so parquet readers
-    of ``path`` never see it); query/probe operators read it back via
-    ``store.read_params`` instead of trusting the caller to remember
-    — probing with mismatched planes silently misses every neighbor.
-    ``num_planes="auto"`` sizes p from a count() of the input
-    (:func:`srp_auto_planes`), so occupancy — and thus in-bucket
+    ``num_buckets = min(index_auto_buckets(n), 2^num_planes)``: the
+    MinHash store's rule (``store.index_auto_buckets``), so a build
+    writes at most that many directories per delta whatever the plane
+    count.  One directory per bucket cost about 14 ms of write time
+    per directory, and 2^p of them listed on every whole-table read.
+    The build runs one ``count()``, shared with
+    ``num_planes="auto"``.
+
+    The plane count, ``dim`` and ``num_buckets`` are recorded in the
+    index root's ``_params.json`` sidecar (underscore-prefixed, so
+    parquet readers of ``path`` never see it); query/probe operators
+    read them back via ``store.read_params`` instead of trusting the
+    caller to remember — probing with mismatched planes silently
+    misses every neighbor.  ``num_planes="auto"`` sizes p from the
+    count (:func:`srp_auto_planes`), so occupancy — and thus in-bucket
     candidate cost — stays constant as corpora grow.  An index's
     plane set is FIXED at build time: ``"auto"`` sizes NEW indexes;
     growing an existing index past its occupancy target means a
@@ -844,25 +867,26 @@ def write_srp_index(embeddings: DataFrame, path: str, dim: int,
     schedule it like an IVF re-fit).
 
     ``mode="append"`` extends an existing index (delta batches land
-    in the same bucket directories); the plane set then COMES FROM
-    the sidecar — a conflicting explicit ``num_planes`` or ``dim``
-    raises.
+    in the same ``pbkt`` partitions); the plane set and
+    ``num_buckets`` then COME FROM the sidecar — a conflicting
+    explicit ``num_planes`` or ``dim`` raises, and so does an index
+    partitioned one directory per bucket (the older layout: rebuild
+    it).
 
-    Rerun semantics (round 9): rows land under a ``delta`` partition
-    level above ``bucket`` (``delta=base`` for the build).  An append
+    Rerun semantics: the build lands in ``delta=base``.  An append
     with an explicit ``delta_id`` deletes its own delta directory
     before writing, making a whole-call retry idempotent; without
     one the append gets a random delta and is at-most-once (don't
-    retry it).  Bucket pruning is unaffected (``bucket`` remains a
-    partition column below ``delta``)."""
+    retry it)."""
     spark = embeddings.sparkSession
     if mode == "append":
-        num_planes = _index_planes(
+        num_planes, num_buckets = _srp_layout(
             spark, path, None if num_planes == "auto" else num_planes,
             dim)
     else:
-        num_planes = resolve_num_planes(num_planes,
-                                        lambda: embeddings.count())
+        count = functools.cache(embeddings.count)
+        num_planes = resolve_num_planes(num_planes, count)
+        num_buckets = min(index_auto_buckets(count()), 1 << num_planes)
     # a build lands in delta "base" unless named, an append in a
     # random delta unless named
     delta_id = new_delta(delta_id if mode == "append"
@@ -870,26 +894,31 @@ def write_srp_index(embeddings: DataFrame, path: str, dim: int,
     out = (embeddings
            .withColumn("__nrm", l2_norm_fixed(vec_col, dim))
            .withColumn("bucket", srp_bucket(vec_col, dim, num_planes))
+           .withColumn("pbkt", F.col("bucket").bitwiseAND(
+               F.lit(num_buckets - 1)))
            .withColumn("delta", F.lit(delta_id)))
-    tables = {"": layout_of(out, ["delta", "bucket"])}
+    tables = {"": layout_of(out, _SRP_PARTITION_BY)}
     if mode == "append":
         reserve_delta(spark, path, delta_id, tables)
-    (out.write.mode(mode).partitionBy("delta", "bucket").parquet(path))
+    write_partitioned(out, path, _SRP_PARTITION_BY, mode)
     if mode != "append":
         # AFTER the data write: a static overwrite of `path` deletes
         # the whole root, sidecar included
         write_params(spark, path, {"num_planes": num_planes, "dim": dim,
+                                   "num_buckets": num_buckets,
                                    "layout": tables})
-    spark.catalog.refreshByPath(path)
 
 
-def _index_planes(spark, index_path: str, num_planes,
-                  dim: int | None = None) -> int:
-    """Resolve the plane count for a probe of (or append to) a
+def _srp_layout(spark, index_path: str, num_planes,
+                dim: int | None = None) -> tuple[int, int]:
+    """``(num_planes, num_buckets)`` for a probe of (or append to) a
     persisted SRP layout: None -> the index's recorded planes; an
     explicit int (and ``dim``, when given) must MATCH the recording
     — a mismatch means every probe lands in the wrong bucket, so it
-    raises instead of silently returning empty results."""
+    raises instead of silently returning empty results.  An index
+    not partitioned by ``(delta, pbkt)`` (one directory per bucket,
+    the older layout) raises "rebuild the store".  Reads only the
+    sidecar: no Spark job."""
     if num_planes == "auto":
         raise ValueError("probes take the index's recorded plane "
                          "count: pass num_planes=None ('auto' only "
@@ -897,7 +926,24 @@ def _index_planes(spark, index_path: str, num_planes,
     expect = {} if dim is None else {"dim": dim}
     if num_planes is not None:
         expect["num_planes"] = resolve_num_planes(num_planes, None)
-    return read_params(spark, index_path, expect)["num_planes"]
+    params = read_params(spark, index_path, expect,
+                         partition_by={"": _SRP_PARTITION_BY})
+    return params["num_planes"], params["num_buckets"]
+
+
+def _read_buckets(spark, index_path: str, num_buckets: int, buckets,
+                  exclude_delta: str | None = None) -> DataFrame:
+    """The rows of the SRP index at ``index_path`` whose ``bucket`` is
+    in ``buckets``: only the ``pbkt`` partitions those buckets map to
+    are listed and read (``store.read_partitions``, every delta but
+    ``exclude_delta``), and the literal ``bucket IN (...)`` filter,
+    pushed to the parquet scan, drops their other buckets' rows, so
+    the candidates are exactly the probed buckets' rows."""
+    buckets = sorted(buckets)
+    pbkts = sorted({b & (num_buckets - 1) for b in buckets})
+    return (read_partitions(spark, index_path, "pbkt", pbkts,
+                            exclude_delta=exclude_delta)
+            .where(F.col("bucket").isin(buckets)))
 
 
 def topk_lsh_over_index(spark, index_path: str, queries: DataFrame,
@@ -920,10 +966,11 @@ def topk_lsh_over_index(spark, index_path: str, queries: DataFrame,
       a query vector that is not ``dim`` non-null values raises
       ``ValueError`` before any index read;
     * the corpus-side bucket assignment is read, not recomputed: the
-      plan holds no projection ``zip_with``, only a scan of the probed
-      bucket directories (the only ones listed:
-      ``store.read_partitions``; the literal ``bucket`` filter shows
-      as ``PartitionFilters``) and a broadcast equi-join on ``bucket``;
+      plan holds no projection ``zip_with``, only a scan of the
+      ``pbkt`` partitions the probed buckets map to (the only ones
+      listed, :func:`_read_buckets`; the literal ``pbkt`` filter shows
+      as ``PartitionFilters``, the ``bucket IN (...)`` filter as a
+      pushed data filter) and a broadcast equi-join on ``bucket``;
     * the rescore is one ``aggregate`` fold (:func:`_dot_fold`), which
       sums in ``dot_fixed``'s order, so scores are identical;
     * the rank (:func:`_top_k`): one query is ranked by Spark's
@@ -936,13 +983,15 @@ def topk_lsh_over_index(spark, index_path: str, queries: DataFrame,
     index RECORDED at build time (``_params.json`` sidecar) — the only
     count that can be right; an explicit int is cross-checked against
     the recording and raises on mismatch instead of silently probing
-    empty buckets."""
-    num_planes = _index_planes(spark, index_path, num_planes, dim)
+    empty buckets.  An index in the older one-directory-per-bucket
+    layout raises "rebuild the store" before any Spark job."""
+    num_planes, num_buckets = _srp_layout(spark, index_path, num_planes,
+                                          dim)
     rows, schema = _query_probes(queries, query_id_col, query_vec_col,
                                  dim, num_planes, multiprobe_hamming)
     q_df = F.broadcast(local_frame(spark, rows, schema))
-    idx = read_partitions(spark, index_path, "bucket",
-                          sorted({r[-1] for r in rows}))
+    idx = _read_buckets(spark, index_path, num_buckets,
+                        {r[-1] for r in rows})
     scored = (idx.join(q_df, "bucket")
               .withColumn("score",
                           _dot_fold(vec_col, query_vec_col, dim)

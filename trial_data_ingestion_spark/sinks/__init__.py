@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.store import (
-    layout_of, open_store, read_partitions, read_table,
+    layout_of, open_store, read_partitions, read_table, write_partitioned,
 )
 
 
@@ -93,7 +93,8 @@ def upsert_parquet(spark: SparkSession, new_df: DataFrame, path: str,
     Merge: read only the buckets touched by ``new_df``, anti-join out
     replaced keys, union the new rows, and dynamically overwrite just
     those bucket partitions (a per-write option: the session's
-    ``partitionOverwriteMode`` is left as it was).  Cost scales with
+    ``partitionOverwriteMode`` is left as it was), one file per
+    bucket (``store.write_partitioned``).  Cost scales with
     touched buckets, not table size — at 100 TB an upsert of k keys
     rewrites ~k/n of the table instead of all of it.
     ``localCheckpoint`` materializes the merge before the overwrite
@@ -110,9 +111,9 @@ def upsert_parquet(spark: SparkSession, new_df: DataFrame, path: str,
         kept = existing.join(incoming.select(key).distinct(), key,
                              "left_anti")
         merged = kept.unionByName(incoming)
-    (merged.localCheckpoint(eager=True)
-     .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-     .partitionBy("__bucket").parquet(path))
+    write_partitioned(merged.localCheckpoint(eager=True), path,
+                      ["__bucket"], "overwrite",
+                      partitionOverwriteMode="dynamic")
 
 
 def write_bucketed(df: DataFrame, table: str, key: str,

@@ -25,6 +25,12 @@ BPE merges, unigram pieces, clustering codebooks):
   and the ``partition_by`` column order (:func:`layout_of`).  Readers
   never infer or spell a schema: :func:`read_table` reads a whole
   sub-table, :func:`read_partitions` the partitions a probe names;
+* **sized partitions, one file each** — a keyed store partitions by
+  ``delta`` then a coarse bucket of its key (``pbkt``, ``dbkt``,
+  ``cell_id``, ``__bucket``), never by the key itself: the bucket
+  count (:func:`index_auto_buckets` for the MinHash and SRP indexes)
+  is recorded as ``num_buckets``, and :func:`write_partitioned`
+  writes every partition directory as exactly one file;
 * **keyed delta append** — :func:`new_delta` names the append's
   ``delta`` (the caller's id or a random one) and
   :func:`reserve_delta` validates the append, then deletes that
@@ -47,6 +53,7 @@ for the older layouts is kept.
 from __future__ import annotations
 
 import json
+import math
 import re
 import uuid
 
@@ -115,6 +122,55 @@ def layout_of(df: DataFrame, partition_by) -> dict:
             "partition_by": by}
 
 
+#: docs per index bucket targeted by :func:`index_auto_buckets`: ~2 KB
+#: documents land the bucket files near a 100 MB floor.
+INDEX_DOCS_PER_BUCKET = 50_000
+
+
+def index_auto_buckets(n_docs: int,
+                       per_bucket: int = INDEX_DOCS_PER_BUCKET) -> int:
+    """Scale-adaptive bucket count for the persisted index layouts:
+    a power of two targeting ``per_bucket`` docs per bucket, clamped
+    to [8, 65536].
+
+    Why not a constant: ``num_buckets`` is simultaneously the probe's
+    pruning granularity, the file count per delta, and the listing
+    cost of EVERY index read — a constant tuned for one scale is
+    wrong at every other.  The r11 default (64) was sized for the
+    scale tiers; at bench scale (4k docs) it made every probe job
+    list/read 64 near-empty files and every delta append write up to
+    128 of them — measured at sf0.1: probe 5.72 s -> 3.95 s and 2x
+    delta append 6.71 s -> 3.47 s with 8 buckets, identical
+    survivors.  At 100 TB the same rule yields tens of thousands of
+    buckets, keeping pruned probe reads bounded instead of scanning
+    a 64th of the corpus per bucket."""
+    if n_docs <= 0:
+        return 8
+    return max(8, min(65536,
+                      1 << math.ceil(math.log2(
+                          max(1, n_docs / per_bucket)))))
+
+
+def write_partitioned(df: DataFrame, path: str, partition_by,
+                      mode: str = "append", **options) -> None:
+    """Write ``df`` as the parquet table at ``path``, partitioned by
+    ``partition_by``, with exactly one file per partition directory:
+    the rows are hash-repartitioned on the innermost partition column
+    first, which all rows of one directory share, so each directory's
+    rows sit in one write task (the outer ``delta`` holds one value
+    per write, so hashing it too would only move rows).  Without it
+    every task writes a file into every directory it holds rows for
+    (tasks x directories small files, measured 8x slower to write and
+    to probe).  ``options`` are per-write options (the upsert's
+    dynamic partition overwrite).  The cached listing of ``path`` is
+    dropped afterwards, so later reads never resolve replaced
+    files."""
+    by = list(partition_by)
+    (df.repartition(by[-1]).write.mode(mode).options(**options)
+       .partitionBy(*by).parquet(path))
+    df.sparkSession.catalog.refreshByPath(path)
+
+
 def write_params(spark, root: str, params: dict) -> None:
     """Record a store's build-time ``params`` (with its ``layout``:
     sub-table -> :func:`layout_of` entry) as ``root/_params.json`` (a
@@ -179,7 +235,8 @@ def entry_frame(spark, entry: dict) -> DataFrame:
 
 
 def read_params(spark, root: str, expect: dict | None = None,
-                layout: dict | None = None) -> dict:
+                layout: dict | None = None,
+                partition_by: dict | None = None) -> dict:
     """The build params :func:`write_params` recorded for the store at
     ``root``, without its ``layout``.  ``expect`` maps keys to the
     caller's values; any that differ from the stored ones raise, since
@@ -187,9 +244,21 @@ def read_params(spark, root: str, expect: dict | None = None,
     sub-tables to the :func:`layout_of` of the frames the caller is about
     to write; a column name or type that differs from the recorded
     layout raises (nullability aside: both sides are all-nullable), as
-    does a store that records no layout."""
+    does a store that records no layout.  ``partition_by`` maps
+    sub-tables to the partition columns the caller reads or writes
+    them by; a store partitioned otherwise was written by an older
+    layout and raises ("rebuild the store") before any other check.
+    All of it runs no Spark job."""
     root = root.rstrip("/")
     params = _sidecar(spark, root)
+    for table, by in (partition_by or {}).items():
+        got = recorded(root, params, "layout").get(table, {}) \
+            .get("partition_by")
+        if got != list(by):
+            raise ValueError(
+                f"{root} partitions table {table!r} by {got}, not "
+                f"{list(by)}: written by an older layout (rebuild the "
+                "store)")
     bad = sorted(k for k, v in (expect or {}).items()
                  if params.get(k) != v)
     if bad:
