@@ -446,6 +446,32 @@ def test_srp_auto_planes_occupancy():
         assert n / 2 ** p <= 8.0001
 
 
+def test_srp_index_buckets_bound_the_probed_rows():
+    """An SRP index's ``num_buckets``: ``2^num_planes`` without a count
+    when that is within the 8-partition floor, the bench index's 8, at
+    most ``2^num_planes``, and enough partitions that a Hamming-1
+    probe's 1 + log2(num_buckets) of them hold at most that many
+    partitions' worth of ``SRP_ROWS_PER_PARTITION`` rows — at 50,000
+    rows per partition, the MinHash store's, a 400k-vector index kept
+    8 partitions and every probe read half of it."""
+    from trial_data_ingestion_spark.operators.similarity import (
+        SRP_ROWS_PER_PARTITION, srp_auto_planes, srp_index_buckets,
+    )
+
+    def no_count():
+        raise AssertionError("counted the corpus")
+    assert srp_index_buckets(3, no_count) == 8
+    assert srp_index_buckets(2, no_count) == 4
+    assert srp_index_buckets(8, lambda: 1_625) == 8
+    assert srp_index_buckets(8, lambda: 10 ** 7) == 256
+    for n in (50_000, 400_000, 4_000_000):
+        nb = srp_index_buckets(srp_auto_planes(n), lambda: n)
+        probed = nb.bit_length()        # 1 + log2(nb) partitions
+        assert probed / nb * n <= probed * SRP_ROWS_PER_PARTITION
+    nb = srp_index_buckets(srp_auto_planes(400_000), lambda: 400_000)
+    assert nb.bit_length() / nb <= 1 / 8
+
+
 @pytest.mark.slow
 def test_embedding_near_dups_auto_planes(spark):
     """auto == explicit p at the size auto resolves to (2k vectors ->

@@ -391,8 +391,9 @@ def test_srp_index_in_bucket_directory_layout_is_refused(spark,
                                                          tmp_path):
     """An SRP index in the older layout, one directory per bucket
     (recorded ``partition_by [delta, bucket]``, no ``num_buckets``),
-    is refused with "rebuild the store" by a query, an append and an
-    incremental probe, each before any Spark job runs; the refused
+    is refused with "rebuild the store" by a query, an append (with
+    the index's own plane count, so the refusal is the layout's) and
+    an incremental probe, each before any Spark job runs; the refused
     append leaves the index as it was."""
     from trial_data_ingestion_spark.functions.vector import l2_norm_fixed
     from trial_data_ingestion_spark.operators.incremental_dedup import (
@@ -417,7 +418,7 @@ def test_srp_index_in_bucket_directory_layout_is_refused(spark,
     calls = {
         "query": lambda: topk_lsh_over_index(spark, path, query, dim=64),
         "append": lambda: write_srp_index(batch, path, dim=64,
-                                          mode="append"),
+                                          num_planes=6, mode="append"),
         "incremental": lambda: embedding_near_dups_incremental(
             spark, batch, path, 64, delta="b1"),
     }
@@ -465,6 +466,28 @@ def test_srp_layout_stays_within_num_buckets(spark, tmp_path):
         assert 0 < len(dirs) <= params["num_buckets"]
         assert all(d.startswith("pbkt=") for d in dirs)
         assert set(_leaf_dirs(f"{path}/{delta}").values()) == {1}
+
+
+def test_srp_build_within_the_partition_floor_runs_no_count(
+        spark, tmp_path, monkeypatch):
+    """A build whose ``2^num_planes`` buckets fit within the
+    8-partition floor records ``num_buckets = 2^num_planes`` without
+    counting its input (a count re-runs an uncached input's whole
+    lineage)."""
+    from pyspark.sql import DataFrame
+
+    from trial_data_ingestion_spark.operators.similarity import (
+        write_srp_index,
+    )
+
+    def no_count(self):
+        raise AssertionError("counted the input")
+    monkeypatch.setattr(DataFrame, "count", no_count)
+    for p in (2, 3):
+        path = str(tmp_path / f"srp{p}")
+        write_srp_index(_emb(spark).where("vec_id < 50"), path, dim=64,
+                        num_planes=p)
+        assert read_params(spark, path)["num_buckets"] == 1 << p
 
 
 def test_append_with_other_params_raises(spark, tmp_path):

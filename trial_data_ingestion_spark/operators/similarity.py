@@ -18,7 +18,7 @@ the query capability is the store's purpose, so this module provides:
   scores only its probed partitions.  The SRP index
   (``write_srp_index``) keeps ``bucket`` as a data column under a
   coarse ``pbkt`` partition (its low bits, ``num_buckets`` of them,
-  sized like the MinHash store's and recorded), so a query reads the
+  sized by ``srp_index_buckets`` and recorded), so a query reads the
   ``pbkt`` partitions of its probed buckets and filters ``bucket`` by
   literal.  The SRP query side (norm,
   bucket, probe set) is computed on the driver, the rescore is one
@@ -829,6 +829,25 @@ def topk_ivf_over_index(spark, index_path: str, queries: DataFrame,
 #: ``pbkt``, the low ``log2(num_buckets)`` bits of the SRP bucket id
 _SRP_PARTITION_BY = ["delta", "pbkt"]
 
+#: SRP index rows per ``pbkt`` partition targeted by
+#: :func:`srp_index_buckets`, about 1 MB of 64-dim float32 vectors.
+#: Over 400k such vectors (4 cores), 8 partitions (the MinHash store's
+#: 50,000 rows each) had a query scan 204k rows in 0.47 s; 128 scan
+#: 26k rows in 0.39 s, for about 3.6 s more build time.
+SRP_ROWS_PER_PARTITION = 4096
+
+
+def srp_index_buckets(num_planes: int, count_fn) -> int:
+    """``num_buckets`` of a new SRP index: ``index_auto_buckets`` at
+    :data:`SRP_ROWS_PER_PARTITION` rows per partition, capped at the
+    ``2^num_planes`` buckets.  ``count_fn`` (the corpus count) runs
+    only when ``2^num_planes`` exceeds ``index_auto_buckets``' floor
+    of 8, the only case where the count can change the result."""
+    if 1 << num_planes <= 8:
+        return 1 << num_planes
+    return min(index_auto_buckets(count_fn(), SRP_ROWS_PER_PARTITION),
+               1 << num_planes)
+
 
 def write_srp_index(embeddings: DataFrame, path: str, dim: int,
                     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -845,13 +864,18 @@ def write_srp_index(embeddings: DataFrame, path: str, dim: int,
     filter ``bucket`` by literal; the corpus never recomputes a
     projection.
 
-    ``num_buckets = min(index_auto_buckets(n), 2^num_planes)``: the
-    MinHash store's rule (``store.index_auto_buckets``), so a build
-    writes at most that many directories per delta whatever the plane
-    count.  One directory per bucket cost about 14 ms of write time
-    per directory, and 2^p of them listed on every whole-table read.
-    The build runs one ``count()``, shared with
-    ``num_planes="auto"``.
+    ``num_buckets`` (:func:`srp_index_buckets`) is the MinHash
+    store's rule (``store.index_auto_buckets``) at
+    :data:`SRP_ROWS_PER_PARTITION` rows per partition, capped at
+    ``2^num_planes``, so a build writes at most that many directories
+    per delta whatever the plane count.  One directory per bucket cost
+    about 14 ms of write time per directory, and 2^p of them listed on
+    every whole-table read.  A Hamming-1 probe reads 1 +
+    log2(num_buckets) of the partitions, so it scans at most about
+    that many times ``SRP_ROWS_PER_PARTITION`` rows, a number that
+    grows with log2(n), not with n.  The build runs at most one
+    ``count()``, shared with ``num_planes="auto"``, and none when
+    ``2^num_planes`` is at most 8.
 
     The plane count, ``dim`` and ``num_buckets`` are recorded in the
     index root's ``_params.json`` sidecar (underscore-prefixed, so
@@ -886,7 +910,7 @@ def write_srp_index(embeddings: DataFrame, path: str, dim: int,
     else:
         count = functools.cache(embeddings.count)
         num_planes = resolve_num_planes(num_planes, count)
-        num_buckets = min(index_auto_buckets(count()), 1 << num_planes)
+        num_buckets = srp_index_buckets(num_planes, count)
     # a build lands in delta "base" unless named, an append in a
     # random delta unless named
     delta_id = new_delta(delta_id if mode == "append"
@@ -916,8 +940,8 @@ def _srp_layout(spark, index_path: str, num_planes,
     explicit int (and ``dim``, when given) must MATCH the recording
     — a mismatch means every probe lands in the wrong bucket, so it
     raises instead of silently returning empty results.  An index
-    not partitioned by ``(delta, pbkt)`` (one directory per bucket,
-    the older layout) raises "rebuild the store".  Reads only the
+    that records no ``num_buckets`` (one directory per bucket, the
+    older layout) raises "rebuild the store".  Reads only the
     sidecar: no Spark job."""
     if num_planes == "auto":
         raise ValueError("probes take the index's recorded plane "
@@ -926,9 +950,9 @@ def _srp_layout(spark, index_path: str, num_planes,
     expect = {} if dim is None else {"dim": dim}
     if num_planes is not None:
         expect["num_planes"] = resolve_num_planes(num_planes, None)
-    params = read_params(spark, index_path, expect,
-                         partition_by={"": _SRP_PARTITION_BY})
-    return params["num_planes"], params["num_buckets"]
+    params = read_params(spark, index_path, expect)
+    return (params["num_planes"],
+            recorded(index_path, params, "num_buckets"))
 
 
 def _read_buckets(spark, index_path: str, num_buckets: int, buckets,

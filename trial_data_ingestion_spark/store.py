@@ -28,8 +28,9 @@ BPE merges, unigram pieces, clustering codebooks):
 * **sized partitions, one file each** — a keyed store partitions by
   ``delta`` then a coarse bucket of its key (``pbkt``, ``dbkt``,
   ``cell_id``, ``__bucket``), never by the key itself: the bucket
-  count (:func:`index_auto_buckets` for the MinHash and SRP indexes)
-  is recorded as ``num_buckets``, and :func:`write_partitioned`
+  count (:func:`index_auto_buckets` for the MinHash and SRP indexes,
+  each at its own rows per partition) is recorded as
+  ``num_buckets``, and :func:`write_partitioned`
   writes every partition directory as exactly one file;
 * **keyed delta append** — :func:`new_delta` names the append's
   ``delta`` (the caller's id or a random one) and
@@ -152,7 +153,7 @@ def index_auto_buckets(n_docs: int,
 
 
 def write_partitioned(df: DataFrame, path: str, partition_by,
-                      mode: str = "append", **options) -> None:
+                      mode: str, **options) -> None:
     """Write ``df`` as the parquet table at ``path``, partitioned by
     ``partition_by``, with exactly one file per partition directory:
     the rows are hash-repartitioned on the innermost partition column
@@ -235,8 +236,7 @@ def entry_frame(spark, entry: dict) -> DataFrame:
 
 
 def read_params(spark, root: str, expect: dict | None = None,
-                layout: dict | None = None,
-                partition_by: dict | None = None) -> dict:
+                layout: dict | None = None) -> dict:
     """The build params :func:`write_params` recorded for the store at
     ``root``, without its ``layout``.  ``expect`` maps keys to the
     caller's values; any that differ from the stored ones raise, since
@@ -244,21 +244,9 @@ def read_params(spark, root: str, expect: dict | None = None,
     sub-tables to the :func:`layout_of` of the frames the caller is about
     to write; a column name or type that differs from the recorded
     layout raises (nullability aside: both sides are all-nullable), as
-    does a store that records no layout.  ``partition_by`` maps
-    sub-tables to the partition columns the caller reads or writes
-    them by; a store partitioned otherwise was written by an older
-    layout and raises ("rebuild the store") before any other check.
-    All of it runs no Spark job."""
+    does a store that records no layout."""
     root = root.rstrip("/")
     params = _sidecar(spark, root)
-    for table, by in (partition_by or {}).items():
-        got = recorded(root, params, "layout").get(table, {}) \
-            .get("partition_by")
-        if got != list(by):
-            raise ValueError(
-                f"{root} partitions table {table!r} by {got}, not "
-                f"{list(by)}: written by an older layout (rebuild the "
-                "store)")
     bad = sorted(k for k, v in (expect or {}).items()
                  if params.get(k) != v)
     if bad:
