@@ -175,66 +175,6 @@ def test_embedding_incremental_append_then_rerun_is_noop(spark, emb,
 
 
 @pytest.mark.slow
-def test_compact_minhash_index(spark, docs, split, tmp_path):
-    """After appends fragment the partitions, compaction to a new
-    root must preserve answers exactly and leave one file per
-    partition directory."""
-    import glob
-    from collections import Counter
-
-    from trial_data_ingestion_spark.operators.incremental_dedup import (
-        compact_minhash_index,
-    )
-    corpus, batch = split
-    path = str(tmp_path / "fragidx")
-    write_minhash_index(corpus, path, num_buckets=16)
-    # two appends -> up to 3 files per touched partition dir
-    half = batch.where(F.col("doc_id") < 400)
-    rest = batch.where(F.col("doc_id") >= 400)
-    dedup_minhash_incremental(spark, half, path, threshold=THRESH,
-                              delta=new_delta())
-    dedup_minhash_incremental(spark, rest, path, threshold=THRESH,
-                              delta=new_delta())
-    # fragmentation now shows as one delta directory per append (the
-    # r9 retryable-append layout): count files per pbkt ACROSS deltas
-    frag_counts = Counter(
-        f.rsplit("/", 2)[1]
-        for f in glob.glob(f"{path}/bands/delta=*/pbkt=*/part-*.parquet"))
-    assert max(frag_counts.values()) > 1      # fragmentation exists
-
-    out = str(tmp_path / "compactidx")
-    compact_minhash_index(spark, path, out)
-    comp_counts = Counter(
-        f.rsplit("/", 2)[1]
-        for f in glob.glob(f"{out}/bands/delta=*/pbkt=*/part-*.parquet"))
-    assert max(comp_counts.values()) == 1     # one file per dir
-    # and compaction folded every delta back into base
-    assert glob.glob(f"{out}/bands/delta=*") \
-        == [f"{out}/bands/delta=base"]
-
-    # identical content (modulo the folded delta key) and identical
-    # probe answers
-    a = {tuple(r) for r in
-         spark.read.parquet(path + "/bands").drop("delta").collect()}
-    b = {tuple(r) for r in
-         spark.read.parquet(out + "/bands").drop("delta").collect()}
-    assert a == b
-    # fresh ids carrying stored docs' text: the probe must traverse
-    # the real candidate path (not the seen-id shortcut) identically
-    probe = (docs.where(F.col("doc_id") < 10)
-             .select((F.col("doc_id") + 10_000).alias("doc_id"),
-                     "text"))
-    r1 = {r["doc_id"] for r in dedup_minhash_incremental(
-        spark, probe, path, threshold=THRESH).collect()}
-    r2 = {r["doc_id"] for r in dedup_minhash_incremental(
-        spark, probe, out, threshold=THRESH).collect()}
-    assert r1 == r2
-
-    with pytest.raises(ValueError):
-        compact_minhash_index(spark, out, out)
-
-
-@pytest.mark.slow
 def test_embedding_incremental_append_preserves_corpus(spark, emb,
                                                        tmp_path):
     """Round-8 bug fix: an append must APPEND the batch into the
@@ -298,7 +238,7 @@ def test_incremental_num_planes_from_metadata(spark, emb, tmp_path):
     with pytest.raises(ValueError, match="rebuild to resize"):
         write_srp_index(copies, path, dim=DIM,
                         num_planes=meta["num_planes"] + 1,
-                        mode="append")
+                        delta=new_delta())
     with pytest.raises(ValueError, match="stores dim"):
         embedding_near_dups_incremental(spark, copies, path, DIM + 1,
                                         threshold=EMB_THRESH)
@@ -390,28 +330,6 @@ def test_minhash_append_retry_is_idempotent(spark, tmp_path, kind):
     assert len(jobs) == 0, f"{kind}: {len(jobs)} jobs before the raise"
 
 
-def test_srp_append_retry_is_idempotent(spark, emb, tmp_path):
-    """Same contract for the SRP layout: retrying a delta-keyed
-    append leaves the index byte-identical (row-count and probe)."""
-    from trial_data_ingestion_spark.operators.similarity import (
-        write_srp_index,
-    )
-    corpus = emb.where(F.col("vec_id") < 300)
-    batch = emb.where(F.col("vec_id") >= 300)
-    path = str(tmp_path / "srpretry")
-    write_srp_index(corpus, path, dim=DIM, num_planes=6)
-    write_srp_index(batch, path, dim=DIM, mode="append",
-                    num_planes=None, delta_id="b0001")
-    n = spark.read.parquet(path).count()
-    assert n == corpus.count() + batch.count()
-    # retry the same delta: no growth, no duplicate ids
-    write_srp_index(batch, path, dim=DIM, mode="append",
-                    num_planes=None, delta_id="b0001")
-    assert spark.read.parquet(path).count() == n
-    assert (spark.read.parquet(path).groupBy("vec_id").count()
-            .where("count > 1").count()) == 0
-
-
 def test_distributed_fallback_matches_local_decision(spark, docs, split,
                                                      index_path,
                                                      monkeypatch):
@@ -482,16 +400,14 @@ def test_index_auto_banding_and_append_guard(spark, docs, split,
     # append guard: mismatched banding raises before touching disk
     with pytest.raises(ValueError, match="stored params"):
         write_minhash_index(batch, path, num_hashes=64, bands=8,
-                            num_buckets=16, mode="append",
-                            delta_id="d-bad")
+                            num_buckets=16, delta="d-bad")
     with pytest.raises(ValueError, match="base builds"):
         write_minhash_index(batch, path, num_hashes="auto",
-                            mode="append", delta_id="d-bad2")
+                            delta="d-bad2")
     # a matching append still works
     write_minhash_index(batch, path, k=p["k"],
                         num_hashes=p["num_hashes"], bands=p["bands"],
-                        num_buckets=p["num_buckets"], mode="append",
-                        delta_id="d-ok")
+                        num_buckets=p["num_buckets"], delta="d-ok")
     assert dedup_minhash_incremental(spark, batch, path,
                                      threshold=THRESH).count() == 0
     with pytest.raises(ValueError, match="int or 'auto'"):
@@ -501,25 +417,22 @@ def test_index_auto_banding_and_append_guard(spark, docs, split,
 
 def test_prebanded_append_writes_identical_band_rows(spark, docs,
                                                      split, tmp_path):
-    """write_minhash_index(_prebanded=...) — the r13 probe's
-    no-rebanding append — must land byte-identical band and doc rows
-    to the re-banding append."""
-    from trial_data_ingestion_spark.operators.incremental_dedup import (
-        _banded, _pbkt,
-    )
+    """A probe's append and a writer append of the same delta land
+    identical band and doc rows: ``dedup_minhash_incremental`` writes
+    the banding it already collected for its probe (it never re-runs
+    the MinHash kernel), ``write_minhash_index(delta=...)`` re-bands
+    the batch, and both go through the same table builder."""
     corpus, batch = split
     paths = {}
-    for tag in ("rebanded", "prebanded"):
+    for tag in ("writer", "probe"):
         path = str(tmp_path / f"idx_{tag}")
         write_minhash_index(corpus, path, num_buckets=16)
-        p = read_params(spark, path)
-        pre = None
-        if tag == "prebanded":
-            pre = (_banded(batch, "doc_id", "text", p["k"],
-                           p["num_hashes"], p["bands"])
-                   .withColumn("pbkt", _pbkt(p["num_buckets"])))
-        write_minhash_index(batch, path, mode="append",
-                            delta_id="d-test", _prebanded=pre)
+        if tag == "probe":
+            dedup_minhash_incremental(spark, batch, path,
+                                      threshold=THRESH, delta="d-test")
+        else:
+            write_minhash_index(batch, path, num_buckets=16,
+                                delta="d-test")
         paths[tag] = path
 
     def rows(path, sub, cols):
@@ -527,11 +440,11 @@ def test_prebanded_append_writes_identical_band_rows(spark, docs,
                 spark.read.parquet(path + sub).select(*cols).collect()}
 
     band_cols = ["doc", "band", "bucket", "dbkt", "pbkt", "delta"]
-    assert rows(paths["rebanded"], "/bands", band_cols) \
-        == rows(paths["prebanded"], "/bands", band_cols)
+    assert rows(paths["writer"], "/bands", band_cols) \
+        == rows(paths["probe"], "/bands", band_cols)
     doc_cols = ["doc", "text", "dbkt", "delta"]
-    assert rows(paths["rebanded"], "/docs", doc_cols) \
-        == rows(paths["prebanded"], "/docs", doc_cols)
+    assert rows(paths["writer"], "/docs", doc_cols) \
+        == rows(paths["probe"], "/docs", doc_cols)
 
 
 def test_probe_job_count_stays_fused(spark, split, index_path):

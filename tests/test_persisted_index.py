@@ -299,34 +299,6 @@ def test_srp_params_corrupt_sidecar_raises_not_default(spark, tmp_path):
         topk_lsh_over_index(spark, path, _queries(spark), dim=64, k=5)
 
 
-def test_ivf_append_retry_is_idempotent(spark, tmp_path):
-    """VERDICT r9 item 4: retrying a delta-keyed append_to_ivf_index
-    call leaves the index unchanged (the delta overwrites itself),
-    and query answers stay identical to the single-append state."""
-    from trial_data_ingestion_spark.operators.similarity import (
-        append_to_ivf_index, first_id_centroids, topk_ivf_over_index,
-        write_ivf_index,
-    )
-    emb = _emb(spark)
-    cents = first_id_centroids(emb, 16)
-    path = str(tmp_path / "ivf_retry")
-    write_ivf_index(emb.where("vec_id % 2 = 0"), cents, path)
-    append_to_ivf_index(emb.where("vec_id % 2 = 1"), path,
-                        delta_id="b0001")
-    n = spark.read.parquet(path).count()
-    q = _queries(spark)
-    want = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in
-            topk_ivf_over_index(spark, path, q, k=5,
-                                nprobe=4).collect()}
-    append_to_ivf_index(emb.where("vec_id % 2 = 1"), path,
-                        delta_id="b0001")
-    assert spark.read.parquet(path).count() == n
-    got = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in
-           topk_ivf_over_index(spark, path, q, k=5,
-                               nprobe=4).collect()}
-    assert got == want
-
-
 @pytest.mark.parametrize("num_planes", [1, 6, 8, 12])
 def test_driver_query_side_equals_spark_bucket_and_norm(spark,
                                                         num_planes):

@@ -12,6 +12,7 @@ loading them runs no Spark job either."""
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
@@ -23,7 +24,8 @@ from tests import sink_cases
 from tests.conftest import SF_DIR_ORACLE
 from trial_data_ingestion_spark.session import local_frame
 from trial_data_ingestion_spark.store import (
-    entry_frame, read_params, read_partitions, read_table, write_params,
+    entry_frame, new_delta, read_params, read_partitions, read_table,
+    write_params,
 )
 
 
@@ -52,8 +54,7 @@ def srp_path(spark, tmp_path_factory):
             & (srp_bucket("embedding", 64, 8).bitwiseAND(7) != 7))
     path = str(tmp_path_factory.mktemp("store") / "srp")
     write_srp_index(emb.where(base), path, dim=64, num_planes=8)
-    write_srp_index(emb.where(~base), path, dim=64, mode="append",
-                    delta_id="7")
+    write_srp_index(emb.where(~base), path, dim=64, delta="7")
     assert read_params(spark, path)["num_buckets"] == 8
     return path
 
@@ -168,7 +169,7 @@ def test_delta_layered_minhash_probe_reads_only_probed_pbkts(
     write_minhash_index(docs.where(F.col("doc_id") < 300), path,
                         num_buckets=64)
     write_minhash_index(docs.where(F.col("doc_id") >= 300), path,
-                        num_buckets=64, mode="append", delta_id="d1")
+                        num_buckets=64, delta="d1")
     probe = _banded(docs.orderBy("doc_id").limit(2), "doc_id", "text",
                     8, 32, 8)
     pbkts = {r.p for r in probe.select(_pbkt(64).alias("p")).collect()}
@@ -384,7 +385,7 @@ def test_srp_index_with_only_legacy_sidecar_raises(spark, stores,
         topk_lsh_over_index(spark, path, _one_query(spark), dim=64)
     with pytest.raises(ValueError, match="no params sidecar"):
         write_srp_index(_emb(spark).limit(3), path, dim=64,
-                        mode="append")
+                        delta=new_delta())
 
 
 def test_srp_index_in_bucket_directory_layout_is_refused(spark,
@@ -418,7 +419,7 @@ def test_srp_index_in_bucket_directory_layout_is_refused(spark,
     calls = {
         "query": lambda: topk_lsh_over_index(spark, path, query, dim=64),
         "append": lambda: write_srp_index(batch, path, dim=64,
-                                          num_planes=6, mode="append"),
+                                          num_planes=6, delta="b1"),
         "incremental": lambda: embedding_near_dups_incremental(
             spark, batch, path, 64, delta="b1"),
     }
@@ -490,35 +491,70 @@ def test_srp_build_within_the_partition_floor_runs_no_count(
         assert read_params(spark, path)["num_buckets"] == 1 << p
 
 
+def _tree(root):
+    """``{path: bytes}`` of every file under ``root``."""
+    return {os.path.join(d, f): open(os.path.join(d, f), "rb").read()
+            for d, _, files in os.walk(root) for f in files}
+
+
 def test_append_with_other_params_raises(spark, tmp_path):
     """Appends validate against the stored params instead of
     rewriting them: a 64-bucket line store appended with
     ``num_buckets=32`` used to record 32, after which a probe of the
-    store's own 40 lines found only 21 of them."""
+    store's own 40 lines found only 21 of them.  The same holds for
+    a MinHash store appended with another ``num_buckets`` and an SRP
+    index appended with another ``num_planes``: each refused append
+    leaves every file of the store, rows and ``_params.json``, as the
+    build wrote it."""
     from trial_data_ingestion_spark.multimodal.phash import (
         write_phash_index,
+    )
+    from trial_data_ingestion_spark.operators.incremental_dedup import (
+        write_minhash_index,
     )
     from trial_data_ingestion_spark.operators.line_dedup import (
         line_dedup_incremental, write_line_index,
     )
+    from trial_data_ingestion_spark.operators.similarity import (
+        write_srp_index,
+    )
     lines = spark.createDataFrame(
         [(i, f"line number {i:03d} of the store") for i in range(40)],
         "doc_id long, text string")
-    path = str(tmp_path / "line")
-    write_line_index(lines, path, num_buckets=64)
-    with pytest.raises(ValueError, match="num_buckets=64"):
-        write_line_index(lines.limit(1), path, num_buckets=32,
-                         mode="append")
-    assert read_params(spark, path)["num_buckets"] == 64
-    assert {r.n_removed_lines for r in
-            line_dedup_incremental(spark, lines, path).collect()} == {1}
-
-    path = str(tmp_path / "phash")
-    write_phash_index(_hashes(spark), path, num_buckets=64)
-    with pytest.raises(ValueError, match="num_buckets=64"):
-        write_phash_index(_hashes(spark).limit(1), path,
-                          num_buckets=32, mode="append")
-    assert read_params(spark, path)["num_buckets"] == 64
+    emb = _emb(spark).where("vec_id < 100")
+    # kind: (build, refused append, the stored value it names)
+    cases = {
+        "line": (lambda p: write_line_index(lines, p, num_buckets=64),
+                 lambda p: write_line_index(lines.limit(1), p,
+                                            num_buckets=32,
+                                            delta=new_delta()),
+                 "num_buckets=64"),
+        "phash": (lambda p: write_phash_index(_hashes(spark), p,
+                                              num_buckets=64),
+                  lambda p: write_phash_index(_hashes(spark).limit(1), p,
+                                              num_buckets=32,
+                                              delta=new_delta()),
+                  "num_buckets=64"),
+        "minhash": (lambda p: write_minhash_index(_docs(spark), p,
+                                                  num_buckets=8),
+                    lambda p: write_minhash_index(_docs(spark, 5), p,
+                                                  num_buckets=16,
+                                                  delta="d1"),
+                    "num_buckets=8"),
+        "srp": (lambda p: write_srp_index(emb, p, dim=64, num_planes=6),
+                lambda p: write_srp_index(emb.limit(5), p, dim=64,
+                                          num_planes=3, delta="d1"),
+                "num_planes=6"),
+    }
+    for kind, (build, append, stored) in cases.items():
+        path = str(tmp_path / kind)
+        build(path)
+        before = _tree(path)
+        with pytest.raises(ValueError, match=stored):
+            append(path)
+        assert _tree(path) == before, kind
+    assert {r.n_removed_lines for r in line_dedup_incremental(
+        spark, lines, str(tmp_path / "line")).collect()} == {1}
 
 
 def test_phash_store_without_delta_level_refuses_append(spark, tmp_path):
@@ -548,7 +584,7 @@ def test_phash_store_without_delta_level_refuses_append(spark, tmp_path):
               for sub in ("bands", "docs")}
     with pytest.raises(ValueError, match="rebuild the store"):
         write_phash_index(_hashes(spark).limit(1), path,
-                          num_buckets=16, mode="append")
+                          num_buckets=16, delta=new_delta())
     img = bytearray(encode_bmp(np.zeros((8, 8, 3), np.uint8)))
     media = spark.createDataFrame([("q0", img)],
                                   "media_id string, media binary")
@@ -661,18 +697,18 @@ def layout_stores(spark, tmp_path_factory):
     old, new = F.col("doc_id") < 30, F.col("doc_id") >= 30
     write_minhash_index(docs.where(old), p["minhash"], num_buckets=8)
     write_minhash_index(docs.where(new), p["minhash"], num_buckets=8,
-                        mode="append", delta_id="7")
+                        delta="7")
     write_line_index(docs.where(old), p["line"], num_buckets=16)
     write_line_index(docs.where(new), p["line"], num_buckets=16,
-                     mode="append")
+                     delta=new_delta())
     small = F.col("phash") < 20 * 1_000_003
     write_phash_index(hashes.where(small), p["phash"], num_buckets=16)
     write_phash_index(hashes.where(~small), p["phash"], num_buckets=16,
-                      mode="append")
+                      delta=new_delta())
     old, new = F.col("vec_id") < 150, F.col("vec_id") >= 150
     write_srp_index(emb.where(old), p["srp"], dim=64, num_planes=6)
     write_srp_index(emb.where(new), p["srp"], dim=64, num_planes=6,
-                    mode="append")
+                    delta=new_delta())
     cents = first_id_centroids(emb, num_cells=4)
     write_ivf_index(emb.where(old), cents, p["ivf"], dim=64)
     append_to_ivf_index(emb.where(new), p["ivf"])
@@ -781,6 +817,177 @@ def test_store_writers_leave_session_conf_unchanged(layout_stores):
     # writer or sink reads through plans.library.
     _, before, after = layout_stores
     assert after == before
+
+
+#: the five delta-levelled stores, each written by ``store.write_store``
+_DELTA_STORES = ["ivf", "line", "minhash", "phash", "srp"]
+
+
+def _delta_input(spark, kind, part):
+    """Part ``part`` (0: a build's rows, 1 and 2: two appends') of the
+    input rows of the ``kind`` store, and their id column."""
+    if kind in ("line", "minhash"):
+        df, id_col = _docs(spark, 90), "doc_id"
+    elif kind == "phash":
+        df, id_col = _hashes(spark), "media_id"
+    else:
+        df, id_col = _emb(spark).where("vec_id < 300"), "vec_id"
+    return df.where(F.pmod(F.xxhash64(id_col), F.lit(3)) == part), id_col
+
+
+def _write_delta_store(spark, kind, root, part, delta=None):
+    """Write part ``part`` of the ``kind`` input into the store at
+    ``root`` through its public writer: ``delta=None`` builds, an id
+    appends as that delta."""
+    from trial_data_ingestion_spark.multimodal.phash import (
+        write_phash_index,
+    )
+    from trial_data_ingestion_spark.operators.incremental_dedup import (
+        write_minhash_index,
+    )
+    from trial_data_ingestion_spark.operators.line_dedup import (
+        write_line_index,
+    )
+    from trial_data_ingestion_spark.operators.similarity import (
+        append_to_ivf_index, first_id_centroids, write_ivf_index,
+        write_srp_index,
+    )
+    df, _ = _delta_input(spark, kind, part)
+    if kind == "minhash":
+        write_minhash_index(df, root, num_buckets=8, delta=delta)
+    elif kind == "line":
+        write_line_index(df, root, num_buckets=16, delta=delta)
+    elif kind == "phash":
+        write_phash_index(df, root, num_buckets=16, delta=delta)
+    elif kind == "srp":
+        write_srp_index(df, root, dim=64, num_planes=6, delta=delta)
+    elif delta is None:
+        write_ivf_index(df, first_id_centroids(df, num_cells=4), root,
+                        dim=64)
+    else:
+        append_to_ivf_index(df, root, delta_id=delta)
+
+
+def _delta_probe(spark, kind, root):
+    """The sorted answer rows of the ``kind`` store's own probe over
+    ``root``: ids that survive dedup (fresh ids carrying stored texts
+    or near-copies of stored hashes, beside new ones), the line
+    probe's rows, or top-5 neighbours of five queries."""
+    if kind == "minhash":
+        from trial_data_ingestion_spark.operators.incremental_dedup \
+            import dedup_minhash_incremental
+        probe = (_docs(spark, 100).where("doc_id < 10 OR doc_id >= 90")
+                 .select((F.col("doc_id") + 10_000).alias("doc_id"),
+                         "text"))
+        return sink_cases.rows(dedup_minhash_incremental(spark, probe,
+                                                         root))
+    if kind == "line":
+        from trial_data_ingestion_spark.operators.line_dedup import (
+            line_dedup_incremental,
+        )
+        return sink_cases.rows(line_dedup_incremental(
+            spark, _docs(spark, 100).where("doc_id >= 80"), root))
+    if kind == "phash":
+        from trial_data_ingestion_spark.multimodal.phash import (
+            dedup_media_incremental,
+        )
+        media = spark.createDataFrame(
+            [(f"q{i}", bytearray((i * 1_000_003 ^ 1).to_bytes(8, "big")))
+             for i in range(0, 60, 3)], "media_id string, media binary")
+        return sink_cases.rows(dedup_media_incremental(
+            spark, media, root,
+            lambda b: int.from_bytes(b, "big", signed=True)))
+    from trial_data_ingestion_spark.operators.similarity import (
+        topk_ivf_over_index, topk_lsh_over_index,
+    )
+    queries = (_emb(spark).where("vec_id < 5")
+               .select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("query_vec")))
+    if kind == "srp":
+        return sink_cases.rows(topk_lsh_over_index(spark, root, queries,
+                                                   dim=64, k=5))
+    return sink_cases.rows(topk_ivf_over_index(spark, root, queries, k=5,
+                                               nprobe=2))
+
+
+def _tables(root):
+    """The sub-tables the sidecar of the store at ``root`` records."""
+    with open(os.path.join(root, "_params.json")) as fh:
+        return sorted(json.load(fh)["layout"])
+
+
+def _table_rows(spark, root, drop=()):
+    """Every row of every sub-table of the store at ``root``."""
+    return {t: sink_cases.rows(read_table(spark, root, t).drop(*drop))
+            for t in _tables(root)}
+
+
+def _deltas(root, table):
+    return sorted(d for d in os.listdir(os.path.join(root, table))
+                  if d.startswith("delta="))
+
+
+@pytest.mark.parametrize("kind", _DELTA_STORES)
+def test_compact_folds_every_delta_into_base(spark, kind, tmp_path):
+    """``store.compact`` rewrites a store fragmented by two appends as
+    a new root with one file per partition directory, every delta
+    folded into ``delta=base``, the same rows, the sidecar copied
+    verbatim and the same probe answers; compacting a root onto
+    itself is refused."""
+    from trial_data_ingestion_spark.store import compact
+    root, out = str(tmp_path / "store"), str(tmp_path / "compacted")
+    for part, delta in ((0, None), (1, new_delta()), (2, new_delta())):
+        _write_delta_store(spark, kind, root, part, delta)
+    assert all(len(_deltas(root, t)) == 3 for t in _tables(root))
+
+    compact(spark, root, out)
+    assert set(_leaf_dirs(out).values()) == {1}
+    assert all(_deltas(out, t) == ["delta=base"] for t in _tables(out))
+    assert _table_rows(spark, out, ["delta"]) \
+        == _table_rows(spark, root, ["delta"])
+    with open(f"{root}/_params.json", "rb") as a, \
+            open(f"{out}/_params.json", "rb") as b:
+        assert a.read() == b.read()
+    assert _delta_probe(spark, kind, out) == _delta_probe(spark, kind,
+                                                          root)
+    with pytest.raises(ValueError, match="must differ"):
+        compact(spark, root, root + "/")
+
+
+@pytest.mark.parametrize("kind", _DELTA_STORES)
+def test_writer_append_retry_is_idempotent(spark, kind, tmp_path):
+    """Appending delta ``X`` through the store's public writer twice
+    leaves the store as one append does: the same rows (every build
+    and batch id once), exactly one ``delta=X`` directory per
+    sub-table, the sidecar the build wrote, and the same probe
+    answers.  An append named ``base``, the build's delta, is
+    refused before it deletes anything."""
+    root = str(tmp_path / kind)
+    _write_delta_store(spark, kind, root, 0)
+    with open(f"{root}/_params.json", "rb") as fh:
+        sidecar = fh.read()
+    built = _tree(root)
+    with pytest.raises(ValueError, match="the build's"):
+        _write_delta_store(spark, kind, root, 1, "base")
+    assert _tree(root) == built
+    _write_delta_store(spark, kind, root, 1, "b0001")
+    stored, answers = _table_rows(spark, root), _delta_probe(spark, kind,
+                                                             root)
+    if kind != "line":
+        ids = (read_table(spark, root, "docs").select("doc")
+               if kind in ("minhash", "phash")
+               else read_table(spark, root).select("vec_id"))
+        want = sum(_delta_input(spark, kind, part)[0].count()
+                   for part in (0, 1))
+        assert ids.count() == ids.distinct().count() == want
+
+    _write_delta_store(spark, kind, root, 1, "b0001")
+    assert _table_rows(spark, root) == stored
+    assert all(_deltas(root, t) == ["delta=b0001", "delta=base"]
+               for t in _tables(root))
+    with open(f"{root}/_params.json", "rb") as fh:
+        assert fh.read() == sidecar
+    assert _delta_probe(spark, kind, root) == answers
 
 
 def test_release_after_upsert_overwrites_every_shard(spark, tmp_path):
@@ -1096,3 +1303,34 @@ def test_package_names_batch_keys_only_in_store():
                 stray.append(f"{rel}:{node.lineno}")
     assert not stray, "key micro-batches with store.batch_key: " \
         + ", ".join(stray)
+
+
+def test_package_names_delta_level_only_in_store():
+    """No package module but ``store.py`` names the ``delta`` level of
+    a store's layout: the constant ``"base"``, a
+    ``withColumn("delta", …)`` or ``.alias("delta")``, or a list or
+    tuple literal holding ``"delta"``.  Every delta-levelled store
+    writes through ``store.write_store``, so the build/append protocol
+    has one copy."""
+    import ast
+    import pathlib
+
+    def named(node, value):
+        return isinstance(node, ast.Constant) and node.value == value
+
+    stray = []
+    for path in sorted(pathlib.Path(_PACKAGE).rglob("*.py")):
+        rel = path.relative_to(_PACKAGE).as_posix()
+        if rel == "store.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (named(node, "base")
+                    or (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr in ("withColumn", "alias")
+                        and node.args and named(node.args[0], "delta"))
+                    or (isinstance(node, (ast.List, ast.Tuple))
+                        and any(named(e, "delta") for e in node.elts))):
+                stray.append(f"{rel}:{node.lineno}")
+    assert not stray, "write delta-levelled stores with " \
+        "store.write_store: " + ", ".join(stray)

@@ -37,8 +37,7 @@ from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.session import ensure_parallelism
 from trial_data_ingestion_spark.store import (
-    check_partition_value, layout_of, new_delta, read_params,
-    read_partitions, reserve_delta, write_params, write_partitioned,
+    check_partition_value, read_params, read_partitions, write_store,
 )
 
 HASH_BITS = 64
@@ -282,8 +281,7 @@ def _band_table(hashes: DataFrame, max_hamming: int,
 
 def write_phash_index(hashes: DataFrame, path: str, max_hamming: int = 4,
                       num_buckets: int = 64,
-                      mode: str = "overwrite",
-                      delta_id: str | None = None) -> None:
+                      delta: str | None = None) -> None:
     """Persist the fingerprint store for (media_id, phash) rows:
 
     * ``/bands`` — the exploded pigeonhole band table, partitioned by
@@ -295,35 +293,23 @@ def write_phash_index(hashes: DataFrame, path: str, max_hamming: int = 4,
     * ``_params.json`` — (max_hamming, num_buckets) and the layout,
       the params sidecar: probes can't run with mismatched banding.
 
-    A build writes delta ``base``.  ``mode="append"`` validates
-    against the sidecar (raising on a mismatch of the params or of
-    the recorded layout) instead of rewriting it, and writes delta
-    ``delta_id`` (random when None) after deleting it, so a retry
-    rewrites it (``store.reserve_delta``).  A store without a recorded
-    layout raises on append: rebuild it.
-
-    Both tables are written one file per partition directory
-    (``store.write_partitioned``)."""
-    spark = hashes.sparkSession
-    params = {"max_hamming": max_hamming, "num_buckets": num_buckets}
-    delta = new_delta(delta_id) if mode == "append" else "base"
+    The write is ``store.write_store``'s: ``delta=None`` builds,
+    ``delta=<id>`` appends as that delta (a retry with the same id
+    rewrites it), ``delta=store.new_delta()`` as a random one; an
+    append validates against the sidecar (raising on a mismatch of the
+    params or of the recorded layout, or on a store without a recorded
+    layout: rebuild it) instead of rewriting it."""
     bt = (_band_table(hashes, max_hamming)
           .withColumn("pbkt", F.pmod(F.xxhash64("band", "val"),
-                                     F.lit(num_buckets)))
-          .withColumn("delta", F.lit(delta)))
+                                     F.lit(num_buckets))))
     docs = (hashes.select(F.col("media_id").alias("doc"),
                           F.col("phash").alias("ph"))
             .withColumn("dbkt", F.pmod(F.xxhash64("doc"),
-                                       F.lit(num_buckets)))
-            .withColumn("delta", F.lit(delta)))
-    tables = {"bands": layout_of(bt, ["delta", "pbkt"]),
-              "docs": layout_of(docs, ["delta", "dbkt"])}
-    if mode == "append":
-        reserve_delta(spark, path, delta, tables, params)
-    write_partitioned(bt, path + "/bands", ["delta", "pbkt"], mode)
-    write_partitioned(docs, path + "/docs", ["delta", "dbkt"], mode)
-    if mode != "append":
-        write_params(spark, path, {**params, "layout": tables})
+                                       F.lit(num_buckets))))
+    write_store(hashes.sparkSession, path,
+                {"bands": (bt, ["pbkt"]), "docs": (docs, ["dbkt"])},
+                {"max_hamming": max_hamming, "num_buckets": num_buckets},
+                delta)
 
 
 def dedup_media_incremental(spark, new_media: DataFrame, path: str,
@@ -405,8 +391,7 @@ def dedup_media_incremental(spark, new_media: DataFrame, path: str,
             survivors = survivors.localCheckpoint()
             to_store = hashes.localCheckpoint()
             write_phash_index(to_store, path, max_hamming=max_hamming,
-                              num_buckets=num_buckets, mode="append",
-                              delta_id=delta)
+                              num_buckets=num_buckets, delta=delta)
     finally:
         if hashes is not None:
             hashes.unpersist()

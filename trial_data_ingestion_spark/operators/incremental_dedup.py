@@ -41,10 +41,11 @@ Index layout under ``path``:
   (``store.read_params``), so callers can't probe or append with
   mismatched hashing parameters, and probes read without inferring.
 
-The ``delta`` level is what makes appends RETRYABLE (a delta-keyed
-append deletes its own partitions first — whole-call idempotent) and
-streaming REPLAYABLE (a probe can exclude its own delta to recompute
-a micro-batch's decision exactly as if it hadn't appended yet).
+The ``delta`` level (``store.write_store``) is what makes appends
+RETRYABLE (a delta-keyed append deletes its own partitions first —
+whole-call idempotent) and streaming REPLAYABLE (a probe can exclude
+its own delta to recompute a micro-batch's decision exactly as if it
+hadn't appended yet).
 
 Reference parity: the reference dedups only within one run
 (``pipelines/ingest_pipeline.py`` drop_duplicates); incremental
@@ -64,9 +65,8 @@ from trial_data_ingestion_spark.operators.dedup import (
 from trial_data_ingestion_spark.operators.pins import PinScope
 from trial_data_ingestion_spark.session import local_frame
 from trial_data_ingestion_spark.store import (
-    batch_sink, check_partition_value, index_auto_buckets, layout_of,
-    new_delta, read_params, read_partitions, read_table, reserve_delta,
-    write_params, write_partitioned,
+    batch_sink, check_partition_value, index_auto_buckets, read_params,
+    read_partitions, write_store,
 )
 
 #: candidate-pair sets at or below this size are Jaccard-verified on
@@ -113,34 +113,39 @@ def _pbkt(num_buckets: int):
     return F.pmod(F.xxhash64("bucket", "band"), F.lit(num_buckets))
 
 
+def _minhash_tables(docs: DataFrame, banded: DataFrame, id_col: str,
+                    text_col: str, num_buckets: int) -> dict:
+    """The MinHash store's two sub-tables (``store.write_store``) for
+    the documents ``docs`` and their (doc, band, bucket) rows
+    ``banded``: band rows under ``pbkt``, carrying their doc's
+    ``dbkt``, and (doc, text) rows under ``dbkt``."""
+    def dbkt(col):
+        return F.pmod(F.xxhash64(F.col(col)), F.lit(num_buckets))
+    return {
+        "bands": (banded.select("doc", "band", "bucket")
+                  .withColumn("dbkt", dbkt("doc"))
+                  .withColumn("pbkt", _pbkt(num_buckets)), ["pbkt"]),
+        "docs": (docs.select(F.col(id_col).alias("doc"),
+                             F.col(text_col).alias("text"),
+                             dbkt(id_col).alias("dbkt")), ["dbkt"])}
+
+
 def write_minhash_index(df: DataFrame, path: str,
                         id_col: str = "doc_id", text_col: str = "text",
                         k: int = 8, num_hashes: int | str = 32,
                         bands: int = 8,
                         num_buckets: int | str = "auto",
-                        mode: str = "overwrite",
-                        delta_id: str | None = None,
-                        threshold: float = 0.8,
-                        _prebanded: DataFrame | None = None) -> None:
+                        delta: str | None = None,
+                        threshold: float = 0.8) -> None:
     """Persist the banded-signature store for ``df`` (one shuffle —
     the signature groupBy; the band fan-out and partitioned write are
-    narrow).  ``mode='append'`` extends an existing index (the layout
-    is append-friendly; compact small files with a periodic rewrite
-    when delta batches are tiny and frequent).
+    narrow) through ``store.write_store``: ``delta=None`` builds,
+    ``delta=<id>`` appends as that delta (a retry with the same id
+    rewrites it), ``delta=store.new_delta()`` appends as a random one.
+    Compact small files (``store.compact``) when delta batches are
+    tiny and frequent.
 
-    Rerun semantics (round 9): every write lands under a ``delta``
-    partition level (the base build uses ``delta=base``).  An append
-    with an explicit ``delta_id`` is WHOLE-CALL IDEMPOTENT: the
-    delta's own partition directories are deleted before the write,
-    so a caller retrying a failed batch — or a streaming sink
-    replaying a micro-batch id — overwrites its own rows instead of
-    double-appending (the ``hll_stream_sink`` shard pattern).
-    Without ``delta_id`` an append gets a random delta and is
-    at-most-once: DON'T retry it.  Probes are delta-agnostic (the
-    ``pbkt``/``dbkt`` pruning columns are below ``delta``), and an
-    empty retried delta correctly ends up empty on disk.
-
-    ``num_hashes="auto"`` (base builds only) sizes the banding from a
+    ``num_hashes="auto"`` (builds only) sizes the banding from a
     ``count()`` of ``df`` via :func:`dedup.auto_banding` at
     ``threshold`` — the corpus-tracking setting that keeps the
     PROBE's chance-collision candidate term linear as the indexed
@@ -159,22 +164,11 @@ def write_minhash_index(df: DataFrame, path: str,
     An APPEND always validates (k, num_hashes, bands, num_buckets)
     against the stored params and raises on mismatch — appending
     bands keyed differently from the stored corpus would silently
-    corrupt every later probe.
-
-    ``_prebanded`` (internal, r13): a (doc, band, bucket, [pbkt])
-    frame to write INSTEAD of re-banding ``df`` — the incremental
-    probe already computed and driver-collected the delta's banding,
-    so its append re-enters those rows as a local table rather than
-    paying the MinHash kernel a second time (guide §8: compute the
-    proxy once, move it once).  Values are identical by construction
-    (the probe's own rows); the caller is responsible for passing
-    the banding of exactly ``df``'s rows under the index's stored
-    params — which ``dedup_minhash_incremental`` guarantees by
-    construction, having read those params itself."""
+    corrupt every later probe."""
     spark = df.sparkSession
     n_docs = None
     if num_hashes == "auto":
-        if mode == "append":
+        if delta is not None:
             raise ValueError(
                 "num_hashes='auto' is for base builds; appends "
                 "inherit the index's stored banding — pass the "
@@ -189,7 +183,7 @@ def write_minhash_index(df: DataFrame, path: str,
     elif not isinstance(num_hashes, int) or isinstance(num_hashes, bool):
         raise ValueError("num_hashes must be an int or 'auto'")
     if num_buckets == "auto":
-        if mode == "append":
+        if delta is not None:
             # appends INHERIT the stored layout (the validation
             # below still runs, so an explicit-int mismatch is
             # caught while the default simply follows the base)
@@ -202,37 +196,11 @@ def write_minhash_index(df: DataFrame, path: str,
           or isinstance(num_buckets, bool) or num_buckets < 1):
         raise ValueError("num_buckets must be a positive int or "
                          "'auto'")
-    params = {"k": k, "num_hashes": num_hashes, "bands": bands,
-              "num_buckets": num_buckets}
-    # a build lands in delta "base" unless named, an append in a
-    # random delta unless named
-    delta_id = new_delta(delta_id if mode == "append"
-                         else delta_id or "base")
-    src = (_prebanded.select("doc", "band", "bucket")
-           if _prebanded is not None
-           else _banded(df, id_col, text_col, k, num_hashes, bands))
-    banded = (src
-              .withColumn("dbkt", F.pmod(F.xxhash64(F.col("doc")),
-                                         F.lit(num_buckets)))
-              .withColumn("pbkt", _pbkt(num_buckets))
-              .withColumn("delta", F.lit(delta_id)))
-    docs = df.select(F.col(id_col).alias("doc"),
-                     F.col(text_col).alias("text"),
-                     F.pmod(F.xxhash64(F.col(id_col)),
-                            F.lit(num_buckets)).alias("dbkt"),
-                     F.lit(delta_id).alias("delta"))
-    tables = {"bands": layout_of(banded, ["delta", "pbkt"]),
-              "docs": layout_of(docs, ["delta", "dbkt"])}
-    if mode == "append":
-        # an append banded (or typed) differently from the stored
-        # corpus would silently corrupt every later probe
-        reserve_delta(spark, path, delta_id, tables, params)
-    write_partitioned(banded, path + "/bands", ["delta", "pbkt"], mode)
-    write_partitioned(docs, path + "/docs", ["delta", "dbkt"], mode)
-    if mode != "append":
-        # params are fixed at build time: appends validate, never
-        # rewrite
-        write_params(spark, path, {**params, "layout": tables})
+    write_store(spark, path, _minhash_tables(
+        df, _banded(df, id_col, text_col, k, num_hashes, bands),
+        id_col, text_col, num_buckets),
+        {"k": k, "num_hashes": num_hashes, "bands": bands,
+         "num_buckets": num_buckets}, delta)
 
 
 def cross_candidates(spark, new_banded: DataFrame, index_path: str,
@@ -402,8 +370,8 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
     ``delta=None`` only probes.  With a ``delta`` id the probe leaves
     that delta out of every index read, and then the *entire batch*
     (survivors and duplicates alike — see the module docstring for
-    why) is appended to the index as that delta, overwriting it (see
-    :func:`write_minhash_index`).  So the whole call is RETRYABLE: a
+    why) is appended to the index as that delta, overwriting it
+    (``store.write_store``).  So the whole call is RETRYABLE: a
     retry, or a replayed micro-batch, with the same ``delta``
     reproduces its first decision and leaves the index as one call
     would.  ``delta=store.new_delta()`` appends under a random id, at
@@ -667,11 +635,9 @@ def dedup_minhash_incremental(spark, new_docs: DataFrame,
                         spark, seen_ids, orig,
                         id_col).withColumnRenamed(id_col, "doc")),
                     "doc", "left_anti")
-            write_minhash_index(fresh, index_path, id_col, text_col,
-                                k=k, num_hashes=num_hashes,
-                                bands=bands, num_buckets=num_buckets,
-                                mode="append", delta_id=delta,
-                                _prebanded=fresh_banded)
+            write_store(spark, index_path, _minhash_tables(
+                fresh, fresh_banded, id_col, text_col, num_buckets),
+                p, delta)
     if kept_frame is not None:
         return orig.join(F.broadcast(kept_frame), id_col, "left_semi")
     excluded = seen_ids | drops
@@ -723,10 +689,10 @@ def embedding_near_dups_incremental(spark, new_embeddings: DataFrame,
 
     ``delta`` works as in :func:`dedup_minhash_incremental`: ``None``
     only probes; an id probes with that delta left out, then APPENDS
-    the batch into the ``pbkt`` layout as that delta (``mode="append"``
-    — never an overwrite, which would drop the corpus rows sharing the
-    batch's buckets), so a retry with the same id repeats its
-    decision and rewrites its delta."""
+    the batch into the ``pbkt`` layout as that delta
+    (``write_srp_index(delta=...)`` — never an overwrite, which would
+    drop the corpus rows sharing the batch's buckets), so a retry with
+    the same id repeats its decision and rewrites its delta."""
     from trial_data_ingestion_spark.functions.vector import (
         dot_fixed, l2_norm_fixed,
     )
@@ -794,7 +760,7 @@ def embedding_near_dups_incremental(spark, new_embeddings: DataFrame,
             to_add = new_embeddings.localCheckpoint()
             write_srp_index(to_add, index_path, dim, id_col=id_col,
                             vec_col=vec_col, num_planes=num_planes,
-                            mode="append", delta_id=delta)
+                            delta=delta)
     finally:
         pins.release()
     return orig.join(F.broadcast(kept), id_col, "left_semi")
@@ -869,36 +835,3 @@ def embedding_dedup_stream_sink(index_path: str, out_path: str,
     return batch_sink(lambda df, key: embedding_near_dups_incremental(
         df.sparkSession, df, index_path, dim, id_col=id_col,
         vec_col=vec_col, threshold=threshold, delta=key), out_path)
-
-
-def compact_minhash_index(spark, index_path: str, out_path: str) -> None:
-    """Rewrite an append-accumulated index at ``index_path`` into a
-    fresh layout at ``out_path`` with one file per partition again.
-
-    Frequent small delta appends leave each ``pbkt``/``dbkt``
-    directory holding one file per append; probe cost grows with
-    file count, not data.  Compaction is a pure re-write (no
-    re-hashing — signatures are already stored), so it is cheap
-    enough to schedule periodically.  Writing to a NEW root keeps
-    the operation atomic-by-rename for the caller and sidesteps
-    Spark's cached-listing hazards of in-place rewrites (see
-    ``write_minhash_index``).  Compaction also FOLDS the accumulated
-    ``delta`` partitions back into a single ``delta=base`` — the
-    per-delta rerun bookkeeping only matters for in-flight appends,
-    and folding it keeps the directory count flat across epochs."""
-    if out_path.rstrip("/") == index_path.rstrip("/"):
-        raise ValueError(
-            "compact_minhash_index: out_path must differ from "
-            "index_path (atomic swap by rename is the caller's step)")
-    bands = (read_table(spark, index_path, "bands")
-             .withColumn("delta", F.lit("base")))
-    write_partitioned(bands, out_path + "/bands", ["delta", "pbkt"],
-                      "overwrite")
-    docs = (read_table(spark, index_path, "docs")
-            .withColumn("delta", F.lit("base")))
-    write_partitioned(docs, out_path + "/docs", ["delta", "dbkt"],
-                      "overwrite")
-    write_params(spark, out_path, {
-        **read_params(spark, index_path),
-        "layout": {"bands": layout_of(bands, ["delta", "pbkt"]),
-                   "docs": layout_of(docs, ["delta", "dbkt"])}})

@@ -52,8 +52,7 @@ from pyspark.sql import functions as F
 
 from trial_data_ingestion_spark.session import ensure_parallelism
 from trial_data_ingestion_spark.store import (
-    check_partition_value, layout_of, new_delta, read_params,
-    read_partitions, reserve_delta, write_params, write_partitioned,
+    check_partition_value, read_params, read_partitions, write_store,
 )
 
 
@@ -118,29 +117,19 @@ def _apply_drops(df: DataFrame, dups: DataFrame, id_col: str,
 
 def _write_lines(keys: DataFrame, path: str, params: dict,
                  delta: str | None = None) -> None:
-    """Write distinct line keys into ``path/lines``: a build
-    (``delta=None``) as delta ``base``, recording ``params`` and the
-    layout; an append as ``delta``, validated against them first and
-    overwriting that delta."""
-    spark = keys.sparkSession
-    append = delta is not None
-    delta = new_delta(delta) if append else "base"
-    out = (keys.withColumn("pbkt", F.pmod(F.col("line"),
-                                          F.lit(params["num_buckets"])))
-           .withColumn("delta", F.lit(delta)))
-    tables = {"lines": layout_of(out, ["delta", "pbkt"])}
-    if append:
-        reserve_delta(spark, path, delta, tables, params)
-    write_partitioned(out, path + "/lines", ["delta", "pbkt"],
-                      "append" if append else "overwrite")
-    if not append:
-        write_params(spark, path, {**params, "layout": tables})
+    """Write distinct line keys into ``path/lines`` under ``pbkt``
+    (``store.write_store``: ``delta=None`` builds and records
+    ``params``)."""
+    write_store(keys.sparkSession, path, {"lines": (
+        keys.withColumn("pbkt", F.pmod(F.col("line"),
+                                       F.lit(params["num_buckets"]))),
+        ["pbkt"])}, params, delta)
 
 
 def write_line_index(df: DataFrame, path: str, id_col: str = "doc_id",
                      text_col: str = "text", min_chars: int = 10,
                      num_buckets: int = 64,
-                     mode: str = "overwrite") -> None:
+                     delta: str | None = None) -> None:
     """Persist the corpus's eligible-line key set: DISTINCT xxhash64
     line keys under ``lines/``, partitioned by ``delta`` (``base`` for
     the build) then ``pbkt = pmod(key, num_buckets)``, with
@@ -149,14 +138,16 @@ def write_line_index(df: DataFrame, path: str, id_col: str = "doc_id",
     line, append-friendly, probe-prunable — the incremental-tier
     sibling of the MinHash band store (incremental_dedup.py).
 
-    ``mode="append"`` adds the keys as a new random delta after
+    The write is ``store.write_store``'s: ``delta=None`` builds,
+    ``delta=<id>`` adds the keys as that delta (a retry with the same
+    id rewrites it), ``delta=store.new_delta()`` as a random one, after
     validating ``min_chars``/``num_buckets`` against the stored
     params (a mismatch raises: keys bucketed differently are never
     probed); the params themselves are fixed at build time."""
     _write_lines(_eligible_occurrences(df, id_col, text_col, min_chars)
                  .select("line").distinct(), path,
                  {"min_chars": min_chars, "num_buckets": num_buckets},
-                 new_delta() if mode == "append" else None)
+                 delta)
 
 
 def probe_line_store(spark, occ: DataFrame, index_path: str,

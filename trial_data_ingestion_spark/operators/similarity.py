@@ -50,9 +50,8 @@ from trial_data_ingestion_spark.session import (
     ensure_parallelism, local_frame,
 )
 from trial_data_ingestion_spark.store import (
-    entry_frame, frame_entry, index_auto_buckets, layout_of, new_delta,
-    read_params, read_partitions, recorded, reserve_delta, write_params,
-    write_partitioned,
+    entry_frame, frame_entry, index_auto_buckets, new_delta, read_params,
+    read_partitions, recorded, write_store,
 )
 
 _METRICS = {
@@ -720,7 +719,7 @@ def write_ivf_index(embeddings: DataFrame, centroids: DataFrame,
     (``store.frame_entry``): appends assign and queries probe with the
     recorded centroids, so no caller can pass others."""
     _write_ivf(embeddings, frame_entry(centroids), path, id_col, vec_col,
-               dim, "base")
+               dim)
 
 
 def append_to_ivf_index(new_embeddings: DataFrame, path: str,
@@ -737,15 +736,12 @@ def append_to_ivf_index(new_embeddings: DataFrame, path: str,
     operating contract for ANN.  Recall drifts only as the data
     distribution drifts away from the frozen centers; re-fit +
     rebuild on a schedule, like any IVF.  Caller dedups ids (the
-    index is a layout, not a keyed store).
-
-    Rerun semantics (round 9): pass a stable ``delta_id`` and a
-    whole-call retry is idempotent — the append deletes its own
-    ``delta`` partition directory before writing.  Without one the
-    delta is random and the append is at-most-once (don't retry)."""
+    index is a layout, not a keyed store).  The append is delta
+    ``delta_id`` of ``store.write_store``: a retry with the same id
+    rewrites it; without one the delta is random (at most once)."""
     centroids, dim = _ivf_state(new_embeddings.sparkSession, path)
     _write_ivf(new_embeddings, centroids, path, id_col, vec_col, dim,
-               new_delta(delta_id), append=True)
+               new_delta() if delta_id is None else delta_id)
 
 
 def _ivf_state(spark, path: str) -> tuple[dict, int | None]:
@@ -756,28 +752,19 @@ def _ivf_state(spark, path: str) -> tuple[dict, int | None]:
 
 
 def _write_ivf(embeddings: DataFrame, centroids: dict, path: str,
-               id_col: str, vec_col: str, dim: int | None, delta: str,
-               append: bool = False) -> None:
-    """Assign ``embeddings`` to the ``centroids`` entry and write them as
-    delta ``delta`` of the IVF layout at ``path`` (partitioned by
-    ``delta`` then ``cell_id``, one file per cell directory:
-    ``store.write_partitioned``): a build overwrites the root and
-    records the centroids, ``dim`` and the layout; an append validates
-    the layout first."""
+               id_col: str, vec_col: str, dim: int | None,
+               delta: str | None = None) -> None:
+    """Assign ``embeddings`` to the ``centroids`` entry and write them
+    into the IVF layout at ``path``, partitioned by ``delta`` then
+    ``cell_id`` (``store.write_store``: ``delta=None`` builds and
+    records the centroids and ``dim``)."""
     spark = embeddings.sparkSession
     cells = _nearest_cells(embeddings, entry_frame(spark, centroids),
                            vec_col, id_col, 1, dim)
     if dim is not None:
         cells = cells.withColumn("__nrm", l2_norm_fixed(vec_col, dim))
-    out = cells.withColumn("delta", F.lit(delta))
-    tables = {"": layout_of(out, ["delta", "cell_id"])}
-    if append:
-        reserve_delta(spark, path, delta, tables)
-    write_partitioned(out, path, ["delta", "cell_id"],
-                      "append" if append else "overwrite")
-    if not append:
-        write_params(spark, path, {"dim": dim, "centroids": centroids,
-                                   "layout": tables})
+    write_store(spark, path, {"": (cells, ["cell_id"])},
+                {"dim": dim, "centroids": centroids}, delta)
 
 
 def topk_ivf_over_index(spark, index_path: str, queries: DataFrame,
@@ -825,10 +812,6 @@ def topk_ivf_over_index(spark, index_path: str, queries: DataFrame,
                   id_col, k, {r[query_id_col] for r in probe_rows})
 
 
-#: the SRP index's partition columns: the write's ``delta``, then
-#: ``pbkt``, the low ``log2(num_buckets)`` bits of the SRP bucket id
-_SRP_PARTITION_BY = ["delta", "pbkt"]
-
 #: SRP index rows per ``pbkt`` partition targeted by
 #: :func:`srp_index_buckets`, about 1 MB of 64-dim float32 vectors.
 #: Over 400k such vectors (4 cores), 8 partitions (the MinHash store's
@@ -852,8 +835,7 @@ def srp_index_buckets(num_planes: int, count_fn) -> int:
 def write_srp_index(embeddings: DataFrame, path: str, dim: int,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     num_planes: int | str = 8,
-                    mode: str = "overwrite",
-                    delta_id: str | None = None) -> None:
+                    delta: str | None = None) -> None:
     """Persist the SRP-LSH layout for :func:`topk_lsh_over_index`:
     one narrow map computes each vector's ``bucket`` (literal-plane
     codegen) and norm, stored as data columns.  Rows are partitioned
@@ -890,20 +872,16 @@ def write_srp_index(embeddings: DataFrame, path: str, dim: int,
     rebuild (re-hashing is a narrow map over one corpus scan —
     schedule it like an IVF re-fit).
 
-    ``mode="append"`` extends an existing index (delta batches land
-    in the same ``pbkt`` partitions); the plane set and
-    ``num_buckets`` then COME FROM the sidecar — a conflicting
+    The write is ``store.write_store``'s: ``delta=None`` builds,
+    ``delta=<id>`` appends as that delta (a retry with the same id
+    rewrites it), ``delta=store.new_delta()`` appends as a random one.
+    Delta batches land in the same ``pbkt`` partitions; the plane set
+    and ``num_buckets`` then COME FROM the sidecar — a conflicting
     explicit ``num_planes`` or ``dim`` raises, and so does an index
     partitioned one directory per bucket (the older layout: rebuild
-    it).
-
-    Rerun semantics: the build lands in ``delta=base``.  An append
-    with an explicit ``delta_id`` deletes its own delta directory
-    before writing, making a whole-call retry idempotent; without
-    one the append gets a random delta and is at-most-once (don't
-    retry it)."""
+    it)."""
     spark = embeddings.sparkSession
-    if mode == "append":
+    if delta is not None:
         num_planes, num_buckets = _srp_layout(
             spark, path, None if num_planes == "auto" else num_planes,
             dim)
@@ -911,26 +889,14 @@ def write_srp_index(embeddings: DataFrame, path: str, dim: int,
         count = functools.cache(embeddings.count)
         num_planes = resolve_num_planes(num_planes, count)
         num_buckets = srp_index_buckets(num_planes, count)
-    # a build lands in delta "base" unless named, an append in a
-    # random delta unless named
-    delta_id = new_delta(delta_id if mode == "append"
-                         else delta_id or "base")
     out = (embeddings
            .withColumn("__nrm", l2_norm_fixed(vec_col, dim))
            .withColumn("bucket", srp_bucket(vec_col, dim, num_planes))
            .withColumn("pbkt", F.col("bucket").bitwiseAND(
-               F.lit(num_buckets - 1)))
-           .withColumn("delta", F.lit(delta_id)))
-    tables = {"": layout_of(out, _SRP_PARTITION_BY)}
-    if mode == "append":
-        reserve_delta(spark, path, delta_id, tables)
-    write_partitioned(out, path, _SRP_PARTITION_BY, mode)
-    if mode != "append":
-        # AFTER the data write: a static overwrite of `path` deletes
-        # the whole root, sidecar included
-        write_params(spark, path, {"num_planes": num_planes, "dim": dim,
-                                   "num_buckets": num_buckets,
-                                   "layout": tables})
+               F.lit(num_buckets - 1))))
+    write_store(spark, path, {"": (out, ["pbkt"])},
+                {"num_planes": num_planes, "dim": dim,
+                 "num_buckets": num_buckets}, delta)
 
 
 def _srp_layout(spark, index_path: str, num_planes,

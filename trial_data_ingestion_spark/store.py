@@ -32,10 +32,15 @@ BPE merges, unigram pieces, clustering codebooks):
   each at its own rows per partition) is recorded as
   ``num_buckets``, and :func:`write_partitioned`
   writes every partition directory as exactly one file;
-* **keyed delta append** — :func:`new_delta` names the append's
-  ``delta`` (the caller's id or a random one) and
-  :func:`reserve_delta` validates the append, then deletes that
-  delta under every sub-table, so a retried append rewrites itself;
+* **keyed delta write** — :func:`write_store` is every
+  delta-levelled store's write (the MinHash, SRP, line, phash and IVF
+  layouts): each sub-table is partitioned by ``delta`` then its key
+  bucket; a build (``delta=None``) overwrites the root as delta
+  ``base`` and records the params and the layout; an append
+  (``delta=<id>``, or :func:`new_delta` for a random one) validates
+  against the sidecar, deletes that delta under every sub-table and
+  appends, so a retried append rewrites itself.  :func:`compact`
+  folds every delta of such a store back into ``base``;
 * **keyed shard write** — :func:`write_shard` rewrites one
   ``shard=`` partition by delete-then-append, so a replayed
   micro-batch leaves its output exactly once;
@@ -92,6 +97,11 @@ def check_partition_value(value: str, what: str = "shard") -> str:
 def _fs_path(spark, path: str):
     p = spark._jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _table_path(root: str, table: str) -> str:
+    """The directory of sub-table ``table`` (``""``: the root)."""
+    return f"{root.rstrip('/')}/{table}".rstrip("/")
 
 
 def delete_path(spark, path: str) -> None:
@@ -281,26 +291,80 @@ def open_store(spark, root: str, params: dict, layout: dict) -> bool:
     return False
 
 
-def new_delta(delta_id: str | None = None) -> str:
-    """The ``delta`` a write lands in: ``delta_id`` (checked safe) or,
-    when None, a random ``d-…`` id.  An append to a random delta is
+def new_delta() -> str:
+    """A random ``d-…`` delta id.  An append to a random delta is
     at-most-once (don't retry it)."""
-    if delta_id is None:
-        return "d-" + uuid.uuid4().hex[:12]
-    return check_partition_value(delta_id, what="delta_id")
+    return "d-" + uuid.uuid4().hex[:12]
 
 
-def reserve_delta(spark, root: str, delta: str, layout: dict,
-                  expect: dict | None = None) -> None:
-    """Validate an append of ``delta`` against the store at ``root``
-    (:func:`read_params` with ``expect`` and ``layout``), then delete
-    the delta's directory under each sub-table of ``layout``: retrying
-    an append with the same ``delta`` rewrites it instead of appending
-    twice, and a refused append changes nothing."""
-    read_params(spark, root, expect, layout)
-    for table in layout:
-        base = f"{root.rstrip('/')}/{table}".rstrip("/")
-        delete_path(spark, f"{base}/delta={delta}")
+def write_store(spark, root: str, tables: dict, params: dict,
+                delta: str | None = None) -> None:
+    """The keyed-delta write of a delta-levelled store at ``root``.
+    ``tables`` maps each sub-table (``""`` for the root) to ``(frame,
+    cols)``: its rows, written partitioned by ``["delta", *cols]``,
+    one file per partition directory (:func:`write_partitioned`).
+
+    ``delta=None`` builds: every row lands in delta ``base``, each
+    sub-table is overwritten, and then ``params`` and the layout are
+    recorded in the sidecar.  ``delta=<id>`` appends as that delta
+    (:func:`new_delta` for a random one): the append is validated
+    against the sidecar first (``params`` and the layout must match
+    what the build recorded, so a store is never extended with rows
+    keyed differently, and the sidecar is never rewritten), then that
+    delta is deleted under every sub-table and written afresh.  So an
+    append retried with the same id rewrites itself (whole-call
+    idempotent), while an append to a random delta is at-most-once.
+    A refused append changes nothing on disk."""
+    if delta == "base":
+        raise ValueError("delta 'base' is the build's: append as "
+                         "another id, or build with delta=None")
+    name = "base" if delta is None else check_partition_value(delta,
+                                                              "delta")
+    frames = {table: (df.withColumn("delta", F.lit(name)),
+                      ["delta", *cols])
+              for table, (df, cols) in tables.items()}
+    layout = {table: layout_of(df, by)
+              for table, (df, by) in frames.items()}
+    if delta is not None:
+        read_params(spark, root, params, layout)
+        for table in layout:
+            delete_path(spark, f"{_table_path(root, table)}/delta={name}")
+    for table, (df, by) in frames.items():
+        write_partitioned(df, _table_path(root, table), by,
+                          "overwrite" if delta is None else "append")
+    if delta is None:
+        # AFTER the data write: a static overwrite of the root
+        # deletes the whole root, sidecar included
+        write_params(spark, root, {**params, "layout": layout})
+
+
+def compact(spark, root: str, out_path: str) -> None:
+    """Rewrite the delta-levelled store at ``root`` as a new store at
+    ``out_path``, every delta folded back into ``base``, one file per
+    partition directory again, under the recorded layout; the sidecar
+    is copied (:func:`write_params` writes it byte for byte as the
+    build did).  Frequent small appends leave one directory
+    per delta under every partition, and probe cost grows with the
+    file count, not the data; compaction re-hashes nothing.
+    ``out_path`` must differ from ``root``: swapping the new root in
+    (by rename) is the caller's step, which keeps the rewrite atomic
+    and clear of Spark's cached listing of ``root``."""
+    if out_path.rstrip("/") == root.rstrip("/"):
+        raise ValueError("compact: out_path must differ from root "
+                         "(atomic swap by rename is the caller's step)")
+    params = _sidecar(spark, root)
+    layout = recorded(root, params, "layout")
+    flat = sorted(t for t, e in layout.items()
+                  if e["partition_by"][:1] != ["delta"])
+    if flat:
+        raise ValueError(f"{root} has no delta level in sub-tables "
+                         f"{flat}: nothing to compact")
+    for table, entry in layout.items():
+        write_partitioned(read_table(spark, root, table)
+                          .withColumn("delta", F.lit("base")),
+                          _table_path(out_path, table),
+                          entry["partition_by"], "overwrite")
+    write_params(spark, out_path, params)
 
 
 def write_shard(df: DataFrame, path: str, shard: str) -> None:
@@ -379,7 +443,7 @@ def read_partitions(spark, root: str, column: str, values,
     :func:`check_partition_value`-safe strings)."""
     root = root.rstrip("/")
     entry = recorded(root, _sidecar(spark, root), "layout")[table]
-    base = f"{root}/{table}".rstrip("/")
+    base = _table_path(root, table)
     values = sorted({v for v in values if v is not None})
     wanted = ",".join(str(v) for v in values)
     depth = entry["partition_by"].index(column)
@@ -409,4 +473,4 @@ def read_table(spark, root: str, table: str = "") -> DataFrame:
     root = root.rstrip("/")
     entry = recorded(root, _sidecar(spark, root), "layout")[table]
     return spark.read.schema(entry["schema"]).parquet(
-        f"{root}/{table}".rstrip("/"))
+        _table_path(root, table))
